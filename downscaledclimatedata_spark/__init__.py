@@ -5,8 +5,8 @@ the reference climate-data pipeline (atmsillinois/DownscaledClimateData):
 discovery -> manifest, incremental ingest with cursor + idempotency,
 format conversion, catalog construction, plus the relational operator
 surface and large-scale training-data-pipeline operators (dedup,
-similarity search, text analysis, multimodal plumbing) expressed as
-DataFrame ops over Parquet.
+similarity search, text analysis) expressed as DataFrame ops over
+Parquet.
 
 Design rules (see SURVEY.md §4/§7):
 - declarative DataFrame/SQL plans; Catalyst does pushdown/pruning/broadcast

@@ -499,58 +499,6 @@ FROM bsz GROUP BY bucket_size ORDER BY bucket_size
 
 # --- near-dup clusters: connected components over LSH pairs --------------------
 
-def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b", max_iter: int = 25) -> DataFrame:
-    """(id, comp) for every node appearing in ``pairs``; comp = min id in
-    the node's connected component.
-
-    Iterative min-label propagation: each round every node takes the min
-    label among itself and its neighbors — one equi-join + one groupBy per
-    round, converging in O(graph diameter) rounds. Near-dup clusters are
-    near-cliques (diameter 2-3), so this terminates in a handful of rounds
-    at any corpus size; for long-chain components use the alternating
-    large-star/small-star ``connected_components_star`` below (Kiveris
-    et al., SoCC'14) — O(log n) rounds on any graph shape.
-
-    Scale notes: ``localCheckpoint`` truncates lineage each round —
-    without it the logical plan doubles per iteration and planning time,
-    not data, becomes the bottleneck. Convergence is detected with one
-    cheap scalar aggregate (sum of labels, strictly decreasing until
-    fixpoint) instead of a changed-rows join.
-    """
-    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-             .union(pairs.select(F.col(id_b).alias("src"),
-                                 F.col(id_a).alias("dst")))
-             .localCheckpoint())
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .select("id", F.col("id").alias("comp")).localCheckpoint())
-    prev = None
-    for _ in range(max_iter):
-        # sort-merge: both sides are checkpointed corpus-scale
-        # relations with unreliable inherited size estimates (see
-        # ngram_jaccard_pairs) — never let this flip to broadcast
-        neigh = (edges.join(labels.hint("merge"),
-                            edges["dst"] == labels["id"])
-                 .select(edges["src"].alias("id"), "comp"))
-        labels = (labels.union(neigh).groupBy("id")
-                  .agg(F.min("comp").alias("comp"))).localCheckpoint()
-        # per-node labels only ever decrease, so the label sum is strictly
-        # decreasing until fixpoint — equality IS exact convergence (no
-        # fingerprint collision possible). decimal(38,0) cannot overflow
-        # at any realistic scale (sum <= max_id * n_nodes ~ 1e31 << 1e38),
-        # unlike a bigint sum which wraps/errors past 2^63.
-        s = labels.agg(F.sum(F.col("comp").cast("decimal(38,0)"))).collect()[0][0]
-        if s == prev:
-            break
-        prev = s
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter} "
-            "rounds; labels would be incorrect — raise max_iter (rounds needed "
-            "~ graph diameter) or use connected_components_star (O(log n))")
-    return labels
-
-
 # Driver union-find tier for connected components (r13): below this
 # many (undirected, deduped) edges the graph is collected and solved on
 # the driver in one pass — measured same-session on the corpus
@@ -615,15 +563,6 @@ def _labels_relation(spark: SparkSession, labels: dict, ntype) -> DataFrame:
             .localCheckpoint())
 
 
-def _driver_components(edges: DataFrame) -> DataFrame:
-    """(id, comp) labels for a BOUNDED, checkpointed edge relation via
-    driver-side union-find with min-id representatives — exactly the
-    star iteration's fixpoint (comp = min id of the node's component),
-    so callers see identical rows."""
-    return _labels_relation(edges.sparkSession, _union_find(edges),
-                            edges.schema[0].dataType)
-
-
 def _component_labels(pairs: DataFrame, id_a: str = "id_a",
                       id_b: str = "id_b") -> tuple:
     """(labels_dict, edges) when the graph fits the driver tier, else
@@ -668,9 +607,9 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
     """Alternating large-star/small-star connected components
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14): O(log n) rounds on ANY graph shape, vs min-label
-    propagation's O(diameter). The scale choice when components can be
-    long chains (URL redirect graphs, citation chains) rather than the
-    near-cliques LSH produces.
+    propagation's O(diameter) — components can be long chains (URL
+    redirect graphs, citation chains), not only the near-cliques LSH
+    produces.
 
     Each round:
     - large-star: for every node u, connect every strictly-larger
@@ -680,7 +619,7 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
     Both are one groupBy + one re-expansion — no joins growing with
     iteration count.
     Terminates when the edge multiset stops changing (scalar-aggregate
-    fingerprint, same trick as ``connected_components``).
+    fingerprint).
 
     Execution shape (r13 optimization, results identical): ONE eager job
     per round, not three. The large-star output flows lazily into the
@@ -834,7 +773,7 @@ FROM sizes GROUP BY cluster_size ORDER BY cluster_size
 
 register(QuerySpec("dedup_neardup_clusters", dedup_clusters_query,
                    _DEDUP_CLUSTERS_SQL,
-                   description="near-dup components (iterative label propagation) vs recursive-CTE oracle"))
+                   description="near-dup components (alternating-star) vs recursive-CTE oracle"))
 register(QuerySpec("dedup_exact", dedup_exact_query, _DEDUP_EXACT_SQL, headline=True,
                    description="exact dedup via content-hash groupBy (min-id representative)"))
 register(QuerySpec("dedup_minhash_signatures", dedup_minhash_query, _DEDUP_MINHASH_SQL,
@@ -1388,11 +1327,11 @@ def multi_signal_clusters(pairs: DataFrame) -> DataFrame:
     """(comp, cluster_size, signals) per near-dup component over a
     multi-signal edge relation (id_a, id_b, signal).
 
-    Components come from min-label propagation over the DISTINCT edge
-    set; ``signals`` is the sorted comma-joined set of signal names whose
-    edges fall inside the component — the provenance a reviewer needs to
-    see WHY a cluster exists (e.g. a doc-in-doc cluster visible only to
-    containment).
+    Components come from ``connected_components_star`` over the DISTINCT
+    edge set; ``signals`` is the sorted comma-joined set of signal names
+    whose edges fall inside the component — the provenance a reviewer
+    needs to see WHY a cluster exists (e.g. a doc-in-doc cluster visible
+    only to containment).
     """
     # star variant: multi-signal evidence (containment chains quote->doc
     # ->superset) builds LONG-CHAIN components whose diameter exceeds any

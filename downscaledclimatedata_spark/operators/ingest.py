@@ -40,19 +40,52 @@ INGEST_RESULT_SCHEMA = T.StructType([
 ])
 
 
-def default_fetcher(url: str) -> bytes:
-    """STUB transport. Production: requests.get(url, stream=True) piped to
-    object storage exactly like loca2.py:31-44 (zero local buffering).
-    Here: deterministic fake payload derived from the url."""
-    return f"payload:{url}".encode()
+def _build_ingest_defaults():
+    """The STUB transport defaults, built inside a factory so their
+    closures pickle BY VALUE (cloudpickle ships nested functions whole):
+    executors must not need this package on their PYTHONPATH — callers
+    of ``__spark_entry__`` run from an arbitrary cwd on a plain session.
+    Same idiom as ``netcdf3._build_netcdf3_codecs``."""
+
+    def default_fetcher(url: str) -> bytes:
+        """STUB transport. Production: requests.get(url, stream=True)
+        piped to object storage exactly like loca2.py:31-44 (zero local
+        buffering). Here: deterministic fake payload derived from the
+        url."""
+        return f"payload:{url}".encode()
+
+    def default_converter(payload: bytes, out_path: str) -> int:
+        """STUB converter. Production: xr.open_dataset(...) then
+        ds.to_zarr(store, mode='w', consolidated=True) (loca2.py:84-100)
+        or a tidy-long decode to partitioned Parquet (SURVEY §1.5).
+        Here: byte count passthrough."""
+        return len(payload)
+
+    def default_grid_decoder(payload: bytes, meta: dict) -> "pd.DataFrame":
+        """STUB gridded decode. Production: xr.open_dataset over the blob
+        (reference loca2.py:84-86), chunked by variable/time inside the
+        UDF (SURVEY §7.5.1) and melted to tidy rows. Here: a
+        deterministic 2x2x2 (time, lat, lon) grid derived from the
+        payload hash so the fan-out, schema, and partitioning are
+        real."""
+        import hashlib as _hashlib
+        from datetime import datetime
+        import pandas as _pd
+        h = int(_hashlib.md5(payload).hexdigest()[:8], 16)
+        rows = []
+        for t in range(2):
+            ts = datetime(1950 + t, 1, 1)
+            for i in range(2):
+                for j in range(2):
+                    rows.append((ts, 32.0 + i / 16.0, -117.0 + j / 16.0,
+                                 float((h >> (t * 4 + i * 2 + j)) % 100)))
+        return _pd.DataFrame(rows, columns=["time", "lat", "lon", "value"])
+
+    return default_fetcher, default_converter, default_grid_decoder
 
 
-def default_converter(payload: bytes, out_path: str) -> int:
-    """STUB converter. Production: xr.open_dataset(...) then
-    ds.to_zarr(store, mode='w', consolidated=True) (loca2.py:84-100) or a
-    tidy-long decode to partitioned Parquet (SURVEY §1.5). Here: byte
-    count passthrough."""
-    return len(payload)
+default_fetcher, default_converter, default_grid_decoder = \
+    _build_ingest_defaults()
 
 
 def ingest_and_convert(manifest: DataFrame,
@@ -66,13 +99,6 @@ def ingest_and_convert(manifest: DataFrame,
     run, dagster.yaml:1-2 — on Spark, parallelism is the point and
     correctness comes from run-key idempotency instead).
     """
-    # Bind everything the closure needs as locals so cloudpickle ships it
-    # by value — executors must not need this package on their PYTHONPATH
-    # (the driver harness runs from an arbitrary cwd).
-    _fetch = fetcher if fetcher is not default_fetcher else (
-        lambda url: f"payload:{url}".encode())
-    _convert = converter if converter is not default_converter else (
-        lambda payload, out_path: len(payload))
     _columns = [f.name for f in INGEST_RESULT_SCHEMA.fields]
     _root = output_root
 
@@ -86,8 +112,8 @@ def ingest_and_convert(manifest: DataFrame,
                 # must not be rewritten — same semantics as rewrite_extension
                 out_path = _root + _re.sub(r"\.nc$", ".zarr", s3_key)
                 try:
-                    payload = _fetch(url)
-                    n = _convert(payload, out_path)
+                    payload = fetcher(url)
+                    n = converter(payload, out_path)
                     rows.append((s3_key, "ok", n, out_path, None))
                 except Exception as exc:  # row-level tolerance (T7)
                     rows.append((s3_key, "error", 0, None, str(exc)[:200]))
@@ -108,26 +134,6 @@ TIDY_SCHEMA = T.StructType([
 ])
 
 
-def default_grid_decoder(payload: bytes, meta: dict) -> "pd.DataFrame":
-    """STUB gridded decode. Production: xr.open_dataset over the blob
-    (reference loca2.py:84-86), chunked by variable/time inside the UDF
-    (SURVEY §7.5.1) and melted to tidy rows. Here: a deterministic 2x2x2
-    (time, lat, lon) grid derived from the payload hash so the fan-out,
-    schema, and partitioning are real."""
-    import hashlib as _hashlib
-    from datetime import datetime, timezone
-    import pandas as _pd
-    h = int(_hashlib.md5(payload).hexdigest()[:8], 16)
-    rows = []
-    for t in range(2):
-        ts = datetime(1950 + t, 1, 1, tzinfo=timezone.utc).replace(tzinfo=None)
-        for i in range(2):
-            for j in range(2):
-                rows.append((ts, 32.0 + i / 16.0, -117.0 + j / 16.0,
-                             float((h >> (t * 4 + i * 2 + j)) % 100)))
-    return _pd.DataFrame(rows, columns=["time", "lat", "lon", "value"])
-
-
 def decode_netcdf_tidy(manifest: DataFrame,
                        fetcher: Callable[[str], bytes] = default_fetcher,
                        decoder: Callable[[bytes, dict], "pd.DataFrame"] = default_grid_decoder,
@@ -142,40 +148,20 @@ def decode_netcdf_tidy(manifest: DataFrame,
     millions of observation rows; mapInPandas streams Arrow batches so
     nothing materializes driver-side.
     """
-    _fetch = fetcher if fetcher is not default_fetcher else (
-        lambda url: f"payload:{url}".encode())
-    _decode = decoder if decoder is not default_grid_decoder else None
     keys = ("model", "scenario", "memberid", "variable")
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import pandas as _pd
-        decode = _decode or default_grid_decoder_local
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
                 meta = {k: getattr(row, k) for k in keys}
-                grid = decode(_fetch(row.url), meta)
+                grid = decoder(fetcher(row.url), meta)
                 for k in reversed(keys):
                     grid.insert(0, k, meta[k])
                 out.append(grid)
             if out:
                 yield _pd.concat(out, ignore_index=True)
-
-    # self-contained copy for executors (the package zip may not be on
-    # the worker path when an external harness drives a plain session)
-    def default_grid_decoder_local(payload, meta):
-        import hashlib as _hashlib
-        from datetime import datetime
-        import pandas as _pd
-        h = int(_hashlib.md5(payload).hexdigest()[:8], 16)
-        rows = []
-        for t in range(2):
-            ts = datetime(1950 + t, 1, 1)
-            for i in range(2):
-                for j in range(2):
-                    rows.append((ts, 32.0 + i / 16.0, -117.0 + j / 16.0,
-                                 float((h >> (t * 4 + i * 2 + j)) % 100)))
-        return _pd.DataFrame(rows, columns=["time", "lat", "lon", "value"])
 
     cols = ["url"] + list(keys)
     return manifest.select(*cols).mapInPandas(process, TIDY_SCHEMA)

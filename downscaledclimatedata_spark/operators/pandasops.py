@@ -2,7 +2,7 @@
 grouped-aggregate pandas UDFs.
 
 These complete the engine's UDF surface (SURVEY §2.10): mapInPandas
-(ingest/multimodal) covers stateless batch maps, applyInPandasWithState
+(ingest/NetCDF decode) covers stateless batch maps, applyInPandasWithState
 (streaming) covers keyed state — this module covers per-group dataframe
 transforms and vectorized custom aggregates, the shapes a feature-
 engineering pipeline reaches for when an aggregate isn't expressible as
@@ -196,8 +196,8 @@ def compression_signals(df: DataFrame, text_col: str = "text",
     DEFLATE, so the ratio runs as an Arrow-batched SCALAR_ITER pandas
     UDF — per-batch Python dispatch, C-speed zlib per row, no
     row-at-a-time pickling. No DuckDB oracle exists for DEFLATE either,
-    so this operator is unit-gated against direct zlib (the same
-    discipline as the multimodal decode units), not spec-registered.
+    so this operator is unit-gated against direct zlib, not
+    spec-registered.
 
     Columns: raw/compressed byte counts and their ratio (1.0 for empty
     or NULL text — "compresses to itself").

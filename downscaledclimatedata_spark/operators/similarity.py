@@ -3587,7 +3587,7 @@ def graph_pagerank(edges: DataFrame, rounds: int = PR_ROUNDS,
     the same ordering for ranking purposes.
 
     Scale: the classic iterative DataFrame shape (kmeans_refine,
-    connected_components): per round one join edges⋈ranks (shuffle on
+    connected_components_star): per round one join edges⋈ranks (shuffle on
     the uniform id) + one groupBy(dst); ranks localCheckpoint per round
     so lineage stays flat. Returns (id, rank, out_degree) for every
     node of the graph.

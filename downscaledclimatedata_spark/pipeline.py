@@ -90,9 +90,6 @@ def build_training_corpus(docs: DataFrame, out_dir: str, *,
       the stock decon oracle scores every non-eval doc), so its
       anti-join rides the quality materialization instead of paying a
       second full-row checkpoint of the corpus;
-    * the deduped corpus is ``localCheckpoint``'ed because it too has
-      two consumers (the mixture-rate aggregate and the sampled join),
-      and checkpointing caps the LSH/connected-components lineage;
     * the cleaned sample is NOT checkpointed: since the ranked rows are
       carried through the shuffle window directly (``carry_rows``), the
       shard write is its only consumer — the PII projection runs exactly

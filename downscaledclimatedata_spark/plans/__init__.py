@@ -44,7 +44,7 @@ def all_specs() -> dict[str, QuerySpec]:
     # Import side-effect modules that populate the registry.
     from downscaledclimatedata_spark.plans import advanced, relational, scale, temporal  # noqa: F401
     from downscaledclimatedata_spark.operators import (  # noqa: F401
-        catalog, discovery, dedup, maintenance, multimodal, netcdf3,
+        catalog, discovery, dedup, maintenance, netcdf3,
         pandasops, prep, similarity, textops,
     )
     from downscaledclimatedata_spark import pipeline  # noqa: F401

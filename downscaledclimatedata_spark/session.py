@@ -25,7 +25,7 @@ _LOCAL_DEFAULTS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Small-dim broadcast (region/nation/registry are tiny).
     "spark.sql.autoBroadcastJoinThreshold": "64m",
-    # Arrow for any pandas-UDF path (ingest/convert, multimodal decode).
+    # Arrow for any pandas-UDF path (ingest/convert, NetCDF decode).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic timestamps for oracle comparison.
     "spark.sql.session.timeZone": "UTC",

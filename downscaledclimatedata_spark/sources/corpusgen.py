@@ -21,7 +21,7 @@ Registration: ``spark.dataSource.register(CorpusGenDataSource)`` — see
 tests/test_corpusgen.py.
 
 Every class is defined inside a factory closure (the same discipline as
-the multimodal codec builders): a module-level DataSource class pickles
+``netcdf3._build_netcdf3_codecs``): a module-level DataSource class pickles
 by REFERENCE and dies with ModuleNotFoundError on any cluster whose
 workers don't carry this package on PYTHONPATH — found the honest way
 when the driver-contract drive ran ``streaming_pysource_agg`` from a

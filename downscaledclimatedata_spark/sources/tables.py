@@ -77,8 +77,3 @@ def load_table_parallel(spark: SparkSession, sf_dir: str, name: str,
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in TABLE_NAMES}
 
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose all tables as SQL temp views (for spark.sql-style plans)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

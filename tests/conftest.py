@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import math
 import os
 
 import pytest
@@ -18,14 +19,9 @@ SF_SMOKE = "/root/testdata/sf0.001"
 _SLOW_FILES = {
     "test_plan_audit.py",   # ~225 s: whitelist-equality plan sweep over all specs
     "test_ivf_k256.py",     # ~39 s: 256-list build + recall ladder
-    # full-registry oracle sweep SUBSUMED by test_driver_canon_parity,
-    # which its own docstring calls "strictly harsher" (driver-faithful
-    # stringified-hash comparison) and which STAYS in the fast tier —
-    # the tuple-comparison twin runs only under -m ""
-    "test_oracle_parity.py",
 }
 # parametrized spec names whose DuckDB oracle is a recursive-CTE
-# monster (~100 s EACH in the three parity suites + oracle_parity)
+# monster (~100 s EACH in the parity suites)
 _SLOW_PARAMS = ("[dedup_all_signal_clusters]", "[dedup_multi_signal_clusters]")
 _SLOW_TESTS = {
     "test_graph_search_recall_monotone_and_floor",   # ~25 s
@@ -41,6 +37,14 @@ def pytest_collection_modifyitems(config, items):
         if (fname in _SLOW_FILES or base in _SLOW_TESTS
                 or any(p in item.name for p in _SLOW_PARAMS)):
             item.add_marker(pytest.mark.slow)
+
+
+def pytest_terminal_summary(terminalreporter):
+    n = sum(1 for item in terminalreporter.stats.get("deselected", [])
+            if item.get_closest_marker("slow"))
+    if n:
+        terminalreporter.write_line(
+            f'{n} slow tests deselected; run all with -m ""')
 
 
 @pytest.fixture(scope="session")
@@ -60,3 +64,21 @@ def duck():
             f"CREATE VIEW {name} AS SELECT * FROM "
             f"read_parquet('{SF_CORRECTNESS}/{name}.parquet')")
     yield con
+
+
+def _normalize(v):
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "NaN"
+        return v
+    if hasattr(v, "isoformat"):
+        return v.isoformat()
+    return v
+
+
+def rows_to_sorted(rows, colnames):
+    """Order-insensitive row comparison key for the edge parity suites:
+    columns ordered by name, NaN/temporal values normalized, rows sorted."""
+    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
+    out = [tuple(_normalize(r[i]) for i in order) for r in rows]
+    return sorted(out, key=repr)

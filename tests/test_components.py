@@ -2,56 +2,70 @@
 
 from __future__ import annotations
 
-from downscaledclimatedata_spark.operators.dedup import connected_components
+import random
+
+import pytest
+
+from downscaledclimatedata_spark.operators import dedup as D
 
 
-def test_chain_and_separate_pair(spark):
+def union_find_components(edges):
+    """Pure-Python reference: {node: min id of its component}."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # resolve to component minimum
+    return {n: find(n) for n in parent}
+
+
+@pytest.fixture(params=["driver", "star"])
+def star_cc(request, monkeypatch):
+    """``connected_components_star`` pinned to one size tier: the driver
+    union-find (default cap) or the iterative alternating stars (cap 0,
+    so every non-empty graph iterates)."""
+    if request.param == "star":
+        monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", 0)
+
+    def run(spark, edges):
+        pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+        return D.connected_components_star(pairs).collect()
+    return run
+
+
+def test_chain_and_separate_pair(spark, star_cc):
     # chain 1-2-3 (diameter 2) + disjoint pair 10-11
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint")
-    comps = {r.id: r.comp for r in connected_components(pairs).collect()}
+    comps = {r.id: r.comp
+             for r in star_cc(spark, [(1, 2), (2, 3), (10, 11)])}
     assert comps == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_long_chain_converges(spark):
-    # 0-1-2-...-9: worst case for label propagation (diameter 9)
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "id_a bigint, id_b bigint")
-    comps = {r.id: r.comp for r in connected_components(pairs).collect()}
+def test_long_chain_converges(spark, star_cc):
+    # 0-1-2-...-9: diameter 9, the worst case for label propagation
+    comps = {r.id: r.comp
+             for r in star_cc(spark, [(i, i + 1) for i in range(9)])}
     assert comps == {i: 0 for i in range(10)}
 
 
-def test_triangle_with_extra_edge(spark):
+def test_triangle_with_extra_edge(spark, star_cc):
     # redundant edges must not duplicate rows
-    pairs = spark.createDataFrame(
-        [(5, 6), (6, 7), (5, 7)], "id_a bigint, id_b bigint")
-    rows = connected_components(pairs).collect()
+    rows = star_cc(spark, [(5, 6), (6, 7), (5, 7)])
     assert len(rows) == 3
     assert {r.comp for r in rows} == {5}
 
 
-def test_random_graphs_match_union_find(spark):
-    """Property: label propagation equals a reference union-find on
+def test_random_graphs_match_union_find(spark, star_cc):
+    """Property: the star components equal a reference union-find on
     deterministic pseudo-random graphs of varying shape."""
-    import random
-
-    def union_find_components(edges):
-        parent = {}
-
-        def find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # resolve to component minimum
-        return {n: find(n) for n in parent}
-
     rng = random.Random(7)
     for trial in range(3):
         n_nodes = 30 + trial * 20
@@ -60,22 +74,18 @@ def test_random_graphs_match_union_find(spark):
                         for _ in range(n_nodes)})
         edges = [(a, b) for a, b in edges if a != b]
         want = union_find_components(edges)
-        df = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-        got = {r.id: r.comp for r in connected_components(df).collect()}
+        got = {r.id: r.comp for r in star_cc(spark, edges)}
         assert got == want, f"trial {trial}: {got} != {want}"
 
 
-def test_star_algorithm_matches_label_propagation(spark):
-    """large-star/small-star equals min-label propagation on chains,
-    cliques, and pseudo-random graphs."""
-    import random
-    from downscaledclimatedata_spark.operators.dedup import (
-        connected_components_star)
-
+def test_star_matches_union_find_on_chains_and_cliques(spark, star_cc):
+    """Chains, cliques and pseudo-random graphs against the reference."""
     cases = [
         [(i, i + 1) for i in range(12)],             # long chain
         [(1, 2), (2, 3), (10, 11)],                  # chain + pair
         [(5, 6), (6, 7), (5, 7)],                    # triangle
+        [(a, b) for a in range(20, 26)
+         for b in range(a + 1, 26)],                 # 6-clique
     ]
     rng = random.Random(13)
     for trial in range(2):
@@ -85,12 +95,9 @@ def test_star_algorithm_matches_label_propagation(spark):
                              for _ in range(n_nodes)}))
     for edges in cases:
         edges = [e for e in edges if e[0] != e[1]]
-        if not edges:
-            continue
-        pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-        a = {r.id: r.comp for r in connected_components(pairs).collect()}
-        b = {r.id: r.comp for r in connected_components_star(pairs).collect()}
-        assert a == b, f"mismatch on {edges[:5]}..."
+        got = {r.id: r.comp for r in star_cc(spark, edges)}
+        assert got == union_find_components(edges), \
+            f"mismatch on {edges[:5]}..."
 
 
 def test_pair_graph_stats_on_known_graph(spark):
@@ -123,10 +130,6 @@ def test_star_tiers_identical(spark):
     CC_DRIVER_MAX_EDGES across deterministic random graphs (chains,
     cliques, isolated pairs), and pin that an empty pair relation
     yields an empty label relation on both."""
-    import random
-
-    from downscaledclimatedata_spark.operators import dedup as D
-
     rng = random.Random(23)
     orig = D.CC_DRIVER_MAX_EDGES
     try:
@@ -158,10 +161,6 @@ def test_prune_tiers_identical(spark):
     require identical survivor sets. Covers: the isin path, the
     below-tier relation fallback (PRUNE_ISIN_MAX_IDS = -1), and the
     distributed star path (CC_DRIVER_MAX_EDGES = -1)."""
-    import random
-
-    from downscaledclimatedata_spark.operators import dedup as D
-
     rng = random.Random(41)
     words = ["alpha", "beta", "the", "and", "is", "gamma", "zz1", "qq"]
     orig_cc, orig_in = D.CC_DRIVER_MAX_EDGES, D.PRUNE_ISIN_MAX_IDS

@@ -2,45 +2,29 @@
 way the DRIVER compares them — pandas frames, columns sorted by name,
 rows sorted, every cell stringified, then hashed.
 
-This is strictly harsher than test_oracle_parity's tuple comparison:
-python's `886 == 886.0` hides a DuckDB HUGEINT materializing as float64,
-and `None == None` hides date-vs-timestamp null renderings (None vs NaT)
-— both classes produced red driver rows while tuple-parity stayed green.
+This is harsher than a tuple comparison: python's `886 == 886.0` hides
+a DuckDB HUGEINT materializing as float64, and `None == None` hides
+date-vs-timestamp null renderings (None vs NaT) — both classes produced
+red driver rows while tuple-parity stayed green. The canon is
+``canon_run._canon``, the one the recorded sweep and the benchmark use.
 """
 
 from __future__ import annotations
 
-import duckdb
-import pandas as pd
 import pytest
 
+from canon_run import _canon
 from downscaledclimatedata_spark.plans import all_specs
 from tests.conftest import SF_CORRECTNESS
 
 SPECS = all_specs()
 
 
-@pytest.fixture(scope="module")
-def duck_canon():
-    con = duckdb.connect()
-    for name in ("region", "nation", "customer", "supplier", "part", "orders",
-                 "lineitem", "events", "documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{SF_CORRECTNESS}/{name}.parquet')")
-    yield con
-
-
-def _canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df[sorted(df.columns)]
-    return df.astype(str).sort_values(by=list(df.columns)).reset_index(drop=True)
-
-
 @pytest.mark.parametrize("name", sorted(n for n, s in SPECS.items() if s.oracle))
-def test_spec_matches_oracle_under_driver_canonicalization(name, spark, duck_canon):
+def test_spec_matches_oracle_under_driver_canonicalization(name, spark, duck):
     spec = SPECS[name]
     sdf = _canon(spec.spark(spark, SF_CORRECTNESS).toPandas())
-    odf = _canon(duck_canon.execute(spec.oracle).df())
+    odf = _canon(duck.execute(spec.oracle).df())
     assert list(sdf.columns) == list(odf.columns)
     assert len(sdf) == len(odf), f"{name}: {len(sdf)} vs {len(odf)} rows"
     neq = (sdf != odf).any(axis=1)

@@ -16,8 +16,7 @@ import duckdb
 import pytest
 
 from downscaledclimatedata_spark.plans import all_specs
-from tests.conftest import SF_SMOKE
-from tests.test_oracle_parity import _rows_to_sorted
+from tests.conftest import SF_SMOKE, rows_to_sorted
 
 SPECS = all_specs()
 
@@ -88,8 +87,8 @@ def test_doc_spec_survives_edge_corpus(name, spark, edge_dir, edge_duck):
     assert sorted(sdf.columns) == sorted(duck_cols)
     assert len(spark_rows) == len(duck_rows), (
         f"{name}: rows spark={len(spark_rows)} duck={len(duck_rows)}")
-    s_sorted = _rows_to_sorted([tuple(r) for r in spark_rows], sdf.columns)
-    d_sorted = _rows_to_sorted(duck_rows, duck_cols)
+    s_sorted = rows_to_sorted([tuple(r) for r in spark_rows], sdf.columns)
+    d_sorted = rows_to_sorted(duck_rows, duck_cols)
     mismatches = [(i, a, b) for i, (a, b) in enumerate(zip(s_sorted, d_sorted))
                   if a != b]
     assert not mismatches, f"{name}: first mismatches {mismatches[:3]}"

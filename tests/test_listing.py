@@ -2,6 +2,10 @@
 S3 via (fake-client) paginator — driver-side and distributed — and the
 catalog fixture e2e driven from a MATERIALIZED local directory tree
 instead of an injected DataFrame.
+
+The fs-listing tests walk a small synthetic tree in LOCA2 key grammar,
+so they run everywhere; only the golden e2e needs the reference's real
+catalog snapshot and is skipped without it.
 """
 
 from __future__ import annotations
@@ -24,6 +28,19 @@ FIXTURE = "/root/reference/tests/assets/loca2_esm_catalog.csv"
 BUCKET = "ees240146"
 PREFIX = "netcdf/LOCA2/monthly/"
 
+# {model}/{scenario}/{var}.{model}.{scenario}.{member}.{range}.{version}
+# .monthly.cent.nc under the bucket prefix, plus one dirty `.ncks.tmp`
+# key like the one in the real snapshot
+SYNTHETIC_KEYS = [
+    f"{PREFIX}{model}/{scenario}/{var}.{model}.{scenario}.r1i1p1f1.{rng}"
+    ".LOCA_16thdeg_v20240915.monthly.cent.nc"
+    for model in ("ACCESS-CM2", "CNRM-ESM2-1")
+    for scenario, rng in (("historical", "1950-2014"),
+                          ("ssp245", "2015-2044"))
+    for var in ("pr", "tasmax")
+] + [f"{PREFIX}ACCESS-CM2/ssp245/tasmax.ACCESS-CM2.ssp245.r1i1p1f1."
+     "2015-2044.LOCA_16thdeg_v20240915.monthly.cent.nc.ncks.tmp"]
+
 
 def _fixture_keys():
     with open(FIXTURE, newline="") as f:
@@ -31,29 +48,39 @@ def _fixture_keys():
                 for r in csv.DictReader(f)]
 
 
-@pytest.fixture(scope="module")
-def fixture_tree(tmp_path_factory):
-    """The reference catalog snapshot materialized as real files on disk."""
-    root = tmp_path_factory.mktemp("bucket_tree")
-    for key in _fixture_keys():
+def _materialize(root, keys):
+    """``keys`` as real files on disk under ``root``."""
+    for key in keys:
         p = root / key
         p.parent.mkdir(parents=True, exist_ok=True)
         p.write_bytes(b"x")  # non-empty so size is meaningful
     return str(root)
 
 
-def test_listing_from_fs_lists_all_keys(spark, fixture_tree):
-    keys = set(_fixture_keys())
-    got = listing_from_fs(spark, fixture_tree).collect()
-    assert {r.key for r in got} == keys
+@pytest.fixture(scope="module")
+def synthetic_tree(tmp_path_factory):
+    return _materialize(tmp_path_factory.mktemp("synthetic_tree"),
+                        SYNTHETIC_KEYS)
+
+
+@pytest.fixture(scope="module")
+def fixture_tree(tmp_path_factory):
+    """The reference catalog snapshot materialized as real files on disk."""
+    return _materialize(tmp_path_factory.mktemp("bucket_tree"),
+                        _fixture_keys())
+
+
+def test_listing_from_fs_lists_all_keys(spark, synthetic_tree):
+    got = listing_from_fs(spark, synthetic_tree).collect()
+    assert {r.key for r in got} == set(SYNTHETIC_KEYS)
     assert all(r.size == 1 for r in got)
     assert all(r.last_modified for r in got)
 
 
-def test_listing_from_fs_prunes_content(spark, fixture_tree):
+def test_listing_from_fs_prunes_content(spark, synthetic_tree):
     """The listing must be metadata-only: the binaryFile scan's ReadSchema
     must not include the content column (else every byte is read)."""
-    df = listing_from_fs(spark, fixture_tree)
+    df = listing_from_fs(spark, synthetic_tree)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -62,6 +89,8 @@ def test_listing_from_fs_prunes_content(spark, fixture_tree):
     assert "content" not in read, f"listing scan reads file content: {read}"
 
 
+@pytest.mark.skipif(not os.path.exists(FIXTURE),
+                    reason="reference fixture not present")
 def test_catalog_e2e_from_materialized_tree(spark, fixture_tree):
     """Full S6 path: real directory walk -> build_catalog == fixture."""
     listing = listing_from_fs(spark, fixture_tree)
@@ -155,8 +184,8 @@ def test_listing_feeds_catalog(spark):
     assert (row.variable, row.model, row.scheme) == ("pr", "netcdf", "LOCA2")
 
 
-def test_listing_from_fs_key_prefix(spark, fixture_tree):
+def test_listing_from_fs_key_prefix(spark, synthetic_tree):
     """key_prefix prepends a bucket-style path so a local tree can stand
     in for a prefixed bucket listing."""
-    got = listing_from_fs(spark, fixture_tree, key_prefix="mirror/").limit(5).collect()
-    assert got and all(r.key.startswith("mirror/") for r in got)
+    got = listing_from_fs(spark, synthetic_tree, key_prefix="mirror/").collect()
+    assert {r.key for r in got} == {f"mirror/{k}" for k in SYNTHETIC_KEYS}

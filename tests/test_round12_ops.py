@@ -144,96 +144,6 @@ def test_knn_graph_hierarchical_probe2_spread_sampling(spark):
     assert len({r["vec_id"] for r in out}) >= 50
 
 
-# --- JPEG restart-interval (DRI/RSTn) salvage codec ------------------------------
-
-def _dri_expected(grid, w, h):
-    """Python mirror of the oracle's per-block arithmetic."""
-    nbx = -(-w // 8)
-    tot = 0
-    for bi, dc in enumerate(grid):
-        by, bx = divmod(bi, nbx)
-        npix = min(8, h - by * 8) * min(8, w - bx * 8)
-        tot += npix * min(255, max(0, 2 * dc + 128))
-    return tot
-
-
-def test_jpeg_dri_clean_roundtrip():
-    from downscaledclimatedata_spark.operators.multimodal import (
-        decode_jpeg_dri_stats, make_jpeg_dri)
-    w, h = 20, 12  # 3x2 blocks
-    grid = [5, -64, 64, 0, -3, 17]
-    blob = make_jpeg_dri(grid, w, h, restart_every=2)
-    got = decode_jpeg_dri_stats(blob)
-    assert got == (w, h, 6, 3, 6, _dri_expected(grid, w, h))
-
-
-def test_jpeg_dri_corrupt_segment_salvages_the_rest():
-    from downscaledclimatedata_spark.operators.multimodal import (
-        decode_jpeg_dri_stats, make_jpeg_dri)
-    w, h = 20, 12
-    grid = [5, -64, 64, 0, -3, 17]
-    blob = make_jpeg_dri(grid, w, h, restart_every=2, corrupt_seg=1)
-    got = decode_jpeg_dri_stats(blob)
-    keep = [0, 1, 4, 5]  # segment 1 = blocks 2,3 lost
-    nbx = 3
-    want = 0
-    for bi in keep:
-        by, bx = divmod(bi, nbx)
-        npix = min(8, h - by * 8) * min(8, w - bx * 8)
-        want += npix * min(255, max(0, 2 * grid[bi] + 128))
-    assert got == (w, h, 6, 3, 4, want)
-
-
-def test_jpeg_dri_truncated_tail_salvages_prefix():
-    from downscaledclimatedata_spark.operators.multimodal import (
-        decode_jpeg_dri_stats, make_jpeg_dri)
-    w, h = 20, 12
-    grid = [5, -64, 64, 0, -3, 17]
-    blob = make_jpeg_dri(grid, w, h, restart_every=2, truncate_tail=True)
-    assert not blob.endswith(b"\xff\xd9")  # EOI genuinely lost
-    got = decode_jpeg_dri_stats(blob)
-    nbx = 3
-    want = 0
-    for bi in (0, 1, 2, 3):  # final segment = blocks 4,5 lost
-        by, bx = divmod(bi, nbx)
-        npix = min(8, h - by * 8) * min(8, w - bx * 8)
-        want += npix * min(255, max(0, 2 * grid[bi] + 128))
-    assert got == (w, h, 6, 3, 4, want)
-    # single-segment truncation: nothing to resync to -> lost payload
-    blob1 = make_jpeg_dri([5], 8, 8, restart_every=2, truncate_tail=True)
-    assert decode_jpeg_dri_stats(blob1) is None
-
-
-def test_jpeg_dri_bad_ordinal_and_cross_rejection():
-    from downscaledclimatedata_spark.operators.multimodal import (
-        decode_jpeg_dri_stats, decode_jpeg_pixel_stats, make_jpeg_dc,
-        make_jpeg_dri)
-    grid = [5, -64, 64, 0, -3, 17]
-    bad = make_jpeg_dri(grid, 20, 12, restart_every=2, bad_rst=True)
-    assert decode_jpeg_dri_stats(bad) is None
-    # the plain decoder rejects restart-punctuated scans; the DRI
-    # decoder requires a DRI marker — each certifies its own class
-    dri = make_jpeg_dri(grid, 20, 12, restart_every=2)
-    assert decode_jpeg_pixel_stats(dri) is None
-    plain = make_jpeg_dc(grid, 20, 12)
-    assert decode_jpeg_dri_stats(plain) is None
-
-
-def test_jpeg_dri_dc_reset_is_real():
-    """DC prediction must reset at each restart: a decoder that carries
-    the predictor across segments reconstructs wrong values. Pin it by
-    decoding a 2-segment stream whose second segment's first DC equals
-    the first segment's last (diff 0 under carry, full value under
-    reset) and checking the pixel sum matches the reset semantics."""
-    from downscaledclimatedata_spark.operators.multimodal import (
-        decode_jpeg_dri_stats, make_jpeg_dri)
-    w, h = 16, 8
-    grid = [40, 40]  # one block per segment
-    blob = make_jpeg_dri(grid, w, h, restart_every=1)
-    got = decode_jpeg_dri_stats(blob)
-    assert got == (w, h, 2, 2, 2, 2 * 64 * (2 * 40 + 128))
-
-
 def test_tiered_band_two_level_survives_offset_ids(spark):
     """The [1600, THREE_LEVEL_MIN_N) tier routes two-level — and must
     use the hash-spread centroid sample there: with window sampling an
@@ -288,70 +198,6 @@ def test_semantic_pair_recall_perfect_with_one_cell(spark):
                                 query_hash=True).collect()
     assert rows
     assert all(r["recall"] == 1.0 for r in rows)
-
-
-# --- progressive JPEG DC-band codec ----------------------------------------------
-
-def _prog_sum(grid, w, h, refined_upto=None):
-    """Expected pix_sum: refined blocks use dc, the rest the preview
-    value dc - (dc & 1) (two's-complement low bit, negatives included)."""
-    nbx = -(-w // 8)
-    tot = 0
-    for bi, dc in enumerate(grid):
-        use = dc if (refined_upto is None or bi < refined_upto) \
-            else dc - (dc & 1)
-        by, bx = divmod(bi, nbx)
-        npix = min(8, h - by * 8) * min(8, w - bx * 8)
-        tot += npix * min(255, max(0, 2 * use + 128))
-    return tot
-
-
-def test_jpeg_prog_two_scan_roundtrip_exact():
-    from downscaledclimatedata_spark.operators.multimodal import (
-        decode_jpeg_prog_stats, make_jpeg_prog)
-    w, h = 20, 12
-    grid = [5, -64, 64, 0, -3, 17]
-    got = decode_jpeg_prog_stats(make_jpeg_prog(grid, w, h))
-    assert got == (w, h, 6, 2, 6, _prog_sum(grid, w, h))
-
-
-def test_jpeg_prog_preview_only_uses_point_transform():
-    """Without the refinement scan every block sits at (dc >> 1) << 1 —
-    for negative dc the arithmetic shift floors, so -5 previews as -6
-    (dc - (dc & 1)), NOT -4: the two's-complement contract."""
-    from downscaledclimatedata_spark.operators.multimodal import (
-        decode_jpeg_prog_stats, make_jpeg_prog)
-    w, h = 16, 8
-    grid = [-5, 7]
-    got = decode_jpeg_prog_stats(make_jpeg_prog(grid, w, h, refine=False))
-    assert got == (w, h, 2, 1, 0, _prog_sum(grid, w, h, refined_upto=0))
-    assert _prog_sum([-5], 8, 8, 0) == 64 * (2 * -6 + 128)
-
-
-def test_jpeg_prog_partial_refinement_per_block():
-    """Truncated refinement refines exactly the first 8*bytes blocks;
-    the rest keep preview values — mixed per-block state."""
-    from downscaledclimatedata_spark.operators.multimodal import (
-        decode_jpeg_prog_stats, make_jpeg_prog)
-    w, h = 80, 16  # 10x2 = 20 blocks
-    grid = [((i * 7) % 129) - 64 for i in range(20)]
-    blob = make_jpeg_prog(grid, w, h, refine_bytes=1)  # 8 blocks refined
-    got = decode_jpeg_prog_stats(blob)
-    assert got == (w, h, 20, 2, 8, _prog_sum(grid, w, h, refined_upto=8))
-    empty = make_jpeg_prog(grid, w, h, refine_bytes=0)
-    got0 = decode_jpeg_prog_stats(empty)
-    assert got0 == (w, h, 20, 2, 0, _prog_sum(grid, w, h, refined_upto=0))
-
-
-def test_jpeg_prog_frame_class_cross_rejection():
-    from downscaledclimatedata_spark.operators.multimodal import (
-        decode_jpeg_pixel_stats, decode_jpeg_prog_stats, make_jpeg_dc,
-        make_jpeg_prog)
-    grid = [5, -64, 64, 0, -3, 17]
-    prog = make_jpeg_prog(grid, 20, 12)
-    base = make_jpeg_dc(grid, 20, 12)
-    assert decode_jpeg_prog_stats(base) is None   # SOF0 rejected
-    assert decode_jpeg_pixel_stats(prog) is None  # SOF2 rejected
 
 
 def test_semantic_dedup_iterated_reunites_shattered_groups(spark):

@@ -93,62 +93,6 @@ def test_ann_index_serve_shuffle_fallback_same_results(spark, tmp_path):
         "sortmergejoin" in plan or "shuffledhashjoin" in plan
 
 
-def test_jpeg_ac_roundtrip_salvage_and_cross_rejection():
-    """The spectral-selection codec pair: full three-scan decode
-    reproduces the planted spectrum exactly (EOBRUN + ZRL discipline),
-    a truncated high-band scan is dropped WHOLE (low band + DC
-    survive), a DC-only stream decodes with one scan, and the decoder
-    rejects baseline (SOF0) and successive-approximation streams."""
-    from downscaledclimatedata_spark.operators.multimodal import (
-        ACS_H_BASE, ACS_H_MOD, ACS_W_BASE, ACS_W_MOD,
-        decode_jpeg_ac_stats, jpeg_ac_plant, jpeg_dc_value, make_jpeg_ac,
-        make_jpeg_dc, make_jpeg_prog)
-    for d in (0, 7, 11, 13, 22, 100, 209, 247):
-        w, h = ACS_W_BASE + d % ACS_W_MOD, ACS_H_BASE + d % ACS_H_MOD
-        nbx, nby = -(-w // 8), -(-h // 8)
-        nb = nbx * nby
-        grid = [jpeg_dc_value(d, by, bx)
-                for by in range(nby) for bx in range(nbx)]
-        acg = [jpeg_ac_plant(d, bi) for bi in range(nb)]
-        n_ac = sum(len(c) for c in acg)
-        ck = sum(k * v * (bi + 1)
-                 for bi, c in enumerate(acg) for k, v in c.items())
-        dc = sum(grid)
-        assert decode_jpeg_ac_stats(make_jpeg_ac(grid, acg, w, h)) == \
-            (w, h, nb, 3, n_ac, ck, dc)
-        lo = [{k: v for k, v in c.items() if k <= 5} for c in acg]
-        n_lo = sum(len(c) for c in lo)
-        ck_lo = sum(k * v * (bi + 1)
-                    for bi, c in enumerate(lo) for k, v in c.items())
-        assert decode_jpeg_ac_stats(
-            make_jpeg_ac(grid, acg, w, h, trunc_last=True)) == \
-            (w, h, nb, 2, n_lo, ck_lo, dc)
-        assert decode_jpeg_ac_stats(
-            make_jpeg_ac(grid, acg, w, h, n_band_scans=0)) == \
-            (w, h, nb, 1, 0, 0, dc)
-        assert decode_jpeg_ac_stats(make_jpeg_dc(grid, w, h)) is None
-        assert decode_jpeg_ac_stats(make_jpeg_prog(grid, w, h)) is None
-
-
-def test_jpeg_ac_eobrun_spans_blocks():
-    """A scan whose every block is band-empty must encode as ONE
-    EOBRUN code covering all blocks — and decode back to zero
-    coefficients; mis-tracking the cross-block run would desync."""
-    from downscaledclimatedata_spark.operators.multimodal import (
-        decode_jpeg_ac_stats, make_jpeg_ac)
-    w, h = 32, 32  # 16 blocks
-    grid = [5] * 16
-    acg = [{} for _ in range(16)]
-    blob = make_jpeg_ac(grid, acg, w, h)
-    assert decode_jpeg_ac_stats(blob) == (w, h, 16, 3, 0, 0, 80)
-    # one coefficient in the LAST block: EOBRUN(15) must be consumed
-    # exactly before it, or the coefficient lands in the wrong block
-    acg2 = [{} for _ in range(15)] + [{63: -3}]
-    blob2 = make_jpeg_ac(grid, acg2, w, h)
-    assert decode_jpeg_ac_stats(blob2) == \
-        (w, h, 16, 3, 1, 63 * -3 * 16, 80)
-
-
 def _clustered_rows(n_clusters=3, per=40, seed=7):
     import random
     rnd = random.Random(seed)
