@@ -12,13 +12,19 @@ Reference parity (downscaled_climate_data/sensors/loca2_sensor.py):
 - idempotency (loca2_sensor.py:117): left_anti join against a processed-run
   log keyed by s3_key.
 
-Scale: the registry is O(hundreds) rows -> broadcast join against listings
-of any size; the anti-join shuffles only the new-work keys. One
-(model, scenario) group per batch bounds work per tick exactly like the
+One pipeline does the crawl -> filter -> manifest -> anti-join:
+``discover_all``. Run over the whole registry it is the full worklist in
+one parallel job; ``discovery_tick`` runs it over the cursor's one
+(model, scenario) group, which bounds work per tick exactly like the
 reference's sensor chunking (README.md:133-136).
+
+Scale: the registry is O(hundreds) rows -> broadcast join against listings
+of any size; the anti-join shuffles only the new-work keys.
 """
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -51,6 +57,18 @@ def registry_from_nested(spark: SparkSession, models: dict) -> DataFrame:
     return spark.createDataFrame(rows, REGISTRY_SCHEMA)
 
 
+# The LOCA2 filename grammar (loca2_sensor.py:56-61) after the
+# ``variable.model.scenario.memberid`` head: the stem tail, then the
+# monthly (either naming convention) or daily suffix.
+_STEM_TAIL = r"\..*LOCA_16thdeg_v\d+"
+_MONTHLY_SUFFIX = r"\.(monthly\.cent\.nc|cent\.monthly\.nc)"
+_DAILY_SUFFIX = r"\.cent\.nc"
+
+
+def _grammar_tail(monthly: bool) -> str:
+    return _STEM_TAIL + (_MONTHLY_SUFFIX if monthly else _DAILY_SUFFIX)
+
+
 def file_pattern(variable: str, model: str, scenario: str, memberid: str,
                  monthly: bool) -> str:
     """The reference's filename regex (loca2_sensor.py:56-61), ^-anchored.
@@ -58,11 +76,21 @@ def file_pattern(variable: str, model: str, scenario: str, memberid: str,
     The reference uses `re.match` (prefix-anchored); `rlike` searches
     anywhere, so the engine anchors explicitly (SURVEY §7.5.3).
     """
-    import re as _re
-    base = (rf"{_re.escape(variable)}\.{_re.escape(model)}\.{_re.escape(scenario)}"
-            rf"\.{_re.escape(memberid)}\..*LOCA_16thdeg_v\d+")
-    suffix = r"\.(monthly\.cent\.nc|cent\.monthly\.nc)" if monthly else r"\.cent\.nc"
-    return "^" + base + suffix
+    head = r"\.".join(re.escape(v) for v in (variable, model, scenario, memberid))
+    return "^" + head + _grammar_tail(monthly)
+
+
+def _quoted(value: Column) -> Column:
+    """A Java-regex literal of a string column, as ``Pattern.quote`` does."""
+    return F.concat(F.lit(r"\Q"), F.replace(value, F.lit(r"\E"), F.lit(r"\E\\E\Q")),
+                    F.lit(r"\E"))
+
+
+def _row_file_pattern(variable: str, monthly: bool) -> Column:
+    """``file_pattern`` per row, over the model/scenario/memberid columns."""
+    head = F.concat_ws(r"\.", *(_quoted(c) for c in (
+        F.lit(variable), F.col("model"), F.col("scenario"), F.col("memberid"))))
+    return F.concat(F.lit("^"), head, F.lit(_grammar_tail(monthly)))
 
 
 def filter_filenames(files: DataFrame, pattern: str,
@@ -177,51 +205,61 @@ def crawl_listings(seeds: DataFrame, fetcher=None,
     return seeds.select(url_col).mapInPandas(_crawl, out_schema)
 
 
-def discovery_tick(spark: SparkSession, registry: DataFrame, cursor: str | None,
-                   variable: str, base_url: str, monthly: bool,
-                   processed: DataFrame, fetcher=None) -> tuple[DataFrame | None, str | None]:
-    """One full discovery tick (reference sensor_implementation,
-    loca2_sensor.py:137-163): cursor scan -> crawl the group's listing ->
-    regex filter per member -> manifest projection -> idempotency
-    anti-join. Returns (new-work manifest, next cursor) or (None, None)
-    when the cursor is exhausted.
+def member_listing_urls(registry: DataFrame, variable: str,
+                        base_url: str) -> DataFrame:
+    """One listing URL per (model, scenario, memberid) — the crawl seed
+    set (the reference builds one per tick, loca2_sensor.py:45-47)."""
+    return registry.select(
+        "model", "scenario", "memberid",
+        F.concat(F.lit(base_url.rstrip("/") + "/"), F.col("model"),
+                 F.lit("/cent/0p0625deg/"), F.col("memberid"), F.lit("/"),
+                 F.col("scenario"), F.lit("/"), F.lit(variable), F.lit("/")
+                 ).alias("listing_url"))
+
+
+def discover_all(registry: DataFrame, variable: str, base_url: str,
+                 monthly: bool, processed: DataFrame,
+                 fetcher=None) -> DataFrame:
+    """Discovery over every registry row in one parallel job.
+
+    Pipeline: seed every member's listing URL -> executor-side crawl
+    (mapInPandas) -> per-row anchored regex filter (the reference's
+    re.match semantics, loca2_sensor.py:56-61) -> manifest projection ->
+    idempotency anti-join (loca2_sensor.py:117). The seeds relation is
+    tiny (329 rows for the full registry) and broadcast back onto the
+    crawl output; listings of any size stay distributed.
 
     The listing flag is a REAL parameter here — the reference hard-codes
     monthly=True for the listing while honoring the flag only for key
     prefixing (loca2_sensor.py:157-161); the engine implements the
     intended semantics and records the divergence (SURVEY §7.5.3).
     """
-    import re as _re
+    seeds = member_listing_urls(registry, variable, base_url)
+    listed = crawl_listings(seeds, fetcher=fetcher).join(
+        F.broadcast(seeds), "listing_url")
+    filtered = listed.filter(
+        F.regexp_like(F.col("filename"), _row_file_pattern(variable, monthly)))
+    manifest = build_manifest(filtered, variable, base_url).withColumn(
+        "s3_key", monthly_prefixed_key(F.col("s3_key"), monthly))
+    return new_work(manifest, processed)
+
+
+def discovery_tick(registry: DataFrame, cursor: str | None, variable: str,
+                   base_url: str, monthly: bool, processed: DataFrame,
+                   fetcher=None) -> tuple[DataFrame | None, str | None]:
+    """One discovery tick (reference sensor_implementation,
+    loca2_sensor.py:137-163): ``discover_all`` over the first group after
+    the cursor. Returns (new-work manifest, next cursor), or (None, None)
+    when the cursor is exhausted.
+    """
     group = next_group(registry, cursor)
     if group is None:
         return None, None
     model, scenario = group
-    members = (registry.filter((F.col("model") == model)
-                               & (F.col("scenario") == scenario))
-               .select("memberid"))
-    seeds = members.select(
-        F.col("memberid"),
-        F.concat(F.lit(f"{base_url.rstrip('/')}/{model}/cent/0p0625deg/"),
-                 F.col("memberid"),
-                 F.lit(f"/{scenario}/{variable}/")).alias("listing_url"))
-    listed = crawl_listings(seeds, fetcher=fetcher).join(
-        F.broadcast(seeds), "listing_url")
-    # one JVM-side regex pass with a per-row pattern (member ids are
-    # alphanumeric, no escaping needed for the column part)
-    suffix = (r"\.(monthly\.cent\.nc|cent\.monthly\.nc)" if monthly
-              else r"\.cent\.nc")
-    pattern = F.concat(
-        F.lit("^" + _re.escape(variable) + r"\." + _re.escape(model) + r"\."
-              + _re.escape(scenario) + r"\."),
-        F.col("memberid"),
-        F.lit(r"\..*LOCA_16thdeg_v\d+" + suffix))
-    filtered = listed.filter(F.regexp_like(F.col("filename"), pattern))
-    files = filtered.select(
-        F.lit(model).alias("model"), F.lit(scenario).alias("scenario"),
-        "memberid", "filename")
-    manifest = build_manifest(files, variable, base_url).withColumn(
-        "s3_key", monthly_prefixed_key(F.col("s3_key"), monthly))
-    return new_work(manifest, processed), f"{model}/{scenario}"
+    rows = registry.filter((F.col("model") == model)
+                           & (F.col("scenario") == scenario))
+    return (discover_all(rows, variable, base_url, monthly, processed, fetcher),
+            f"{model}/{scenario}")
 
 
 # --- oracle-checked query entries -------------------------------------------
@@ -235,7 +273,7 @@ def discovery_regex_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     suffix = F.when(F.col("doc_id") % 5 == 0, ".cent.nc").otherwise(".monthly.cent.nc")
     fname = F.concat(variable, F.lit(".MODEL.ssp245.r1i1p1f1.2015-2044.LOCA_16thdeg_v20240915"), suffix)
     files = docs.select(F.col("doc_id"), fname.alias("filename"))
-    pattern = r"^tasmax\.MODEL\.ssp245\.r1i1p1f1\..*LOCA_16thdeg_v\d+\.(monthly\.cent\.nc|cent\.monthly\.nc)"
+    pattern = file_pattern("tasmax", "MODEL", "ssp245", "r1i1p1f1", True)
     return (filter_filenames(files, pattern)
             .agg(F.count("*").alias("n_matched")))
 

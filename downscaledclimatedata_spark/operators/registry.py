@@ -1,4 +1,4 @@
-"""Model-registry dataset + full-worklist discovery.
+"""Model-registry dataset.
 
 The reference hard-codes its model registry as a 334-line nested literal
 (loca2_models.py:9-333: 27 models x {scenario: {memberid,...}}, 99
@@ -8,28 +8,12 @@ intake-ESM catalog fixture (tests/assets/loca2_esm_catalog.csv), whose
 rows enumerate exactly the registry's (model, scenario, memberid)
 combinations — so discovery runs end-to-end on reference-shaped data
 without copying reference source.
-
-Also here: ``discover_all`` — the Spark-first alternative to the
-reference's one-group-per-tick sensor cadence (loca2_sensor.py:89-102).
-The sensor model forces sequential group processing; on Spark the whole
-99-group / 329-listing worklist is ONE parallel job: crawl every listing
-with executor-side mapInPandas, regex-filter per member, project the
-manifest, anti-join the processed log. At production scale the crawl
-fans out across the cluster and the only shuffle is the idempotency
-anti-join on new-work keys.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from downscaledclimatedata_spark.operators.discovery import (
-    build_manifest,
-    crawl_listings,
-    monthly_prefixed_key,
-    new_work,
-)
 
 
 def registry_from_catalog_csv(spark: SparkSession, csv_path: str) -> DataFrame:
@@ -58,43 +42,3 @@ def registry_to_nested(registry: DataFrame) -> dict:
         for s in scenarios:
             scenarios[s] = sorted(scenarios[s])
     return nested
-
-
-def member_listing_urls(registry: DataFrame, variable: str,
-                        base_url: str) -> DataFrame:
-    """One listing URL per (model, scenario, memberid) — the full crawl
-    seed set (reference builds one per tick, loca2_sensor.py:45-47)."""
-    return registry.select(
-        "model", "scenario", "memberid",
-        F.concat(F.lit(base_url.rstrip("/") + "/"), F.col("model"),
-                 F.lit("/cent/0p0625deg/"), F.col("memberid"), F.lit("/"),
-                 F.col("scenario"), F.lit("/"), F.lit(variable), F.lit("/")
-                 ).alias("listing_url"))
-
-
-def discover_all(registry: DataFrame, variable: str, base_url: str,
-                 monthly: bool, processed: DataFrame,
-                 fetcher=None) -> DataFrame:
-    """Full-worklist discovery in one parallel job.
-
-    Pipeline: seed every member's listing URL -> executor-side crawl
-    (mapInPandas) -> per-row anchored regex filter (the reference's
-    re.match semantics, loca2_sensor.py:56-61) -> manifest projection ->
-    idempotency anti-join (loca2_sensor.py:117). The seeds relation is
-    tiny (329 rows) and broadcast back onto the crawl output; listings
-    of any size stay distributed.
-    """
-    import re as _re
-    seeds = member_listing_urls(registry, variable, base_url)
-    listed = crawl_listings(seeds, fetcher=fetcher).join(
-        F.broadcast(seeds), "listing_url")
-    suffix = (r"\.(monthly\.cent\.nc|cent\.monthly\.nc)" if monthly
-              else r"\.cent\.nc")
-    pattern = F.concat(
-        F.lit("^" + _re.escape(variable) + r"\."), F.col("model"), F.lit(r"\."),
-        F.col("scenario"), F.lit(r"\."), F.col("memberid"),
-        F.lit(r"\..*LOCA_16thdeg_v\d+" + suffix))
-    filtered = listed.filter(F.regexp_like(F.col("filename"), pattern))
-    manifest = build_manifest(filtered, variable, base_url).withColumn(
-        "s3_key", monthly_prefixed_key(F.col("s3_key"), monthly))
-    return new_work(manifest, processed)

@@ -1,4 +1,4 @@
-"""Pipeline-state management: cursor table + processed-run log.
+"""Pipeline-state management: cursor file + processed-run log.
 
 Reference semantics (SURVEY §2.9 T1-T7):
 - cursor = last processed "model/scenario" string per stream, compared
@@ -7,23 +7,22 @@ Reference semantics (SURVEY §2.9 T1-T7):
 - run-key idempotency absorbs replays if a run dies between emit and
   cursor commit (two-layer safety, SURVEY §7.5.5).
 
-Storage is a tiny Parquet-backed key-value relation; at scale this is a
-metadata table (or a streaming checkpoint — see stream.py), never a
-bottleneck.
+The cursors are one small JSON object ``{stream: cursor}`` at
+``{path}/cursors.json``, read and written on the driver without a Spark
+job. A commit writes a sibling temp file, fsyncs it and renames it over
+the old file with ``os.replace`` (atomic on POSIX), so a failed commit
+leaves the previous cursors readable. The processed log is a Parquet
+relation, because the idempotency anti-join reads it as one.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-CURSOR_SCHEMA = T.StructType([
-    T.StructField("stream", T.StringType(), False),
-    T.StructField("cursor", T.StringType(), True),
-])
 
 PROCESSED_SCHEMA = T.StructType([
     T.StructField("run_key", T.StringType(), False),
@@ -32,36 +31,37 @@ PROCESSED_SCHEMA = T.StructType([
 
 
 class CursorStore:
-    """One row per stream, e.g. ("tasmax_daily", "ACCESS-CM2/historical").
+    """One cursor per stream, e.g. {"tasmax_daily": "ACCESS-CM2/historical"}.
 
     Commit ordering is the caller's contract: write the work manifest
     first, then ``commit`` — reproducing the reference's yield-then-
-    update_cursor ordering (loca2_sensor.py:161-163).
+    update_cursor ordering (loca2_sensor.py:161-163). ``spark`` is taken
+    for symmetry with ``ProcessedLog``; the cursors need no Spark job.
     """
 
     def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
         self.path = path
+        self.file = os.path.join(path, "cursors.json")
 
-    def _read(self) -> DataFrame:
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], CURSOR_SCHEMA)
-        return self.spark.read.parquet(self.path)
+    def _load(self) -> dict:
+        try:
+            with open(self.file) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {}
 
     def get(self, stream: str) -> str | None:
-        rows = self._read().filter(F.col("stream") == stream).limit(1).collect()
-        return rows[0]["cursor"] if rows else None
+        return self._load().get(stream)
 
     def commit(self, stream: str, cursor: str) -> None:
-        current = self._read().filter(F.col("stream") != stream)
-        updated = current.unionByName(
-            self.spark.createDataFrame([(stream, cursor)], CURSOR_SCHEMA))
-        # two-phase: write to a staging dir then swap, so a failed write
-        # can't destroy existing state
-        staging = self.path + ".staging"
-        updated.coalesce(1).write.mode("overwrite").parquet(staging)
-        final = self.spark.read.parquet(staging)
-        final.coalesce(1).write.mode("overwrite").parquet(self.path)
+        cursors = {**self._load(), stream: cursor}
+        os.makedirs(self.path, exist_ok=True)
+        tmp = self.file + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(cursors, f, sort_keys=True)
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(tmp, self.file)
 
 
 class ProcessedLog:
@@ -80,7 +80,3 @@ class ProcessedLog:
         (run_keys.select(F.col(key_col).alias("run_key"),
                          F.current_timestamp().alias("processed_at"))
          .write.mode("append").parquet(self.path))
-
-    def filter_new(self, manifest: DataFrame, key_col: str = "s3_key") -> DataFrame:
-        log = self.read().select(F.col("run_key").alias(key_col)).distinct()
-        return manifest.join(log, on=key_col, how="left_anti")

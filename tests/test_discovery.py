@@ -15,9 +15,10 @@ from pyspark import cloudpickle
 cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 from downscaledclimatedata_spark.operators.discovery import (
-    build_manifest, file_pattern, filter_filenames, group_keys,
+    build_manifest, discover_all, file_pattern, filter_filenames, group_keys,
     monthly_prefixed_key, new_work, next_group, registry_from_nested,
 )
+from downscaledclimatedata_spark.streaming.cursor import ProcessedLog
 
 # deliberately unsorted (the reference's fixture is too — sorting is
 # under test)
@@ -127,7 +128,7 @@ def test_discovery_tick_end_to_end(spark):
     empty_log = spark.createDataFrame([], "run_key string")
 
     manifest, cur = discovery_tick(
-        spark, reg, None, "tasmax", "https://x.test/LOCA2", monthly=True,
+        reg, None, "tasmax", "https://x.test/LOCA2", monthly=True,
         processed=empty_log, fetcher=_fake_listing_fetcher)
     assert cur == "AModel/historical"
     rows = manifest.collect()
@@ -140,20 +141,55 @@ def test_discovery_tick_end_to_end(spark):
     # replay suppression: mark one file processed, re-run the same tick
     log = spark.createDataFrame([(rows[0]["s3_key"],)], "run_key string")
     manifest2, _ = discovery_tick(
-        spark, reg, None, "tasmax", "https://x.test/LOCA2", monthly=True,
+        reg, None, "tasmax", "https://x.test/LOCA2", monthly=True,
         processed=log, fetcher=_fake_listing_fetcher)
     assert manifest2.count() == 1
 
     # second tick: next group (2 members x 2 files), then exhaustion
     manifest3, cur3 = discovery_tick(
-        spark, reg, cur, "tasmax", "https://x.test/LOCA2", monthly=True,
+        reg, cur, "tasmax", "https://x.test/LOCA2", monthly=True,
         processed=empty_log, fetcher=_fake_listing_fetcher)
     assert cur3 == "AModel/ssp245"
     assert manifest3.count() == 4
     out = discovery_tick(
-        spark, reg, "ZModel/historical", "tasmax", "https://x.test/LOCA2",
+        reg, "ZModel/historical", "tasmax", "https://x.test/LOCA2",
         monthly=True, processed=empty_log, fetcher=_fake_listing_fetcher)
     assert out == (None, None)
+
+
+# 2 models x 2 scenarios, 8 members in all
+WORKLIST_MODELS = {
+    "BModel": {"ssp585": {"r1i1p1f1", "r2i1p1f1"}, "historical": {"r1i1p1f1"}},
+    "AModel": {"historical": {"r1i1p1f1", "r2i1p1f1"},
+               "ssp245": {"r1i1p1f1", "r3i1p1f1", "r4i1p1f1"}},
+}
+
+
+def test_discover_all_full_worklist(spark, tmp_path):
+    """One job over every group: each member yields its two monthly files
+    (daily file and junk anchors rejected), keys carry the /monthly
+    prefix, and keys appended to the processed log are not emitted
+    again."""
+    reg = registry_from_nested(spark, WORKLIST_MODELS)
+    log = ProcessedLog(spark, str(tmp_path / "log"))
+
+    manifest = discover_all(reg, "tasmax", "https://x.test/LOCA2", monthly=True,
+                            processed=log.read(),
+                            fetcher=_fake_listing_fetcher).cache()
+    rows = manifest.collect()
+    assert len(rows) == 8 * 2
+    assert len({r["s3_key"] for r in rows}) == 16
+    assert all(r["s3_key"].startswith(f"/monthly/{r['model']}/{r['scenario']}/")
+               for r in rows)
+    assert {(r["model"], r["scenario"]) for r in rows} == {
+        ("AModel", "historical"), ("AModel", "ssp245"),
+        ("BModel", "historical"), ("BModel", "ssp585")}
+
+    log.append(manifest.filter(F.col("model") == "AModel"))
+    remaining = discover_all(reg, "tasmax", "https://x.test/LOCA2", monthly=True,
+                             processed=log.read(), fetcher=_fake_listing_fetcher)
+    assert sorted(r["s3_key"] for r in remaining.collect()) == sorted(
+        r["s3_key"] for r in rows if r["model"] == "BModel")
 
 
 def test_idempotency_anti_join(spark):

@@ -1,9 +1,10 @@
 """LOCA2 key grammar, case by case, against plain-Python statements of
 the reference's rules:
 
-- the discovery filename filter (``file_pattern`` + ``filter_filenames``)
-  against ``re.match`` on the same pattern — the reference filters with
-  prefix-anchored ``re.match`` (loca2_sensor.py:56-61);
+- the discovery filename filter (``file_pattern`` + ``filter_filenames``,
+  and the per-row form inside ``discover_all``) against ``re.match`` on
+  the same pattern — the reference filters with prefix-anchored
+  ``re.match`` (loca2_sensor.py:56-61);
 - the catalog's zarr collapse, prefix strip, quarantine routing and key
   parse (``build_catalog``) against ``str.split`` versions of
   ``parse_key`` (loca2.py:115-136, 193-199, 218-224);
@@ -21,7 +22,8 @@ import pytest
 
 from downscaledclimatedata_spark.operators.catalog import build_catalog
 from downscaledclimatedata_spark.operators.discovery import (
-    file_pattern, filter_filenames, next_group, registry_from_nested,
+    discover_all, file_pattern, filter_filenames, next_group,
+    registry_from_nested,
 )
 
 # --- discovery filename filter ----------------------------------------------
@@ -87,6 +89,39 @@ def test_file_pattern_case(filtered, case):
     assert (re.match(DAILY, name) is not None) == want_daily
     assert (name in monthly) == want_monthly
     assert (name in daily) == want_daily
+
+
+# registry values with regex metacharacters: each listed name is the match
+# for one member, or a decoy in which another character stands in for a dot
+DOTTED_MODEL = "M.1"
+DOTTED_MEMBERS = ("r1.i1", r"r2\E.i1")
+DOTTED_LISTING = [
+    f"tasmax.{model}.ssp245.{member}.2015-2044.LOCA_16thdeg_v20240915.monthly.cent.nc"
+    for model, member in (("M.1", "r1.i1"), ("MX1", "r1.i1"),
+                          ("M.1", "r1Xi1"), ("M.1", r"r2\E.i1"),
+                          ("M.1", r"r2\EXi1"))]
+
+
+def test_discover_all_quotes_registry_values(spark):
+    """The per-row pattern treats model and member ids as literals, as
+    ``file_pattern`` does under ``re.match``: a '.' in an id matches only
+    a '.', and a ``\\E`` in an id cannot end the quoting early."""
+    listing = "".join(f"<a href='{name}'>f</a>" for name in DOTTED_LISTING)
+
+    def fetch(url):
+        return listing
+
+    registry = registry_from_nested(
+        spark, {DOTTED_MODEL: {"ssp245": set(DOTTED_MEMBERS)}})
+    manifest = discover_all(
+        registry, "tasmax", "https://x.test/LOCA2", monthly=True,
+        processed=spark.createDataFrame([], "run_key string"), fetcher=fetch)
+    got = {r.url.rsplit("/", 1)[-1] for r in manifest.collect()}
+    want = {name for member in DOTTED_MEMBERS for name in DOTTED_LISTING
+            if re.match(file_pattern("tasmax", DOTTED_MODEL, "ssp245", member,
+                                     monthly=True), name)}
+    assert want == {DOTTED_LISTING[0], DOTTED_LISTING[3]}
+    assert got == want
 
 
 # --- catalog: collapse, strip, route, parse ----------------------------------

@@ -2,8 +2,12 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
+from downscaledclimatedata_spark.operators.discovery import new_work
 from downscaledclimatedata_spark.operators.ingest import (
     ingest_and_convert, rewrite_extension,
 )
@@ -28,10 +32,50 @@ def test_processed_log_roundtrip(spark, tmp_path):
     log = ProcessedLog(spark, str(tmp_path / "log"))
     manifest = spark.createDataFrame(
         [("/a/1.nc",), ("/a/2.nc",)], "s3_key string")
-    assert log.filter_new(manifest).count() == 2
+    assert new_work(manifest, log.read()).count() == 2
     log.append(manifest.limit(1))
-    remaining = log.filter_new(manifest)
+    remaining = new_work(manifest, log.read())
     assert remaining.count() == 1
+
+
+def test_cursor_store_starts_no_spark_job(spark, tmp_path):
+    sc = spark.sparkContext
+    group = "cursor-store-no-job"
+    sc.setJobGroup(group, "cursor commit and get")
+    try:
+        store = CursorStore(spark, str(tmp_path / "cursor"))
+        store.commit("tasmax_daily", "AModel/historical")
+        assert store.get("tasmax_daily") == "AModel/historical"
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # the tracker does see a job started in this group
+        spark.range(1).count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_cursor_commit_failed_replace_keeps_previous(spark, tmp_path,
+                                                    monkeypatch):
+    store = CursorStore(spark, str(tmp_path / "cursor"))
+    store.commit("tasmax_daily", "AModel/historical")
+
+    def failing_replace(src, dst):
+        raise OSError("replace failed")
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with pytest.raises(OSError, match="replace failed"):
+        store.commit("tasmax_daily", "AModel/ssp245")
+    assert store.get("tasmax_daily") == "AModel/historical"
+
+
+def test_cursor_malformed_file_raises(spark, tmp_path):
+    store = CursorStore(spark, str(tmp_path / "cursor"))
+    store.commit("tasmax_daily", "AModel/historical")
+    with open(store.file, "w") as f:
+        f.write('{"tasmax_daily": ')
+    with pytest.raises(ValueError):
+        store.get("tasmax_daily")
 
 
 def test_ingest_and_convert_result_manifest(spark):

@@ -15,9 +15,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from downscaledclimatedata_spark.operators.registry import (
+from downscaledclimatedata_spark.operators.discovery import (
     discover_all,
     member_listing_urls,
+)
+from downscaledclimatedata_spark.operators.registry import (
     registry_from_catalog_csv,
     registry_to_nested,
 )
