@@ -14,12 +14,32 @@ Only for SMALL fixed row sets (heartbeats, probes — O(10) rows): the
 literal array is embedded in the plan, so thousands of rows would bloat
 it. ``spark.createDataFrame`` remains right for driver-computed results
 that are returned directly (sketch summaries, bounded reports).
+
+An EMPTY typed relation is always ``empty_relation``: never
+``spark.createDataFrame([], schema)``, which is a pickled Python RDD
+whose scan runs Python tasks.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+
+def empty_relation(spark: SparkSession,
+                   schema: T.StructType | str) -> DataFrame:
+    """Zero-row relation typed as ``schema`` (a StructType or a DDL
+    string): typed NULLs projected from ``spark.range(0)``.
+
+    It lives in the JVM, so the optimizer sees that it is empty and
+    folds what reads it: an anti-join against it becomes its left side,
+    with no job of its own. Every column is nullable.
+    """
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return spark.range(0).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields])
 
 
 def literal_rows(spark: SparkSession, rows: list[tuple],
@@ -31,12 +51,11 @@ def literal_rows(spark: SparkSession, rows: list[tuple],
     declared ``long`` and None declared anything produce the same
     typed rows as ``spark.createDataFrame`` would.
     """
+    if not rows:
+        return empty_relation(spark, schema)
     fields = [f.strip() for f in schema.split(",")]
     names = [f.split(None, 1)[0] for f in fields]
     types = [f.split(None, 1)[1] for f in fields]
-    if not rows:
-        return spark.range(0).select(
-            *[F.lit(None).cast(t).alias(n) for n, t in zip(names, types)])
     structs = [
         F.struct(*[F.lit(v).cast(t).alias(n)
                    for v, n, t in zip(r, names, types)])

@@ -25,7 +25,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from downscaledclimatedata_spark.functions.hashing import md5_long, md5_long_sql
-from downscaledclimatedata_spark.functions.rows import literal_rows
+from downscaledclimatedata_spark.functions.rows import (empty_relation,
+                                                        literal_rows)
 from downscaledclimatedata_spark.plans import QuerySpec, register
 from downscaledclimatedata_spark.sources.tables import load_table, load_table_parallel
 from downscaledclimatedata_spark.functions.text import WS_RE
@@ -548,17 +549,19 @@ def _labels_relation(spark: SparkSession, labels: dict, ntype) -> DataFrame:
 
     The schema derives from ``ntype`` in BOTH branches (an empty graph
     must yield the same column types as a non-empty one — ids need not
-    be numeric). Arrow-batched local relation (engine sessions enable
-    arrow.pyspark), localCheckpointed so every consumer reads
-    JVM-materialized rows instead of re-pulling the Python-sourced
-    relation per task (the O3 plan-construction lesson); one tiny job.
+    be numeric). ``createDataFrame`` of a list is ``parallelize`` over
+    a pickled Python RDD (Arrow is not used for lists), so the relation
+    is localCheckpointed: every consumer reads JVM-materialized rows
+    instead of re-pulling the Python-sourced relation per task (the O3
+    plan-construction lesson); one tiny job. No labels: an empty JVM
+    relation, no job.
     """
     from pyspark.sql.types import StructField, StructType
 
     schema = StructType([StructField("id", ntype),
                          StructField("comp", ntype)])
     if not labels:
-        return spark.createDataFrame([], schema)
+        return empty_relation(spark, schema)
     return (spark.createDataFrame(sorted(labels.items()), schema)
             .localCheckpoint())
 

@@ -8,7 +8,9 @@ an orchestrator:
   cloud-optimized Zarr store (mode='w', consolidated metadata).
 
 Spark-first shape: ONE job over the work-manifest DataFrame using
-Arrow-batched ``mapInPandas``; the raw->converted hand-off is a pipelined
+Arrow-batched ``mapInPandas`` (download/convert) or ``mapInArrow``
+(NetCDF -> tidy decode, one record batch per file built from NumPy
+columns); the raw->converted hand-off is a pipelined
 column (SURVEY §1.3), not a materialization boundary. Each manifest row
 produces a result row ``(s3_key, status, n_bytes, output_path, error)``
 so failures are data, not exceptions (reference T6/T7 semantics:
@@ -145,26 +147,44 @@ def decode_netcdf_tidy(manifest: DataFrame,
     `(model, scenario, memberid, variable, time, lat, lon, value)` rows,
     written as partitioned Parquet (write_tidy_long) so time-range and
     model/scenario scans prune partitions. One manifest row fans out to
-    millions of observation rows; mapInPandas streams Arrow batches so
-    nothing materializes driver-side.
+    millions of observation rows.
+
+    ``mapInArrow`` hands each decoded file to Spark as one Arrow record
+    batch built from columns: the four key columns are ``pa.repeat`` of
+    the manifest values, ``lat``/``lon``/``value`` come straight from the
+    decoder's NumPy-backed columns, so no per-cell Python object and no
+    cross-file concatenation is made. Naive decoder times are read in
+    the session time zone (DST-ambiguous local times resolve to
+    standard time), exactly as the pandas-to-Arrow conversion of
+    ``mapInPandas`` reads them.
     """
     keys = ("model", "scenario", "memberid", "variable")
+    names = [f.name for f in TIDY_SCHEMA.fields]
+    tz = manifest.sparkSession.conf.get("spark.sql.session.timeZone")
 
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pandas as _pd
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                meta = {k: getattr(row, k) for k in keys}
-                grid = decoder(fetcher(row.url), meta)
-                for k in reversed(keys):
-                    grid.insert(0, k, meta[k])
-                out.append(grid)
-            if out:
-                yield _pd.concat(out, ignore_index=True)
+    def process(batches):
+        import numpy as _np
+        import pyarrow as _pa
+        for batch in batches:
+            for row in batch.to_pylist():
+                meta = {k: row[k] for k in keys}
+                grid = decoder(fetcher(row["url"]), meta)
+                n = len(grid)
+                time = grid["time"]
+                if time.dt.tz is None:
+                    time = time.dt.tz_localize(tz, ambiguous=False)
+                yield _pa.RecordBatch.from_arrays(
+                    [_pa.repeat(_pa.scalar(meta[k], _pa.string()), n)
+                     for k in keys]
+                    + [_pa.array(time.dt.tz_convert("UTC"),
+                                 _pa.timestamp("us", tz="UTC"), safe=False),
+                       _pa.array(grid["lat"].to_numpy(_np.float64)),
+                       _pa.array(grid["lon"].to_numpy(_np.float64)),
+                       _pa.array(grid["value"].to_numpy(_np.float32))],
+                    names=names)
 
     cols = ["url"] + list(keys)
-    return manifest.select(*cols).mapInPandas(process, TIDY_SCHEMA)
+    return manifest.select(*cols).mapInArrow(process, TIDY_SCHEMA)
 
 
 def rewrite_extension(col, old: str = ".nc", new: str = ".zarr"):

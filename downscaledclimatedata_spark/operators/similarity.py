@@ -24,7 +24,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from downscaledclimatedata_spark.functions.rows import literal_rows
+from downscaledclimatedata_spark.functions.rows import (empty_relation,
+                                                        literal_rows)
 from downscaledclimatedata_spark.functions.text import WS_RE
 from downscaledclimatedata_spark.plans import QuerySpec, register
 from downscaledclimatedata_spark.sources.tables import load_table, load_table_parallel
@@ -3852,7 +3853,7 @@ def mmr_select(emb: DataFrame, id_col: str = "vec_id",
                   "max_sim_to_selected double")
     head = base.orderBy(id_col).limit(1).collect()
     if not head:  # empty / all-zero-norm input: empty result, not IndexError
-        return emb.sparkSession.createDataFrame([], out_schema)
+        return empty_relation(emb.sparkSession, out_schema)
     qrow = head[0]
     qv, qn2, qid = qrow["qv"], qrow["n2"], qrow[id_col]
     qlit = lit_long_array(qv)

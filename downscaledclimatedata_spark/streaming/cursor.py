@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from downscaledclimatedata_spark.functions.rows import empty_relation
+
 PROCESSED_SCHEMA = T.StructType([
     T.StructField("run_key", T.StringType(), False),
     T.StructField("processed_at", T.TimestampType(), True),
@@ -72,8 +74,11 @@ class ProcessedLog:
         self.path = path
 
     def read(self) -> DataFrame:
+        """The log, or before the first append an empty relation the
+        optimizer can see is empty, so ``new_work`` against it runs no
+        join and no Python task."""
         if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], PROCESSED_SCHEMA)
+            return empty_relation(self.spark, PROCESSED_SCHEMA)
         return self.spark.read.parquet(self.path)
 
     def append(self, run_keys: DataFrame, key_col: str = "s3_key") -> None:

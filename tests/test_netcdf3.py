@@ -164,3 +164,47 @@ def test_codec_roundtrip_property():
         assert got == [float(v) if use_double else v for v in vals]
 
     check()
+
+
+@pytest.mark.parametrize("tz", ["America/New_York", "Asia/Kolkata"])
+def test_decode_times_follow_session_time_zone(spark, tz):
+    """Decoded times carry no zone; ``decode_netcdf_tidy`` reads them in
+    the session time zone, and a DST-ambiguous local time (01:30 on
+    2015-11-01 in New York) resolves to standard time, as pandas'
+    ``tz_localize(tz, ambiguous=False)`` does."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    hours = [0, 1.5, 5, 24 * 200 + 7.25]
+    blob = write_netcdf3(
+        dims=[("time", len(hours)), ("lat", 1), ("lon", 1)],
+        variables=[
+            ("time", NC_DOUBLE, ["time"], hours,
+             {"units": (2, "hours since 2015-11-01 00:00:00")}),
+            ("lat", NC_DOUBLE, ["lat"], [32.0], {}),
+            ("lon", NC_DOUBLE, ["lon"], [-117.0], {}),
+            ("tasmax", NC_FLOAT, ["time", "lat", "lon"],
+             [float(i) for i in range(len(hours))], {})])
+    naive = netcdf3_tidy_decoder(blob, {"variable": "tasmax"})["time"]
+    want = (naive.dt.tz_localize(tz, ambiguous=False).dt.tz_convert("UTC")
+            - pd.Timestamp("1970-01-01", tz="UTC")) // pd.Timedelta("1us")
+
+    manifest = spark.createDataFrame(
+        [("u://a.nc", "GCM1", "ssp245", "r1i1p1f1", "tasmax")],
+        "url string, model string, scenario string, memberid string, "
+        "variable string")
+
+    def fetcher(url):
+        return blob
+
+    previous = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        tidy = decode_netcdf_tidy(manifest, fetcher=fetcher,
+                                  decoder=netcdf3_tidy_decoder)
+        got = [r.us for r in tidy.select(
+            F.unix_micros("time").alias("us"), "value").orderBy("value")
+            .collect()]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", previous)
+    assert got == want.tolist()

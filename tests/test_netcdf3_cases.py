@@ -10,9 +10,11 @@ milliseconds. The Spark seam itself is covered by tests/test_netcdf3.py.
 from __future__ import annotations
 
 import struct
-from datetime import datetime
+from datetime import datetime, timedelta
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from downscaledclimatedata_spark.operators.netcdf3 import (
     netcdf3_tidy_decoder,
@@ -145,24 +147,39 @@ def _name(s):
     return struct.pack(">i", len(b)) + b + b"\x00" * ((4 - len(b) % 4) % 4)
 
 
-def _cdf2_blob(shape, nc_type, vals, gap):
-    """A one-variable CDF-2 file written field by field from the classic
-    format spec: 64-bit ``begin``, with ``gap`` unused bytes between the
-    header and the data so the reader must honour ``begin``."""
-    dims = [(f"d{i}", s) for i, s in enumerate(shape)]
+def _cdf2(dims, variables, gap=0):
+    """A CDF-2 file written field by field from the classic format spec:
+    64-bit ``begin``, with ``gap`` unused bytes between the header and the
+    data so the reader must honour ``begin``. ``variables`` are
+    ``(name, nc_type, dim_names, values)`` without attributes."""
+    dim_ids = {name: i for i, (name, _) in enumerate(dims)}
     head = b"CDF\x02" + struct.pack(">i", 0)
     head += struct.pack(">ii", 10, len(dims))
     for name, size in dims:
         head += _name(name) + struct.pack(">i", size)
     head += struct.pack(">ii", 0, 0)  # no global attributes
-    body = struct.pack(f">{len(vals)}{_FMT[nc_type]}", *vals)
-    body += b"\x00" * ((4 - len(body) % 4) % 4)
-    head += struct.pack(">ii", 11, 1) + _name("v")
-    head += struct.pack(f">i{len(dims)}i", len(dims), *range(len(dims)))
-    head += struct.pack(">ii", 0, 0)  # no variable attributes
-    head += struct.pack(">ii", nc_type, len(body))
-    begin = len(head) + 8 + gap
-    return head + struct.pack(">q", begin) + b"\xff" * gap + body
+    head += struct.pack(">ii", 11, len(variables))
+    entries, bodies = [], []
+    for name, nc_type, var_dims, vals in variables:
+        body = struct.pack(f">{len(vals)}{_FMT[nc_type]}", *vals)
+        body += b"\x00" * ((4 - len(body) % 4) % 4)
+        entries.append(
+            _name(name)
+            + struct.pack(f">i{len(var_dims)}i", len(var_dims),
+                          *[dim_ids[d] for d in var_dims])
+            + struct.pack(">ii", 0, 0)  # no variable attributes
+            + struct.pack(">ii", nc_type, len(body)))
+        bodies.append(body)
+    begin = len(head) + sum(len(e) + 8 for e in entries) + gap
+    for entry, body in zip(entries, bodies):
+        head += entry + struct.pack(">q", begin)
+        begin += len(body)
+    return head + b"\xff" * gap + b"".join(bodies)
+
+
+def _cdf2_blob(shape, nc_type, vals, gap):
+    dims = [(f"d{i}", s) for i, s in enumerate(shape)]
+    return _cdf2(dims, [("v", nc_type, [d for d, _ in dims], vals)], gap)
 
 
 @pytest.mark.parametrize("gap", [0, 4, 64])
@@ -214,8 +231,10 @@ def test_parse_rejects_malformed(case):
 
 
 def _grid_blob(nt, nlat, nlon, time_vals=None, time_type=NC_INT,
-               time_attrs=None, extra=()):
+               time_attrs=None, extra=(), grid_type=NC_FLOAT):
     time_vals = list(range(nt)) if time_vals is None else time_vals
+    grid = ([float(i) for i in range(nt * nlat * nlon)]
+            if grid_type == NC_FLOAT else _values(grid_type, nt * nlat * nlon))
     return write_netcdf3(
         dims=[("time", nt), ("lat", nlat), ("lon", nlon)],
         variables=[
@@ -224,8 +243,7 @@ def _grid_blob(nt, nlat, nlon, time_vals=None, time_type=NC_INT,
              {}),
             ("lon", NC_DOUBLE, ["lon"],
              [-117.0 + j / 16 for j in range(nlon)], {}),
-            ("tasmax", NC_FLOAT, ["time", "lat", "lon"],
-             [float(i) for i in range(nt * nlat * nlon)], {}),
+            ("tasmax", grid_type, ["time", "lat", "lon"], grid, {}),
             *extra,
         ])
 
@@ -313,3 +331,113 @@ def test_tidy_rejects_non_time_lat_lon_grid():
                     [1.0, 2.0, 3.0, 4.0], {})])
     with pytest.raises(ValueError, match=r"expected \(time, lat, lon\)"):
         netcdf3_tidy_decoder(blob, {"variable": "tasmax"})
+
+
+def _reference_melt(blob, name):
+    """The plain per-cell melt: a triple loop over the parsed lists, time
+    slowest, with CF ``days since`` units (days since 1950-01-01 when the
+    time variable has no units)."""
+    variables = parse_netcdf3(blob)["variables"]
+    units = variables["time"]["attrs"].get("units", "days since 1950-01-01")
+    base = datetime.fromisoformat(units[len("days since "):])
+    data = variables[name]["data"]
+    rows, i = [], 0
+    for t in variables["time"]["data"]:
+        for la in variables["lat"]["data"]:
+            for lo in variables["lon"]["data"]:
+                rows.append((base + timedelta(days=t), float(la), float(lo),
+                             float(data[i])))
+                i += 1
+    return rows
+
+
+def _melt_rows(blob, name):
+    return _rows(netcdf3_tidy_decoder(blob, {"variable": name}))
+
+
+def _rows(tidy):
+    assert list(tidy.dtypes.astype(str)) == [
+        "datetime64[ns]", "float64", "float64", "float64"]
+    return [(t.to_pydatetime(), la, lo, v)
+            for t, la, lo, v in tidy.itertuples(index=False, name=None)]
+
+
+DAYS = {"units": (NC_CHAR, "days since 1950-01-01")}
+
+
+@pytest.mark.parametrize("shape", [(1, 1, 1), (2, 3, 4), (3, 1, 5)],
+                         ids=lambda s: "x".join(map(str, s)))
+@pytest.mark.parametrize("type_name", list(NUMERIC_TYPES))
+def test_melt_matches_reference_per_grid_type(type_name, shape):
+    blob = _grid_blob(*shape, time_attrs=DAYS,
+                      grid_type=NUMERIC_TYPES[type_name])
+    assert _melt_rows(blob, "tasmax") == _reference_melt(blob, "tasmax")
+
+
+@pytest.mark.parametrize("gap", [0, 12])
+def test_melt_matches_reference_on_cdf2_grid(gap):
+    nt, nlat, nlon = 2, 3, 4
+    blob = _cdf2(
+        [("time", nt), ("lat", nlat), ("lon", nlon)],
+        [("time", NC_INT, ["time"], [0, 31]),
+         ("lat", NC_FLOAT, ["lat"], [32.0 + i / 16 for i in range(nlat)]),
+         ("lon", NC_DOUBLE, ["lon"], [-117.0 + j / 16 for j in range(nlon)]),
+         ("tasmax", NC_SHORT, ["time", "lat", "lon"],
+          _values(NC_SHORT, nt * nlat * nlon))],
+        gap)
+    rows = _melt_rows(blob, "tasmax")
+    assert rows == _reference_melt(blob, "tasmax")
+    assert rows[-1][0] == datetime(1950, 2, 1)
+
+
+def test_melt_matches_reference_on_fractional_days():
+    """Thirds of a day are not whole microseconds of a float day count:
+    every timestamp must still equal the per-cell reference exactly."""
+    days = [k / 3 for k in range(10)] + [365.25, 20000 + 2 / 3]
+    blob = _grid_blob(len(days), 2, 3, time_vals=days, time_type=NC_DOUBLE,
+                      time_attrs=DAYS)
+    rows = _melt_rows(blob, "tasmax")
+    assert rows == _reference_melt(blob, "tasmax")
+    assert rows[6][0] == datetime(1950, 1, 1, 8)
+
+
+def _grid_data_span(blob, nc_type, n):
+    """Byte range ``[begin, end)`` of the grid's data: the grid is the
+    last variable, followed only by its 4-byte padding."""
+    size = n * {NC_BYTE: 1, NC_SHORT: 2, NC_INT: 4, NC_FLOAT: 4,
+                NC_DOUBLE: 8}[nc_type]
+    end = len(blob) - (4 - size % 4) % 4
+    return end - size, end
+
+
+@settings(max_examples=150, deadline=None)
+@given(shape=st.tuples(st.integers(1, 3), st.integers(1, 4),
+                       st.integers(1, 5)),
+       type_name=st.sampled_from(list(NUMERIC_TYPES)),
+       where=st.floats(0, 1, exclude_max=True))
+def test_grid_truncated_inside_its_data_raises(shape, type_name, where):
+    """A payload cut anywhere inside the grid's data must raise, never
+    melt fewer rows."""
+    nc_type = NUMERIC_TYPES[type_name]
+    blob = _grid_blob(*shape, grid_type=nc_type)
+    begin, end = _grid_data_span(blob, nc_type, _size(shape))
+    cut = begin + int(where * (end - begin))
+    with pytest.raises(ValueError, match="truncated"):
+        netcdf3_tidy_decoder(blob[:cut], {"variable": "tasmax"})
+
+
+@settings(max_examples=150, deadline=None)
+@given(type_name=st.sampled_from(list(NUMERIC_TYPES)),
+       where=st.floats(0, 1, exclude_max=True))
+def test_grid_truncated_anywhere_raises_or_melts_every_row(type_name, where):
+    """A cut in the header, the coordinates or the grid raises; a cut
+    only in the trailing padding still melts every row, identically."""
+    nc_type = NUMERIC_TYPES[type_name]
+    blob = _grid_blob(2, 3, 3, time_attrs=DAYS, grid_type=nc_type)
+    cut = int(where * len(blob))
+    try:
+        tidy = netcdf3_tidy_decoder(blob[:cut], {"variable": "tasmax"})
+    except Exception:
+        return
+    assert cut >= _grid_data_span(blob, nc_type, 18)[1]
+    assert _rows(tidy) == _reference_melt(blob, "tasmax")

@@ -11,7 +11,9 @@ from downscaledclimatedata_spark.operators.discovery import new_work
 from downscaledclimatedata_spark.operators.ingest import (
     ingest_and_convert, rewrite_extension,
 )
-from downscaledclimatedata_spark.streaming.cursor import CursorStore, ProcessedLog
+from downscaledclimatedata_spark.streaming.cursor import (
+    PROCESSED_SCHEMA, CursorStore, ProcessedLog,
+)
 from downscaledclimatedata_spark.streaming.stream import windowed_event_counts
 from downscaledclimatedata_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
@@ -36,6 +38,32 @@ def test_processed_log_roundtrip(spark, tmp_path):
     log.append(manifest.limit(1))
     remaining = new_work(manifest, log.read())
     assert remaining.count() == 1
+
+
+def test_empty_processed_log_folds_the_anti_join(spark, tmp_path):
+    """Before the first append the log is an empty relation the optimizer
+    can see is empty: ``new_work`` against it is the manifest itself,
+    with no join, collected in at most one job."""
+    log = ProcessedLog(spark, str(tmp_path / "absent"))
+    empty = log.read()
+    assert [(f.name, f.dataType) for f in empty.schema.fields] == \
+        [(f.name, f.dataType) for f in PROCESSED_SCHEMA.fields]
+    assert empty.collect() == []
+    manifest = spark.range(3).select(
+        F.concat(F.lit("/a/"), F.col("id").cast("string")).alias("s3_key"))
+    todo = new_work(manifest, log.read())
+    assert "Join" not in todo._jdf.queryExecution().optimizedPlan().toString()
+    sc = spark.sparkContext
+    group = "empty-log-new-work"
+    sc.setJobGroup(group, "new_work against an absent log")
+    try:
+        keys = sorted(r.s3_key for r in todo.collect())
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert keys == ["/a/0", "/a/1", "/a/2"]
+    assert len(jobs) <= 1
 
 
 def test_cursor_store_starts_no_spark_job(spark, tmp_path):

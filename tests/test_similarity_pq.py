@@ -131,6 +131,20 @@ def test_ivfpq_candidates_come_from_probed_lists(spark):
         assert assign[r.match_id] in probes[r.query_id], r
 
 
+def test_mmr_empty_input_is_an_empty_typed_relation(spark):
+    """No query vector (empty or all-zero input): an empty result with
+    the selection's column types, not an error."""
+    from downscaledclimatedata_spark.operators.similarity import mmr_select
+
+    for rows in ([], [(1, [0.0, 0.0])]):
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        out = mmr_select(emb, k=4, pool=8)
+        assert out.dtypes == [("rank", "int"), ("vec_id", "bigint"),
+                              ("rel", "double"),
+                              ("max_sim_to_selected", "double")]
+        assert out.collect() == []
+
+
 def test_mmr_matches_reference_and_diversifies(spark):
     """The engine's MMR selection equals an independent reference
     greedy over the same pool, and its selected set is more diverse
