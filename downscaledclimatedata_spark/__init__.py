@@ -14,4 +14,4 @@ Design rules (see SURVEY.md §4/§7):
 - every operator designed to be checkable against a DuckDB oracle
 """
 
-__version__ = "0.1.0"
+__version__ = "0.3.0"

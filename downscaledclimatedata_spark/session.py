@@ -5,6 +5,19 @@ same settings scale to a real cluster because they are expressed as
 ratios/adaptive knobs (AQE coalesces shuffle partitions at runtime, so a
 large static ``spark.sql.shuffle.partitions`` is safe at 100 TB while the
 local value stays small for test latency).
+
+On local masters (``local``, ``local[N]``, ``local-cluster[...]``: the
+Python workers share the driver's filesystem) the session runs its Python
+workers from the package's own daemon, ``worker_daemon``, which re-reads
+the import archives on ``sys.path`` (``pyspark.zip``, py4j) only when a task
+changed ``sys.path``; the stock daemon re-reads them on every task. Spark
+starts the daemon with ``python -m`` in the driver's cwd, so
+``spark.executorEnv.PYTHONPATH`` gets the package's parent directory and the
+daemon imports from any cwd. ``extra_conf`` can name another
+``spark.python.daemon.module``; a ``spark.executorEnv.PYTHONPATH`` it passes
+is kept, ahead of the package's parent. Other masters, and sessions this
+factory did not build, keep the stock ``pyspark.daemon``: same results,
+without the saving.
 """
 
 from __future__ import annotations
@@ -12,6 +25,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Defaults chosen for the driver's local[32] / 128 GiB test box. On a real
 # cluster these are overridden by spark-submit conf; everything important
@@ -51,8 +66,13 @@ def get_spark(app_name: str = "downscaledclimatedata-spark",
     conf["spark.sql.shuffle.partitions"] = str(
         shuffle_partitions if shuffle_partitions is not None else cpus
     )
-    if extra_conf:
-        conf.update(extra_conf)
+    extra_conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        conf["spark.python.daemon.module"] = f"{__package__}.worker_daemon"
+        caller_path = extra_conf.pop("spark.executorEnv.PYTHONPATH", "")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            filter(None, (caller_path, _PACKAGE_PARENT)))
+    conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

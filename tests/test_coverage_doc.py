@@ -7,9 +7,13 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
+import pytest
+
+import downscaledclimatedata_spark
 from downscaledclimatedata_spark.plans import all_specs
 
-COVERAGE = Path(__file__).resolve().parent.parent / "COVERAGE.md"
+ROOT = Path(__file__).resolve().parent.parent
+COVERAGE = ROOT / "COVERAGE.md"
 
 
 def test_coverage_counts_match_registry():
@@ -35,3 +39,9 @@ def test_every_spec_has_unique_name_and_callable():
         assert callable(s.spark), name
         if s.oracle is not None:
             assert isinstance(s.oracle, str) and s.oracle.strip(), name
+
+
+def test_package_version_matches_pyproject():
+    tomllib = pytest.importorskip("tomllib")  # Python 3.11+
+    pyproject = tomllib.loads((ROOT / "pyproject.toml").read_text())
+    assert downscaledclimatedata_spark.__version__ == pyproject["project"]["version"]
