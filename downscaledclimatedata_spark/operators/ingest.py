@@ -16,6 +16,18 @@ produces a result row ``(s3_key, status, n_bytes, output_path, error)``
 so failures are data, not exceptions (reference T6/T7 semantics:
 fail-fast listing, tolerant per-row processing).
 
+The tidy lake sink, ``write_tidy_long``, takes only a
+``decode_netcdf_tidy`` relation and is the same kind of job: the worker
+that decodes a file writes its Arrow batch as one Parquet file,
+``part-{sha1(url)[:16]}.parquet`` in the file's hive partition
+directory, ``time`` as INT96 like Spark's default writer. The rows
+never cross into the JVM. The job writes into a hidden staging
+directory that replaces the target only when every file is written, so
+the write overwrites its target, a replay of a file rewrites that
+file's name, and a failed decode or write raises and publishes nothing.
+The target must be on a filesystem the driver and workers share
+(``file:``); other schemes raise.
+
 Network and xarray/s3fs are unavailable in this container; the transport
 layer is injected (``fetcher``/``converter`` callables) with
 deterministic local defaults, and the real implementations are
@@ -25,7 +37,11 @@ partitioning, idempotent overwrite sink — is real and tested.
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 from collections.abc import Callable, Iterator
+from urllib.parse import urlparse
 
 import pandas as pd
 
@@ -135,6 +151,50 @@ TIDY_SCHEMA = T.StructType([
     T.StructField("value", T.FloatType()),
 ])
 
+# The manifest columns every tidy row repeats: constant within one file.
+TIDY_KEYS = ("model", "scenario", "memberid", "variable")
+
+# The private attribute on a ``decode_netcdf_tidy`` frame that carries
+# ``(decode_file, files)``: the per-file decode and the manifest projection
+# it maps over, so ``write_tidy_long`` can rerun the decode in its writer.
+_TIDY_SOURCE = "_tidy_source"
+
+LAKE_FILE_SCHEMA = T.StructType([
+    T.StructField("url", T.StringType()),
+    T.StructField("path", T.StringType()),
+    T.StructField("rows", T.LongType()),
+])
+
+
+def _tidy_file_decoder(fetcher, decoder, tz: str):
+    """manifest row -> one ``pa.RecordBatch`` of ``TIDY_SCHEMA`` rows.
+
+    A nested function, so cloudpickle ships it by value with its
+    ``fetcher``/``decoder``: executors need no import of this package.
+    """
+    keys = TIDY_KEYS
+    names = [f.name for f in TIDY_SCHEMA.fields]
+
+    def decode_file(row: dict):
+        import numpy as _np
+        import pyarrow as _pa
+        meta = {k: row[k] for k in keys}
+        grid = decoder(fetcher(row["url"]), meta)
+        n = len(grid)
+        time = grid["time"]
+        if time.dt.tz is None:
+            time = time.dt.tz_localize(tz, ambiguous=False)
+        return _pa.RecordBatch.from_arrays(
+            [_pa.repeat(_pa.scalar(meta[k], _pa.string()), n) for k in keys]
+            + [_pa.array(time.dt.tz_convert("UTC"),
+                         _pa.timestamp("us", tz="UTC"), safe=False),
+               _pa.array(grid["lat"].to_numpy(_np.float64)),
+               _pa.array(grid["lon"].to_numpy(_np.float64)),
+               _pa.array(grid["value"].to_numpy(_np.float32))],
+            names=names)
+
+    return decode_file
+
 
 def decode_netcdf_tidy(manifest: DataFrame,
                        fetcher: Callable[[str], bytes] = default_fetcher,
@@ -157,34 +217,23 @@ def decode_netcdf_tidy(manifest: DataFrame,
     the session time zone (DST-ambiguous local times resolve to
     standard time), exactly as the pandas-to-Arrow conversion of
     ``mapInPandas`` reads them.
+
+    The frame also carries its per-file decode and manifest projection
+    as a private attribute, which ``write_tidy_long`` needs; a frame
+    derived from it (``filter``, ``select``, ...) does not carry it.
     """
-    keys = ("model", "scenario", "memberid", "variable")
-    names = [f.name for f in TIDY_SCHEMA.fields]
-    tz = manifest.sparkSession.conf.get("spark.sql.session.timeZone")
+    decode_file = _tidy_file_decoder(
+        fetcher, decoder, manifest.sparkSession.conf.get("spark.sql.session.timeZone"))
 
     def process(batches):
-        import numpy as _np
-        import pyarrow as _pa
         for batch in batches:
             for row in batch.to_pylist():
-                meta = {k: row[k] for k in keys}
-                grid = decoder(fetcher(row["url"]), meta)
-                n = len(grid)
-                time = grid["time"]
-                if time.dt.tz is None:
-                    time = time.dt.tz_localize(tz, ambiguous=False)
-                yield _pa.RecordBatch.from_arrays(
-                    [_pa.repeat(_pa.scalar(meta[k], _pa.string()), n)
-                     for k in keys]
-                    + [_pa.array(time.dt.tz_convert("UTC"),
-                                 _pa.timestamp("us", tz="UTC"), safe=False),
-                       _pa.array(grid["lat"].to_numpy(_np.float64)),
-                       _pa.array(grid["lon"].to_numpy(_np.float64)),
-                       _pa.array(grid["value"].to_numpy(_np.float32))],
-                    names=names)
+                yield decode_file(row)
 
-    cols = ["url"] + list(keys)
-    return manifest.select(*cols).mapInArrow(process, TIDY_SCHEMA)
+    files = manifest.select("url", *TIDY_KEYS)
+    tidy = files.mapInArrow(process, TIDY_SCHEMA)
+    setattr(tidy, _TIDY_SOURCE, (decode_file, files))
+    return tidy
 
 
 def rewrite_extension(col, old: str = ".nc", new: str = ".zarr"):
@@ -196,11 +245,131 @@ def rewrite_extension(col, old: str = ".nc", new: str = ".zarr"):
     return F.regexp_replace(col, _re.escape(old) + "$", new)
 
 
+def _tidy_file_writer(decode_file, staging: str,
+                      partition_cols: tuple[str, ...]):
+    """The ``mapInArrow`` body of ``write_tidy_long``: decode each manifest
+    row with ``decode_file`` and write its rows, partition columns
+    dropped, as one Parquet file under ``staging``; yield one
+    ``LAKE_FILE_SCHEMA`` record per file. Nested, so it pickles by value
+    like ``decode_file``."""
+    # ExternalCatalogUtils.escapePathName writes these characters as %XX
+    escaped = frozenset([chr(c) for c in range(1, 0x20)] + list('"#%\'*/:=?[\\]^{\x7f'))
+
+    def escape(value) -> str:
+        if not value:
+            return "__HIVE_DEFAULT_PARTITION__"
+        return "".join(f"%{ord(ch):02X}" if ch in escaped else ch for ch in value)
+
+    def process(batches):
+        import hashlib
+        import os as _os
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        for batch in batches:
+            urls, paths, rows = [], [], []
+            for row in batch.to_pylist():
+                table = pa.Table.from_batches([decode_file(row)])
+                table = table.select([c for c in table.column_names
+                                      if c not in partition_cols])
+                rel = "/".join([f"{c}={escape(row[c])}" for c in partition_cols]
+                               + [f"part-{hashlib.sha1(row['url'].encode()).hexdigest()[:16]}.parquet"])
+                _os.makedirs(_os.path.dirname(f"{staging}/{rel}"), exist_ok=True)
+                pq.write_table(table, f"{staging}/{rel}", compression="snappy",
+                               use_deprecated_int96_timestamps=True)
+                urls.append(row["url"])
+                paths.append(rel)
+                rows.append(table.num_rows)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(urls, pa.string()), pa.array(paths, pa.string()),
+                 pa.array(rows, pa.int64())], names=["url", "path", "rows"])
+
+    return process
+
+
+def _local_lake_root(spark, path: str) -> str:
+    """``path`` as an absolute local path, or ``ValueError``: the lake
+    writer writes with plain file calls on the workers and renames on the
+    driver, so it needs one filesystem that all of them see at the same
+    path. A ``file:`` URI asserts that (a local disk, or a mount shared by
+    the cluster); a path without a scheme means Hadoop's ``fs.defaultFS``,
+    which is that filesystem only on a local master with a ``file:``
+    default. Other schemes (``s3a``, ``s3``, ``hdfs``, ...) are refused
+    rather than written somewhere else."""
+    parsed = urlparse(path)
+    if parsed.scheme == "file" and parsed.netloc in ("", "localhost"):
+        return os.path.abspath(parsed.path)
+    if parsed.scheme:
+        raise ValueError(f"write_tidy_long writes to a local or mounted filesystem "
+                         f"(a file: URI or a path without a scheme), not {path!r}")
+    sc = spark.sparkContext
+    default_fs = sc._jsc.hadoopConfiguration().get("fs.defaultFS") or "file:///"
+    if not sc.master.startswith("local") or not default_fs.startswith("file:"):
+        raise ValueError(f"write_tidy_long cannot resolve {path!r} without a scheme "
+                         f"on master {sc.master!r} with fs.defaultFS {default_fs!r}; "
+                         f"pass a file: URI on a shared mount")
+    return os.path.abspath(path)
+
+
 def write_tidy_long(df: DataFrame, path: str,
-                    partition_cols: tuple[str, ...] = ("model", "scenario", "variable")) -> None:
+                    partition_cols: tuple[str, ...] = ("model", "scenario", "variable")) -> list:
     """Analytics sink for decoded climate observations (SURVEY §1.5b):
-    partitioned Parquet keyed so time-range scans prune partitions.
-    Overwrite = the reference's idempotent re-materialization (T4)."""
-    (df.write.mode("overwrite")
-     .partitionBy(*partition_cols)
-     .parquet(path))
+    hive-partitioned Parquet keyed so time-range scans prune partitions.
+
+    Contract:
+    - ``df`` must be a ``decode_netcdf_tidy`` result (``TypeError``
+      otherwise, also for a frame derived from one). The write is one
+      ``mapInArrow`` job over its manifest: each worker decodes a file
+      and writes its Arrow batch with pyarrow, so the rows never enter
+      the JVM to be converted, sorted and re-encoded.
+    - ``path`` is on a filesystem the driver and every worker see at the
+      same path: a ``file:`` URI, or a path without a scheme on a local
+      master whose ``fs.defaultFS`` is ``file:``. Anything else
+      (``s3a://``, ``hdfs://``, a bare path on a cluster) raises
+      ``ValueError`` before any work.
+    - ``partition_cols`` is a subset of ``TIDY_KEYS`` (``ValueError``
+      otherwise): constant within a file, so each file lands in one
+      directory, named as Spark names it (escaped values,
+      ``__HIVE_DEFAULT_PARTITION__`` for null or empty).
+    - Each source file becomes ``part-{sha1(url)[:16]}.parquet``, with
+      ``time`` as INT96 and snappy compression, as Spark's default
+      writer does.
+    - The job writes into a hidden sibling staging directory. Only when
+      it succeeds is ``_SUCCESS`` added, the old target deleted and the
+      staging directory renamed over it (overwrite = the reference's
+      idempotent re-materialization, T4). A failed decode or write
+      removes the staging directory and raises; the target is left as
+      it was. (A driver killed mid-job leaves the staging directory
+      behind, as Spark's writer left ``_temporary``; a glob that enters
+      hidden directories, such as DuckDB's ``**``, would read it.)
+
+    Returns one ``LAKE_FILE_SCHEMA`` row (url, path, rows) per manifest
+    row; ``path`` is relative to the target.
+    """
+    source = vars(df).get(_TIDY_SOURCE)
+    if source is None:
+        raise TypeError("write_tidy_long writes a decode_netcdf_tidy result; "
+                        "this DataFrame is not one (a filter or select of one "
+                        "is not either)")
+    partition_cols = tuple(partition_cols)
+    if not set(partition_cols) <= set(TIDY_KEYS) or \
+            len(set(partition_cols)) != len(partition_cols):
+        raise ValueError(f"partition_cols must be distinct columns of {TIDY_KEYS}; "
+                         f"got {partition_cols}")
+    decode_file, files = source
+    root = _local_lake_root(files.sparkSession, path)
+    staging = os.path.join(os.path.dirname(root),
+                           f".{os.path.basename(root)}.staging-{uuid.uuid4().hex}")
+    try:
+        written = files.mapInArrow(_tidy_file_writer(decode_file, staging, partition_cols),
+                                   LAKE_FILE_SCHEMA).collect()
+        os.makedirs(staging, exist_ok=True)
+        open(os.path.join(staging, "_SUCCESS"), "wb").close()
+        if os.path.isdir(root) and not os.path.islink(root):
+            shutil.rmtree(root)
+        elif os.path.lexists(root):
+            os.remove(root)
+        os.rename(staging, root)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    return written

@@ -5,6 +5,7 @@ xarray path could never run in-container."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 
 import pytest
@@ -208,3 +209,154 @@ def test_decode_times_follow_session_time_zone(spark, tz):
     finally:
         spark.conf.set("spark.sql.session.timeZone", previous)
     assert got == want.tolist()
+
+
+# --- write_tidy_long against Spark's own partitioned writer ------------------
+#
+# The package writes the lake from the decoding worker with pyarrow; these
+# cases write the same ``decode_netcdf_tidy`` relation with
+# ``tidy.write.partitionBy(...).parquet`` as the reference and compare the
+# two lakes: directory names, rows (Spark and DuckDB readers), physical
+# column types and codecs, and instants.
+
+LAKE_PARTS = ("model", "scenario", "variable")
+# every character Spark's escapePathName escapes that a path can hold, and
+# some it leaves alone (space, '}', non-ASCII)
+PART_ALPHABET = "/=%:?*#'\"{[^]}\t aZ1é日"
+
+
+def _lake_fetcher(units="days since 1950-01-01", times=(0.0, 40.0)):
+    """url -> a 2x2x3 CDF-1 grid whose values depend on the url."""
+    mk = write_netcdf3
+    nt = len(times)
+
+    def fetch(url):
+        base = float(sum(url.encode()) % 97) * 100
+        return mk(
+            dims=[("time", nt), ("lat", 2), ("lon", 3)],
+            variables=[
+                ("time", 6, ["time"], list(times), {"units": (2, units)}),
+                ("lat", 6, ["lat"], [32.0, 32.5], {}),
+                ("lon", 6, ["lon"], [-117.0, -116.5, -116.0], {}),
+                ("tasmax", 5, ["time", "lat", "lon"],
+                 [base + i for i in range(nt * 6)], {})])
+
+    return fetch
+
+
+def _write_both(spark, manifest, fetcher, root):
+    """The same decode written by Spark (``spark``) and by the package
+    (``lake``); returns both paths."""
+    tidy = decode_netcdf_tidy(manifest, fetcher=fetcher,
+                              decoder=netcdf3_tidy_decoder)
+    ref, got = f"{root}/spark", f"{root}/lake"
+    tidy.write.mode("overwrite").partitionBy(*LAKE_PARTS).parquet(ref)
+    write_tidy_long(tidy, got, LAKE_PARTS)
+    return ref, got
+
+
+def _parquet_files(root):
+    return sorted(os.path.join(d, n) for d, _, names in os.walk(root)
+                  for n in names if n.endswith(".parquet"))
+
+
+def _partition_dirs(root):
+    return {os.path.relpath(os.path.dirname(f), root)
+            for f in _parquet_files(root)}
+
+
+def _spark_rows(spark, root):
+    from pyspark.sql import functions as F
+    df = spark.read.parquet(root)
+    cols = sorted(df.columns)
+    return sorted(repr(tuple(r)) for r in df.select(
+        *[F.unix_micros(c).alias(c) if c == "time" else F.col(c)
+          for c in cols]).collect())
+
+
+def _duckdb_rows(root):
+    import duckdb
+    cur = duckdb.connect().execute(
+        "SELECT * REPLACE (epoch_us(time) AS time) FROM "
+        f"read_parquet('{root}/**/*.parquet', hive_partitioning=true)")
+    names = [d[0] for d in cur.description]
+    order = sorted(range(len(names)), key=names.__getitem__)
+    return sorted(repr(tuple(r[i] for i in order)) for r in cur.fetchall())
+
+
+def _physical(path):
+    import pyarrow.parquet as pq
+    md = pq.ParquetFile(path).metadata
+    return md.num_row_groups, [
+        (md.schema.column(i).name, md.schema.column(i).physical_type,
+         str(md.schema.column(i).logical_type),
+         md.row_group(0).column(i).compression)
+        for i in range(md.num_columns)]
+
+
+def test_lake_matches_spark_writer_on_escaped_partition_values(spark):
+    """Partition values with every character Spark escapes, a tab, a
+    space, non-ASCII text, '' and None: the package's lake has Spark's
+    directory names and, read back by Spark and by DuckDB, Spark's rows."""
+    import tempfile
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    part = st.one_of(st.none(), st.just(""),
+                     st.text(alphabet=PART_ALPHABET, min_size=1, max_size=5))
+    fetcher = _lake_fetcher()
+
+    @settings(max_examples=6, deadline=None)
+    @given(files=st.lists(st.tuples(part, part, part), min_size=1, max_size=4))
+    @example(files=[("a/b", "=%:?", "*#'\"{"), ("[^]}\t", " é日", ""),
+                    (None, "ssp245", "tasmax")])
+    def check(files):
+        manifest = spark.createDataFrame(
+            [(f"u://{i}.nc", m, s, "r1i1p1f1", v)
+             for i, (m, s, v) in enumerate(files)],
+            "url string, model string, scenario string, memberid string, "
+            "variable string")
+        with tempfile.TemporaryDirectory() as root:
+            ref, got = _write_both(spark, manifest, fetcher, root)
+            assert _partition_dirs(got) == _partition_dirs(ref)
+            assert _spark_rows(spark, got) == _spark_rows(spark, ref)
+            assert _duckdb_rows(got) == _duckdb_rows(ref)
+
+    check()
+
+
+@pytest.mark.parametrize("tz", ["UTC", "America/New_York"])
+@pytest.mark.parametrize("units,times", [
+    ("days since 1850-01-01", (0.0, 40.0)),
+    ("hours since 2015-11-01 00:00:00", (1.5, 5.0))])
+def test_lake_times_and_types_match_spark_writer(spark, tmp_path, tz, units,
+                                                  times):
+    """The lake's files have Spark's physical types and codec (time as
+    INT96, one row group), and its instants read back equal to Spark's own
+    file and to the decode, in either session time zone, for a pre-1900
+    axis and a DST-ambiguous hour."""
+    from pyspark.sql import functions as F
+
+    manifest = spark.createDataFrame(
+        [("u://a.nc", "GCM1", "ssp245", "r1i1p1f1", "tasmax")],
+        "url string, model string, scenario string, memberid string, "
+        "variable string")
+    fetcher = _lake_fetcher(units, times)
+
+    def micros(df):
+        return [r.us for r in df.select(F.unix_micros("time").alias("us"),
+                                        "value").orderBy("value").collect()]
+
+    previous = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    try:
+        ref, got = _write_both(spark, manifest, fetcher, str(tmp_path))
+        want = micros(decode_netcdf_tidy(manifest, fetcher=fetcher,
+                                         decoder=netcdf3_tidy_decoder))
+        assert micros(spark.read.parquet(ref)) == want
+        assert micros(spark.read.parquet(got)) == want
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", previous)
+    [ref_file], [got_file] = _parquet_files(ref), _parquet_files(got)
+    assert _physical(got_file) == _physical(ref_file)
+    assert _physical(got_file)[1][1][1:] == ("INT96", "None", "SNAPPY")

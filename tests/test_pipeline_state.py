@@ -179,6 +179,114 @@ def test_tidy_long_partitioned_write_prunes(spark, tmp_path):
     assert "PartitionFilters" in plan and "model" in plan
 
 
+def _lake_manifest(spark):
+    return spark.createDataFrame(
+        [("https://x.test/f1.nc", "AModel", "ssp245", "r1", "tasmax"),
+         ("https://x.test/f2.nc", "BModel", "ssp585", "r1", "pr"),
+         ("https://x.test/f3.nc", "BModel", "ssp585", "r2", "pr")],
+        "url string, model string, scenario string, memberid string, variable string")
+
+
+def _lake_parquet(root):
+    return sorted(os.path.relpath(os.path.join(d, n), root)
+                  for d, _, names in os.walk(root)
+                  for n in names if n.endswith(".parquet"))
+
+
+def test_tidy_long_rewrite_replaces_files(spark, tmp_path):
+    """Writing one manifest twice into one path leaves the same file
+    names, one per source file, and the same rows with no duplicates."""
+    from downscaledclimatedata_spark.operators.ingest import (
+        decode_netcdf_tidy, write_tidy_long)
+    out = str(tmp_path / "tidy")
+    tidy = decode_netcdf_tidy(_lake_manifest(spark))
+    write_tidy_long(tidy, out)
+    first = _lake_parquet(out)
+    write_tidy_long(tidy, out)
+    assert _lake_parquet(out) == first and len(first) == 3
+    assert os.path.exists(os.path.join(out, "_SUCCESS"))
+    back = spark.read.parquet(out)
+    assert back.count() == 3 * 8 == back.distinct().count()
+
+
+def test_tidy_long_returns_one_record_per_file(spark, tmp_path):
+    from downscaledclimatedata_spark.operators.ingest import (
+        decode_netcdf_tidy, write_tidy_long)
+    out = str(tmp_path / "tidy")
+    written = write_tidy_long(decode_netcdf_tidy(_lake_manifest(spark)), out)
+    assert sorted(r.url for r in written) == \
+        ["https://x.test/f1.nc", "https://x.test/f2.nc", "https://x.test/f3.nc"]
+    assert sum(r.rows for r in written) == 3 * 8
+    assert sorted(r.path for r in written) == _lake_parquet(out)
+
+
+def test_tidy_long_failed_decode_raises_and_publishes_nothing(spark, tmp_path):
+    """A fetcher that raises on one file fails the write: no ``*.parquet``
+    becomes visible under a new path, an existing lake keeps its files,
+    and no staging directory is left beside either."""
+    from downscaledclimatedata_spark.operators.ingest import (
+        decode_netcdf_tidy, default_fetcher, write_tidy_long)
+    fetch = default_fetcher
+
+    def flaky_fetch(url):
+        if url.endswith("f2.nc"):
+            raise IOError("boom: unreadable source")
+        return fetch(url)
+
+    flaky = decode_netcdf_tidy(_lake_manifest(spark), fetcher=flaky_fetch)
+    out = str(tmp_path / "tidy")
+    with pytest.raises(Exception, match="boom"):
+        write_tidy_long(flaky, out)
+    assert not os.path.exists(out) and os.listdir(tmp_path) == []
+
+    write_tidy_long(decode_netcdf_tidy(_lake_manifest(spark)), out)
+    before = _lake_parquet(out)
+    with pytest.raises(Exception, match="boom"):
+        write_tidy_long(flaky, out)
+    assert _lake_parquet(out) == before and os.listdir(tmp_path) == ["tidy"]
+    assert spark.read.parquet(out).count() == 3 * 8
+
+
+def test_tidy_long_refuses_paths_workers_may_not_share(spark, tmp_path):
+    """A scheme pyarrow's local writer cannot serve, or a bare path that
+    Hadoop would resolve against a non-local ``fs.defaultFS``, raises
+    before any work instead of writing somewhere else; a ``file:`` URI
+    writes."""
+    from downscaledclimatedata_spark.operators.ingest import (
+        decode_netcdf_tidy, write_tidy_long)
+    tidy = decode_netcdf_tidy(_lake_manifest(spark))
+    for uri in ("s3a://bucket/lake", "hdfs://nn:8020/lake", "file://otherhost/lake"):
+        with pytest.raises(ValueError, match="write_tidy_long"):
+            write_tidy_long(tidy, uri)
+    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    prior = hconf.get("fs.defaultFS")
+    hconf.set("fs.defaultFS", "hdfs://nn:8020")
+    try:
+        with pytest.raises(ValueError, match="fs.defaultFS"):
+            write_tidy_long(tidy, str(tmp_path / "bare"))
+    finally:
+        if prior is None:
+            hconf.unset("fs.defaultFS")
+        else:
+            hconf.set("fs.defaultFS", prior)
+    assert os.listdir(tmp_path) == []
+    written = write_tidy_long(tidy, f"file://{tmp_path}/tidy")
+    assert sum(r.rows for r in written) == 3 * 8
+    assert len(_lake_parquet(str(tmp_path / "tidy"))) == 3
+
+
+def test_tidy_long_rejects_derived_frames_and_row_level_partitions(spark, tmp_path):
+    from downscaledclimatedata_spark.operators.ingest import (
+        decode_netcdf_tidy, write_tidy_long)
+    tidy = decode_netcdf_tidy(_lake_manifest(spark))
+    out = str(tmp_path / "tidy")
+    with pytest.raises(TypeError, match="decode_netcdf_tidy"):
+        write_tidy_long(tidy.filter(F.col("model") == "AModel"), out)
+    with pytest.raises(ValueError, match="partition_cols"):
+        write_tidy_long(tidy, out, partition_cols=("time",))
+    assert not os.path.exists(out)
+
+
 def test_ingest_output_path_anchored(spark):
     """Regression (SURVEY §7.5.3): a key with an interior '.nc' must only
     have its FINAL extension rewritten in the ingest hot path."""
