@@ -24,9 +24,20 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+from downscaledclimatedata_spark.sources.tables import TABLE_NAMES as TABLES  # noqa: E402
+
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
+
+
+def duck_views(data_dir: str):
+    """A DuckDB connection with one view per table over
+    ``{data_dir}/{name}.parquet``: the relations the spec oracles read."""
+    import duckdb
+    con = duckdb.connect()
+    for name in TABLES:
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM "
+                    f"read_parquet('{data_dir}/{name}.parquet')")
+    return con
 
 
 def _canon(df):
@@ -49,17 +60,12 @@ def main() -> None:
                     help="comma-separated spec names (default: all)")
     args = ap.parse_args()
 
-    import duckdb
-
     from downscaledclimatedata_spark.plans import all_specs
     from downscaledclimatedata_spark.session import get_spark
 
     spark = get_spark("dcd-spark-canon", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for name in TABLES:
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM "
-                    f"read_parquet('{SF_DIR}/{name}.parquet')")
+    con = duck_views(SF_DIR)
 
     specs = all_specs()
     names = sorted(specs)

@@ -18,7 +18,9 @@ loca2.py:220-224).
 
 from __future__ import annotations
 
+import glob
 import json
+import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,10 +58,9 @@ def strip_prefix(key: Column, prefix: str) -> Column:
     ).otherwise(key)
 
 
-def parse_key_columns(df: DataFrame, key_col: str = "rel_key",
-                      bucket: str = "bucket",
+def parse_key_columns(df: DataFrame, bucket: str = "bucket",
                       path_col: str | None = None) -> DataFrame:
-    """Extract the 6 catalog columns from a relative S3 key.
+    """Extract the 6 catalog columns from the relative S3 key ``rel_key``.
 
     Reference: parse_key at loca2.py:115-136 — split('/') dropping empty
     parts, model = parts[0], scheme = parts[1], filename = parts[-1];
@@ -69,9 +70,9 @@ def parse_key_columns(df: DataFrame, key_col: str = "rel_key",
 
     ``path`` is built from ``path_col`` when given (the UN-stripped full
     key — the reference parses the prefix-stripped key but builds the URI
-    from the full one, loca2.py:128,218-221), else from ``key_col``.
+    from the full one, loca2.py:128,218-221), else from ``rel_key``.
     """
-    parts = F.filter(F.split(F.col(key_col), "/"), lambda x: x != "")
+    parts = F.filter(F.split(F.col("rel_key"), "/"), lambda x: x != "")
     fname = F.element_at(parts, -1)
     fparts = F.split(fname, r"\.")
     return df.select(
@@ -81,39 +82,40 @@ def parse_key_columns(df: DataFrame, key_col: str = "rel_key",
         F.element_at(fparts, 4).alias("experiment_id"),
         F.element_at(fparts, 5).alias("time_range"),
         F.concat(F.lit(f"s3://{bucket}/"),
-                 F.col(path_col or key_col)).alias("path"),
+                 F.col(path_col or "rel_key")).alias("path"),
     )
 
 
-def well_formed(key_col: str = "rel_key") -> Column:
-    """Keys parse_key can handle: >=2 path parts and >=5 filename dot-fields.
+def well_formed() -> Column:
+    """``rel_key`` values parse_key can handle: >=2 path parts and >=5
+    filename dot-fields.
 
     Formalizes the reference's IndexError tolerance (loca2.py:220-224, T7):
     instead of raising per-row, malformed keys fail this predicate and are
     quarantined by the caller.
     """
-    parts = F.filter(F.split(F.col(key_col), "/"), lambda x: x != "")
+    parts = F.filter(F.split(F.col("rel_key"), "/"), lambda x: x != "")
     fname = F.element_at(parts, -1)
     return (F.size(parts) >= 2) & (F.size(F.split(fname, r"\.")) >= 5)
 
 
-def build_catalog(listing: DataFrame, bucket: str, prefix: str = "",
-                  key_col: str = "key") -> tuple[DataFrame, DataFrame]:
+def build_catalog(listing: DataFrame, bucket: str,
+                  prefix: str = "") -> tuple[DataFrame, DataFrame]:
     """listing(key) -> (catalog DataFrame, quarantine DataFrame).
 
     One shuffle (the distinct on base paths); everything else is narrow.
     """
-    base = listing.select(zarr_base_path(F.col(key_col)).alias("full_key")).distinct()
+    base = listing.select(zarr_base_path(F.col("key")).alias("full_key")).distinct()
     keyed = base.select(
         F.col("full_key"), strip_prefix(F.col("full_key"), prefix).alias("rel_key"))
     # null keys make well_formed NULL, which both filters would silently
     # drop — coalesce to False so they land in quarantine (conservation:
     # every distinct key goes exactly one way)
-    ok = F.coalesce(well_formed("rel_key"), F.lit(False))
+    ok = F.coalesce(well_formed(), F.lit(False))
     good = keyed.filter(ok)
     quarantine = keyed.filter(~ok).select(
         F.col("full_key").alias("rejected_key"))
-    catalog = parse_key_columns(good, "rel_key", bucket, path_col="full_key")
+    catalog = parse_key_columns(good, bucket, path_col="full_key")
     return catalog, quarantine
 
 
@@ -141,13 +143,20 @@ def write_catalog(catalog: DataFrame, out_dir: str, catalog_id: str,
     the engine uses Spark's CSV writer (quotes only when needed — the
     reference silently corrupts comma-bearing fields, SURVEY §7.5.2) and
     adds an explicit orderBy so output is deterministic (§7.5.4).
+
+    Spark writes ``{catalog_id}.csv`` as a directory; ``coalesce(1)``
+    makes it hold one ``part-*.csv`` file, and the spec's
+    ``catalog_file`` names that file, so ``pd.read_csv`` (and intake-ESM)
+    can open it.
     """
+    csv_dir = f"{out_dir}/{catalog_id}.csv"
     (catalog.orderBy(*CATALOG_COLUMNS)
      .coalesce(1)
      .write.mode("overwrite").option("header", True)
-     .csv(f"{out_dir}/{catalog_id}.csv"))
+     .csv(csv_dir))
+    [part] = glob.glob(f"{glob.escape(csv_dir)}/part-*.csv")
     spec = esm_catalog_spec(catalog_id, description, data_format,
-                            f"{out_dir}/{catalog_id}.csv")
+                            f"{csv_dir}/{os.path.basename(part)}")
     with open(f"{out_dir}/{catalog_id}.json", "w") as f:
         json.dump(spec, f, indent=4)
 
@@ -246,7 +255,7 @@ def catalog_parse_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
                                         F.col("doc_id").cast("string"), F.lit(".nc"))))
     keyed = docs.select(key.alias("rel_key"))
     return keyed.select(
-        F.when(well_formed("rel_key"), F.lit("ok")).otherwise(F.lit("quarantined")).alias("status")
+        F.when(well_formed(), F.lit("ok")).otherwise(F.lit("quarantined")).alias("status")
     ).groupBy("status").agg(F.count("*").alias("n_keys"))
 
 

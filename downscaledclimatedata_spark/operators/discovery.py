@@ -93,25 +93,21 @@ def _row_file_pattern(variable: str, monthly: bool) -> Column:
     return F.concat(F.lit("^"), head, F.lit(_grammar_tail(monthly)))
 
 
-def filter_filenames(files: DataFrame, pattern: str,
-                     filename_col: str = "filename") -> DataFrame:
-    return files.filter(F.col(filename_col).rlike(pattern))
+def filter_filenames(files: DataFrame, pattern: str) -> DataFrame:
+    return files.filter(F.col("filename").rlike(pattern))
 
 
-def build_manifest(files: DataFrame, variable: str, base_url: str,
-                   model_col: str = "model", scenario_col: str = "scenario",
-                   member_col: str = "memberid",
-                   filename_col: str = "filename") -> DataFrame:
-    """Project discovery records (loca2_sensor.py:39-78): url + s3_key."""
+def build_manifest(files: DataFrame, variable: str, base_url: str) -> DataFrame:
+    """Project discovery records (loca2_sensor.py:39-78): url + s3_key,
+    from ``files(model, scenario, memberid, filename)``."""
     url = F.concat_ws(
-        "/", F.lit(base_url.rstrip("/")), F.col(model_col), F.lit("cent"),
-        F.lit("0p0625deg"), F.col(member_col), F.col(scenario_col),
-        F.lit(variable), F.col(filename_col))
+        "/", F.lit(base_url.rstrip("/")), F.col("model"), F.lit("cent"),
+        F.lit("0p0625deg"), F.col("memberid"), F.col("scenario"),
+        F.lit(variable), F.col("filename"))
     s3_key = F.concat(F.lit("/"), F.concat_ws(
-        "/", F.col(model_col), F.col(scenario_col), F.col(filename_col)))
+        "/", F.col("model"), F.col("scenario"), F.col("filename")))
     return files.select(
-        F.col(model_col).alias("model"), F.col(scenario_col).alias("scenario"),
-        F.col(member_col).alias("memberid"), F.lit(variable).alias("variable"),
+        "model", "scenario", "memberid", F.lit(variable).alias("variable"),
         url.alias("url"), s3_key.alias("s3_key"))
 
 
@@ -143,38 +139,30 @@ def next_group(registry: DataFrame, cursor: str | None) -> tuple[str, str] | Non
     return row[0]["model"], row[0]["scenario"]
 
 
-def new_work(manifest: DataFrame, processed: DataFrame,
-             key_col: str = "s3_key", log_col: str = "run_key") -> DataFrame:
-    """Idempotency anti-join (J3): drop already-processed run keys."""
-    log = processed.select(F.col(log_col).alias(key_col)).distinct()
-    return manifest.join(log, on=key_col, how="left_anti")
+def new_work(manifest: DataFrame, processed: DataFrame) -> DataFrame:
+    """Idempotency anti-join (J3): drop manifest rows whose ``s3_key`` is
+    a processed ``run_key``."""
+    log = processed.select(F.col("run_key").alias("s3_key")).distinct()
+    return manifest.join(log, on="s3_key", how="left_anti")
 
 
-def _default_fetcher(url: str) -> str:
-    """STUB transport for the HTML directory listing (loca2_sensor.py:45-47
-    fetches https://cirrus.ucsd.edu/... with urllib). Deterministic fake
-    listing so the crawl plumbing is testable offline."""
-    return "<html><body><a href='index.html'>idx</a></body></html>"
-
-
-def crawl_listings(seeds: DataFrame, fetcher=None,
-                   url_col: str = "listing_url") -> DataFrame:
-    """Executor-side HTML directory crawl: seed-URL rows -> one row per
-    anchor href (reference S1, loca2_sensor.py:45-54).
+def crawl_listings(seeds: DataFrame, fetcher) -> DataFrame:
+    """Executor-side HTML directory crawl: ``listing_url`` rows -> one row
+    per anchor href (reference S1, loca2_sensor.py:45-54).
 
     The reference crawls one directory per tick on the driver; at scale
     the seed set is a DataFrame and each executor fetches+parses its
     slice (mapInPandas), so crawling 99 model/scenario directories is one
     parallel job. Parsing uses the stdlib HTMLParser (anchor hrefs only,
     exactly what BeautifulSoup's find_all("a") extracts there).
-    """
-    import pandas as pd  # noqa: F401  (schema import kept local below)
-    from pyspark.sql import types as _T
 
-    _fetch = fetcher or _default_fetcher
-    out_schema = _T.StructType([
-        _T.StructField("listing_url", _T.StringType()),
-        _T.StructField("filename", _T.StringType()),
+    ``fetcher(url) -> str`` returns the listing page's HTML (the
+    reference fetches https://cirrus.ucsd.edu/... with urllib,
+    loca2_sensor.py:45-47); it runs on the executors, so it must pickle.
+    """
+    out_schema = T.StructType([
+        T.StructField("listing_url", T.StringType()),
+        T.StructField("filename", T.StringType()),
     ])
 
     def _crawl(batches):
@@ -196,13 +184,13 @@ def crawl_listings(seeds: DataFrame, fetcher=None,
             urls, names = [], []
             for url in pdf.iloc[:, 0]:
                 p = _Anchors()
-                p.feed(_fetch(url))
+                p.feed(fetcher(url))
                 for href in p.hrefs:
                     urls.append(url)
                     names.append(href)
             yield _pd.DataFrame({"listing_url": urls, "filename": names})
 
-    return seeds.select(url_col).mapInPandas(_crawl, out_schema)
+    return seeds.select("listing_url").mapInPandas(_crawl, out_schema)
 
 
 def member_listing_urls(registry: DataFrame, variable: str,
@@ -219,7 +207,7 @@ def member_listing_urls(registry: DataFrame, variable: str,
 
 def discover_all(registry: DataFrame, variable: str, base_url: str,
                  monthly: bool, processed: DataFrame,
-                 fetcher=None) -> DataFrame:
+                 fetcher) -> DataFrame:
     """Discovery over every registry row in one parallel job.
 
     Pipeline: seed every member's listing URL -> executor-side crawl
@@ -246,7 +234,7 @@ def discover_all(registry: DataFrame, variable: str, base_url: str,
 
 def discovery_tick(registry: DataFrame, cursor: str | None, variable: str,
                    base_url: str, monthly: bool, processed: DataFrame,
-                   fetcher=None) -> tuple[DataFrame | None, str | None]:
+                   fetcher) -> tuple[DataFrame | None, str | None]:
     """One discovery tick (reference sensor_implementation,
     loca2_sensor.py:137-163): ``discover_all`` over the first group after
     the cursor. Returns (new-work manifest, next cursor), or (None, None)

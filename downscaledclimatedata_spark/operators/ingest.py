@@ -28,11 +28,11 @@ file's name, and a failed decode or write raises and publishes nothing.
 The target must be on a filesystem the driver and workers share
 (``file:``); other schemes raise.
 
-Network and xarray/s3fs are unavailable in this container; the transport
-layer is injected (``fetcher``/``converter`` callables) with
-deterministic local defaults, and the real implementations are
-documented stubs. The Spark plumbing — manifest in, result manifest out,
-partitioning, idempotent overwrite sink — is real and tested.
+The transport is injected and required: ``fetcher``, ``converter`` and
+``decoder`` have no defaults, so a call without one raises ``TypeError``
+instead of producing rows from nothing. The implementations live in
+``operators/transport.py`` (HTTP, HTTP piped to S3, xarray convert and
+decode) and ``operators/netcdf3.py`` (the stdlib NetCDF classic decoder).
 """
 
 from __future__ import annotations
@@ -46,7 +46,6 @@ from urllib.parse import urlparse
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 INGEST_RESULT_SCHEMA = T.StructType([
@@ -58,57 +57,9 @@ INGEST_RESULT_SCHEMA = T.StructType([
 ])
 
 
-def _build_ingest_defaults():
-    """The STUB transport defaults, built inside a factory so their
-    closures pickle BY VALUE (cloudpickle ships nested functions whole):
-    executors must not need this package on their PYTHONPATH — callers
-    of ``__spark_entry__`` run from an arbitrary cwd on a plain session.
-    Same idiom as ``netcdf3._build_netcdf3_codecs``."""
-
-    def default_fetcher(url: str) -> bytes:
-        """STUB transport. Production: requests.get(url, stream=True)
-        piped to object storage exactly like loca2.py:31-44 (zero local
-        buffering). Here: deterministic fake payload derived from the
-        url."""
-        return f"payload:{url}".encode()
-
-    def default_converter(payload: bytes, out_path: str) -> int:
-        """STUB converter. Production: xr.open_dataset(...) then
-        ds.to_zarr(store, mode='w', consolidated=True) (loca2.py:84-100)
-        or a tidy-long decode to partitioned Parquet (SURVEY §1.5).
-        Here: byte count passthrough."""
-        return len(payload)
-
-    def default_grid_decoder(payload: bytes, meta: dict) -> "pd.DataFrame":
-        """STUB gridded decode. Production: xr.open_dataset over the blob
-        (reference loca2.py:84-86), chunked by variable/time inside the
-        UDF (SURVEY §7.5.1) and melted to tidy rows. Here: a
-        deterministic 2x2x2 (time, lat, lon) grid derived from the
-        payload hash so the fan-out, schema, and partitioning are
-        real."""
-        import hashlib as _hashlib
-        from datetime import datetime
-        import pandas as _pd
-        h = int(_hashlib.md5(payload).hexdigest()[:8], 16)
-        rows = []
-        for t in range(2):
-            ts = datetime(1950 + t, 1, 1)
-            for i in range(2):
-                for j in range(2):
-                    rows.append((ts, 32.0 + i / 16.0, -117.0 + j / 16.0,
-                                 float((h >> (t * 4 + i * 2 + j)) % 100)))
-        return _pd.DataFrame(rows, columns=["time", "lat", "lon", "value"])
-
-    return default_fetcher, default_converter, default_grid_decoder
-
-
-default_fetcher, default_converter, default_grid_decoder = \
-    _build_ingest_defaults()
-
-
 def ingest_and_convert(manifest: DataFrame,
-                       fetcher: Callable[[str], bytes] = default_fetcher,
-                       converter: Callable[[bytes, str], int] = default_converter,
+                       fetcher: Callable[[str], bytes],
+                       converter: Callable[[bytes, str], int],
                        output_root: str = "/tmp/converted") -> DataFrame:
     """manifest(url, s3_key, ...) -> result manifest, one row per file.
 
@@ -127,7 +78,8 @@ def ingest_and_convert(manifest: DataFrame,
             rows = []
             for url, s3_key in zip(pdf["url"], pdf["s3_key"]):
                 # anchored: an interior ".nc" (e.g. "tasmax.nc_backup/f.nc")
-                # must not be rewritten — same semantics as rewrite_extension
+                # must not be rewritten, unlike the reference's unanchored
+                # replace (loca2.py:79; divergence recorded, SURVEY §7.5.3)
                 out_path = _root + _re.sub(r"\.nc$", ".zarr", s3_key)
                 try:
                     payload = fetcher(url)
@@ -153,6 +105,10 @@ TIDY_SCHEMA = T.StructType([
 
 # The manifest columns every tidy row repeats: constant within one file.
 TIDY_KEYS = ("model", "scenario", "memberid", "variable")
+
+# The lake's hive partition columns: a subset of ``TIDY_KEYS``, so each
+# source file lands in one directory.
+LAKE_PARTITION_COLS = ("model", "scenario", "variable")
 
 # The private attribute on a ``decode_netcdf_tidy`` frame that carries
 # ``(decode_file, files)``: the per-file decode and the manifest projection
@@ -197,9 +153,8 @@ def _tidy_file_decoder(fetcher, decoder, tz: str):
 
 
 def decode_netcdf_tidy(manifest: DataFrame,
-                       fetcher: Callable[[str], bytes] = default_fetcher,
-                       decoder: Callable[[bytes, dict], "pd.DataFrame"] = default_grid_decoder,
-                       ) -> DataFrame:
+                       fetcher: Callable[[str], bytes],
+                       decoder: Callable[[bytes, dict], "pd.DataFrame"]) -> DataFrame:
     """Manifest -> tidy long observations (SURVEY §1.5b analytics form).
 
     The Spark-idiomatic equivalent of the reference's NetCDF->Zarr
@@ -236,17 +191,7 @@ def decode_netcdf_tidy(manifest: DataFrame,
     return tidy
 
 
-def rewrite_extension(col, old: str = ".nc", new: str = ".zarr"):
-    """Anchored extension rewrite. The reference's unanchored
-    `.replace('.nc', '.zarr')` (loca2.py:79) would also rewrite interior
-    occurrences; the engine anchors at end-of-string (divergence recorded,
-    SURVEY §7.5.3)."""
-    import re as _re
-    return F.regexp_replace(col, _re.escape(old) + "$", new)
-
-
-def _tidy_file_writer(decode_file, staging: str,
-                      partition_cols: tuple[str, ...]):
+def _tidy_file_writer(decode_file, staging: str):
     """The ``mapInArrow`` body of ``write_tidy_long``: decode each manifest
     row with ``decode_file`` and write its rows, partition columns
     dropped, as one Parquet file under ``staging``; yield one
@@ -270,8 +215,8 @@ def _tidy_file_writer(decode_file, staging: str,
             for row in batch.to_pylist():
                 table = pa.Table.from_batches([decode_file(row)])
                 table = table.select([c for c in table.column_names
-                                      if c not in partition_cols])
-                rel = "/".join([f"{c}={escape(row[c])}" for c in partition_cols]
+                                      if c not in LAKE_PARTITION_COLS])
+                rel = "/".join([f"{c}={escape(row[c])}" for c in LAKE_PARTITION_COLS]
                                + [f"part-{hashlib.sha1(row['url'].encode()).hexdigest()[:16]}.parquet"])
                 _os.makedirs(_os.path.dirname(f"{staging}/{rel}"), exist_ok=True)
                 pq.write_table(table, f"{staging}/{rel}", compression="snappy",
@@ -310,8 +255,7 @@ def _local_lake_root(spark, path: str) -> str:
     return os.path.abspath(path)
 
 
-def write_tidy_long(df: DataFrame, path: str,
-                    partition_cols: tuple[str, ...] = ("model", "scenario", "variable")) -> list:
+def write_tidy_long(df: DataFrame, path: str) -> list:
     """Analytics sink for decoded climate observations (SURVEY §1.5b):
     hive-partitioned Parquet keyed so time-range scans prune partitions.
 
@@ -326,9 +270,8 @@ def write_tidy_long(df: DataFrame, path: str,
       master whose ``fs.defaultFS`` is ``file:``. Anything else
       (``s3a://``, ``hdfs://``, a bare path on a cluster) raises
       ``ValueError`` before any work.
-    - ``partition_cols`` is a subset of ``TIDY_KEYS`` (``ValueError``
-      otherwise): constant within a file, so each file lands in one
-      directory, named as Spark names it (escaped values,
+    - Each file lands in the one directory its ``LAKE_PARTITION_COLS``
+      values name, as Spark names it (escaped values,
       ``__HIVE_DEFAULT_PARTITION__`` for null or empty).
     - Each source file becomes ``part-{sha1(url)[:16]}.parquet``, with
       ``time`` as INT96 and snappy compression, as Spark's default
@@ -350,17 +293,12 @@ def write_tidy_long(df: DataFrame, path: str,
         raise TypeError("write_tidy_long writes a decode_netcdf_tidy result; "
                         "this DataFrame is not one (a filter or select of one "
                         "is not either)")
-    partition_cols = tuple(partition_cols)
-    if not set(partition_cols) <= set(TIDY_KEYS) or \
-            len(set(partition_cols)) != len(partition_cols):
-        raise ValueError(f"partition_cols must be distinct columns of {TIDY_KEYS}; "
-                         f"got {partition_cols}")
     decode_file, files = source
     root = _local_lake_root(files.sparkSession, path)
     staging = os.path.join(os.path.dirname(root),
                            f".{os.path.basename(root)}.staging-{uuid.uuid4().hex}")
     try:
-        written = files.mapInArrow(_tidy_file_writer(decode_file, staging, partition_cols),
+        written = files.mapInArrow(_tidy_file_writer(decode_file, staging),
                                    LAKE_FILE_SCHEMA).collect()
         os.makedirs(staging, exist_ok=True)
         open(os.path.join(staging, "_SUCCESS"), "wb").close()

@@ -10,13 +10,13 @@ engine's real counterparts behind the same seam:
   reads file METADATA only, and Spark parallelizes the directory walk
   across executors once it exceeds
   ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths.
-- ``listing_from_s3``: the reference-shaped boto3 paginator (driver-side
-  — S3 pagination is inherently sequential per prefix). Import-lazy,
-  client-injectable, same policy as operators/transport.py.
-- ``listing_from_s3_distributed``: the 100 TB shape — one paginator PER
-  PREFIX running on executors via ``mapInPandas``, so a bucket with many
-  models/scenarios (the reference's layout) lists in parallel with no
-  driver materialization.
+- ``listing_from_s3_distributed``: the reference's boto3
+  ``list_objects_v2`` paginator, one PER PREFIX running on executors via
+  ``mapInPandas`` (pagination is sequential within a prefix), so a
+  bucket with many models/scenarios (the reference's layout) lists in
+  parallel with no driver materialization; one prefix is the
+  reference's single listing. Import-lazy, client-injectable, same
+  policy as operators/transport.py.
 
 Caveat (documented, inherent to Hadoop listing): ``listing_from_fs``
 skips hidden entries (``.``/``_`` prefixes), so a zarr store's
@@ -28,6 +28,7 @@ unaffected because any data chunk key collapses to the same base path
 from __future__ import annotations
 
 import os
+import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -38,21 +39,24 @@ from pyspark.sql import functions as F
 LISTING_SCHEMA = "key string, size long, last_modified string"
 
 
-def listing_from_fs(spark: SparkSession, root: str,
-                    key_prefix: str = "") -> DataFrame:
+def listing_from_fs(spark: SparkSession, root: str) -> DataFrame:
     """List every file under ``root`` as bucket-style relative keys.
 
     Column-prunes ``binaryFile`` down to (path, length, modificationTime)
     so no file content is ever read — the plan's ReadSchema must not
     contain ``content`` (asserted in tests/test_listing.py). Keys are the
-    path suffix after ``root``, optionally prefixed with ``key_prefix`` to
-    mirror a bucket layout.
+    path suffix after ``root``.
     """
     files = (spark.read.format("binaryFile")
              .option("recursiveFileLookup", "true")
              .load(root)
              .select("path", "length", "modificationTime"))
-    norm = root if "://" in root else os.path.abspath(root)
+    # Hadoop reports a local file as ``file:/abs/path`` whatever form its
+    # root took, so a ``file:`` root is matched by its absolute path
+    if root.startswith("file:"):
+        norm = os.path.abspath(re.sub(r"^file:(//)?", "", root))
+    else:
+        norm = root if "://" in root else os.path.abspath(root)
     norm = norm.rstrip("/") + "/"
     # locate the normalized root inside the (scheme-qualified) path and
     # take everything after it; unmatched paths pass through whole
@@ -61,31 +65,9 @@ def listing_from_fs(spark: SparkSession, root: str,
                  F.col("path").substr(pos + F.lit(len(norm)), F.length("path"))
                  ).otherwise(F.col("path"))
     return files.select(
-        F.concat(F.lit(key_prefix), rel).alias("key"),
+        rel.alias("key"),
         F.col("length").alias("size"),
         F.date_format("modificationTime", "yyyy-MM-dd HH:mm:ss").alias("last_modified"))
-
-
-def listing_from_s3(spark: SparkSession, bucket: str, prefix: str = "",
-                    client=None) -> DataFrame:
-    """Reference-shaped S3 listing: ``list_objects_v2`` paginator -> keys
-    (reference loca2.py:176-202). ``client`` is injectable for tests;
-    default builds a boto3 client from the ambient credential chain.
-
-    Driver-side by necessity (each page's continuation token comes from
-    the previous page); for bucket-scale listings use
-    ``listing_from_s3_distributed`` with per-model prefixes instead.
-    """
-    if client is None:
-        import boto3
-        client = boto3.client("s3")
-    rows = []
-    for page in client.get_paginator("list_objects_v2").paginate(
-            Bucket=bucket, Prefix=prefix):
-        for obj in page.get("Contents") or []:
-            rows.append((obj["Key"], int(obj.get("Size", 0)),
-                         str(obj.get("LastModified", ""))))
-    return spark.createDataFrame(rows, LISTING_SCHEMA)
 
 
 def listing_from_s3_distributed(spark: SparkSession, bucket: str,

@@ -30,15 +30,3 @@ def registry_from_catalog_csv(spark: SparkSession, csv_path: str) -> DataFrame:
                     F.col("experiment_id").alias("memberid"))
             .distinct())
 
-
-def registry_to_nested(registry: DataFrame) -> dict:
-    """Inverse of discovery.registry_from_nested — the reference's nested
-    {model: {scenario: [memberid,...]}} shape for API parity."""
-    nested: dict = {}
-    for row in registry.collect():
-        nested.setdefault(row["model"], {}).setdefault(
-            row["scenario"], []).append(row["memberid"])
-    for scenarios in nested.values():
-        for s in scenarios:
-            scenarios[s] = sorted(scenarios[s])
-    return nested

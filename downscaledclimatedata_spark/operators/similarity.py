@@ -6916,7 +6916,6 @@ def ann_index_search(spark: SparkSession, path: str, k: int = TOP_K,
                      n_queries: int = N_QUERIES,
                      expect_centroid_mod: int = None,
                      expect_n_centroids: int = None,
-                     broadcast_queries: bool = None,
                      nprobe: int = 1) -> DataFrame:
     """Serve top-k from a persisted index: queries are looked up in the
     index itself (their list + vector), candidates come only from the
@@ -6928,8 +6927,7 @@ def ann_index_search(spark: SparkSession, path: str, k: int = TOP_K,
     match the configuration the caller built with — the build
     parameters are validated, not write-only. Query batches above
     ``ANN_SERVE_BROADCAST_MAX`` rows join the lists by a cid-keyed
-    shuffle instead of a broadcast (override with
-    ``broadcast_queries``).
+    shuffle instead of a broadcast.
 
     ``nprobe``: the serve-side recall knob (the r13 serve ladder's
     measured single-probe decay on clustered corpora is the reason it
@@ -6967,9 +6965,8 @@ def ann_index_search(spark: SparkSession, path: str, k: int = TOP_K,
                    .select("query_id", "cid", "qq", "qn2"))
     else:
         queries = qbase
-    if broadcast_queries is None:
-        broadcast_queries = n_queries * nprobe <= ANN_SERVE_BROADCAST_MAX
-    qside = F.broadcast(queries) if broadcast_queries else queries
+    qside = (F.broadcast(queries) if n_queries * nprobe <= ANN_SERVE_BROADCAST_MAX
+             else queries)
     corpus = lists.select(F.col("id").alias("match_id"), F.col("cid"),
                           F.col("qv").alias("cq"), F.col("n2").alias("cn2"))
     scored = (corpus.join(qside, "cid")

@@ -1,13 +1,14 @@
 """Production transport + decode implementations for the ingest seam.
 
-`operators/ingest.py` takes injected ``fetcher``/``converter``/``decoder``
-callables with deterministic local defaults (so the engine tests run
-hermetically). This module supplies the REAL implementations for the same
-seams, mirroring the reference's behavior:
+`operators/ingest.py` takes required ``fetcher``/``converter``/``decoder``
+callables and has no defaults of its own. This module supplies the real
+implementations for those seams, mirroring the reference's behavior:
 
+- HTTP streaming download returning the body (``make_http_fetcher``);
 - HTTP streaming download piped straight to object storage with zero
-  local buffering (reference loca2.py:31-44: ``requests.get(stream=True)``
-  + ``upload_fileobj(response.raw, ...)``);
+  local buffering (``make_s3_piping_fetcher``, reference loca2.py:31-44:
+  ``requests.get(stream=True)`` + ``upload_fileobj(response.raw, ...)``),
+  returning the ``{bucket, s3_key}`` hand-off record;
 - NetCDF blob -> Zarr store conversion (reference loca2.py:84-100:
   ``xr.open_dataset`` + ``ds.to_zarr(mode='w', consolidated=True)``);
 - NetCDF blob -> tidy-long DataFrame decode (the engine's analytics form,
@@ -35,9 +36,8 @@ def make_http_fetcher(timeout: float = 60.0,
     memory is O(file size) (the chunks are joined into one buffer;
     streaming only avoids a second requests-internal copy). For the
     multi-GB NetCDF files this seam targets, use
-    ``make_s3_piping_fetcher`` / ``stream_http_to_s3`` instead: those
-    hand the raw stream to ``upload_fileobj`` and never materialize the
-    body. HTTP errors raise so the ingest operator records them as
+    ``make_s3_piping_fetcher`` instead: it hands the raw stream to
+    ``upload_fileobj`` and never materializes the body. HTTP errors raise so the ingest operator records them as
     row-level error rows (T7 tolerance).
     """
     _timeout, _chunk = timeout, chunk_size
@@ -49,26 +49,6 @@ def make_http_fetcher(timeout: float = 60.0,
             return b"".join(resp.iter_content(chunk_size=_chunk))
 
     return fetch
-
-
-def stream_http_to_s3(url: str, bucket: str, key: str,
-                      s3_client=None, timeout: float = 60.0) -> dict[str, str]:
-    """Zero-buffering HTTP -> S3 pipe (reference loca2_raw_netcdf contract,
-    loca2.py:31-44): the response's raw stream is handed to
-    ``upload_fileobj`` so nothing materializes on local disk or in memory.
-
-    Returns the ``{bucket, s3_key}`` hand-off record the downstream
-    convert step consumes. ``s3_client`` is injectable for tests; default
-    builds a boto3 client from the ambient credential chain.
-    """
-    import requests
-    if s3_client is None:
-        import boto3
-        s3_client = boto3.client("s3")
-    with requests.get(url, stream=True, timeout=timeout) as resp:
-        resp.raise_for_status()
-        s3_client.upload_fileobj(resp.raw, bucket, key)
-    return {"bucket": bucket, "s3_key": key}
 
 
 def make_s3_piping_fetcher(bucket: str, key_root: str,
@@ -112,8 +92,7 @@ def xarray_zarr_converter(payload: bytes, out_path: str) -> int:
     ``mode='w'`` overwrite + consolidated metadata).
 
     Requires ``xarray`` + a zarr backend on executors; raises a clear
-    error otherwise (the engine's deterministic default converter remains
-    the hermetic-test path).
+    error otherwise.
     """
     try:
         import xarray as xr

@@ -81,7 +81,8 @@ class ProcessedLog:
             return empty_relation(self.spark, PROCESSED_SCHEMA)
         return self.spark.read.parquet(self.path)
 
-    def append(self, run_keys: DataFrame, key_col: str = "s3_key") -> None:
-        (run_keys.select(F.col(key_col).alias("run_key"),
+    def append(self, run_keys: DataFrame) -> None:
+        """Append the ``s3_key`` of every row of ``run_keys``."""
+        (run_keys.select(F.col("s3_key").alias("run_key"),
                          F.current_timestamp().alias("processed_at"))
          .write.mode("append").parquet(self.path))

@@ -18,14 +18,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MANIFEST_SCHEMA = T.StructType([
-    T.StructField("model", T.StringType()),
-    T.StructField("scenario", T.StringType()),
-    T.StructField("memberid", T.StringType()),
-    T.StructField("variable", T.StringType()),
-    T.StructField("url", T.StringType()),
-    T.StructField("s3_key", T.StringType()),
-])
+from downscaledclimatedata_spark.operators.discovery import MANIFEST_COLUMNS
+
+# the discovery manifest's columns, all strings
+MANIFEST_SCHEMA = T.StructType([T.StructField(c, T.StringType())
+                                for c in MANIFEST_COLUMNS])
 
 # reference sensor cadences (loca2_sensor.py:19, :22)
 DAILY_TRIGGER = "7200 seconds"

@@ -5,6 +5,8 @@ import os
 
 import pytest
 
+from canon_run import duck_views
+from downscaledclimatedata_spark.operators.netcdf3 import write_netcdf3
 from downscaledclimatedata_spark.session import get_spark
 
 SF_CORRECTNESS = "/root/testdata/sf0.01"
@@ -56,14 +58,33 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
-    con = duckdb.connect()
-    for name in ("region", "nation", "customer", "supplier", "part", "orders",
-                 "lineitem", "events", "documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{SF_CORRECTNESS}/{name}.parquet')")
-    yield con
+    yield duck_views(SF_CORRECTNESS)
+
+
+def cdf1_fetcher(nlat=2, nlon=2, units="days since 1950-01-01",
+                 times=(0.0, 40.0)):
+    """A fetcher: url -> the bytes of a CDF-1 file holding one
+    ``tasmax[time, lat, lon]`` grid, ``len(times) * nlat * nlon`` cells
+    counting up by 1 from a base the url determines (a multiple of 100).
+
+    A nested closure over ``write_netcdf3`` (itself nested), so Spark
+    pickles it by value and executors import neither the tests nor the
+    package."""
+    mk = write_netcdf3
+    nt = len(times)
+
+    def fetch(url):
+        base = float(sum(url.encode()) % 97) * 100
+        return mk(
+            dims=[("time", nt), ("lat", nlat), ("lon", nlon)],
+            variables=[
+                ("time", 6, ["time"], list(times), {"units": (2, units)}),
+                ("lat", 6, ["lat"], [32.0 + i / 2 for i in range(nlat)], {}),
+                ("lon", 6, ["lon"], [-117.0 + j / 2 for j in range(nlon)], {}),
+                ("tasmax", 5, ["time", "lat", "lon"],
+                 [base + i for i in range(nt * nlat * nlon)], {})])
+
+    return fetch
 
 
 def _normalize(v):

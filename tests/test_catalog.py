@@ -33,7 +33,7 @@ PARSE_CASES = [
 @pytest.mark.parametrize("rel_key,expected", PARSE_CASES)
 def test_parse_key_positions(spark, rel_key, expected):
     df = spark.createDataFrame([(rel_key,)], "rel_key string")
-    row = parse_key_columns(df, "rel_key", bucket="bkt").collect()[0]
+    row = parse_key_columns(df, bucket="bkt").collect()[0]
     for col, val in expected.items():
         assert row[col] == val, f"{col}: {row[col]} != {val}"
     assert row["path"] == f"s3://bkt/{rel_key}"
@@ -96,7 +96,7 @@ def test_prefix_strip(spark):
 def test_well_formed_predicate(spark):
     df = spark.createDataFrame([("a/b/c.d.e.f.g.nc",), ("a",), ("a/b/c.d",)],
                                "rel_key string")
-    flags = [r[0] for r in df.select(well_formed("rel_key")).collect()]
+    flags = [r[0] for r in df.select(well_formed()).collect()]
     assert flags == [True, False, False]
 
 
@@ -117,3 +117,12 @@ def test_write_catalog_roundtrip(spark, tmp_path):
     spec = json.loads(open(f"{out}/test-catalog.json").read())
     assert spec["esmcat_version"] == "0.1.0"
     assert spec["assets"]["format"] == "netcdf"
+    # the spec's catalog_file is the CSV itself, which pandas (and so
+    # intake-ESM) opens, not Spark's output directory
+    import pandas as pd
+    got = pd.read_csv(spec["catalog_file"])
+    assert list(got.columns) == back.columns
+    assert sorted(got["variable"]) == ["pr", "tasmax"]
+    assert sorted(got["path"]) == [
+        "s3://bkt/m/s/pr.m.s.r1i1p1f1.1950-2014.v1.nc",
+        "s3://bkt/m2/s2/tasmax.m2.s2.r2i1p1f1.2015-2044.v1.nc"]

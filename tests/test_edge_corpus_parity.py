@@ -12,10 +12,11 @@ from __future__ import annotations
 import os
 import shutil
 
-import duckdb
 import pytest
 
+from canon_run import duck_views
 from downscaledclimatedata_spark.plans import all_specs
+from downscaledclimatedata_spark.sources.tables import TABLE_NAMES
 from tests.conftest import SF_SMOKE, rows_to_sorted
 
 SPECS = all_specs()
@@ -55,8 +56,7 @@ _DOC_SPECS = sorted(
 @pytest.fixture(scope="module")
 def edge_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("edge_sf"))
-    for name in ("region", "nation", "customer", "supplier", "part",
-                 "orders", "lineitem", "events", "embeddings"):
+    for name in set(TABLE_NAMES) - {"documents"}:
         shutil.copy(os.path.join(SF_SMOKE, f"{name}.parquet"),
                     os.path.join(d, f"{name}.parquet"))
     docs = spark.createDataFrame(
@@ -67,13 +67,7 @@ def edge_dir(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def edge_duck(edge_dir):
-    con = duckdb.connect()
-    for name in ("region", "nation", "customer", "supplier", "part", "orders",
-                 "lineitem", "events", "documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{edge_dir}/{name}.parquet')")
-    yield con
+    yield duck_views(edge_dir)
 
 
 @pytest.mark.parametrize("name", _DOC_SPECS)

@@ -12,12 +12,13 @@ from __future__ import annotations
 import os
 import shutil
 
-import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 
+from canon_run import duck_views
 from downscaledclimatedata_spark.plans import all_specs
+from downscaledclimatedata_spark.sources.tables import TABLE_NAMES
 from tests.conftest import SF_SMOKE, rows_to_sorted
 
 SPECS = all_specs()
@@ -63,8 +64,7 @@ _EMB_SPECS = sorted(
 @pytest.fixture(scope="module")
 def edge_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("edge_emb_sf"))
-    for name in ("region", "nation", "customer", "supplier", "part",
-                 "orders", "lineitem", "events", "documents"):
+    for name in set(TABLE_NAMES) - {"embeddings"}:
         shutil.copy(os.path.join(SF_SMOKE, f"{name}.parquet"),
                     os.path.join(d, f"{name}.parquet"))
     _edge_embeddings().to_parquet(os.path.join(d, "embeddings.parquet"),
@@ -74,13 +74,7 @@ def edge_dir(spark, tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def edge_duck(edge_dir):
-    con = duckdb.connect()
-    for name in ("region", "nation", "customer", "supplier", "part", "orders",
-                 "lineitem", "events", "documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {name} AS SELECT * FROM "
-            f"read_parquet('{edge_dir}/{name}.parquet')")
-    yield con
+    yield duck_views(edge_dir)
 
 
 @pytest.mark.parametrize("name", _EMB_SPECS)

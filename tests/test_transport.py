@@ -17,7 +17,6 @@ from downscaledclimatedata_spark.operators.ingest import ingest_and_convert
 from downscaledclimatedata_spark.operators.transport import (
     make_http_fetcher,
     make_s3_piping_fetcher,
-    stream_http_to_s3,
 )
 
 FILES = {"/f1.nc": b"netcdf-bytes-one", "/f2.nc": b"netcdf-bytes-two" * 1000}
@@ -60,19 +59,15 @@ def test_http_fetcher_raises_on_404(http_server):
 
 
 class _FakeS3:
+    """Records each upload's bytes and the type of object it was handed."""
+
     def __init__(self):
         self.objects = {}
+        self.sources = {}
 
     def upload_fileobj(self, fileobj, bucket, key):
+        self.sources[(bucket, key)] = type(fileobj)
         self.objects[(bucket, key)] = fileobj.read()
-
-
-def test_stream_http_to_s3_pipes_without_buffering(http_server):
-    s3 = _FakeS3()
-    out = stream_http_to_s3(http_server + "/f2.nc", "bkt", "raw/f2.nc",
-                            s3_client=s3)
-    assert out == {"bucket": "bkt", "s3_key": "raw/f2.nc"}
-    assert s3.objects[("bkt", "raw/f2.nc")] == FILES["/f2.nc"]
 
 
 def test_real_fetcher_through_spark_ingest(spark, http_server):
@@ -85,7 +80,9 @@ def test_real_fetcher_through_spark_ingest(spark, http_server):
          (http_server + "/gone.nc", "/m/gone.nc")],
         "url string, s3_key string")
     rows = {r["s3_key"]: r for r in
-            ingest_and_convert(manifest, fetcher=make_http_fetcher()).collect()}
+            ingest_and_convert(manifest, fetcher=make_http_fetcher(),
+                               converter=lambda payload, out_path: len(payload)
+                               ).collect()}
     assert rows["/m/f1.nc"]["status"] == "ok"
     assert rows["/m/f1.nc"]["n_bytes"] == len(FILES["/f1.nc"])
     assert rows["/m/f2.nc"]["n_bytes"] == len(FILES["/f2.nc"])
@@ -99,9 +96,21 @@ def test_s3_piping_fetcher_hand_off(http_server):
     import json
     store = _FakeS3()
     fetch = make_s3_piping_fetcher("bkt", "raw/", s3_client_factory=lambda: store)
-    sentinel = json.loads(fetch(http_server + "/f1.nc"))
-    assert sentinel == {"bucket": "bkt", "s3_key": "raw/f1.nc"}
-    assert store.objects[("bkt", "raw/f1.nc")] == FILES["/f1.nc"]
+    for name in ("f1.nc", "f2.nc"):
+        sentinel = json.loads(fetch(f"{http_server}/{name}"))
+        assert sentinel == {"bucket": "bkt", "s3_key": f"raw/{name}"}
+        assert store.objects[("bkt", f"raw/{name}")] == FILES[f"/{name}"]
+
+
+def test_s3_piping_fetcher_pipes_without_buffering(http_server):
+    """The upload is handed the response's raw urllib3 stream, never the
+    body, so the file's bytes are not held in the executor's memory."""
+    from urllib3.response import HTTPResponse
+    store = _FakeS3()
+    fetch = make_s3_piping_fetcher("bkt", "raw/", s3_client_factory=lambda: store)
+    fetch(http_server + "/f2.nc")
+    assert issubclass(store.sources[("bkt", "raw/f2.nc")], HTTPResponse)
+    assert store.objects[("bkt", "raw/f2.nc")] == FILES["/f2.nc"]
 
 
 def test_xarray_paths_importable_or_skipped():
