@@ -25,6 +25,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from downscaledclimatedata_spark.functions import publish
 from downscaledclimatedata_spark.plans import QuerySpec, register
 from downscaledclimatedata_spark.sources.tables import load_table
 
@@ -148,17 +149,21 @@ def write_catalog(catalog: DataFrame, out_dir: str, catalog_id: str,
     makes it hold one ``part-*.csv`` file, and the spec's
     ``catalog_file`` names that file, so ``pd.read_csv`` (and intake-ESM)
     can open it.
+
+    ``out_dir`` is local (``publish.local_dir``). The CSV directory is
+    published by ``publish.write_dir``, then the spec by
+    ``publish.replace_file``, so a failed write keeps the old catalog.
     """
-    csv_dir = f"{out_dir}/{catalog_id}.csv"
-    (catalog.orderBy(*CATALOG_COLUMNS)
-     .coalesce(1)
-     .write.mode("overwrite").option("header", True)
-     .csv(csv_dir))
+    root = publish.local_dir(catalog.sparkSession, out_dir)
+    csv_dir = f"{root}/{catalog_id}.csv"
+    publish.write_dir(csv_dir, lambda staging: catalog
+                      .orderBy(*CATALOG_COLUMNS).coalesce(1)
+                      .write.option("header", True).csv(f"file://{staging}"))
     [part] = glob.glob(f"{glob.escape(csv_dir)}/part-*.csv")
     spec = esm_catalog_spec(catalog_id, description, data_format,
-                            f"{csv_dir}/{os.path.basename(part)}")
-    with open(f"{out_dir}/{catalog_id}.json", "w") as f:
-        json.dump(spec, f, indent=4)
+                            f"{out_dir}/{catalog_id}.csv/{os.path.basename(part)}")
+    publish.replace_file(f"{root}/{catalog_id}.json",
+                         json.dumps(spec, indent=4))
 
 
 # --- oracle-checked query entries -------------------------------------------

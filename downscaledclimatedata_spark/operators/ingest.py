@@ -22,11 +22,11 @@ that decodes a file writes its Arrow batch as one Parquet file,
 ``part-{sha1(url)[:16]}.parquet`` in the file's hive partition
 directory, ``time`` as INT96 like Spark's default writer. The rows
 never cross into the JVM. The job writes into a hidden staging
-directory that replaces the target only when every file is written, so
-the write overwrites its target, a replay of a file rewrites that
-file's name, and a failed decode or write raises and publishes nothing.
-The target must be on a filesystem the driver and workers share
-(``file:``); other schemes raise.
+directory that ``functions/publish.py`` swaps in only when every file is
+written, so the write overwrites its target, a replay of a file rewrites
+that file's name, and a failed decode, write or publish raises and
+leaves the previous lake. The target must be on a filesystem the driver
+and workers share (``file:``); other schemes raise.
 
 The transport is injected and required: ``fetcher``, ``converter`` and
 ``decoder`` have no defaults, so a call without one raises ``TypeError``
@@ -38,15 +38,14 @@ decode) and ``operators/netcdf3.py`` (the stdlib NetCDF classic decoder).
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 from collections.abc import Callable, Iterator
-from urllib.parse import urlparse
 
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from downscaledclimatedata_spark.functions import publish
 
 INGEST_RESULT_SCHEMA = T.StructType([
     T.StructField("s3_key", T.StringType()),
@@ -218,7 +217,15 @@ def _tidy_file_writer(decode_file, staging: str):
                                       if c not in LAKE_PARTITION_COLS])
                 rel = "/".join([f"{c}={escape(row[c])}" for c in LAKE_PARTITION_COLS]
                                + [f"part-{hashlib.sha1(row['url'].encode()).hexdigest()[:16]}.parquet"])
-                _os.makedirs(_os.path.dirname(f"{staging}/{rel}"), exist_ok=True)
+                # mkdir, not makedirs: a task still running after its
+                # job failed must not recreate the discarded staging dir
+                part_dir = staging
+                for name in rel.split("/")[:-1]:
+                    part_dir = f"{part_dir}/{name}"
+                    try:
+                        _os.mkdir(part_dir)
+                    except FileExistsError:
+                        pass
                 pq.write_table(table, f"{staging}/{rel}", compression="snappy",
                                use_deprecated_int96_timestamps=True)
                 urls.append(row["url"])
@@ -229,30 +236,6 @@ def _tidy_file_writer(decode_file, staging: str):
                  pa.array(rows, pa.int64())], names=["url", "path", "rows"])
 
     return process
-
-
-def _local_lake_root(spark, path: str) -> str:
-    """``path`` as an absolute local path, or ``ValueError``: the lake
-    writer writes with plain file calls on the workers and renames on the
-    driver, so it needs one filesystem that all of them see at the same
-    path. A ``file:`` URI asserts that (a local disk, or a mount shared by
-    the cluster); a path without a scheme means Hadoop's ``fs.defaultFS``,
-    which is that filesystem only on a local master with a ``file:``
-    default. Other schemes (``s3a``, ``s3``, ``hdfs``, ...) are refused
-    rather than written somewhere else."""
-    parsed = urlparse(path)
-    if parsed.scheme == "file" and parsed.netloc in ("", "localhost"):
-        return os.path.abspath(parsed.path)
-    if parsed.scheme:
-        raise ValueError(f"write_tidy_long writes to a local or mounted filesystem "
-                         f"(a file: URI or a path without a scheme), not {path!r}")
-    sc = spark.sparkContext
-    default_fs = sc._jsc.hadoopConfiguration().get("fs.defaultFS") or "file:///"
-    if not sc.master.startswith("local") or not default_fs.startswith("file:"):
-        raise ValueError(f"write_tidy_long cannot resolve {path!r} without a scheme "
-                         f"on master {sc.master!r} with fs.defaultFS {default_fs!r}; "
-                         f"pass a file: URI on a shared mount")
-    return os.path.abspath(path)
 
 
 def write_tidy_long(df: DataFrame, path: str) -> list:
@@ -276,14 +259,13 @@ def write_tidy_long(df: DataFrame, path: str) -> list:
     - Each source file becomes ``part-{sha1(url)[:16]}.parquet``, with
       ``time`` as INT96 and snappy compression, as Spark's default
       writer does.
-    - The job writes into a hidden sibling staging directory. Only when
-      it succeeds is ``_SUCCESS`` added, the old target deleted and the
-      staging directory renamed over it (overwrite = the reference's
-      idempotent re-materialization, T4). A failed decode or write
-      removes the staging directory and raises; the target is left as
-      it was. (A driver killed mid-job leaves the staging directory
-      behind, as Spark's writer left ``_temporary``; a glob that enters
-      hidden directories, such as DuckDB's ``**``, would read it.)
+    - The job writes into a hidden staging sibling, adds ``_SUCCESS``
+      and publishes it with ``publish.write_dir`` (overwrite = the
+      reference's idempotent re-materialization, T4). A failed decode,
+      write or publishing rename raises and leaves the target as it
+      was. (A driver killed mid-job leaves the staging directory behind
+      until the next write to ``path``; a glob that enters hidden
+      directories, such as DuckDB's ``**``, would read it.)
 
     Returns one ``LAKE_FILE_SCHEMA`` row (url, path, rows) per manifest
     row; ``path`` is relative to the target.
@@ -294,20 +276,12 @@ def write_tidy_long(df: DataFrame, path: str) -> list:
                         "this DataFrame is not one (a filter or select of one "
                         "is not either)")
     decode_file, files = source
-    root = _local_lake_root(files.sparkSession, path)
-    staging = os.path.join(os.path.dirname(root),
-                           f".{os.path.basename(root)}.staging-{uuid.uuid4().hex}")
-    try:
+
+    def write(staging: str) -> list:
+        os.makedirs(staging)
         written = files.mapInArrow(_tidy_file_writer(decode_file, staging),
                                    LAKE_FILE_SCHEMA).collect()
-        os.makedirs(staging, exist_ok=True)
         open(os.path.join(staging, "_SUCCESS"), "wb").close()
-        if os.path.isdir(root) and not os.path.islink(root):
-            shutil.rmtree(root)
-        elif os.path.lexists(root):
-            os.remove(root)
-        os.rename(staging, root)
-    except BaseException:
-        shutil.rmtree(staging, ignore_errors=True)
-        raise
-    return written
+        return written
+
+    return publish.write_dir(publish.local_dir(files.sparkSession, path), write)

@@ -17,6 +17,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from downscaledclimatedata_spark.functions import publish
 from downscaledclimatedata_spark.plans import QuerySpec, register
 from downscaledclimatedata_spark.sources.tables import load_table_parallel
 
@@ -1049,9 +1050,9 @@ def write_audit_publish(spark: SparkSession, df: DataFrame,
 
     ``audits`` is a list of (name, violation_condition Column) pairs;
     all are evaluated in ONE conditional-aggregate pass over the
-    staged bytes. Publish is a filesystem rename: effectively atomic
-    on posix/HDFS; on object stores a real deployment substitutes the
-    table format's commit, same seam.
+    staged bytes. Publish is a local directory swap (two renames,
+    ``functions/publish.py``); on object stores a real deployment
+    substitutes the table format's commit, same seam.
     """
     return publish_audited(
         spark, final_dir, audits,
@@ -1064,60 +1065,39 @@ def publish_audited(spark: SparkSession, final_dir: str, audits: list,
     """Generalized WAP core: ``write_fn(staging_dir)`` materializes the
     table with ANY writer (plain save, hive-partitioned shard write,
     ...); the audit + aside-rename publish are shared. This is the seam
-    the corpus builder's ``audits=`` option publishes through."""
-    import os
-    import shutil
-
+    the corpus builder's ``audits=`` option publishes through. Staging
+    and publishing are ``functions/publish.py``'s: a failed write or a
+    failed publishing rename leaves ``final_dir`` as it was."""
     from pyspark.errors.exceptions.captured import AnalysisException
 
-    staging = final_dir.rstrip("/") + "._staging"
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    write_fn(staging)
-    try:
-        staged = spark.read.format(fmt).load(staging)
-        aggs = [F.count(F.lit(1)).alias("_n")]
-        for name, cond in audits:
-            aggs.append(F.sum(F.when(cond, 1).otherwise(0))
-                        .cast("bigint").alias(name))
-        row = staged.agg(*aggs).collect()[0]
-        report = {name: int(row[name]) for name, _ in audits}
-        report["n_rows"] = int(row["_n"])
-    except AnalysisException as e:
-        # an EMPTY staged write leaves no footers to infer a schema
-        # from; zero rows trivially satisfy every audit, and an empty
-        # corpus must still publish (atomically replacing any prior
-        # snapshot with the honest empty result)
-        if "UNABLE_TO_INFER_SCHEMA" not in str(e):
-            raise
-        report = {name: 0 for name, _ in audits}
-        report["n_rows"] = 0
-    passed = all(v == 0 for k, v in report.items() if k != "n_rows")
-    report["passed"] = passed
-    report["staging"] = staging
-    report["published"] = False
-    if passed:
-        # Publish ordering that can never leave readers with NOTHING:
-        # rename the live table ASIDE first, then staging into place,
-        # and only then delete the old bytes. If the staging->final
-        # rename fails (EXDEV across mounts, permissions), the aside
-        # copy is restored — the prior snapshot survives every path.
-        aside = final_dir.rstrip("/") + "._old"
-        if os.path.exists(aside):
-            shutil.rmtree(aside)
-        had_prior = os.path.exists(final_dir)
-        if had_prior:
-            os.rename(final_dir, aside)
+    with publish.staged(final_dir) as staging:
+        write_fn(staging)
         try:
-            os.rename(staging, final_dir)
-        except OSError:
-            if had_prior:
-                os.rename(aside, final_dir)
-            raise
-        if had_prior:
-            shutil.rmtree(aside)
-        report["published"] = True
-        report["staging"] = None
+            staged = spark.read.format(fmt).load(staging)
+            aggs = [F.count(F.lit(1)).alias("_n")]
+            for name, cond in audits:
+                aggs.append(F.sum(F.when(cond, 1).otherwise(0))
+                            .cast("bigint").alias(name))
+            row = staged.agg(*aggs).collect()[0]
+            report = {name: int(row[name]) for name, _ in audits}
+            report["n_rows"] = int(row["_n"])
+        except AnalysisException as e:
+            # an EMPTY staged write leaves no footers to infer a schema
+            # from; zero rows trivially satisfy every audit, and an empty
+            # corpus must still publish (atomically replacing any prior
+            # snapshot with the honest empty result)
+            if "UNABLE_TO_INFER_SCHEMA" not in str(e):
+                raise
+            report = {name: 0 for name, _ in audits}
+            report["n_rows"] = 0
+        passed = all(v == 0 for k, v in report.items() if k != "n_rows")
+        report["passed"] = passed
+        report["staging"] = staging
+        report["published"] = False
+        if passed:
+            publish.swap(staging, final_dir)
+            report["published"] = True
+            report["staging"] = None
     return report
 
 

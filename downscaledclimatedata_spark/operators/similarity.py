@@ -24,6 +24,7 @@ import hashlib
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from downscaledclimatedata_spark.functions import publish
 from downscaledclimatedata_spark.functions.rows import (empty_relation,
                                                         literal_rows)
 from downscaledclimatedata_spark.functions.text import WS_RE
@@ -6868,27 +6869,26 @@ def ann_index_append(emb_delta: DataFrame, path: str,
 def ann_index_compact(spark: SparkSession, path: str) -> dict:
     """Rewrite the inverted lists to one file per cid partition —
     repeated appends leave one small file per (append, cid) touched,
-    and a probed read pays per-file open cost. One cid-keyed shuffle,
-    then a clean-directory swap (at object-store scale the swap is a
-    manifest commit; the rewrite itself is the same cid-keyed job).
+    and a probed read pays per-file open cost. One cid-keyed shuffle
+    into a staging tree that replaces ``lists/`` (``publish.write_dir``:
+    a failed or killed compaction leaves the old lists, or an aside that
+    the next read recovers; at object-store scale the swap is a manifest
+    commit, the rewrite itself is the same cid-keyed job).
     Returns {"files_before": n, "files_after": n, "rows": n}."""
     import glob
     import os
-    import shutil
 
     def _nfiles(d):
         return len(glob.glob(os.path.join(d, "**", "*.parquet"),
                              recursive=True))
 
     lists_dir = f"{path}/lists"
+    publish.recover(lists_dir)
     before = _nfiles(lists_dir)
     lists = spark.read.parquet(lists_dir)
     n_rows = lists.count()
-    tmp = f"{path}/lists_compacting"
-    (lists.repartition("cid").write.partitionBy("cid")
-     .mode("overwrite").parquet(tmp))
-    shutil.rmtree(lists_dir)
-    os.rename(tmp, lists_dir)
+    publish.write_dir(lists_dir, lambda staging: lists.repartition("cid")
+                      .write.partitionBy("cid").parquet(staging))
     return {"files_before": before, "files_after": _nfiles(lists_dir),
             "rows": n_rows}
 
@@ -6902,7 +6902,9 @@ ANN_SERVE_BROADCAST_MAX = 100_000
 def ann_index_meta(spark: SparkSession, path: str) -> tuple:
     """Read the index's build configuration from ``meta/``. Raises if
     the relation is missing or malformed — a persisted index without
-    its codebook parameters is not servable."""
+    its codebook parameters is not servable. Every reader and appender
+    calls this first, so it also recovers ``lists/``."""
+    publish.recover(f"{path}/lists")
     rows = spark.read.parquet(f"{path}/meta").collect()
     if len(rows) != 1:
         raise ValueError(

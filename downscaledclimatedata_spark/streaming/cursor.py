@@ -9,9 +9,9 @@ Reference semantics (SURVEY §2.9 T1-T7):
 
 The cursors are one small JSON object ``{stream: cursor}`` at
 ``{path}/cursors.json``, read and written on the driver without a Spark
-job. A commit writes a sibling temp file, fsyncs it and renames it over
-the old file with ``os.replace`` (atomic on POSIX), so a failed commit
-leaves the previous cursors readable. The processed log is a Parquet
+job. A commit replaces the file with ``publish.replace_file`` (a hidden
+temp file, ``fsync``, then ``os.replace``, atomic on POSIX), so a failed
+commit leaves the previous cursors readable. The processed log is a Parquet
 relation, because the idempotency anti-join reads it as one.
 """
 
@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from downscaledclimatedata_spark.functions import publish
 from downscaledclimatedata_spark.functions.rows import empty_relation
 
 PROCESSED_SCHEMA = T.StructType([
@@ -58,12 +59,7 @@ class CursorStore:
     def commit(self, stream: str, cursor: str) -> None:
         cursors = {**self._load(), stream: cursor}
         os.makedirs(self.path, exist_ok=True)
-        tmp = self.file + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(cursors, f, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, self.file)
+        publish.replace_file(self.file, json.dumps(cursors, sort_keys=True))
 
 
 class ProcessedLog:

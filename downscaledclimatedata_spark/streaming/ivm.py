@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from downscaledclimatedata_spark.functions import publish
 from downscaledclimatedata_spark.operators.maintenance import (
     AGG_STATE_COLS, agg_state)
 
@@ -38,7 +39,7 @@ def start_rollup_stream(stream: DataFrame, state_dir: str,
     Uses availableNow so tests and backfills drain the source and
     stop; a production run would use a processing-time trigger."""
 
-    _check_no_aside(state_dir)
+    publish.recover(state_dir)
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         delta = agg_state(batch_df, key_col, value_col) \
@@ -51,21 +52,6 @@ def start_rollup_stream(stream: DataFrame, state_dir: str,
             .trigger(availableNow=True).start())
 
 
-def _check_no_aside(state_dir: str) -> None:
-    """Refuse to operate next to a leftover ``._old`` aside tree: it
-    means a compaction crashed between its two renames and the live
-    tree may be missing history stranded in the aside. Silent reads
-    here under-report; the loud failure names the recovery."""
-    import os
-    aside = state_dir.rstrip("/") + "._old"
-    if os.path.exists(aside):
-        raise RuntimeError(
-            f"rollup state has a leftover aside tree {aside!r} from a "
-            "crashed compaction; restore it (rename it back over "
-            f"{state_dir!r} if the live tree is absent or incomplete) "
-            "before reading or appending")
-
-
 def read_rollup(spark: SparkSession, state_dir: str,
                 key_col: str = "event_type") -> DataFrame:
     """Merged rollup across all delta partitions: one groupBy over the
@@ -73,9 +59,9 @@ def read_rollup(spark: SparkSession, state_dir: str,
     algebra to ``merge_agg_state``, realized as a single aggregate so N
     partitions merge in one pass instead of N-1 pairwise joins.
 
-    Fails loudly if a crashed compaction left an aside tree — reading
-    past it would silently drop the history stranded there."""
-    _check_no_aside(state_dir)
+    Raises if a tree was recreated beside a compaction's stranded aside:
+    reading past it would silently drop the history stranded there."""
+    publish.recover(state_dir)
     df = (spark.read.schema(_STATE_SCHEMA)
           .option("basePath", state_dir)
           .parquet(f"{state_dir}/batch=*"))
@@ -92,42 +78,20 @@ def compact_rollup(spark: SparkSession, state_dir: str) -> int:
     file count like the sketch/near-dup compactions). Returns the
     number of partitions folded.
 
-    Unlike the sketch compaction, a superset tree is NOT safe here —
-    summed state read alongside its own inputs double-counts — so the
-    swap is all-or-nothing: the merged base stages in a sibling
-    directory and two renames publish it (live -> aside, staging ->
-    live) before the aside tree is deleted. If the second rename fails
-    the aside tree is renamed back, so every exit leaves a complete
-    live tree; the one uncoverable case — a hard crash BETWEEN the two
-    renames — strands the aside, and the loud ``_check_no_aside`` gate
-    on every subsequent read/append turns that silent-under-count into
-    an explicit recovery step (same discipline as
-    ``maintenance.publish_audited``)."""
+    A superset tree is NOT safe here — summed state read alongside its
+    own inputs double-counts — so the merged base is written into a
+    staging tree that replaces the whole state directory
+    (``publish.write_dir``): a failed or killed compaction leaves the
+    old tree, or, killed between the two renames, an aside that the
+    next read, append or compaction recovers."""
     import glob
-    import os
-    import shutil
 
-    parts = sorted(glob.glob(f"{state_dir}/batch=*"))
+    publish.recover(state_dir)
+    parts = glob.glob(f"{glob.escape(state_dir)}/batch=*")
     if len(parts) <= 1:
         return 0
-    merged = read_rollup(spark, state_dir, key_col="key") \
-        .toPandas()  # bounded: one row per key
-    staging = state_dir + "._compacting"
-    if os.path.exists(staging):
-        shutil.rmtree(staging)
-    os.makedirs(staging)
-    spark.createDataFrame(merged[["key", *AGG_STATE_COLS]],
-                          _STATE_SCHEMA) \
-        .coalesce(1).write.mode("overwrite") \
-        .parquet(f"{staging}/batch=-1")
-    old = state_dir.rstrip("/") + "._old"
-    if os.path.exists(old):
-        shutil.rmtree(old)
-    os.rename(state_dir, old)
-    try:
-        os.rename(staging, state_dir)
-    except OSError:
-        os.rename(old, state_dir)  # restore the complete old tree
-        raise
-    shutil.rmtree(old)
+    merged = read_rollup(spark, state_dir, key_col="key")
+    publish.write_dir(
+        state_dir, lambda staging: merged.select("key", *AGG_STATE_COLS)
+        .coalesce(1).write.parquet(f"{staging}/batch=-1"))
     return len(parts)

@@ -26,10 +26,13 @@ min-id representative downstream make harmless).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from downscaledclimatedata_spark.functions import publish
 from downscaledclimatedata_spark.operators.dedup import (
     LSH_BAND_SIZE,
     MINHASH_PERMS,
@@ -155,34 +158,18 @@ def batch_multi_signal_candidates(batch: DataFrame, index: DataFrame | None,
     return candidates, entries
 
 
-_COMPACT_TMP_SUFFIX = "__compacting"
-
-
-def _fs_path(spark: SparkSession, p: str):
-    """(Path, FileSystem) for any Hadoop-FS URI."""
-    hp = spark._jvm.org.apache.hadoop.fs.Path(p)
-    return hp, hp.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
 def _load_index(spark: SparkSession, index_dir: str) -> DataFrame | None:
     """The stored band index, or None only when it genuinely doesn't
     exist yet. Existence is checked explicitly instead of catching
-    exceptions around the read, so a transient read failure (object-store
-    hiccup, corrupt footer, permissions) PROPAGATES and the stream
-    retries the batch — silently treating it as an empty index would
-    permanently and invisibly drop every candidate this batch should
-    have matched.
-
-    Recovery: if a compaction crashed between swap steps, the finished
-    compacted tmp dir is promoted before reading.
+    exceptions around the read, so a transient read failure (corrupt
+    footer, permissions) PROPAGATES and the stream retries the batch —
+    silently treating it as an empty index would permanently and
+    invisibly drop every candidate this batch should have matched.
     """
-    hp, fs = _fs_path(spark, index_dir)
-    tmp_p, _ = _fs_path(spark, index_dir.rstrip("/") + _COMPACT_TMP_SUFFIX)
-    if not fs.exists(hp):
-        if fs.exists(tmp_p):  # crashed after delete, before rename
-            fs.rename(tmp_p, hp)
-        else:
-            return None
+    root = publish.local_dir(spark, index_dir)
+    publish.recover(root)
+    if not os.path.isdir(root):
+        return None
     return spark.read.parquet(index_dir)
 
 
@@ -194,21 +181,18 @@ def compact_index(spark: SparkSession, index_dir: str,
     The foreachBatch append adds one small file per micro-batch forever;
     without this the index read slows linearly with stream age. Sorting
     by band_hash makes row-group min/max stats selective for the band
-    equi-join's key. Swap order (write tmp -> delete old -> rename tmp)
-    plus the ``_load_index`` tmp-promotion fallback keeps every crash
-    window recoverable. Single-writer by construction: called from the
-    stream's own foreachBatch.
+    equi-join's key. The rewrite replaces the index (on a ``file:``
+    path) by ``publish.write_dir``. Single-writer by construction:
+    called from the stream's own foreachBatch.
     """
     from downscaledclimatedata_spark.operators.maintenance import (
         DEFAULT_TARGET_BYTES, compact_parquet)
-    tmp = index_dir.rstrip("/") + _COMPACT_TMP_SUFFIX
-    compact_parquet(spark, index_dir, tmp,
-                    target_bytes=target_bytes or DEFAULT_TARGET_BYTES,
-                    sort_cols=sort_cols or ["band_hash"])
-    hp, fs = _fs_path(spark, index_dir)
-    tmp_p, _ = _fs_path(spark, tmp)
-    fs.delete(hp, True)
-    fs.rename(tmp_p, hp)
+    publish.write_dir(
+        publish.local_dir(spark, index_dir),
+        lambda staging: compact_parquet(
+            spark, index_dir, f"file://{staging}",
+            target_bytes=target_bytes or DEFAULT_TARGET_BYTES,
+            sort_cols=sort_cols or ["band_hash"]))
 
 
 def start_neardup_stream(stream: DataFrame, index_dir: str,

@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from downscaledclimatedata_spark.functions.hashing import md5_long
 from downscaledclimatedata_spark.operators.prep import (
     clean_documents, quality_filter)
-from downscaledclimatedata_spark.streaming.neardup import _fs_path
 
 
 def _load_hash_index(spark: SparkSession, index_dir: str) -> DataFrame | None:
@@ -44,8 +43,8 @@ def _load_hash_index(spark: SparkSession, index_dir: str) -> DataFrame | None:
     explicitly so a transient read failure PROPAGATES and the stream
     retries — silently treating it as empty would re-admit every
     duplicate of the corpus so far."""
-    hp, fs = _fs_path(spark, index_dir)
-    if not fs.exists(hp):
+    hp = spark._jvm.org.apache.hadoop.fs.Path(index_dir)
+    if not hp.getFileSystem(spark._jsc.hadoopConfiguration()).exists(hp):
         return None
     return spark.read.parquet(index_dir)
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from downscaledclimatedata_spark.functions import publish
 from downscaledclimatedata_spark.functions.hashing import md5_long
 from downscaledclimatedata_spark.operators.textops import (
     BLOOM_K,
@@ -82,6 +83,7 @@ class StreamingSketchIndex:
 
     def _read_all(self, sub: str, schema: str) -> DataFrame | None:
         import glob
+        publish.recover(f"{self.state_dir}/{sub}")
         if not glob.glob(f"{self.state_dir}/{sub}/batch=*/*.parquet"):
             return None
         return (self.spark.read.schema(schema)
@@ -89,6 +91,8 @@ class StreamingSketchIndex:
                 .parquet(f"{self.state_dir}/{sub}/batch=*"))
 
     def process_batch(self, batch: DataFrame, batch_id: int) -> None:
+        for sub in ("cms", "bloom"):
+            publish.recover(f"{self.state_dir}/{sub}")
         batch = batch.localCheckpoint()  # one evaluation for both sketches
         batch_cms_cells(batch, self.text_col).coalesce(1) \
             .write.mode("overwrite") \
@@ -109,27 +113,20 @@ class StreamingSketchIndex:
         """Fold every delta partition into the ``batch=-1`` base — the
         file-count bound for long streams. Merge = the sketches' own
         algebra (cell-wise sum / bit union), so compaction commutes
-        with queries. Materializes through the driver (bounded rows by
-        construction) because the write overwrites paths being read."""
+        with queries. ``cms/`` and ``bloom/`` are each replaced by
+        ``publish.write_dir``, so a failed compaction keeps the state."""
         cms = self._read_all("cms", "d int, cell bigint, n bigint")
-        bloom = self._read_all("bloom", "bit bigint")
-        if cms is None and bloom is None:
-            return
-        import shutil
         if cms is not None:
-            rows = (cms.select("d", "cell", "n")
-                    .groupBy("d", "cell").agg(F.sum("n").alias("n"))
-                    .collect())
-            shutil.rmtree(f"{self.state_dir}/cms", ignore_errors=True)
-            self.spark.createDataFrame(rows, "d int, cell bigint, n bigint") \
-                .coalesce(1).write.mode("overwrite") \
-                .parquet(f"{self.state_dir}/cms/batch=-1")
+            cells = cms.groupBy("d", "cell").agg(F.sum("n").alias("n"))
+            publish.write_dir(
+                f"{self.state_dir}/cms", lambda staging: cells.coalesce(1)
+                .write.parquet(f"{staging}/batch=-1"))
+        bloom = self._read_all("bloom", "bit bigint")
         if bloom is not None:
-            rows = bloom.select("bit").distinct().collect()
-            shutil.rmtree(f"{self.state_dir}/bloom", ignore_errors=True)
-            self.spark.createDataFrame(rows, "bit bigint") \
-                .coalesce(1).write.mode("overwrite") \
-                .parquet(f"{self.state_dir}/bloom/batch=-1")
+            bits = bloom.select("bit").distinct()
+            publish.write_dir(
+                f"{self.state_dir}/bloom", lambda staging: bits.coalesce(1)
+                .write.parquet(f"{staging}/batch=-1"))
 
     # --- queries over the folded state ---------------------------------
 

@@ -254,63 +254,3 @@ def windowed_event_counts(events: DataFrame, window: str = "5 minutes",
             .select(F.col("win.start").alias("window_start"),
                     F.col("win.end").alias("window_end"),
                     "event_type", "n_events"))
-
-
-from pyspark.sql.streaming import StatefulProcessor as _StatefulProcessor
-
-
-class _RunningTotalsProcessor(_StatefulProcessor):
-    """StatefulProcessor for :func:`running_user_totals_tws` — defined
-    module-level so executors unpickle it by import, not by value."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState(
-            "agg", "n BIGINT, total DOUBLE")
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-        if self._state.exists():
-            n, total = self._state.get()
-        else:
-            n, total = 0, 0.0
-        for pdf in rows:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        self._state.update((n, total))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                            "total_value": [total]})
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals on the Spark 4 ``transformWithState``
-    API — the successor to :func:`running_user_totals`'s
-    applyInPandasWithState. The new API's composable typed state
-    (value/list/map states, timers, TTL) replaces the single
-    GroupState blob; this twin keeps the same output contract so the
-    two can be compared batch-for-batch. State is one (n, total) value
-    per user — bounded by the user population, mergeable across
-    micro-batches by construction.
-
-    RUNTIME REQUIREMENT: the TWS Python runner imports protobuf, which
-    this container does not ship — in-container the
-    applyInPandasWithState twin is the executed evidence and the TWS
-    test skips (same pattern as the xarray NetCDF-4 path)."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as exc:
-        raise RuntimeError(
-            "running_user_totals_tws requires protobuf (the Spark 4 "
-            "transformWithStateInPandas runner imports it); this "
-            "environment does not ship it. Use running_user_totals "
-            "(applyInPandasWithState) — same output contract, "
-            "equivalence-tested against this twin where protobuf "
-            "exists.") from exc
-    return (events.select("user_id", "value")
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                _RunningTotalsProcessor(),
-                "user_id BIGINT, n_events BIGINT, total_value DOUBLE",
-                "Update", "None"))

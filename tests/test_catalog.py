@@ -126,3 +126,31 @@ def test_write_catalog_roundtrip(spark, tmp_path):
     assert sorted(got["path"]) == [
         "s3://bkt/m/s/pr.m.s.r1i1p1f1.1950-2014.v1.nc",
         "s3://bkt/m2/s2/tasmax.m2.s2.r2i1p1f1.2015-2044.v1.nc"]
+
+
+def test_write_catalog_to_file_uri_refuses_object_stores(spark, tmp_path):
+    """``out_dir`` may be a ``file:`` URI; a scheme the sink cannot write
+    locally raises ``ValueError`` before any Spark job. A rewrite
+    replaces the catalog and leaves nothing beside it."""
+    import json
+    import os
+
+    import pandas as pd
+    import pytest
+    listing = spark.createDataFrame(
+        [("m/s/pr.m.s.r1i1p1f1.1950-2014.v1.nc",)], "key string")
+    catalog, _ = build_catalog(listing, bucket="bkt")
+    sc = spark.sparkContext
+    sc.setJobGroup("catalog-s3a", "write_catalog to s3a")
+    try:
+        with pytest.raises(ValueError, match="s3a://"):
+            write_catalog(catalog, "s3a://bkt/catalog", "c", "d", "netcdf")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("catalog-s3a")) == []
+    for _ in range(2):
+        write_catalog(catalog, f"file://{tmp_path}/cat", "c", "d", "netcdf")
+    assert sorted(os.listdir(tmp_path / "cat")) == ["c.csv", "c.json"]
+    spec = json.loads((tmp_path / "cat" / "c.json").read_text())
+    assert list(pd.read_csv(spec["catalog_file"])["path"]) == [
+        "s3://bkt/m/s/pr.m.s.r1i1p1f1.1950-2014.v1.nc"]

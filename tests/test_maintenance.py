@@ -492,6 +492,7 @@ def test_write_audit_publish_failed_rename_restores_prior(
 
     from pyspark.sql import functions as F
 
+    from downscaledclimatedata_spark.functions import publish
     from downscaledclimatedata_spark.operators.maintenance import (
         write_audit_publish)
 
@@ -501,10 +502,9 @@ def test_write_audit_publish_failed_rename_restores_prior(
     assert write_audit_publish(spark, v1, final, audits)["published"]
 
     real_rename = os.rename
-    staging = final.rstrip("/") + "._staging"
 
     def failing_rename(src, dst):
-        if src == staging and dst == final:
+        if src in publish.staging_paths(final) and dst == final:
             raise OSError(18, "Invalid cross-device link")  # EXDEV
         return real_rename(src, dst)
 
@@ -516,7 +516,8 @@ def test_write_audit_publish_failed_rename_restores_prior(
     monkeypatch.undo()
     # the prior snapshot survived the failed publish, byte for byte
     assert spark.read.parquet(final).count() == 2
-    assert not os.path.exists(final.rstrip("/") + "._old")
+    assert not os.path.exists(publish.aside_path(final))
+    assert publish.staging_paths(final) == []
 
 
 def test_read_evolved_widens_and_nullfills(spark, tmp_path):

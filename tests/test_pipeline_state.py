@@ -281,7 +281,7 @@ def test_tidy_long_refuses_paths_workers_may_not_share(spark, tmp_path):
     writes."""
     tidy = _decode(_lake_manifest(spark))
     for uri in ("s3a://bucket/lake", "hdfs://nn:8020/lake", "file://otherhost/lake"):
-        with pytest.raises(ValueError, match="write_tidy_long"):
+        with pytest.raises(ValueError, match="not on a local or mounted"):
             write_tidy_long(tidy, uri)
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     prior = hconf.get("fs.defaultFS")

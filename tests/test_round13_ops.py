@@ -83,18 +83,28 @@ def test_ann_index_serve_shuffle_fallback_same_results(spark, tmp_path,
                                                       monkeypatch):
     """The large-serving-batch path (query batch above
     ANN_SERVE_BROADCAST_MAX) must give byte-identical results through the
-    cid-keyed shuffle join."""
+    cid-keyed shuffle join. Catalyst would auto-broadcast this fixture's
+    small query side anyway, so auto-broadcast is off for that arm."""
+    import re
+
     from downscaledclimatedata_spark.operators import similarity as S
     emb = load_table(spark, SF, "embeddings")
     base = str(tmp_path / "idx")
     ann_index_build(emb, base)
-    bcast = ann_index_search(spark, base)
+    bcast = _serve_map(ann_index_search(spark, base))
     monkeypatch.setattr(S, "ANN_SERVE_BROADCAST_MAX", 0)
-    shuf = ann_index_search(spark, base)
-    assert _serve_map(bcast) == _serve_map(shuf)
-    plan = shuf._jdf.queryExecution().executedPlan().toString().lower()
-    assert "broadcasthashjoin" not in plan.split("rnk")[0] or \
-        "sortmergejoin" in plan or "shuffledhashjoin" in plan
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        shuf = ann_index_search(spark, base)
+        got = _serve_map(shuf)
+        plan = shuf._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, prior)
+    assert got == bcast
+    assert re.search(r"(SortMergeJoin|ShuffledHashJoin) \[cid#", plan), plan
+    assert not re.search(r"BroadcastHashJoin \[cid#", plan), plan
 
 
 def _clustered_rows(n_clusters=3, per=40, seed=7):

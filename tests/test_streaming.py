@@ -693,65 +693,6 @@ def test_bounded_dedup_suppresses_within_horizon_reemits_after(spark, tmp_path):
     assert sorted(by_id[1]) == [t0, t0 + dt.timedelta(hours=2, minutes=6)]
 
 
-def test_transform_with_state_totals_match_batch(spark, tmp_path):
-    """The transformWithState twin must accumulate identical per-user
-    totals to the batch groupBy across micro-batches (same gate as the
-    applyInPandasWithState twin). Spark 4's TWS Python runner requires
-    protobuf, which this container does not ship — skipped when absent
-    (the applyInPandasWithState twin covers the stateful semantics
-    in-container; same precedent as the xarray import guard)."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("protobuf unavailable: transformWithState's Python "
-                    "worker cannot start in this container")
-    from downscaledclimatedata_spark.sources.tables import (
-        normalize_events_ts)
-    from downscaledclimatedata_spark.streaming.stream import (
-        running_user_totals_tws)
-    from tests.conftest import SF_SMOKE
-
-    edir = str(tmp_path / "events")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(SF_SMOKE + "/events.parquet")
-    raw.repartition(3).write.parquet(edir)
-
-    stream = normalize_events_ts(
-        spark.readStream.schema(raw.schema)
-        .option("maxFilesPerTrigger", 1).parquet(edir))
-    name = _run_to_memory(running_user_totals_tws(stream), "update")
-
-    final = {r.user_id: (r.n_events, r.total_value)
-             for r in spark.table(name).orderBy("n_events").collect()}
-    batch = {r.user_id: (r.n, r.total) for r in
-             (spark.read.parquet(edir).groupBy("user_id")
-              .agg(F.count("*").alias("n"), F.sum("value").alias("total"))
-              .collect())}
-    assert set(final) == set(batch)
-    for uid, (n, total) in batch.items():
-        assert final[uid][0] == n
-        assert abs(final[uid][1] - total) < 1e-6
-
-
-def test_transform_with_state_gate_errors_loudly_without_protobuf():
-    """Where the TWS Python runner cannot start (no protobuf), the twin
-    must fail at CALL time with an actionable error naming the
-    executable alternative — not die inside a Spark worker launch."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        pytest.skip("protobuf present: the gate does not fire here")
-    except ImportError:
-        pass
-    from downscaledclimatedata_spark.streaming.stream import (
-        running_user_totals_tws)
-    with pytest.raises(RuntimeError, match="running_user_totals"):
-        running_user_totals_tws(None)
-
-
 def test_streaming_rollup_matches_batch_and_compacts(spark, tmp_path):
     """The streamed incremental rollup must equal the one-shot batch
     aggregate over the same events after any number of micro-batches;
@@ -811,18 +752,20 @@ def test_rollup_compaction_crash_recovery(spark, tmp_path):
     """Compaction's two-rename swap under failure: (a) if the second
     rename FAILS, the old tree is restored and the error propagates —
     readers never see an empty dir; (b) a hard crash BETWEEN the two
-    renames strands the aside tree, and every subsequent read/append
-    fails LOUDLY instead of silently under-reporting the stranded
-    history; (c) renaming the aside back recovers the full answer."""
+    renames strands the aside tree, and once a restarted stream has
+    recreated the live tree every read/append fails LOUDLY instead of
+    silently under-reporting the stranded history; (c) with the live
+    tree still absent, the next read renames the aside back."""
     import os
-    import shutil
 
     import pytest
 
+    from downscaledclimatedata_spark.functions import publish
     from downscaledclimatedata_spark.streaming.ivm import (
         compact_rollup, read_rollup, start_rollup_stream)
 
     state = str(tmp_path / "state")
+    aside = publish.aside_path(state)
     for i, rows in enumerate([[("a", 1, 100, 1.0, 1.0)],
                               [("a", 2, 300, 1.5, 2.0),
                                ("b", 1, 50, 0.5, 0.5)]]):
@@ -836,10 +779,9 @@ def test_rollup_compaction_crash_recovery(spark, tmp_path):
 
     # (a) second rename fails -> old tree restored, error propagates
     real_rename = os.rename
-    calls = {"n": 0}
 
     def flaky(src, dst):
-        if src.endswith("._compacting"):
+        if dst == state and src in publish.staging_paths(state):
             raise OSError("simulated publish failure")
         real_rename(src, dst)
 
@@ -849,28 +791,26 @@ def test_rollup_compaction_crash_recovery(spark, tmp_path):
             compact_rollup(spark, state)
     finally:
         os.rename = real_rename
-    assert not os.path.exists(state + "._old")
+    assert not os.path.exists(aside) and publish.staging_paths(state) == []
     got = {r.key: (r.n, r.sum_cents, r.min_v, r.max_v)
            for r in read_rollup(spark, state, key_col="key").collect()}
     assert got == want
 
-    # (b) crash BETWEEN renames: aside exists -> loud refusal everywhere
-    shutil.rmtree(state + "._compacting", ignore_errors=True)
-    real_rename(state, state + "._old")
+    # (b) crash BETWEEN renames, live tree recreated -> loud refusal
+    real_rename(state, aside)
     os.makedirs(state)  # restarted stream would recreate it empty
-    with pytest.raises(RuntimeError, match="aside tree"):
+    with pytest.raises(RuntimeError, match="aside"):
         read_rollup(spark, state, key_col="key").collect()
-    with pytest.raises(RuntimeError, match="aside tree"):
+    with pytest.raises(RuntimeError, match="aside"):
         start_rollup_stream(
             spark.readStream.format("rate").load(), state,
             str(tmp_path / "ckpt2"))
 
-    # (c) documented recovery: restore the aside -> full answer back
+    # (c) live tree absent -> the next read restores the aside
     os.rmdir(state)
-    real_rename(state + "._old", state)
     got2 = {r.key: (r.n, r.sum_cents, r.min_v, r.max_v)
             for r in read_rollup(spark, state, key_col="key").collect()}
-    assert got2 == want
+    assert got2 == want and not os.path.exists(aside)
 
 
 def test_attribution_join_left_outer_static_nulls(spark):
