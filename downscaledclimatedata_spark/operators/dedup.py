@@ -98,7 +98,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
-                       n_perms: int = MINHASH_PERMS,
                        shingled: DataFrame | None = None) -> DataFrame:
     """(id, m0..m{K-1}) minhash signature over word 3-gram shingles.
 
@@ -127,7 +126,7 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
         F.col(id_col), (md5_long(F.col("shingle")) % _MERSENNE_P).alias("h"))
     aggs = [
         F.min((F.lit(a) * F.col("h") + F.lit(b)) % _MERSENNE_P).alias(f"m{k}")
-        for k, (a, b) in enumerate(_perm_constants(n_perms))
+        for k, (a, b) in enumerate(_perm_constants(MINHASH_PERMS))
     ]
     return shingled.groupBy(id_col).agg(*aggs)
 
@@ -135,15 +134,14 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
 MAX_BUCKET = 256
 
 
-def _banded(signatures: DataFrame, id_col: str, n_perms: int,
-            band_size: int) -> DataFrame:
+def _banded(signatures: DataFrame, id_col: str) -> DataFrame:
     """(id, band_id, band_hash) exploded banding relation."""
-    n_bands = n_perms // band_size
+    n_bands = MINHASH_PERMS // LSH_BAND_SIZE
     bands = F.array(*[
         F.struct(
             F.lit(b).alias("band_id"),
-            md5_long(F.concat_ws(",", *[F.col(f"m{b * band_size + j}").cast("string")
-                                        for j in range(band_size)]),
+            md5_long(F.concat_ws(",", *[F.col(f"m{b * LSH_BAND_SIZE + j}").cast("string")
+                                        for j in range(LSH_BAND_SIZE)]),
                      seed=f"band{b}:").alias("band_hash"),
         )
         for b in range(n_bands)
@@ -153,8 +151,6 @@ def _banded(signatures: DataFrame, id_col: str, n_perms: int,
 
 
 def lsh_candidate_pairs(signatures: DataFrame, id_col: str,
-                        n_perms: int = MINHASH_PERMS,
-                        band_size: int = LSH_BAND_SIZE,
                         max_bucket: int = MAX_BUCKET) -> DataFrame:
     """Banded LSH: docs sharing any band hash become candidate pairs.
 
@@ -171,7 +167,7 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str,
     which exact dedup already collapses; use ``lsh_bucket_stats`` to
     count the overflow instead of silently ignoring it.
     """
-    buckets = (_banded(signatures, id_col, n_perms, band_size)
+    buckets = (_banded(signatures, id_col)
                .groupBy("band_id", "band_hash")
                .agg(F.array_sort(F.collect_set(id_col)).alias("ids"))
                .filter((F.size("ids") > 1) & (F.size("ids") <= max_bucket)))
@@ -183,10 +179,7 @@ def lsh_candidate_pairs(signatures: DataFrame, id_col: str,
     return pairs.select("p.id_a", "p.id_b").distinct()
 
 
-def lsh_bucket_stats(signatures: DataFrame, id_col: str,
-                     n_perms: int = MINHASH_PERMS,
-                     band_size: int = LSH_BAND_SIZE,
-                     max_bucket: int = MAX_BUCKET) -> DataFrame:
+def lsh_bucket_stats(signatures: DataFrame, id_col: str) -> DataFrame:
     """Bucket-population diagnostic: per-size histogram + overflow flag.
 
     The operational companion to ``lsh_candidate_pairs``'s cap: at 100 TB
@@ -194,15 +187,14 @@ def lsh_bucket_stats(signatures: DataFrame, id_col: str,
     how many dropped) before deciding to re-tune band size or raise the
     cap.
     """
-    sizes = (_banded(signatures, id_col, n_perms, band_size)
+    sizes = (_banded(signatures, id_col)
              .groupBy("band_id", "band_hash").agg(F.count("*").alias("bucket_size")))
     return (sizes.groupBy("bucket_size")
             .agg(F.count("*").alias("n_buckets"))
-            .withColumn("over_cap", F.col("bucket_size") > max_bucket))
+            .withColumn("over_cap", F.col("bucket_size") > MAX_BUCKET))
 
 
-def simhash(df: DataFrame, text_col: str, id_col: str,
-            n_bits: int = SIMHASH_BITS) -> DataFrame:
+def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """60-bit simhash: per-bit majority vote over shingle hashes.
 
     Execution-shape note (r13, measured): a shuffle-free per-row form
@@ -218,11 +210,11 @@ def simhash(df: DataFrame, text_col: str, id_col: str,
     bit_aggs = [
         F.sum(F.when(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) == 1, 1)
               .otherwise(-1)).alias(f"s{b}")
-        for b in range(n_bits)
+        for b in range(SIMHASH_BITS)
     ]
     bits = shingled.groupBy(id_col).agg(*bit_aggs)
     fingerprint = None
-    for b in range(n_bits):
+    for b in range(SIMHASH_BITS):
         term = F.when(F.col(f"s{b}") > 0, F.lit(1 << b).cast("long")).otherwise(F.lit(0).cast("long"))
         fingerprint = term if fingerprint is None else fingerprint + term
     return bits.select(F.col(id_col), fingerprint.alias("simhash"))
@@ -566,8 +558,7 @@ def _labels_relation(spark: SparkSession, labels: dict, ntype) -> DataFrame:
             .localCheckpoint())
 
 
-def _component_labels(pairs: DataFrame, id_a: str = "id_a",
-                      id_b: str = "id_b") -> tuple:
+def _component_labels(pairs: DataFrame) -> tuple:
     """(labels_dict, edges) when the graph fits the driver tier, else
     (None, edges) — the checkpointed, deduped, self-loop-free
     undirected edge relation either way. The edge count rides the
@@ -578,9 +569,9 @@ def _component_labels(pairs: DataFrame, id_a: str = "id_a",
     from pyspark.sql import Observation
 
     obs0 = Observation()
-    edges = (pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-             .union(pairs.select(F.col(id_b).alias("u"),
-                                 F.col(id_a).alias("v")))
+    edges = (pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
+             .union(pairs.select(F.col("id_b").alias("u"),
+                                 F.col("id_a").alias("v")))
              .filter(F.col("u") != F.col("v"))
              .distinct()
              .observe(obs0, F.count(F.lit(1)).alias("n"))
@@ -594,8 +585,10 @@ def _component_labels(pairs: DataFrame, id_a: str = "id_a",
 # anti-join: the removed-id set is inlined into the plan as ONE parsed
 # `IN (...)` predicate (a single py4j round trip; the optimizer turns
 # it into a hash-set InSet), which folds the prune into the consumer's
-# scan — but a multi-MB predicate string would bloat parse time and
-# the plan itself.
+# scan — but the predicate's parse and plan cost grow with the id
+# count. For `prune_corpus` on one 2M-row corpus (`scale_ladder.py
+# --rung prune`, BENCH_SCALE.md) the two arms cross between 10k and
+# 20k ids; `prune_corpus_quality`'s arms are not measured.
 PRUNE_ISIN_MAX_IDS = 20_000
 
 
@@ -604,9 +597,7 @@ def _integral_node_type(ntype) -> bool:
     return isinstance(ntype, (ByteType, ShortType, IntegerType, LongType))
 
 
-def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
-                              id_b: str = "id_b",
-                              max_iter: int = 25) -> DataFrame:
+def connected_components_star(pairs: DataFrame) -> DataFrame:
     """Alternating large-star/small-star connected components
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14): O(log n) rounds on ANY graph shape, vs min-label
@@ -648,14 +639,14 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
     before any collect (see CC_DRIVER_MAX_EDGES for the driver-heap
     budget it implies).
     """
-    labels, edges = _component_labels(pairs, id_a, id_b)
+    labels, edges = _component_labels(pairs)
     if labels is not None:
         return _labels_relation(pairs.sparkSession, labels,
                                 edges.schema[0].dataType)
-    return _star_from_edges(edges, max_iter)
+    return _star_from_edges(edges)
 
 
-def _star_from_edges(edges: DataFrame, max_iter: int = 25) -> DataFrame:
+def _star_from_edges(edges: DataFrame) -> DataFrame:
     """The alternating-star iteration over an already-checkpointed
     undirected edge relation (the distributed arm of
     :func:`connected_components_star`, factored so the corpus prunes
@@ -663,7 +654,7 @@ def _star_from_edges(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     from pyspark.sql import Observation
 
     prev_fp = None
-    for _ in range(max_iter):
+    for _ in range(25):
         # both stars operate on the UNDIRECTED neighborhood, so symmetrize
         # the (directed) working edge list before each grouping
         sym = edges.union(edges.select(F.col("v").alias("u"),
@@ -713,10 +704,10 @@ def _star_from_edges(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         prev_fp = fp
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge within "
-            f"max_iter={max_iter} rounds; labels would be incorrect — "
-            "the alternating stars need only O(log n) rounds, so this "
-            "indicates a pathological input or a too-small max_iter")
+            "connected_components_star did not converge within 25 "
+            "rounds; labels would be incorrect — the alternating stars "
+            "need only O(log n) rounds, so this indicates a "
+            "pathological input")
     # at fixpoint every edge is (node, root); add roots themselves
     labels = edges.select(F.col("u").alias("id"), F.col("v").alias("comp"))
     roots = labels.select(F.col("comp").alias("id"),
@@ -801,7 +792,6 @@ SIMHASH_HAM_MAX = 3         # blocks - 1: pigeonhole-exact candidate recall
 
 def simhash_pairs(df: DataFrame, text_col: str, id_col: str,
                   ham_max: int = SIMHASH_HAM_MAX,
-                  max_bucket: int = MAX_BUCKET,
                   fingerprints: DataFrame | None = None) -> DataFrame:
     """Near-dup pairs by simhash hamming distance, at scale.
 
@@ -814,7 +804,7 @@ def simhash_pairs(df: DataFrame, text_col: str, id_col: str,
     Verification computes the true hamming distance with
     ``bit_count(xor)`` on the joined fingerprints.
 
-    Over-popular blocks (> ``max_bucket`` members — e.g. the all-zeros
+    Over-popular blocks (> ``MAX_BUCKET`` members — e.g. the all-zeros
     block from boilerplate-heavy corpora) are excluded like the minhash
     LSH cap: a diagnostic-visible recall trade documented there.
 
@@ -852,7 +842,7 @@ def simhash_pairs(df: DataFrame, text_col: str, id_col: str,
     # size estimate must never flip them to broadcast (see
     # ngram_jaccard_pairs).
     ok = (blocks.groupBy("blk", "val").agg(F.count("*").alias("n"))
-          .filter((F.col("n") >= 2) & (F.col("n") <= max_bucket))
+          .filter((F.col("n") >= 2) & (F.col("n") <= MAX_BUCKET))
           .select("blk", "val"))
     a = blocks.join(ok, ["blk", "val"], "left_semi")
     cand = (a.alias("x").join(
@@ -1008,17 +998,14 @@ register(QuerySpec("dedup_containment", dedup_containment_query,
 
 # --- fuzzy (edit-distance) candidate pairs --------------------------------------
 
-def levenshtein_pairs(df: DataFrame, text_col: str, id_col: str,
-                      prefix_len: int = 40, max_dist: int = 10,
-                      block_col: str = "source",
-                      token_blocks: int = 64) -> DataFrame:
+def levenshtein_pairs(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Edit-distance near-dup pairs over text prefixes, with blocking.
 
     The O(n^2) pair space is confined to blocks keyed on
-    (``block_col``, length bucket, first-token hash) — the classic
+    (``source``, length bucket, first-token hash) — the classic
     record-linkage blocking pattern. The first-token hash splits each
-    (source, length) cell into ``token_blocks`` sub-blocks, so block
-    sizes stay O(corpus / (sources * 4 * token_blocks)) and |block|^2
+    (source, length) cell into 64 sub-blocks, so block
+    sizes stay O(corpus / (sources * 4 * 64)) and |block|^2
     work is bounded; raise ``token_blocks`` as the corpus grows. The
     trade-off is recall: a near-dup pair differing in its FIRST token
     lands in different blocks (standard blocking trade-off; multi-pass
@@ -1030,10 +1017,10 @@ def levenshtein_pairs(df: DataFrame, text_col: str, id_col: str,
     # raises under ANSI); NULL coalesces to '' below
     first_tok = F.try_element_at(tokens(F.col(text_col)), F.lit(1))
     pref = df.select(
-        F.col(id_col), F.col(block_col).alias("blk"),
-        F.substring(F.col(text_col), 1, prefix_len).alias("p"),
+        F.col(id_col), F.col("source").alias("blk"),
+        F.substring(F.col(text_col), 1, 40).alias("p"),
         (F.length(text_col) % 4).alias("lbucket"),
-        (md5_long(F.coalesce(first_tok, F.lit(""))) % token_blocks).alias("tblock"))
+        (md5_long(F.coalesce(first_tok, F.lit(""))) % 64).alias("tblock"))
     a = pref.select(F.col(id_col).alias("id_a"), "blk", "lbucket", "tblock",
                     F.col("p").alias("pa"))
     b = pref.select(F.col(id_col).alias("id_b"), "blk", "lbucket", "tblock",
@@ -1042,7 +1029,7 @@ def levenshtein_pairs(df: DataFrame, text_col: str, id_col: str,
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b",
                     F.levenshtein("pa", "pb").alias("dist"))
-            .filter(F.col("dist") <= max_dist))
+            .filter(F.col("dist") <= 10))
 
 
 def dedup_levenshtein_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1080,11 +1067,9 @@ SPAN_N = 5
 SPAN_MIN_DOCS = 2
 
 
-def repeated_span_stats(docs: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", n: int = SPAN_N,
-                        min_docs: int = SPAN_MIN_DOCS) -> DataFrame:
+def repeated_span_stats(docs: DataFrame) -> DataFrame:
     """Per-doc fraction of n-token windows that also occur in >=
-    ``min_docs`` DISTINCT documents — the relational form of exact
+    ``SPAN_MIN_DOCS`` DISTINCT documents — the relational form of exact
     substring dedup (Lee et al. 2022, "Deduplicating Training Data Makes
     Language Models Better": duplicated spans, not just duplicated
     documents, degrade models). The suffix-array pass of the paper is
@@ -1103,18 +1088,18 @@ def repeated_span_stats(docs: DataFrame, text_col: str = "text",
     # its fan-out equals the span's doc count (rows, not pairs; spill-
     # safe), the same skew bound the old dictionary join carried.
     from pyspark.sql import Window
-    spans = (shingled_rows(docs, text_col, id_col, n=n)
-             .select(F.col(id_col), md5_long(F.col("shingle")).alias("h")))
-    per_h_doc = (spans.groupBy("h", id_col)
+    spans = (shingled_rows(docs, "text", "doc_id", n=SPAN_N)
+             .select(F.col("doc_id"), md5_long(F.col("shingle")).alias("h")))
+    per_h_doc = (spans.groupBy("h", "doc_id")
                  .agg(F.count("*").alias("c")))
     nd = F.count(F.lit(1)).over(Window.partitionBy("h"))
-    flagged = per_h_doc.withColumn("_rep", nd >= min_docs)
-    return (flagged.groupBy(id_col)
+    flagged = per_h_doc.withColumn("_rep", nd >= SPAN_MIN_DOCS)
+    return (flagged.groupBy("doc_id")
             .agg(F.sum("c").alias("n_spans"),
                  F.sum(F.when(F.col("_rep"), F.col("c"))
                        .otherwise(F.lit(0).cast("long")))
                  .alias("n_repeated"))
-            .select(F.col(id_col), "n_spans", "n_repeated",
+            .select(F.col("doc_id"), "n_spans", "n_repeated",
                     (F.col("n_repeated").cast("double")
                      / F.col("n_spans").cast("double"))
                     .alias("repeated_frac")))
@@ -1162,13 +1147,11 @@ register(QuerySpec("dedup_repeated_spans", dedup_repeated_spans_query,
                    description=f"cross-document repeated {SPAN_N}-token spans (exact-substring dedup signal), hash-dictionary semi-join"))
 
 
-def span_scrub(docs: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id", n: int = SPAN_N,
-               min_docs: int = SPAN_MIN_DOCS) -> DataFrame:
+def span_scrub(docs: DataFrame) -> DataFrame:
     """Corpus REWRITE form of exact-substring dedup (Lee et al. 2022
     remove duplicated spans from the training text, they don't just
-    score them): delete every token position covered by an ``n``-token
-    window that also occurs in >= ``min_docs`` distinct documents, and
+    score them): delete every token position covered by an ``SPAN_N``-token
+    window that also occurs in >= ``SPAN_MIN_DOCS`` distinct documents, and
     reassemble what remains.
 
     Contract: operates on the normalized token stream (lowercased,
@@ -1180,7 +1163,7 @@ def span_scrub(docs: DataFrame, text_col: str = "text",
     Scale (mirrors :func:`repeated_span_stats` + the paragraph_dedup
     reassembly class): span hashes ride an 8-byte-keyed aggregate with
     map-side partial combine; coverage explodes each repeated START to
-    its ``n`` positions — a bounded ×n fan-out on the REPEATED subset
+    its ``SPAN_N`` positions — a bounded ×n fan-out on the REPEATED subset
     only, never the corpus; the anti-join and the reassembly aggregate
     are (doc_id, pos)-keyed, so no hot key can concentrate (doc-keyed
     state is bounded by the longest document, same bound as the input
@@ -1188,33 +1171,33 @@ def span_scrub(docs: DataFrame, text_col: str = "text",
     the checkpoint-free lineage has no size stats worth trusting).
     """
     toked = docs.select(
-        F.col(id_col),
-        F.filter(F.split(F.lower(F.col(text_col)), WS_RE),
+        F.col("doc_id"),
+        F.filter(F.split(F.lower(F.col("text")), WS_RE),
                  lambda x: x != "").alias("t")) \
         .filter(F.size("t") > 0)
     pos = toked.select(
-        F.col(id_col), F.posexplode("t").alias("pos", "token"))
+        F.col("doc_id"), F.posexplode("t").alias("pos", "token"))
     hash5 = lambda t, i: md5_long(  # noqa: E731 — window hash at start i
-        F.concat_ws(" ", F.slice(t, i + 1, n)))
-    spans = (toked.filter(F.size("t") >= n)
-             .select(F.col(id_col),
+        F.concat_ws(" ", F.slice(t, i + 1, SPAN_N)))
+    spans = (toked.filter(F.size("t") >= SPAN_N)
+             .select(F.col("doc_id"),
                      F.posexplode(
                          F.transform(
-                             F.sequence(F.lit(0), F.size("t") - n),
+                             F.sequence(F.lit(0), F.size("t") - SPAN_N),
                              lambda i: hash5(F.col("t"), i)))
                      .alias("start", "h")))
     repeated = (spans.groupBy("h")
-                .agg(F.countDistinct(id_col).alias("nd"))
-                .filter(F.col("nd") >= min_docs).select("h"))
+                .agg(F.countDistinct("doc_id").alias("nd"))
+                .filter(F.col("nd") >= SPAN_MIN_DOCS).select("h"))
     hit_starts = spans.join(repeated.hint("merge"), "h", "left_semi")
     covered = (hit_starts
-               .select(F.col(id_col),
+               .select(F.col("doc_id"),
                        F.explode(F.sequence(
                            F.col("start"),
-                           F.col("start") + F.lit(n - 1))).alias("pos"))
+                           F.col("start") + F.lit(SPAN_N - 1))).alias("pos"))
                .distinct())
-    kept = pos.join(covered.hint("merge"), [id_col, "pos"], "left_anti")
-    kept_agg = (kept.groupBy(id_col)
+    kept = pos.join(covered.hint("merge"), ["doc_id", "pos"], "left_anti")
+    kept_agg = (kept.groupBy("doc_id")
                 .agg(F.count("*").alias("n_kept"),
                      F.array_join(
                          F.transform(
@@ -1222,10 +1205,10 @@ def span_scrub(docs: DataFrame, text_col: str = "text",
                                  F.struct("pos", "token"))),
                              lambda s: s["token"]), " ")
                      .alias("scrubbed_text")))
-    totals = toked.select(F.col(id_col),
+    totals = toked.select(F.col("doc_id"),
                           F.size("t").cast("bigint").alias("n_tokens"))
-    return (totals.join(kept_agg.hint("merge"), id_col, "left")
-            .select(F.col(id_col), "n_tokens",
+    return (totals.join(kept_agg.hint("merge"), "doc_id", "left")
+            .select(F.col("doc_id"), "n_tokens",
                     (F.col("n_tokens")
                      - F.coalesce("n_kept", F.lit(0))).cast("bigint")
                     .alias("n_removed"),
@@ -1288,11 +1271,7 @@ register(QuerySpec(
 # --- multi-signal near-dup clustering -------------------------------------------
 
 def multi_signal_pairs(df: DataFrame, text_col: str, id_col: str, *,
-                       jaccard_threshold: float = 0.2,
-                       containment_threshold: float = 0.2,
-                       ham_max: int = SIMHASH_HAM_MAX,
-                       max_bucket: int = MAX_BUCKET,
-                       max_df: int = MAX_SHINGLE_DF) -> DataFrame:
+                       containment_threshold: float = 0.2) -> DataFrame:
     """(id_a, id_b, signal) union of near-dup evidence across the three
     pair generators: minhash-LSH-verified Jaccard, simhash hamming, and
     doc-in-doc containment.
@@ -1307,20 +1286,19 @@ def multi_signal_pairs(df: DataFrame, text_col: str, id_col: str, *,
     (min-aggregates and set-intersections are duplicate-insensitive);
     simhash derives its own duplicate-sensitive shingle hashes
     internally. Each generator keeps its own scale cap (LSH/blocks
-    ``max_bucket``, containment ``max_df``), so the union inherits the
+    ``MAX_BUCKET``, containment ``MAX_SHINGLE_DF``), so the union inherits the
     never-O(n²) guarantee of its parts.
     """
     sh = shingled_rows(df, text_col, id_col).distinct().localCheckpoint()
     sigs = minhash_signatures(df, text_col, id_col, shingled=sh)
-    cand = lsh_candidate_pairs(sigs, id_col, max_bucket=max_bucket)
+    cand = lsh_candidate_pairs(sigs, id_col)
     mh = (ngram_jaccard_pairs(df, text_col, id_col, candidates=cand,
-                              threshold=jaccard_threshold, shingled=sh)
+                              threshold=0.2, shingled=sh)
           .select("id_a", "id_b", F.lit("minhash_jaccard").alias("signal")))
-    sp = (simhash_pairs(df, text_col, id_col, ham_max=ham_max,
-                        max_bucket=max_bucket)
+    sp = (simhash_pairs(df, text_col, id_col)
           .select("id_a", "id_b", F.lit("simhash").alias("signal")))
     ct = (containment_pairs(df, text_col, id_col,
-                            threshold=containment_threshold, max_df=max_df,
+                            threshold=containment_threshold,
                             shingled=sh)
           .select("id_a", "id_b", F.lit("containment").alias("signal")))
     return mh.unionAll(sp).unionAll(ct)
@@ -1468,8 +1446,7 @@ PARA_BLOCK = 3  # tokens per block; 3 makes the synthetic corpus's blocks
                 # shape — real corpora split on blank lines instead)
 
 
-def paragraph_dedup(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id",
+def paragraph_dedup(df: DataFrame,
                     block: int = PARA_BLOCK,
                     split: str = "blocks") -> DataFrame:
     """Remove globally-duplicated paragraphs, keeping first occurrences,
@@ -1506,25 +1483,25 @@ def paragraph_dedup(df: DataFrame, text_col: str = "text",
         # lambda, not bare F.trim: trim's optional 2nd param would make
         # transform bind the array INDEX to it (the SKILL.md lambda trap)
         paras = F.filter(
-            F.transform(F.split(F.col(text_col), r"\n[ \t\r]*\n"),
+            F.transform(F.split(F.col("text"), r"\n[ \t\r]*\n"),
                         lambda x: F.trim(x)),
             lambda x: x != "")
         blocks = df.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.posexplode(F.coalesce(paras, F.array().cast("array<string>")))
             .alias("block_idx", "para"))
         joiner = "\n\n"
     else:
-        toked = df.select(F.col(id_col),
-                          tokens(F.col(text_col)).alias("t"))
+        toked = df.select(F.col("doc_id"),
+                          tokens(F.col("text")).alias("t"))
         n = F.size("t")
         starts = F.when(n > 0, F.sequence(F.lit(0), n - 1, F.lit(block))) \
             .otherwise(F.array().cast("array<int>"))
         blocks = (toked.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.posexplode(starts).alias("block_idx", "start"),
             F.col("t"))
-            .select(F.col(id_col), "block_idx",
+            .select(F.col("doc_id"), "block_idx",
                     F.concat_ws(" ", F.slice(F.col("t"), F.col("start") + 1,
                                              block)).alias("para")))
         joiner = " "
@@ -1538,10 +1515,10 @@ def paragraph_dedup(df: DataFrame, text_col: str = "text",
     # losers never enter the reassembly array; concat_ws over an empty
     # array is '' — identical to the old coalesce for all-dropped docs.
     hashed = blocks.withColumn("ph", md5_long(F.col("para")))
-    w = Window.partitionBy("ph").orderBy(F.col(id_col), F.col("block_idx"))
+    w = Window.partitionBy("ph").orderBy(F.col("doc_id"), F.col("block_idx"))
     flagged = hashed.withColumn(
         "_win", F.row_number().over(w) == 1)
-    return (flagged.groupBy(id_col)
+    return (flagged.groupBy("doc_id")
             .agg(F.count("*").alias("n_paras"),
                  F.sum(F.when(F.col("_win"), F.lit(1).cast("bigint"))
                        .otherwise(F.lit(0).cast("bigint"))).alias("n_kept"),
@@ -1550,7 +1527,7 @@ def paragraph_dedup(df: DataFrame, text_col: str = "text",
                          F.when(F.col("_win"),
                                 F.struct("block_idx", "para")))),
                      lambda s: s["para"])).alias("dedup_text"))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.col("n_paras").cast("bigint").alias("n_paras"),
                     F.col("n_kept").cast("bigint").alias("n_kept"),
                     F.col("dedup_text")))
@@ -1601,8 +1578,7 @@ register(QuerySpec(
 BOILER_MIN_DOCS = 3  # a block in >= this many DISTINCT docs is chrome
 
 
-def boilerplate_strip(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id",
+def boilerplate_strip(df: DataFrame,
                       block: int = PARA_BLOCK,
                       min_docs: int = BOILER_MIN_DOCS) -> DataFrame:
     """Remove corpus-frequent blocks from EVERY document — the
@@ -1639,36 +1615,36 @@ def boilerplate_strip(df: DataFrame, text_col: str = "text",
     the anti join removes its blocks but the per-doc totals row still
     exists (``n_removed = n_blocks``). Callers that need empty docs
     represented should left-join this result back to the input on
-    ``id_col``.
+    ``doc_id``.
     """
     if min_docs < 2:
         raise ValueError(f"min_docs must be >= 2, got {min_docs}")
-    toked = df.select(F.col(id_col), tokens(F.col(text_col)).alias("t"))
+    toked = df.select(F.col("doc_id"), tokens(F.col("text")).alias("t"))
     n = F.size("t")
     starts = F.when(n > 0, F.sequence(F.lit(0), n - 1, F.lit(block))) \
         .otherwise(F.array().cast("array<int>"))
     blocks = (toked.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(starts).alias("block_idx", "start"),
         F.col("t"))
-        .select(F.col(id_col), "block_idx",
+        .select(F.col("doc_id"), "block_idx",
                 F.concat_ws(" ", F.slice(F.col("t"), F.col("start") + 1,
                                          block)).alias("para")))
     hashed = blocks.withColumn("ph", md5_long(F.col("para"))).localCheckpoint()
     boiler = (hashed.groupBy("ph")
-              .agg(F.countDistinct(id_col).alias("n_docs"))
+              .agg(F.countDistinct("doc_id").alias("n_docs"))
               .filter(F.col("n_docs") >= min_docs)
               .select("ph"))
     kept = hashed.join(boiler, "ph", "left_anti")
-    per_doc = hashed.groupBy(id_col).agg(F.count("*").alias("n_blocks"))
-    kept_agg = (kept.groupBy(id_col)
+    per_doc = hashed.groupBy("doc_id").agg(F.count("*").alias("n_blocks"))
+    kept_agg = (kept.groupBy("doc_id")
                 .agg(F.count("*").alias("n_kept"),
                      F.concat_ws(" ", F.transform(
                          F.array_sort(F.collect_list(
                              F.struct("block_idx", "para"))),
                          lambda s: s["para"])).alias("clean_text")))
-    return (per_doc.join(kept_agg, id_col, "left")
-            .select(F.col(id_col),
+    return (per_doc.join(kept_agg, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.col("n_blocks").cast("bigint").alias("n_blocks"),
                     (F.col("n_blocks") - F.coalesce(F.col("n_kept"),
                                                     F.lit(0)))
@@ -1722,9 +1698,6 @@ register(QuerySpec(
 # --- cross-corpus dedup (new snapshot vs reference corpus) ----------------------
 
 def cross_corpus_matches(new_df: DataFrame, ref_df: DataFrame,
-                         text_col: str = "text", id_col: str = "doc_id",
-                         n_perms: int = MINHASH_PERMS,
-                         band_size: int = LSH_BAND_SIZE,
                          max_bucket: int = MAX_BUCKET) -> DataFrame:
     """Flag documents in ``new_df`` that are LSH near-dup candidates of
     any document in ``ref_df`` — the incremental-crawl dedup pass (drop
@@ -1743,16 +1716,14 @@ def cross_corpus_matches(new_df: DataFrame, ref_df: DataFrame,
     banding is deterministic, so snapshots dedup against an index built
     once, not recomputed per crawl.
     """
-    b_new = _banded(minhash_signatures(new_df, text_col, id_col),
-                    id_col, n_perms, band_size) \
-        .withColumnRenamed(id_col, "new_id")
+    b_new = _banded(minhash_signatures(new_df, "text", "doc_id"), "doc_id") \
+        .withColumnRenamed("doc_id", "new_id")
     # checkpoint: the ref banding feeds BOTH the bucket-size cap and the
     # hits join — without it the ref signature pipeline runs twice.
     # Checkpointed relations lose size estimates, so the corpus-scaled
     # hits join carries an explicit merge hint (broadcast-OOM lesson).
-    b_ref = _banded(minhash_signatures(ref_df, text_col, id_col),
-                    id_col, n_perms, band_size) \
-        .withColumnRenamed(id_col, "ref_id").localCheckpoint()
+    b_ref = _banded(minhash_signatures(ref_df, "text", "doc_id"), "doc_id") \
+        .withColumnRenamed("doc_id", "ref_id").localCheckpoint()
     ok = (b_ref.groupBy("band_id", "band_hash")
           .agg(F.count("*").alias("nb"))
           .filter(F.col("nb") <= max_bucket)
@@ -1816,11 +1787,9 @@ register(QuerySpec(
 DECON_NGRAM = 5  # n-gram order; GPT-3 used 13-grams on web-scale docs
 
 
-def decontaminate(docs: DataFrame, eval_docs: DataFrame,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  n: int = DECON_NGRAM) -> DataFrame:
+def decontaminate(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Per-document benchmark-contamination report: which training
-    documents contain any ``n``-gram that also appears in the eval/
+    documents contain any ``DECON_NGRAM``-gram that also appears in the eval/
     benchmark set (Brown et al. 2020 §C / PaLM-style decontamination —
     the pass every serious pretraining pipeline runs before training so
     eval numbers aren't memorization).
@@ -1838,18 +1807,18 @@ def decontaminate(docs: DataFrame, eval_docs: DataFrame,
     broadcast-hash-join → partial agg. The final per-doc aggregate is
     the only shuffle, keyed on the uniform doc id.
     """
-    dg = shingled_rows(docs, text_col, id_col, n=n).distinct()
-    eg = (shingled_rows(eval_docs, text_col, id_col, n=n)
+    dg = shingled_rows(docs, "text", "doc_id", n=DECON_NGRAM).distinct()
+    eg = (shingled_rows(eval_docs, "text", "doc_id", n=DECON_NGRAM)
           .select(F.col("shingle"),
-                  F.col(id_col).alias("eval_id")).distinct())
+                  F.col("doc_id").alias("eval_id")).distinct())
     hits = (dg.join(F.broadcast(eg), "shingle")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.countDistinct("shingle").alias("n_gram_hits"),
                  F.countDistinct("eval_id").alias("n_eval_docs")))
-    return (docs.select(id_col)
-            .join(hits, id_col, "left")
+    return (docs.select("doc_id")
+            .join(hits, "doc_id", "left")
             .select(
-                id_col,
+                "doc_id",
                 F.coalesce(F.col("n_gram_hits"), F.lit(0)).cast("bigint")
                 .alias("n_gram_hits"),
                 F.coalesce(F.col("n_eval_docs"), F.lit(0)).cast("bigint")
@@ -1858,10 +1827,8 @@ def decontaminate(docs: DataFrame, eval_docs: DataFrame,
                 .alias("contaminated")))
 
 
-def contaminated_doc_ids(docs: DataFrame, eval_docs: DataFrame,
-                         text_col: str = "text", id_col: str = "doc_id",
-                         n: int = DECON_NGRAM) -> DataFrame:
-    """Distinct ids of training docs sharing ANY ``n``-gram with the
+def contaminated_doc_ids(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
+    """Distinct ids of training docs sharing ANY ``DECON_NGRAM``-gram with the
     eval set — :func:`decontaminate`'s filter-side companion for
     pipelines that only need the drop list, not the per-doc report.
 
@@ -1871,11 +1838,11 @@ def contaminated_doc_ids(docs: DataFrame, eval_docs: DataFrame,
     distinct on the contaminated id subset, which is at most the
     offending docs, not the corpus.
     """
-    dg = shingled_rows(docs, text_col, id_col, n=n)
-    eg = (shingled_rows(eval_docs, text_col, id_col, n=n)
+    dg = shingled_rows(docs, "text", "doc_id", n=DECON_NGRAM)
+    eg = (shingled_rows(eval_docs, "text", "doc_id", n=DECON_NGRAM)
           .select("shingle").distinct())
     return (dg.join(F.broadcast(eg), "shingle", "left_semi")
-            .select(id_col).distinct())
+            .select("doc_id").distinct())
 
 
 def dedup_decontaminate_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1988,8 +1955,7 @@ register(QuerySpec("dedup_all_signal_clusters",
 
 # --- dedup application: the pruned corpus ---------------------------------------
 
-def prune_corpus(df: DataFrame, pairs: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id", _info: dict | None = None
+def prune_corpus(df: DataFrame, pairs: DataFrame, _info: dict | None = None
                  ) -> DataFrame:
     """Apply a near-dup pair relation to the corpus: keep the min-id
     representative of every connected component plus every unpaired doc
@@ -2032,14 +1998,14 @@ def prune_corpus(df: DataFrame, pairs: DataFrame, text_col: str = "text",
                 _info["folded"] = True
             in_list = ",".join(str(i) for i in removed_ids)
             return df.filter(F.expr(
-                f"`{id_col}` IS NULL OR `{id_col}` NOT IN ({in_list})"))
+                f"`doc_id` IS NULL OR `doc_id` NOT IN ({in_list})"))
         comps = _labels_relation(df.sparkSession, labels,
                                  edges.schema[0].dataType)
     else:
         comps = _star_from_edges(edges)
     removed = comps.filter(F.col("id") != F.col("comp")) \
-        .select(F.col("id").alias(id_col))
-    return df.join(removed, id_col, "left_anti")
+        .select(F.col("id").alias("doc_id"))
+    return df.join(removed, "doc_id", "left_anti")
 
 
 def dedup_prune_corpus_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2108,8 +2074,7 @@ register(QuerySpec("dedup_prune_corpus", dedup_prune_corpus_query,
 EVAL_JACCARD_T = 0.2
 
 
-def lsh_eval(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-             threshold: float = EVAL_JACCARD_T) -> DataFrame:
+def lsh_eval(df: DataFrame) -> DataFrame:
     """Candidate-generation quality report: LSH candidate pairs scored
     against the EXACT jaccard-≥-threshold ground truth, in-engine.
 
@@ -2122,25 +2087,25 @@ def lsh_eval(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     two pair relations then a single-row count/ratio summary; ratios
     divide exact counts.
     """
-    sh = shingled_rows(df, text_col, id_col).distinct().localCheckpoint()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
+    sh = shingled_rows(df, "text", "doc_id").distinct().localCheckpoint()
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
     inter = (a.join(b.hint("merge"), "shingle")
              .filter(F.col("id_a") < F.col("id_b"))
              .groupBy("id_a", "id_b").agg(F.count("*").alias("n_inter")))
     truth = (inter
-             .join(sizes.select(F.col(id_col).alias("id_a"),
+             .join(sizes.select(F.col("doc_id").alias("id_a"),
                                 F.col("n_sh").alias("na")), "id_a")
-             .join(sizes.select(F.col(id_col).alias("id_b"),
+             .join(sizes.select(F.col("doc_id").alias("id_b"),
                                 F.col("n_sh").alias("nb")), "id_b")
              .filter(F.col("n_inter").cast("double")
                      / (F.col("na") + F.col("nb")
                         - F.col("n_inter")).cast("double")
-                     >= threshold)
+                     >= EVAL_JACCARD_T)
              .select("id_a", "id_b", F.lit(1).alias("in_truth")))
-    cand = (lsh_candidate_pairs(minhash_signatures(df, text_col, id_col),
-                                id_col)
+    cand = (lsh_candidate_pairs(minhash_signatures(df, "text", "doc_id"),
+                                "doc_id")
             .select("id_a", "id_b", F.lit(1).alias("in_cand")))
     aligned = truth.join(cand, ["id_a", "id_b"], "full_outer")
     counts = aligned.agg(
@@ -2233,9 +2198,7 @@ register(QuerySpec(
                 "harness for (bands, rows, threshold)"))
 
 
-def signal_eval(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-                threshold: float = EVAL_JACCARD_T,
-                containment_threshold: float = 0.2) -> DataFrame:
+def signal_eval(df: DataFrame) -> DataFrame:
     """Every candidate generator scored against ONE exact Jaccard
     ground truth: one (signal, n_truth, n_candidates, tp, precision,
     recall) row per generator — minhash-LSH raw candidates, the
@@ -2249,7 +2212,7 @@ def signal_eval(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     verification, and containment — the expensive part is bought once).
     A generator's low precision here is not a defect but a PROFILE:
     containment deliberately fires on quote-in-doc pairs whose
-    symmetric Jaccard is far below ``threshold`` (that blind-spot
+    symmetric Jaccard is far below ``EVAL_JACCARD_T`` (that blind-spot
     coverage is why the multi-signal union exists), and
     ``jaccard_verified`` is exact verification at the truth threshold,
     so its precision is 1.0 by construction — pinned in unit tests.
@@ -2259,35 +2222,35 @@ def signal_eval(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     union); ground truth is the uncapped shingle self-join, inherently
     Σ df² — run at sampled scale, as recall estimation always is.
     """
-    sh = shingled_rows(df, text_col, id_col).distinct().localCheckpoint()
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    a = sh.select(F.col(id_col).alias("id_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("id_b"), "shingle")
+    sh = shingled_rows(df, "text", "doc_id").distinct().localCheckpoint()
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
+    a = sh.select(F.col("doc_id").alias("id_a"), "shingle")
+    b = sh.select(F.col("doc_id").alias("id_b"), "shingle")
     inter = (a.join(b.hint("merge"), "shingle")
              .filter(F.col("id_a") < F.col("id_b"))
              .groupBy("id_a", "id_b").agg(F.count("*").alias("n_inter")))
     truth = (inter
-             .join(sizes.select(F.col(id_col).alias("id_a"),
+             .join(sizes.select(F.col("doc_id").alias("id_a"),
                                 F.col("n_sh").alias("na")), "id_a")
-             .join(sizes.select(F.col(id_col).alias("id_b"),
+             .join(sizes.select(F.col("doc_id").alias("id_b"),
                                 F.col("n_sh").alias("nb")), "id_b")
              .filter(F.col("n_inter").cast("double")
                      / (F.col("na") + F.col("nb")
                         - F.col("n_inter")).cast("double")
-                     >= threshold)
+                     >= EVAL_JACCARD_T)
              .select("id_a", "id_b")).localCheckpoint()
     cand = lsh_candidate_pairs(
-        minhash_signatures(df, text_col, id_col, shingled=sh),
-        id_col).localCheckpoint()
+        minhash_signatures(df, "text", "doc_id", shingled=sh),
+        "doc_id").localCheckpoint()
     gens = [
         ("minhash_lsh", cand),
         ("jaccard_verified",
-         ngram_jaccard_pairs(df, text_col, id_col, candidates=cand,
-                             threshold=threshold, shingled=sh)),
-        ("simhash", simhash_pairs(df, text_col, id_col)),
+         ngram_jaccard_pairs(df, "text", "doc_id", candidates=cand,
+                             threshold=EVAL_JACCARD_T, shingled=sh)),
+        ("simhash", simhash_pairs(df, "text", "doc_id")),
         ("containment",
-         containment_pairs(df, text_col, id_col,
-                           threshold=containment_threshold, shingled=sh)),
+         containment_pairs(df, "text", "doc_id",
+                           threshold=0.2, shingled=sh)),
     ]
     union = None
     for name, pairs in gens:
@@ -2446,9 +2409,7 @@ register(QuerySpec(
 
 # --- per-source duplication diagnostics -----------------------------------------
 
-def source_dup_report(df: DataFrame, text_col: str = "text",
-                      id_col: str = "doc_id",
-                      source_col: str = "source") -> DataFrame:
+def source_dup_report(df: DataFrame) -> DataFrame:
     """Which sources are duplicated, and against whom: per-source doc
     counts, docs involved in any LSH near-dup pair, docs whose partner
     lives in a DIFFERENT source (cross-domain syndication vs in-domain
@@ -2459,12 +2420,12 @@ def source_dup_report(df: DataFrame, text_col: str = "text",
     broadcast-size joins against the (id, source) projection.
     """
     pairs = lsh_candidate_pairs(
-        minhash_signatures(df, text_col, id_col), id_col).localCheckpoint()
-    src = df.select(F.col(id_col), F.col(source_col).alias("src"))
+        minhash_signatures(df, "text", "doc_id"), "doc_id").localCheckpoint()
+    src = df.select(F.col("doc_id"), F.col("source").alias("src"))
     ends = (pairs
-            .join(src.select(F.col(id_col).alias("id_a"),
+            .join(src.select(F.col("doc_id").alias("id_a"),
                              F.col("src").alias("src_a")), "id_a")
-            .join(src.select(F.col(id_col).alias("id_b"),
+            .join(src.select(F.col("doc_id").alias("id_b"),
                              F.col("src").alias("src_b")), "id_b"))
     involved = (ends.select(F.col("id_a").alias("id"),
                             F.col("src_a").alias("src"),
@@ -2479,7 +2440,7 @@ def source_dup_report(df: DataFrame, text_col: str = "text",
     per_src = (involved.groupBy("src")
                .agg(F.count("*").alias("n_duped"),
                     F.sum("xd").alias("n_xdomain")))
-    totals = df.groupBy(F.col(source_col).alias("src")) \
+    totals = df.groupBy(F.col("source").alias("src")) \
         .agg(F.count("*").alias("n_docs"))
     return (totals.join(per_src, "src", "left")
             .select(F.col("src").alias("source"),
@@ -2676,9 +2637,7 @@ register(QuerySpec(
 
 # --- source-pair content overlap ------------------------------------------------
 
-def source_overlap(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id",
-                   source_col: str = "source") -> DataFrame:
+def source_overlap(df: DataFrame) -> DataFrame:
     """Corpus-level syndication map: for every pair of sources, the
     exact Jaccard overlap of their DISTINCT shingle sets — which
     domains copy from which, aggregated above the document level (the
@@ -2691,9 +2650,9 @@ def source_overlap(df: DataFrame, text_col: str = "text",
     (≤ |sources|, a constant), never documents. Output is
     |sources|²-bounded.
     """
-    ss = (df.select(F.col(source_col).alias("src"), F.col(id_col),
-                    F.col(text_col))
-          .transform(lambda d: shingled_rows(d, text_col, "src"))
+    ss = (df.select(F.col("source").alias("src"), F.col("doc_id"),
+                    F.col("text"))
+          .transform(lambda d: shingled_rows(d, "text", "src"))
           .distinct())
     sizes = ss.groupBy("src").agg(F.count("*").alias("n_sh"))
     a = ss.select(F.col("src").alias("src_a"), "shingle")
@@ -2755,13 +2714,11 @@ CDC_W = 4        # boundary window: tokens s..s+3 decide a cut at s
 CDC_D = 16       # boundary divisor: expected chunk length ~ D tokens
 
 
-def cdc_chunk_stats(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id", w: int = CDC_W,
-                    d: int = CDC_D) -> DataFrame:
+def cdc_chunk_stats(docs: DataFrame) -> DataFrame:
     """Content-defined chunking dedup (the LBFS/storage-dedup classic,
     applied to the token stream): cut each document where the hash of
-    the ``w``-token window starting at a position is divisible by
-    ``d``, hash each chunk, and report how much of every doc is
+    the ``CDC_W``-token window starting at a position is divisible by
+    ``CDC_D``, hash each chunk, and report how much of every doc is
     duplicate chunk mass across the corpus.
 
     Content-defined beats fixed-size chunking because an insertion
@@ -2783,20 +2740,20 @@ def cdc_chunk_stats(docs: DataFrame, text_col: str = "text",
     doc-keyed. Exactly the repeated_spans class.
     """
     toked = docs.select(
-        F.col(id_col),
-        F.filter(F.split(F.lower(F.col(text_col)), WS_RE),
+        F.col("doc_id"),
+        F.filter(F.split(F.lower(F.col("text")), WS_RE),
                  lambda x: x != "").alias("t")) \
         .filter(F.size("t") > 0)
     t = F.col("t")
     n = F.size(t)
     win_hash = lambda s: md5_long(  # noqa: E731 — w-token window at s
-        F.concat_ws(" ", F.slice(t, s, w)))
+        F.concat_ws(" ", F.slice(t, s, CDC_W)))
     # interior cut positions: 1-based starts s in [2, n-w+1] whose
     # window hash divides d; chunk starts = [1] + cuts
     cuts = F.when(
-        n >= w + 1,
-        F.filter(F.sequence(F.lit(2), n - (w - 1)),
-                 lambda s: win_hash(s) % d == 0)
+        n >= CDC_W + 1,
+        F.filter(F.sequence(F.lit(2), n - (CDC_W - 1)),
+                 lambda s: win_hash(s) % CDC_D == 0)
     ).otherwise(F.array().cast("array<int>"))
     starts = F.concat(F.array(F.lit(1)), cuts)
     ends = F.concat(cuts, F.array(n + 1))  # exclusive chunk ends
@@ -2806,13 +2763,13 @@ def cdc_chunk_stats(docs: DataFrame, text_col: str = "text",
             md5_long(F.concat_ws(" ", F.slice(t, s, e - s)))
             .alias("chunk_hash"),
             (e - s).cast("long").alias("chunk_len")))
-    ch = (toked.select(F.col(id_col), n.alias("total_tokens"),
+    ch = (toked.select(F.col("doc_id"), n.alias("total_tokens"),
                        F.explode(chunks).alias("c"))
-          .select(id_col, "total_tokens", "c.chunk_hash", "c.chunk_len"))
+          .select("doc_id", "total_tokens", "c.chunk_hash", "c.chunk_len"))
     occ = (ch.groupBy("chunk_hash")
-           .agg(F.countDistinct(id_col).alias("n_docs")))
+           .agg(F.countDistinct("doc_id").alias("n_docs")))
     return (ch.join(occ.hint("merge"), "chunk_hash")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.first("total_tokens").alias("total_tokens"),
                  F.count("*").alias("n_chunks"),
                  F.sum(F.when(F.col("n_docs") >= 2, 1).otherwise(0))
@@ -2820,7 +2777,7 @@ def cdc_chunk_stats(docs: DataFrame, text_col: str = "text",
                  F.sum(F.when(F.col("n_docs") >= 2, F.col("chunk_len"))
                        .otherwise(F.lit(0))).cast("long")
                  .alias("dup_tokens"))
-            .select(id_col, "n_chunks", "n_dup_chunks", "dup_tokens",
+            .select("doc_id", "n_chunks", "n_dup_chunks", "dup_tokens",
                     F.col("total_tokens").cast("long")
                     .alias("total_tokens")))
 
@@ -2886,9 +2843,7 @@ register(QuerySpec(
 SPLIT_TRAIN_PCT = 80
 
 
-def leakage_safe_split(docs: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       train_pct: int = SPLIT_TRAIN_PCT) -> DataFrame:
+def leakage_safe_split(docs: DataFrame) -> DataFrame:
     """Train/test assignment that cannot leak near-duplicates across the
     boundary: the split hash is computed on the NEAR-DUP FAMILY id
     (minhash -> LSH pairs -> connected components; singletons are their
@@ -2903,21 +2858,21 @@ def leakage_safe_split(docs: DataFrame, text_col: str = "text",
     shuffle-free seeded-hash projection over (doc, family). The
     membership join is corpus-scaled — sort-merge pinned.
     """
-    sigs = minhash_signatures(docs, text_col, id_col)
-    pairs = lsh_candidate_pairs(sigs, id_col)
+    sigs = minhash_signatures(docs, "text", "doc_id")
+    pairs = lsh_candidate_pairs(sigs, "doc_id")
     comps = connected_components_star(pairs) \
-        .withColumnRenamed("id", id_col)
-    fam = (docs.select(F.col(id_col))
-           .join(comps.hint("merge"), id_col, "left")
-           .select(F.col(id_col),
-                   F.coalesce("comp", F.col(id_col)).alias("family_id")))
+        .withColumnRenamed("id", "doc_id")
+    fam = (docs.select(F.col("doc_id"))
+           .join(comps.hint("merge"), "doc_id", "left")
+           .select(F.col("doc_id"),
+                   F.coalesce("comp", F.col("doc_id")).alias("family_id")))
     bucket = md5_long(F.col("family_id").cast("string"),
                       seed="famsplit:") % 100
-    split = F.when(bucket < train_pct, "train").otherwise("test")
+    split = F.when(bucket < SPLIT_TRAIN_PCT, "train").otherwise("test")
     # no trailing global orderBy: the output contract is a relation
     # (consumers key on id / split), and a corpus-sized range sort buys
     # determinism nothing at 100 TB (r8 audit sweep)
-    return fam.select(F.col(id_col), F.col("family_id"),
+    return fam.select(F.col("doc_id"), F.col("family_id"),
                       split.alias("split"))
 
 
@@ -2982,9 +2937,7 @@ register(QuerySpec(
 
 # --- quality-aware representative election -----------------------------------
 
-def quality_keep(docs: DataFrame, pairs: DataFrame,
-                 text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def quality_keep(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Representative election that keeps the HIGHEST-QUALITY member of
     every near-dup component instead of the min id — what a production
     prune actually does (the min-id rule is deterministic but happily
@@ -3001,15 +2954,15 @@ def quality_keep(docs: DataFrame, pairs: DataFrame,
     from downscaledclimatedata_spark.operators.textops import quality_scores
 
     comps = connected_components_star(pairs) \
-        .withColumnRenamed("id", id_col)
-    q = quality_scores(docs, text_col, id_col) \
-        .select(F.col(id_col), "quality_score")
-    m = comps.join(q.hint("merge"), id_col)
+        .withColumnRenamed("id", "doc_id")
+    q = quality_scores(docs, "text", "doc_id") \
+        .select(F.col("doc_id"), "quality_score")
+    m = comps.join(q.hint("merge"), "doc_id")
     elect = (m.groupBy("comp")
              .agg(F.count(F.lit(1)).alias("n_members"),
                   F.min(F.struct((-F.col("quality_score")).alias("ns"),
-                                 F.col(id_col).alias("kid"))).alias("w"),
-                  F.min(id_col).alias("min_id")))
+                                 F.col("doc_id").alias("kid"))).alias("w"),
+                  F.min("doc_id").alias("min_id")))
     return (elect.filter(F.col("n_members") >= 2)
             .select(F.col("comp").cast("bigint").alias("comp"),
                     F.col("n_members").cast("bigint").alias("n_members"),
@@ -3022,8 +2975,6 @@ def quality_keep(docs: DataFrame, pairs: DataFrame,
 
 
 def prune_corpus_quality(df: DataFrame, pairs: DataFrame,
-                         text_col: str = "text",
-                         id_col: str = "doc_id",
                          _info: dict | None = None) -> DataFrame:
     """:func:`prune_corpus` with :func:`quality_keep`'s election rule:
     every near-dup component keeps its HIGHEST-quality member (min-id
@@ -3063,19 +3014,19 @@ def prune_corpus_quality(df: DataFrame, pairs: DataFrame,
             return df
         items = sorted(labels.items())
         in_list = ",".join(str(i) for i, _ in items)
-        members = df.filter(F.expr(f"`{id_col}` IN ({in_list})"))
-        q = quality_scores(members, text_col, id_col) \
-            .select(F.col(id_col), "quality_score")
+        members = df.filter(F.expr(f"`doc_id` IN ({in_list})"))
+        q = quality_scores(members, "text", "doc_id") \
+            .select(F.col("doc_id"), "quality_score")
         values = ",".join(f"({i},{c})" for i, c in items)
         sql_t = ntype.simpleString()
         comps = df.sparkSession.sql(
-            f"SELECT CAST(col1 AS {sql_t}) AS `{id_col}`, "
+            f"SELECT CAST(col1 AS {sql_t}) AS `doc_id`, "
             f"CAST(col2 AS {sql_t}) AS comp FROM VALUES {values}")
-        m = q.join(F.broadcast(comps), id_col)
+        m = q.join(F.broadcast(comps), "doc_id")
         winners = (m.groupBy("comp")
                    .agg(F.min(F.struct((-F.col("quality_score")).alias("ns"),
-                                       F.col(id_col).alias("kid"))).alias("w"))
-                   .select(F.col("w.kid").alias(id_col)))
+                                       F.col("doc_id").alias("kid"))).alias("w"))
+                   .select(F.col("w.kid").alias("doc_id")))
         keep = {r[0] for r in winners.collect()}
         removed_ids = sorted(i for i in labels if i not in keep)
         if not removed_ids:
@@ -3086,22 +3037,22 @@ def prune_corpus_quality(df: DataFrame, pairs: DataFrame,
             _info["folded"] = True
         rm_list = ",".join(str(i) for i in removed_ids)
         return df.filter(F.expr(
-            f"`{id_col}` IS NULL OR `{id_col}` NOT IN ({rm_list})"))
+            f"`doc_id` IS NULL OR `doc_id` NOT IN ({rm_list})"))
     comps = (_labels_relation(df.sparkSession, labels, ntype)
              if labels is not None else _star_from_edges(edges)) \
-        .withColumnRenamed("id", id_col)
-    members = df.join(comps.select(id_col).hint("merge"), id_col,
+        .withColumnRenamed("id", "doc_id")
+    members = df.join(comps.select("doc_id").hint("merge"), "doc_id",
                       "left_semi")
-    q = quality_scores(members, text_col, id_col) \
-        .select(F.col(id_col), "quality_score")
-    m = comps.join(q.hint("merge"), id_col)
+    q = quality_scores(members, "text", "doc_id") \
+        .select(F.col("doc_id"), "quality_score")
+    m = comps.join(q.hint("merge"), "doc_id")
     winners = (m.groupBy("comp")
                .agg(F.min(F.struct((-F.col("quality_score")).alias("ns"),
-                                   F.col(id_col).alias("kid"))).alias("w"))
-               .select(F.col("w.kid").alias(id_col)))
-    removed = comps.join(winners, id_col, "left_anti") \
-        .select(F.col(id_col))
-    return df.join(removed, id_col, "left_anti")
+                                   F.col("doc_id").alias("kid"))).alias("w"))
+               .select(F.col("w.kid").alias("doc_id")))
+    removed = comps.join(winners, "doc_id", "left_anti") \
+        .select(F.col("doc_id"))
+    return df.join(removed, "doc_id", "left_anti")
 
 
 def dedup_quality_keep_query(spark: SparkSession,
@@ -3196,9 +3147,7 @@ register(QuerySpec(
 OVERLAP_NS = (4, 8, 13)
 
 
-def overlap_curve(docs: DataFrame, eval_docs: DataFrame,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  ns: tuple = OVERLAP_NS) -> DataFrame:
+def overlap_curve(docs: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Contamination rate as a function of n-gram order — the knob
     curve behind every decontamination threshold decision (GPT-3 used
     13-grams; short n over-flags boilerplate, long n under-flags
@@ -3220,25 +3169,25 @@ def overlap_curve(docs: DataFrame, eval_docs: DataFrame,
     from downscaledclimatedata_spark.functions.rows import literal_rows
 
     def _grams(df, id_cols: list) -> DataFrame:
-        base = df.select(*id_cols, tokens(F.col(text_col)).alias("_t"))
+        base = df.select(*id_cols, tokens(F.col("text")).alias("_t"))
         tagged = base.select(
             *id_cols,
             F.explode(F.array(*[
                 F.struct(F.lit(int(n)).cast("bigint").alias("ngram_order"),
                          shingles_of_tokens(F.col("_t"), n).alias("_g"))
-                for n in ns])).alias("_s"))
+                for n in OVERLAP_NS])).alias("_s"))
         return tagged.select(*id_cols,
                              F.col("_s.ngram_order").alias("ngram_order"),
                              F.explode("_s._g").alias("gram"))
 
     train_n = docs.select(F.count(F.lit(1)).alias("n_train"))
-    dg = _grams(docs, [F.col(id_col)])
+    dg = _grams(docs, [F.col("doc_id")])
     eg = _grams(eval_docs, []).distinct()
     contam = (dg.join(F.broadcast(eg), ["ngram_order", "gram"], "left_semi")
-              .select("ngram_order", id_col).distinct()
+              .select("ngram_order", "doc_id").distinct()
               .groupBy("ngram_order")
               .agg(F.count(F.lit(1)).alias("n_contaminated")))
-    ns_rel = literal_rows(docs.sparkSession, [(int(n),) for n in ns],
+    ns_rel = literal_rows(docs.sparkSession, [(int(n),) for n in OVERLAP_NS],
                           "ngram_order bigint")
     n_contam = F.coalesce(F.col("n_contaminated"), F.lit(0)).cast("bigint")
     return (ns_rel.join(contam, "ngram_order", "left")
@@ -3320,9 +3269,7 @@ register(QuerySpec(
 BUCKET_HIST_CAP = 20
 
 
-def lsh_bucket_histogram(docs: DataFrame, text_col: str = "text",
-                         id_col: str = "doc_id",
-                         cap: int = BUCKET_HIST_CAP) -> DataFrame:
+def lsh_bucket_histogram(docs: DataFrame) -> DataFrame:
     """Occupancy distribution of the minhash LSH band buckets — the
     index-health view behind the band join's cost model: candidate
     pairs grow with sum over buckets of size², so a fat tail here IS
@@ -3334,11 +3281,11 @@ def lsh_bucket_histogram(docs: DataFrame, text_col: str = "text",
     is one (band, hash)-keyed count with map-side partials; the
     histogram is a bounded (<= cap+1 row) roll-up.
     """
-    sigs = minhash_signatures(docs, text_col, id_col)
-    bands = _banded(sigs, id_col, MINHASH_PERMS, LSH_BAND_SIZE)
+    sigs = minhash_signatures(docs, "text", "doc_id")
+    bands = _banded(sigs, "doc_id")
     occ = (bands.groupBy("band_id", "band_hash")
            .agg(F.count(F.lit(1)).alias("sz")))
-    capped = F.least(F.col("sz"), F.lit(cap)).cast("bigint")
+    capped = F.least(F.col("sz"), F.lit(BUCKET_HIST_CAP)).cast("bigint")
     d = lambda c: c.cast("decimal(38,0)")
     return (occ.groupBy(capped.alias("bucket_size"))
             .agg(F.count(F.lit(1)).alias("n_buckets"),
@@ -3388,9 +3335,7 @@ register(QuerySpec(
 EXACT_HIST_CAP = 20
 
 
-def exact_cluster_histogram(docs: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id",
-                            cap: int = EXACT_HIST_CAP) -> DataFrame:
+def exact_cluster_histogram(docs: DataFrame) -> DataFrame:
     """Size distribution of EXACT-duplicate clusters (by portable
     content hash) — the companion to the near-dup graph stats: one row
     per (capped) cluster size with cluster count, doc mass, and the
@@ -3400,10 +3345,10 @@ def exact_cluster_histogram(docs: DataFrame, text_col: str = "text",
     One content-hash aggregate (uniform key, map-side partials) + a
     bounded histogram roll-up.
     """
-    h = md5_long(F.coalesce(F.col(text_col), F.lit("")))
+    h = md5_long(F.coalesce(F.col("text"), F.lit("")))
     clusters = (docs.select(h.alias("h"))
                 .groupBy("h").agg(F.count(F.lit(1)).alias("sz")))
-    capped = F.least(F.col("sz"), F.lit(cap)).cast("bigint")
+    capped = F.least(F.col("sz"), F.lit(EXACT_HIST_CAP)).cast("bigint")
     return (clusters.groupBy(capped.alias("cluster_size"))
             .agg(F.count(F.lit(1)).alias("n_clusters"),
                  F.sum("sz").alias("n_docs"),
@@ -3444,9 +3389,7 @@ register(QuerySpec(
 
 # --- near-dup cluster source purity (dedup QA) -----------------------------------
 
-def cluster_source_purity(docs: DataFrame, pairs: DataFrame,
-                          source_col: str = "source",
-                          id_col: str = "doc_id") -> DataFrame:
+def cluster_source_purity(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Per multi-member near-dup cluster: how many distinct SOURCES its
     members span and the majority source's share — the dedup-QA signal
     that separates within-site boilerplate (1 source, prune freely)
@@ -3459,16 +3402,16 @@ def cluster_source_purity(docs: DataFrame, pairs: DataFrame,
     per-cluster sort.
     """
     comps = connected_components_star(pairs) \
-        .withColumnRenamed("id", id_col)
+        .withColumnRenamed("id", "doc_id")
     m = comps.join(
-        docs.select(id_col, source_col).hint("merge"), id_col)
-    per_src = m.groupBy("comp", source_col).agg(
+        docs.select("doc_id", "source").hint("merge"), "doc_id")
+    per_src = m.groupBy("comp", "source").agg(
         F.count(F.lit(1)).alias("n_src"))
     elect = per_src.groupBy("comp").agg(
         F.sum("n_src").alias("n_members"),
         F.count(F.lit(1)).alias("n_sources"),
         F.min(F.struct((-F.col("n_src")).alias("neg"),
-                       F.col(source_col).alias("src"))).alias("w"))
+                       F.col("source").alias("src"))).alias("w"))
     return (elect.filter(F.col("n_members") >= 2)
             .select(F.col("comp").cast("bigint").alias("comp"),
                     F.col("n_members").cast("bigint").alias("n_members"),

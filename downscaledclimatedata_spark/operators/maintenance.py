@@ -205,12 +205,12 @@ ZORDER_BITS = 16        # per-dimension resolution (32-bit z keys)
 ZORDER_BUCKETS = 64     # top 6 z-bits -> 3 high bits per dimension
 
 
-def zorder_key(a, b, bits: int = ZORDER_BITS):
+def zorder_key(a, b):
     """Morton interleave of two normalized nonnegative int columns —
     even bits from ``a``, odd bits from ``b``. Pure Catalyst bit ops
-    (unrolled ``bits`` times), no UDF."""
+    (unrolled ``ZORDER_BITS`` times), no UDF."""
     z = F.lit(0).cast("long")
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         # Column.bitwiseOR, not `|` (PySpark maps `|` to boolean OR)
         z = z.bitwiseOR(
             F.shiftleft(F.shiftrightunsigned(a, i)
@@ -221,18 +221,16 @@ def zorder_key(a, b, bits: int = ZORDER_BITS):
     return z
 
 
-def zorder_layout_stats(df: DataFrame, col_a: str, col_b: str,
-                        bits: int = ZORDER_BITS,
-                        n_buckets: int = ZORDER_BUCKETS) -> DataFrame:
+def zorder_layout_stats(df: DataFrame, col_a: str, col_b: str) -> DataFrame:
     """Per-bucket locality report for a Z-ORDER file layout: normalize
-    both dimensions to ``bits``-bit grids (exact integer min/max
-    scaling), Morton-interleave, split the key space into ``n_buckets``
+    both dimensions to ``ZORDER_BITS``-bit grids (exact integer min/max
+    scaling), Morton-interleave, split the key space into ``ZORDER_BUCKETS``
     contiguous ranges (= the files a `repartitionByRange(z) +
     sortWithinPartitions(z)` write would produce), and report each
     bucket's row count and RAW min/max/span per dimension.
 
     This is the number that justifies the layout: every bucket's span
-    is structurally <= range / 2^(log2(n_buckets)/2) in BOTH dimensions
+    is structurally <= range / 2^(log2(ZORDER_BUCKETS)/2) in BOTH dimensions
     (each top z-bit pair constrains one bit of each dim), so parquet
     row-group min/max pruning skips files for predicates on EITHER
     column — the multi-dimensional clustering a single-column sort
@@ -240,21 +238,21 @@ def zorder_layout_stats(df: DataFrame, col_a: str, col_b: str,
 
     Scale: two scalar aggregates (broadcast bounds), one narrow
     projection (the unrolled interleave is whole-stage-codegen'd), one
-    ``n_buckets``-group aggregate with map-side partial combine. The
+    ``ZORDER_BUCKETS``-group aggregate with map-side partial combine. The
     layout WRITE this models is `repartitionByRange` on z — a single
     range shuffle, the same cost as any global sort the table was
     getting anyway.
     """
-    zmax = (1 << (2 * bits)) // n_buckets
+    zmax = (1 << (2 * ZORDER_BITS)) // ZORDER_BUCKETS
     bounds = F.broadcast(df.agg(
         F.min(col_a).alias("min_a"), F.max(col_a).alias("max_a"),
         F.min(col_b).alias("min_b"), F.max(col_b).alias("max_b")))
-    top = (1 << bits) - 1
+    top = (1 << ZORDER_BITS) - 1
     na = F.expr(f"CAST((({col_a} - min_a) * {top}) "
                 f"div greatest(max_a - min_a, 1) AS BIGINT)")
     nb = F.expr(f"CAST((({col_b} - min_b) * {top}) "
                 f"div greatest(max_b - min_b, 1) AS BIGINT)")
-    z = zorder_key(na, nb, bits)
+    z = zorder_key(na, nb)
     return (df.crossJoin(F.broadcast(bounds))
             .select(F.col(col_a).alias("a"), F.col(col_b).alias("b"),
                     (z / F.lit(zmax)).cast("long").alias("bucket"))
@@ -321,17 +319,16 @@ register(QuerySpec(
 PROFILE_RENDER_LEN = 64  # profiling grain: values render as <= 64-char strings
 
 
-def table_profile(df: DataFrame, columns: list[str],
-                  render_len: int = PROFILE_RENDER_LEN) -> DataFrame:
+def table_profile(df: DataFrame, columns: list[str]) -> DataFrame:
     """One-pass per-column data-quality profile: row/null/distinct counts,
     rendered-length range, and the most frequent value — the profiling
     report every ingestion pipeline runs before accepting a new drop.
 
     Unpivot-based so the table is scanned ONCE for all columns: each row
     explodes into (col, val) pairs with ``val`` rendered as a string
-    truncated to ``render_len`` chars (the profiler's documented grain —
+    truncated to ``PROFILE_RENDER_LEN`` chars (the profiler's documented grain —
     distinct counts and top values are exact at that rendering, and the
-    shuffle never carries more than ``render_len`` chars per value no
+    shuffle never carries more than ``PROFILE_RENDER_LEN`` chars per value no
     matter how wide a text column is). The (col, val) aggregate
     map-side combines, so the wide shuffle moves one row per DISTINCT
     rendered value, not per input row; the per-column rollup then runs
@@ -344,7 +341,7 @@ def table_profile(df: DataFrame, columns: list[str],
 
     pairs = df.select(F.explode(F.array(*[
         F.struct(F.lit(c).alias("col"),
-                 F.substring(F.col(c).cast("string"), 1, render_len)
+                 F.substring(F.col(c).cast("string"), 1, PROFILE_RENDER_LEN)
                  .alias("val"))
         for c in columns])).alias("p")).select("p.col", "p.val")
     grouped = pairs.groupBy("col", "val").agg(
@@ -421,21 +418,20 @@ register(QuerySpec(
 
 # --- CDC apply: snapshot + change-log delta -> new snapshot -------------------
 
-def cdc_fold(changes: DataFrame, key_col: str = "user_id") -> DataFrame:
+def cdc_fold(changes: DataFrame) -> DataFrame:
     """Fold a change-log to its net effect per key: the LAST operation
     in (ts, event_id) order wins — an upsert yields (key, value, ts),
     a delete yields a tombstone. One map-side-combined max-struct
     aggregate; no window, no per-key sort."""
-    return (changes.groupBy(key_col)
+    return (changes.groupBy("user_id")
             .agg(F.max(F.struct("ts", "event_id", "op", "cents"))
                  .alias("last"))
-            .select(key_col, F.col("last.op").alias("op"),
+            .select("user_id", F.col("last.op").alias("op"),
                     F.col("last.cents").alias("cents"),
                     F.col("last.ts").alias("ts")))
 
 
-def cdc_apply(snapshot: DataFrame, delta: DataFrame,
-              key_col: str = "user_id") -> DataFrame:
+def cdc_apply(snapshot: DataFrame, delta: DataFrame) -> DataFrame:
     """Apply a folded change-log delta to a keyed snapshot — the MERGE
     step of dimension maintenance, with DELETES (which the pure-additive
     `merge_agg_state` algebra cannot express). Per key: a delta upsert
@@ -443,14 +439,14 @@ def cdc_apply(snapshot: DataFrame, delta: DataFrame,
     keeps it. One keys-bounded full-outer join; nothing corpus-sized
     moves — the 100 TB shape is 'update a billion-row dimension from a
     GB of change-log' and the join carries only (key, value, ts)."""
-    d = cdc_fold(delta, key_col)
-    s = snapshot.select(key_col, F.col("cents").alias("s_cents"),
+    d = cdc_fold(delta)
+    s = snapshot.select("user_id", F.col("cents").alias("s_cents"),
                         F.col("ts").alias("s_ts"))
-    merged = s.join(d, key_col, "full_outer")
+    merged = s.join(d, "user_id", "full_outer")
     return (merged
             .filter(F.when(F.col("op").isNotNull(), F.col("op") == "U")
                     .otherwise(F.lit(True)))
-            .select(key_col,
+            .select("user_id",
                     F.coalesce(F.when(F.col("op") == "U", F.col("cents")),
                                F.col("s_cents")).alias("cents"),
                     F.coalesce(F.when(F.col("op") == "U", F.col("ts")),
@@ -947,8 +943,7 @@ register(QuerySpec(
 # --- orphan-file report (VACUUM dry-run) -----------------------------------------
 
 def orphan_file_report(spark: SparkSession, root: str,
-                       manifest: DataFrame | None = None,
-                       data_suffix: str = ".parquet") -> DataFrame:
+                       manifest: DataFrame | None = None) -> DataFrame:
     """Files under a table root that do not belong to the table — the
     dry-run every lake VACUUM runs before deleting. Three orphan
     classes, each a real incident shape:
@@ -984,7 +979,7 @@ def orphan_file_report(spark: SparkSession, root: str,
                               F.lit(0)))
     classified = listing.select(
         "key", "size",
-        (~F.col("key").endswith(data_suffix)).alias("bad_suffix"),
+        (~F.col("key").endswith(".parquet")).alias("bad_suffix"),
         F.exists(dirs, lambda d: ~d.contains("=")).alias("bad_layout"))
     if manifest is not None:
         known = manifest.select(F.col("key")).distinct()
@@ -1005,8 +1000,7 @@ def orphan_file_report(spark: SparkSession, root: str,
 
 
 def delete_orphans(spark: SparkSession, root: str,
-                   manifest: DataFrame | None = None,
-                   data_suffix: str = ".parquet") -> dict:
+                   manifest: DataFrame | None = None) -> dict:
     """Apply step for :func:`orphan_file_report` — the destructive half
     of VACUUM, deliberately a separate call (plan, review, then act;
     the retention_plan/expire_partitions discipline). Deletes exactly
@@ -1017,7 +1011,7 @@ def delete_orphans(spark: SparkSession, root: str,
     """
     import os
 
-    rep = orphan_file_report(spark, root, manifest, data_suffix).collect()
+    rep = orphan_file_report(spark, root, manifest).collect()
     base = os.path.abspath(root)
     n = 0
     freed = 0
@@ -1038,8 +1032,7 @@ def delete_orphans(spark: SparkSession, root: str,
 
 def write_audit_publish(spark: SparkSession, df: DataFrame,
                         final_dir: str,
-                        audits: list,
-                        fmt: str = "parquet") -> dict:
+                        audits: list) -> dict:
     """The write-audit-publish pattern: materialize to a STAGING
     location, audit WHAT WAS WRITTEN (re-read from disk — auditing the
     logical plan would miss writer bugs, schema coercions, and partial
@@ -1056,12 +1049,12 @@ def write_audit_publish(spark: SparkSession, df: DataFrame,
     """
     return publish_audited(
         spark, final_dir, audits,
-        lambda staging: df.write.mode("errorifexists").format(fmt)
-        .save(staging), fmt=fmt)
+        lambda staging: df.write.mode("errorifexists").format("parquet")
+        .save(staging))
 
 
 def publish_audited(spark: SparkSession, final_dir: str, audits: list,
-                    write_fn, fmt: str = "parquet") -> dict:
+                    write_fn) -> dict:
     """Generalized WAP core: ``write_fn(staging_dir)`` materializes the
     table with ANY writer (plain save, hive-partitioned shard write,
     ...); the audit + aside-rename publish are shared. This is the seam
@@ -1073,7 +1066,7 @@ def publish_audited(spark: SparkSession, final_dir: str, audits: list,
     with publish.staged(final_dir) as staging:
         write_fn(staging)
         try:
-            staged = spark.read.format(fmt).load(staging)
+            staged = spark.read.format("parquet").load(staging)
             aggs = [F.count(F.lit(1)).alias("_n")]
             for name, cond in audits:
                 aggs.append(F.sum(F.when(cond, 1).otherwise(0))
@@ -1478,8 +1471,7 @@ register(QuerySpec(
 COMPACT_TARGET = 100_000_000  # target bin size (simulated bytes = cents)
 
 
-def compaction_plan(files: DataFrame, part_col: str = "part",
-                    file_col: str = "file_id", size_col: str = "size_bytes",
+def compaction_plan(files: DataFrame,
                     target: int = COMPACT_TARGET) -> DataFrame:
     """Plan small-file compaction bins per table partition — the
     planning half of Delta/Iceberg ``OPTIMIZE``: group each partition's
@@ -1502,11 +1494,11 @@ def compaction_plan(files: DataFrame, part_col: str = "part",
     import pandas as pd
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([size_col, file_col],
+        pdf = pdf.sort_values(["size_bytes", "file_id"],
                               ascending=[False, True])
         bins, fills, nfiles = [], [], []
         bin_id, fill, nf = 0, 0, 0
-        for s in pdf[size_col]:
+        for s in pdf["size_bytes"]:
             s = int(s)
             if nf > 0 and fill + s > target:
                 bins.append((bin_id, nf, fill))
@@ -1517,11 +1509,11 @@ def compaction_plan(files: DataFrame, part_col: str = "part",
             bins.append((bin_id, nf, fill))
         out = pd.DataFrame(bins, columns=["bin_id", "n_files",
                                           "bin_bytes"])
-        out.insert(0, part_col, pdf[part_col].iloc[0])
+        out.insert(0, "part", pdf["part"].iloc[0])
         return out
 
-    return files.groupBy(part_col).applyInPandas(
-        pack, f"{part_col} string, bin_id long, n_files long, "
+    return files.groupBy("part").applyInPandas(
+        pack, "part string, bin_id long, n_files long, "
               "bin_bytes long")
 
 

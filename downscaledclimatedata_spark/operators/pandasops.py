@@ -32,25 +32,23 @@ ZSCORE_SCHEMA = ("user_id bigint, event_id bigint, value double, "
                  "zscore double")
 
 
-def zscore_per_group(df: DataFrame, key: str = "user_id",
-                     col: str = "value") -> DataFrame:
+def zscore_per_group(df: DataFrame) -> DataFrame:
     """Per-group z-score via applyInPandas (group-wise normalize — the
     canonical grouped-map example; ddof=0 so singleton groups yield 0)."""
     def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
-        v = pdf[col]
+        v = pdf["value"]
         std = v.std(ddof=0)
         z = (v - v.mean()) / std if std > 0 else v * 0.0
         return pd.DataFrame({
-            "user_id": pdf[key], "event_id": pdf["event_id"],
+            "user_id": pdf["user_id"], "event_id": pdf["event_id"],
             "value": v, "zscore": z,
         })
 
-    return (df.select(key, "event_id", col)
-            .groupBy(key).applyInPandas(normalize, ZSCORE_SCHEMA))
+    return (df.select("user_id", "event_id", "value")
+            .groupBy("user_id").applyInPandas(normalize, ZSCORE_SCHEMA))
 
 
-def weighted_mean_agg(df: DataFrame, key: str = "event_type",
-                      val: str = "value", weight_expr=None) -> DataFrame:
+def weighted_mean_agg(df: DataFrame) -> DataFrame:
     """Custom vectorized aggregate via a GROUPED_AGG pandas_udf:
     event-id-weighted mean of value per type."""
     from pyspark.sql.functions import pandas_udf
@@ -60,12 +58,11 @@ def weighted_mean_agg(df: DataFrame, key: str = "event_type",
         tw = w.sum()
         return float((v * w).sum() / tw) if tw else 0.0
 
-    w = weight_expr if weight_expr is not None else (
-        (F.col("event_id") % 10 + 1).cast("double"))
+    w = (F.col("event_id") % 10 + 1).cast("double")
     # NB: a GROUPED_AGG pandas_udf cannot share an agg() with built-in
     # aggregate functions (INVALID_PANDAS_UDF_PLACEMENT)
-    return (df.groupBy(key)
-            .agg(wmean(F.col(val), w).alias("weighted_mean")))
+    return (df.groupBy("event_type")
+            .agg(wmean(F.col("value"), w).alias("weighted_mean")))
 
 
 # --- exact variants (oracle-checkable) ----------------------------------------
@@ -83,7 +80,7 @@ ZSCORE_EXACT_SCHEMA = ("user_id bigint, event_id bigint, xq bigint, "
                        "zscore double")
 
 
-def zscore_per_group_exact(df: DataFrame, key: str = "user_id") -> DataFrame:
+def zscore_per_group_exact(df: DataFrame) -> DataFrame:
     """Per-group z-score over an integer column `xq`; exact int sums, then
     double math in a fixed order (matches the SQL oracle bit-for-bit)."""
     def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -98,15 +95,15 @@ def zscore_per_group_exact(df: DataFrame, key: str = "user_id") -> DataFrame:
         std = math.sqrt(var) if var > 0 else 0.0
         z = (v.astype("float64") - m) / std if std > 0 else v * 0.0
         return pd.DataFrame({
-            "user_id": pdf[key], "event_id": pdf["event_id"],
+            "user_id": pdf["user_id"], "event_id": pdf["event_id"],
             "xq": v, "zscore": z,
         })
 
-    return (df.select(key, "event_id", "xq")
-            .groupBy(key).applyInPandas(normalize, ZSCORE_EXACT_SCHEMA))
+    return (df.select("user_id", "event_id", "xq")
+            .groupBy("user_id").applyInPandas(normalize, ZSCORE_EXACT_SCHEMA))
 
 
-def weighted_mean_agg_exact(df: DataFrame, key: str = "event_type") -> DataFrame:
+def weighted_mean_agg_exact(df: DataFrame) -> DataFrame:
     """GROUPED_AGG pandas_udf weighted mean over integer columns xq, w:
     int64 numerator/denominator, one double division at the end."""
     from pyspark.sql.functions import pandas_udf
@@ -118,7 +115,7 @@ def weighted_mean_agg_exact(df: DataFrame, key: str = "event_type") -> DataFrame
         den = int(w.sum())
         return float(num) / float(den) if den else 0.0
 
-    return (df.groupBy(key)
+    return (df.groupBy("event_type")
             .agg(wmean(F.col("xq"), F.col("w")).alias("weighted_mean")))
 
 
@@ -185,9 +182,7 @@ register(QuerySpec("pandas_weighted_mean", pandas_weighted_mean_query, _WMEAN_SQ
                    description="GROUPED_AGG pandas_udf weighted mean (exact int sums)"))
 
 
-def compression_signals(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id",
-                        level: int = 6) -> DataFrame:
+def compression_signals(df: DataFrame) -> DataFrame:
     """Per-document zlib compression ratio — the RedPajama/Dolma
     repetitiveness signal (highly repetitive or templated text
     compresses far below natural prose; near-random text ratios ≈ 1).
@@ -206,26 +201,23 @@ def compression_signals(df: DataFrame, text_col: str = "text",
 
     from pyspark.sql.functions import pandas_udf
 
-    lvl = level
-
     @pandas_udf("struct<n_bytes: bigint, n_compressed: bigint, ratio: double>")
     def comp(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for s in batches:
             raw = s.fillna("").map(lambda t: t.encode("utf-8"))
             n = raw.map(len)
-            c = raw.map(lambda b: len(zlib.compress(b, lvl)))
+            c = raw.map(lambda b: len(zlib.compress(b, 6)))
             ratio = (c / n.where(n > 0)).fillna(1.0)
             yield pd.DataFrame(
                 {"n_bytes": n, "n_compressed": c, "ratio": ratio})
 
-    out = df.select(F.col(id_col), comp(F.col(text_col)).alias("z"))
-    return out.select(id_col, "z.n_bytes", "z.n_compressed", "z.ratio")
+    out = df.select(F.col("doc_id"), comp(F.col("text")).alias("z"))
+    return out.select("doc_id", "z.n_bytes", "z.n_compressed", "z.ratio")
 
 
 # --- Unicode normalization (NFC + accent fold) --------------------------------
 
-def unicode_normalize_report(df: DataFrame, text_col: str = "text",
-                             id_col: str = "doc_id") -> DataFrame:
+def unicode_normalize_report(df: DataFrame) -> DataFrame:
     """Per-document Unicode normalization report: NFC canonical form
     and an accent-folded view (NFD, combining marks dropped) — the
     text-canonicalization step a multilingual corpus runs before
@@ -270,8 +262,8 @@ def unicode_normalize_report(df: DataFrame, text_col: str = "text",
                 "n_chars_folded": folded.map(len),
                 "fold_hash": folded.map(h60)})
 
-    out = df.select(F.col(id_col), norm(F.col(text_col)).alias("u"))
-    return out.select(id_col, "u.n_chars_raw", "u.n_chars_nfc",
+    out = df.select(F.col("doc_id"), norm(F.col("text")).alias("u"))
+    return out.select("doc_id", "u.n_chars_raw", "u.n_chars_nfc",
                       "u.nfc_changed", "u.nfc_hash", "u.n_chars_folded",
                       "u.fold_hash")
 
@@ -315,8 +307,8 @@ CAPBAL_SCHEMA = ("user_id bigint, n_events bigint, final_balance bigint, "
                  "n_clamped_low bigint, n_clamped_high bigint")
 
 
-def capped_balance(df: DataFrame, cap: int = CAPBAL_CAP) -> DataFrame:
-    """Per-user running balance clamped to [0, cap] at every step —
+def capped_balance(df: DataFrame) -> DataFrame:
+    """Per-user running balance clamped to [0, CAPBAL_CAP] at every step —
     inventory-with-capacity / prepaid-wallet semantics.
 
     A one-sided clamp has a closed form (S_n - min(0, running-min S))
@@ -337,8 +329,8 @@ def capped_balance(df: DataFrame, cap: int = CAPBAL_CAP) -> DataFrame:
             raw = bal + int(d)
             if raw < 0:
                 bal, nlo = 0, nlo + 1
-            elif raw > cap:
-                bal, nhi = cap, nhi + 1
+            elif raw > CAPBAL_CAP:
+                bal, nhi = CAPBAL_CAP, nhi + 1
             else:
                 bal = raw
         return pd.DataFrame({
@@ -399,7 +391,7 @@ register(QuerySpec(
 
 # --- vectorized cosine top-k: the Arrow/numpy twin of the JVM kernel --------------
 
-def cosine_topk_vectorized(emb: DataFrame, k: int | None = None) -> DataFrame:
+def cosine_topk_vectorized(emb: DataFrame) -> DataFrame:
     """Brute-force cosine top-k where the per-batch scoring runs as ONE
     numpy int64 matmul inside mapInPandas — the vectorized-Python path
     for kernels the built-in expressions cannot express (here they can,
@@ -425,7 +417,6 @@ def cosine_topk_vectorized(emb: DataFrame, k: int | None = None) -> DataFrame:
         N_QUERIES, QUERY_MOD, TOP_K, _fixed_sample, quantize, sq_norm)
     from pyspark.sql import Window
 
-    k = TOP_K if k is None else k
     base = emb.select(
         F.col("vec_id"), quantize(F.col("embedding")).alias("q"))
     base = base.withColumn("n2", sq_norm(F.col("q"))).filter(
@@ -456,7 +447,7 @@ def cosine_topk_vectorized(emb: DataFrame, k: int | None = None) -> DataFrame:
             for j in range(len(qid)):
                 col = cos[:, j]
                 mask = cid != qid[j]
-                order = np.lexsort((cid[mask], -col[mask]))[:k]
+                order = np.lexsort((cid[mask], -col[mask]))[:TOP_K]
                 sel = np.flatnonzero(mask)[order]
                 out_q.extend([qid[j]] * len(sel))
                 out_m.extend(cid[sel].tolist())
@@ -469,7 +460,7 @@ def cosine_topk_vectorized(emb: DataFrame, k: int | None = None) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), "match_id")
     return (partial.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "cosine",
                     F.col("rnk").cast("int").alias("rnk")))
 
@@ -504,8 +495,7 @@ CAP_GAP_US = 1_800_000_000    # 30 min inactivity splits
 CAP_SPAN_US = 7_200_000_000   # 2 h max session span splits
 
 
-def capped_sessions(ev: DataFrame, gap_us: int = CAP_GAP_US,
-                    cap_us: int = CAP_SPAN_US) -> DataFrame:
+def capped_sessions(ev: DataFrame) -> DataFrame:
     """Sessions that split on EITHER a 30-minute inactivity gap OR a
     2-hour maximum span since the session started. The span cap makes
     this a true sequential recurrence — each row's session depends on
@@ -525,7 +515,7 @@ def capped_sessions(ev: DataFrame, gap_us: int = CAP_GAP_US,
         start = prev = None
         for t in pdf["ts_us"]:
             t = int(t)
-            if prev is None or t - prev > gap_us or t - start > cap_us:
+            if prev is None or t - prev > CAP_GAP_US or t - start > CAP_SPAN_US:
                 sid += 1
                 start = t
             prev = t

@@ -54,8 +54,7 @@ PHONE_RE = "([+][0-9]{1,2}[-. ])?[(]?[0-9]{3}[)]?[-. ][0-9]{3}[-. ][0-9]{4}"
 STOPWORDS = ("the", "a", "of", "and", "in", "to", "is")
 
 
-def clean_documents(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id",
+def clean_documents(df: DataFrame,
                     keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """Normalize + redact one document column in a single projection.
 
@@ -68,7 +67,7 @@ def clean_documents(df: DataFrame, text_col: str = "text",
     passed through untouched (still one projection — no join needed
     downstream).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     n_pii = (F.regexp_count(t, F.lit(EMAIL_RE))
              + F.regexp_count(t, F.lit(URL_RE))
              + F.regexp_count(t, F.lit(IPV4_RE))
@@ -87,7 +86,7 @@ def clean_documents(df: DataFrame, text_col: str = "text",
     toks = F.filter(F.split(clean, " "), lambda x: x != "")
     kept = F.filter(toks, lambda x: ~x.isin(*STOPWORDS))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         *[F.col(c) for c in keep_cols],
         clean.alias("clean_text"),
         n_pii.cast("bigint").alias("n_pii"),
@@ -99,9 +98,7 @@ def clean_documents(df: DataFrame, text_col: str = "text",
 
 
 def source_quota_sample(df: DataFrame, cap: int,
-                        source_col: str = "source",
-                        order_col: str = "n_chars",
-                        id_col: str = "doc_id") -> DataFrame:
+                        order_col: str = "n_chars") -> DataFrame:
     """Keep at most ``cap`` documents per source, preferring the longest.
 
     The domain-quota pass every crawl-derived corpus needs (bound any one
@@ -116,8 +113,8 @@ def source_quota_sample(df: DataFrame, cap: int,
     reducer instead of its whole partition. The plan test pins this
     rewrite; a hand-rolled two-phase prefilter would duplicate it.
     """
-    w = (Window.partitionBy(source_col)
-         .orderBy(F.col(order_col).desc(), F.col(id_col)))
+    w = (Window.partitionBy("source")
+         .orderBy(F.col(order_col).desc(), F.col("doc_id")))
     return (df.withColumn("rk", F.row_number().over(w))
             .filter(F.col("rk") <= cap))
 
@@ -125,19 +122,17 @@ def source_quota_sample(df: DataFrame, cap: int,
 MAX_BINS = 1_000_000  # broadcast budget for the bin histogram
 
 
-def auto_bin_width(max_tokens: int, max_bins: int = MAX_BINS,
-                   floor: int = 16) -> int:
-    """Smallest bin width keeping the bin histogram under ``max_bins``
+def auto_bin_width(max_tokens: int) -> int:
+    """Smallest bin width keeping the bin histogram under ``MAX_BINS``
     rows (bins = token-count ranges, so |bins| <= max_tokens/width + 1),
-    never below ``floor``. The global rank is exact for ANY width — width
+    never below 16. The global rank is exact for ANY width — width
     is a pure scale knob, auto-derived instead of hand-retuned."""
     if max_tokens <= 0:
-        return floor
-    return max(floor, -(-(max_tokens + 1) // max_bins))
+        return 16
+    return max(16, -(-(max_tokens + 1) // MAX_BINS))
 
 
-def token_balanced_shards(df: DataFrame, n_shards: int,
-                          text_col: str = "text", id_col: str = "doc_id",
+def token_balanced_shards(df: DataFrame, n_shards: int, id_col: str = "doc_id",
                           bin_width: int | None = None,
                           n_tokens_col: str | None = None) -> DataFrame:
     """Assign docs to ``n_shards`` output shards with near-equal token mass.
@@ -152,7 +147,7 @@ def token_balanced_shards(df: DataFrame, n_shards: int,
     so the histogram is provably <= MAX_BINS rows at any corpus; results
     are identical for every width. Pass ``n_tokens_col`` to reuse a token
     count an upstream stage already computed instead of re-tokenizing
-    ``text_col``.
+    ``text``.
     """
     # NULL-text docs count as 0 tokens: a NULL n_tokens would make a NULL
     # bin, and the equi-join on bin below silently DROPS NULL keys — the
@@ -164,7 +159,7 @@ def token_balanced_shards(df: DataFrame, n_shards: int,
             F.coalesce(F.col(n_tokens_col).cast("bigint"), F.lit(0))
             .alias("n_tokens"))
     else:
-        toks = F.filter(F.split(F.lower(text_col), WS_RE), lambda x: x != "")
+        toks = F.filter(F.split(F.lower("text"), WS_RE), lambda x: x != "")
         with_n = df.select(
             F.col(id_col),
             F.coalesce(F.size(toks).cast("bigint"), F.lit(0))
@@ -199,7 +194,6 @@ def token_balanced_shards(df: DataFrame, n_shards: int,
 
 
 def global_shuffle(df: DataFrame, n_shards: int,
-                   id_col: str = "doc_id",
                    seed: str = "epoch0",
                    carry_rows: bool = False) -> DataFrame:
     """Deterministic seeded global shuffle for training-order randomization.
@@ -227,15 +221,15 @@ def global_shuffle(df: DataFrame, n_shards: int,
     same corpus bytes AND the key relation a second time; r13).
     ``shard``/``pos`` values are identical either way.
     """
-    key = md5_long(F.col(id_col).cast("string"), seed=f"{seed}:")
+    key = md5_long(F.col("doc_id").cast("string"), seed=f"{seed}:")
     keyed = (df.withColumn("_gsk", key) if carry_rows
-             else df.select(F.col(id_col), key.alias("_gsk")))
-    w = Window.partitionBy("shard").orderBy("_gsk", id_col)
+             else df.select(F.col("doc_id"), key.alias("_gsk")))
+    w = Window.partitionBy("shard").orderBy("_gsk", "doc_id")
     ranked = (keyed.withColumn("shard",
                                (F.col("_gsk") % n_shards).cast("bigint"))
               .withColumn("pos", F.row_number().over(w).cast("bigint")))
     return (ranked.drop("_gsk") if carry_rows
-            else ranked.select(id_col, "shard", "pos"))
+            else ranked.select("doc_id", "shard", "pos"))
 
 
 N_SHUFFLE_SHARDS = 64
@@ -649,9 +643,7 @@ QF_MIN_STOPWORDS = 2
 _SYMBOL_RE = "[^a-z0-9 ]"
 
 
-def quality_filter(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id",
-                   keep_input: bool = False) -> DataFrame:
+def quality_filter(df: DataFrame, keep_input: bool = False) -> DataFrame:
     """Gopher-style rule-chain filter: per-document boolean verdicts with
     per-rule provenance (which rule failed), not just a score.
 
@@ -667,7 +659,7 @@ def quality_filter(df: DataFrame, text_col: str = "text",
     """
     # NULL text is scored like the empty document (total function — a
     # NULL would otherwise propagate NULL rule flags in both engines)
-    low = F.coalesce(F.lower(F.col(text_col)), F.lit(""))
+    low = F.coalesce(F.lower(F.col("text")), F.lit(""))
     t = F.filter(F.split(low, WS_RE), lambda x: x != "")
     n = F.size(t)
     nd = n.cast("double")
@@ -713,7 +705,7 @@ def quality_filter(df: DataFrame, text_col: str = "text",
             (n_failed == 0).alias("passes"),
         )
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n.cast("bigint").alias("n_tokens"),
         mean_wlen.alias("mean_word_len"),
         top_ratio.alias("top_token_ratio"),
@@ -796,10 +788,7 @@ MIX_BUDGET_TOKENS = 50_000   # target token budget for the sampled mix
 MIX_ACCEPT_MOD = 1_000_000   # acceptance-hash resolution
 
 
-def domain_mixture_sample(df: DataFrame, budget_tokens: int,
-                          source_col: str = "source",
-                          text_col: str = "text", id_col: str = "doc_id",
-                          seed: str = "mix0") -> DataFrame:
+def domain_mixture_sample(df: DataFrame, budget_tokens: int) -> DataFrame:
     """Temperature-weighted per-source sampling toward a token budget.
 
     The data-mixture step of a training pipeline: given S sources with
@@ -822,10 +811,10 @@ def domain_mixture_sample(df: DataFrame, budget_tokens: int,
     onto the corpus; acceptance is a per-row hash compare. Returns
     per-source summary (rate + realized sample size/mass).
     """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), WS_RE),
+    toks = F.filter(F.split(F.lower(F.col("text")), WS_RE),
                     lambda x: x != "")
     base = df.select(
-        F.col(id_col), F.col(source_col).alias("source"),
+        F.col("doc_id"), F.col("source"),
         F.coalesce(F.size(toks).cast("bigint"), F.lit(0)).alias("n_tokens"))
     base = base.localCheckpoint()  # tokenize once: stats pass + accept pass
     stats = (base.groupBy("source")
@@ -841,7 +830,7 @@ def domain_mixture_sample(df: DataFrame, budget_tokens: int,
                          (F.lit(budget_tokens) * F.col("w")).cast("double")
                          / (F.col("total_w") * F.col("tok_s")).cast("double")))
              .select("source", "n_docs", "tok_s", "rate"))
-    accept = (md5_long(F.col(id_col).cast("string"), seed=f"{seed}:")
+    accept = (md5_long(F.col("doc_id").cast("string"), seed="mix0:")
               % MIX_ACCEPT_MOD)
     sampled = (base.join(F.broadcast(rates.select("source", "rate")), "source")
                .filter(accept.cast("double")
@@ -901,10 +890,7 @@ register(QuerySpec(
 
 # --- training-shard sink --------------------------------------------------------
 
-def write_training_shards(df: DataFrame, out_dir: str,
-                          shard_col: str = "shard",
-                          pos_col: str = "pos",
-                          clustered: bool = False) -> None:
+def write_training_shards(df: DataFrame, out_dir: str) -> None:
     """Materialize a sharded training corpus: one Hive-partitioned
     directory per shard, rows stored in ``pos`` order, so a sequential
     reader of shard/pos realizes the pipeline's seeded global order
@@ -915,26 +901,19 @@ def write_training_shards(df: DataFrame, out_dir: str,
     written by exactly one task (one file per shard — no small-file
     spray), then sortWithinPartitions orders rows inside the task before
     the write. No global sort anywhere; parallel width = shard count,
-    which the upstream pipeline already sized to fit a task.
-
-    ``clustered=True`` (r14): the caller asserts ``df`` is ALREADY
-    hash-partitioned by ``shard_col`` (e.g. it flows out of
-    ``global_shuffle``'s window, whose Exchange clustered on shard) —
-    the repartition is skipped, saving a back-to-back full-corpus
-    shuffle on the same key. Files are identical: every shard still
-    lives entirely in one task, and ``partitionBy`` splits co-resident
-    shards into their own directories/files.
+    which the upstream pipeline already sized to fit a task. When
+    ``df`` is already hash-partitioned by ``shard`` on the same
+    partition count (``global_shuffle``'s window), EnsureRequirements
+    drops the repartition's Exchange, so the write pays one shuffle.
     """
-    part = df if clustered else df.repartition(F.col(shard_col))
-    (part.sortWithinPartitions(shard_col, pos_col)
-     .write.mode("overwrite").partitionBy(shard_col).parquet(out_dir))
+    (df.repartition(F.col("shard"))
+     .sortWithinPartitions("shard", "pos")
+     .write.mode("overwrite").partitionBy("shard").parquet(out_dir))
 
 
 # --- corpus report (the "corpus card" summary) ----------------------------------
 
-def corpus_report(df: DataFrame, text_col: str = "text",
-                  lang_col: str = "lang",
-                  source_col: str = "source") -> DataFrame:
+def corpus_report(df: DataFrame) -> DataFrame:
     """One-pass corpus card: doc/token/char totals overall, per language,
     and per source — the summary table a dataset release ships.
 
@@ -943,12 +922,12 @@ def corpus_report(df: DataFrame, text_col: str = "text",
     partial-aggregates map-side); `grain` labels each output row. Token
     counts share the engine-wide tokenizer.
     """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), WS_RE),
+    toks = F.filter(F.split(F.lower(F.col("text")), WS_RE),
                     lambda x: x != "")
     base = df.select(
-        F.col(lang_col).alias("lang"), F.col(source_col).alias("source"),
+        F.col("lang"), F.col("source"),
         F.coalesce(F.size(toks).cast("bigint"), F.lit(0)).alias("n_tokens"),
-        F.coalesce(F.length(text_col).cast("bigint"), F.lit(0))
+        F.coalesce(F.length("text").cast("bigint"), F.lit(0))
         .alias("n_chars"))
     g = base.groupingSets([[], [F.col("lang")], [F.col("source")]],
                           F.col("lang"), F.col("source"))
@@ -1050,12 +1029,9 @@ def observed_get(obs, defaults: dict) -> dict:
 CURRICULUM_STAGES = 4
 
 
-def curriculum_order(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     n_stages: int = CURRICULUM_STAGES,
-                     seed: str = "cur0") -> DataFrame:
+def curriculum_order(df: DataFrame) -> DataFrame:
     """(id, quality_score, stage, pos) curriculum assignment: documents
-    stratified into ``n_stages`` quality bands (stage 0 = highest
+    stratified into ``CURRICULUM_STAGES`` quality bands (stage 0 = highest
     quality, consumed first) with a seeded pseudo-random order inside
     each stage — curriculum learning's data-side half.
 
@@ -1066,7 +1042,7 @@ def curriculum_order(df: DataFrame, text_col: str = "text",
       holds per-distinct-value state — unbounded on a high-cardinality
       double score): the score is binned (``value_bin``, <= 64Ki-row
       histogram), ranked with the two-phase binned row_number
-      (functions/ranks.py), and only the <= 2*(n_stages-1) rows at the
+      (functions/ranks.py), and only the <= 2*(CURRICULUM_STAGES-1) rows at the
       quantile ranks are collected; the interpolated cuts come back as
       broadcast-free literals. An ulp of interpolation drift cannot
       flip a ``score > cut`` comparison — the cut lies between ADJACENT
@@ -1091,13 +1067,13 @@ def curriculum_order(df: DataFrame, text_col: str = "text",
 
     # checkpoint: consumed by the stats agg, the quantile-rank job, and
     # the returned plan — score the corpus once
-    scored = quality_scores(df, text_col, id_col) \
-        .select(id_col, "quality_score").localCheckpoint()
+    scored = quality_scores(df, "text", "doc_id") \
+        .select("doc_id", "quality_score").localCheckpoint()
     st = scored.agg(F.count("quality_score").alias("n"),
                     F.min("quality_score").alias("lo"),
                     F.max("quality_score").alias("hi")).first()
     n, lo, hi = int(st["n"]), st["lo"], st["hi"]
-    qs = [i / n_stages for i in range(1, n_stages)]
+    qs = [i / CURRICULUM_STAGES for i in range(1, CURRICULUM_STAGES)]
     if n == 0:
         # all-NULL scores: every comparison is false, all rows fall to
         # the bottom stage — same as NULL percentile cuts did
@@ -1110,7 +1086,7 @@ def curriculum_order(df: DataFrame, text_col: str = "text",
               .withColumn("_qbin", value_bin(F.col("quality_score"),
                                              float(lo), float(hi))))
         ranked = binned_row_number(nn, "_qbin",
-                                   ("quality_score", id_col), out="_grk")
+                                   ("quality_score", "doc_id"), out="_grk")
         stats = [(int(r["_grk"]), float(r["quality_score"]))
                  for r in ranked.filter(F.col("_grk").isin(ranks))
                  .select("_grk", "quality_score").collect()]
@@ -1118,20 +1094,20 @@ def curriculum_order(df: DataFrame, text_col: str = "text",
     # stage k = number of cuts the score strictly exceeds, counted from
     # the top: highest scores -> stage 0 (same chain as before, with
     # the cut scalars now literals instead of a crossJoin relation)
-    stage = F.lit(n_stages - 1)
+    stage = F.lit(CURRICULUM_STAGES - 1)
     for i, c in enumerate(cuts):
         stage = F.when(F.col("quality_score") > F.lit(c),
-                       F.lit(n_stages - 2 - i)).otherwise(stage)
+                       F.lit(CURRICULUM_STAGES - 2 - i)).otherwise(stage)
     staged = scored.select(
-        F.col(id_col), F.col("quality_score"),
+        F.col("doc_id"), F.col("quality_score"),
         stage.cast("int").alias("stage"),
-        md5_long(F.col(id_col).cast("string"), seed=f"{seed}:").alias("_h"))
+        md5_long(F.col("doc_id").cast("string"), seed="cur0:").alias("_h"))
     pos = binned_row_number(
         staged.withColumn("_hbin", hash_bin(F.col("_h"))),
-        "_hbin", (F.col("_h"), F.col(id_col)),
+        "_hbin", (F.col("_h"), F.col("doc_id")),
         partition_cols=("stage",), out="_rk")
     return pos.select(
-        id_col, "quality_score", "stage",
+        "doc_id", "quality_score", "stage",
         (F.col("_rk") - 1).cast("bigint").alias("pos"))
 
 
@@ -1180,8 +1156,7 @@ register(QuerySpec(
 
 # --- corpus snapshot diff -------------------------------------------------------
 
-def corpus_diff(old: DataFrame, new: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def corpus_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Per-document diff of two corpus snapshots: ``added`` (id only in
     new), ``removed`` (only in old), ``changed`` (both, content hash
     differs), ``unchanged`` — the audit primitive of corpus versioning
@@ -1192,20 +1167,20 @@ def corpus_diff(old: DataFrame, new: DataFrame, text_col: str = "text",
     never ships document bodies — both sides reduce to (id, hash)
     before the single full-outer join, keyed on the uniform id.
     """
-    oh = old.select(F.col(id_col),
-                    md5_long(F.coalesce(F.col(text_col), F.lit("")))
+    oh = old.select(F.col("doc_id"),
+                    md5_long(F.coalesce(F.col("text"), F.lit("")))
                     .alias("old_hash"))
-    nh = new.select(F.col(id_col),
-                    md5_long(F.coalesce(F.col(text_col), F.lit("")))
+    nh = new.select(F.col("doc_id"),
+                    md5_long(F.coalesce(F.col("text"), F.lit("")))
                     .alias("new_hash"))
-    joined = oh.join(nh, id_col, "full_outer")
+    joined = oh.join(nh, "doc_id", "full_outer")
     status = (F.when(F.col("old_hash").isNull(), F.lit("added"))
               .when(F.col("new_hash").isNull(), F.lit("removed"))
               .when(F.col("old_hash") != F.col("new_hash"),
                     F.lit("changed"))
               .otherwise(F.lit("unchanged")))
     # corpus-sized output: no trailing global sort (r8 audit sweep)
-    return joined.select(F.col(id_col), status.alias("status"))
+    return joined.select(F.col("doc_id"), status.alias("status"))
 
 
 def prep_corpus_diff_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1253,9 +1228,7 @@ register(QuerySpec(
 PAD_BATCH = 32
 
 
-def padding_report(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id",
-                   batch_size: int = PAD_BATCH) -> DataFrame:
+def padding_report(df: DataFrame, batch_size: int = PAD_BATCH) -> DataFrame:
     """Padding waste of two batching strategies, measured exactly: a
     padded batch costs ``batch_rows × max_len`` tokens, of which
     ``sum_len`` are real — the rest is padding the GPU burns. Compares
@@ -1282,20 +1255,20 @@ def padding_report(df: DataFrame, text_col: str = "text",
         binned_row_number, value_bin)
 
     toks = df.select(
-        F.col(id_col),
-        F.size(F.filter(F.split(F.lower(F.coalesce(F.col(text_col),
+        F.col("doc_id"),
+        F.size(F.filter(F.split(F.lower(F.coalesce(F.col("text"),
                                                    F.lit(""))), WS_RE),
                         lambda x: x != "")).cast("bigint").alias("n_tokens")) \
         .localCheckpoint()
-    st = toks.agg(F.min(id_col), F.max(id_col),
+    st = toks.agg(F.min("doc_id"), F.max("doc_id"),
                   F.min("n_tokens"), F.max("n_tokens")).first()
-    bounds = {id_col: (float(st[0] or 0), float(st[1] or 0)),
+    bounds = {"doc_id": (float(st[0] or 0), float(st[1] or 0)),
               "n_tokens": (float(st[2] or 0), float(st[3] or 0))}
     out = None
     for strategy, lead, order in (
-            ("arrival", id_col, [F.col(id_col)]),
+            ("arrival", "doc_id", [F.col("doc_id")]),
             ("length_sorted", "n_tokens",
-             [F.col("n_tokens"), F.col(id_col)])):
+             [F.col("n_tokens"), F.col("doc_id")])):
         lo, hi = bounds[lead]
         binned = toks.withColumn(
             "_pbin", value_bin(F.col(lead).cast("double"), lo, hi))
@@ -1373,10 +1346,8 @@ register(QuerySpec(
 TRUNC_MAX_TOKENS = 48
 
 
-def truncate_documents(df: DataFrame, max_tokens: int = TRUNC_MAX_TOKENS,
-                       text_col: str = "text",
-                       id_col: str = "doc_id") -> DataFrame:
-    """Clip every document to its first ``max_tokens`` tokens — the
+def truncate_documents(df: DataFrame) -> DataFrame:
+    """Clip every document to its first ``TRUNC_MAX_TOKENS`` tokens — the
     context-length truncation step in front of any fixed-window model —
     reporting exactly what was lost: per doc the kept text, kept/clipped
     token counts, and the truncated flag.
@@ -1385,17 +1356,17 @@ def truncate_documents(df: DataFrame, max_tokens: int = TRUNC_MAX_TOKENS,
     counts are exact integers, so the corpus-level loss report
     downstream is a plain aggregate of this relation.
     """
-    toks = F.filter(F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))),
+    toks = F.filter(F.split(F.lower(F.coalesce(F.col("text"), F.lit(""))),
                             WS_RE), lambda x: x != "")
     n = F.size(toks)
-    kept = F.slice(toks, 1, max_tokens)
+    kept = F.slice(toks, 1, TRUNC_MAX_TOKENS)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.concat_ws(" ", kept).alias("kept_text"),
-        F.least(n, F.lit(max_tokens)).cast("bigint").alias("n_kept"),
-        F.greatest(n - max_tokens, F.lit(0)).cast("bigint")
+        F.least(n, F.lit(TRUNC_MAX_TOKENS)).cast("bigint").alias("n_kept"),
+        F.greatest(n - TRUNC_MAX_TOKENS, F.lit(0)).cast("bigint")
         .alias("n_clipped"),
-        (n > max_tokens).alias("truncated"))
+        (n > TRUNC_MAX_TOKENS).alias("truncated"))
 
 
 def prep_truncate_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1429,9 +1400,7 @@ register(QuerySpec(
 WATERFILL_BUDGET = 12_000  # tokens, for the registered spec
 
 
-def token_budget_waterfill(df: DataFrame, budget_tokens: int,
-                           source_col: str = "source",
-                           text_col: str = "text") -> DataFrame:
+def token_budget_waterfill(df: DataFrame, budget_tokens: int) -> DataFrame:
     """Exact waterfilling allocation of a token budget across sources:
     every source is capped at its own mass; the remainder is shared at
     a common water level t, computed EXACTLY in integers — small
@@ -1449,10 +1418,10 @@ def token_budget_waterfill(df: DataFrame, budget_tokens: int,
     """
     from pyspark.sql import Window
 
-    toks = F.filter(F.split(F.lower(F.coalesce(F.col(text_col),
+    toks = F.filter(F.split(F.lower(F.coalesce(F.col("text"),
                                                F.lit(""))), WS_RE),
                     lambda x: x != "")
-    src = (df.select(F.col(source_col).alias("source"),
+    src = (df.select(F.col("source"),
                      F.size(toks).cast("bigint").alias("n"))
            .groupBy("source").agg(F.sum("n").alias("tok")))
     w = Window.orderBy("tok", "source")
@@ -1560,22 +1529,19 @@ register(QuerySpec(
 MAX_EPOCHS = 4
 
 
-def epoch_schedule(df: DataFrame, budget_tokens: int,
-                   text_col: str = "text", id_col: str = "doc_id",
-                   source_col: str = "source",
-                   max_epochs: int = MAX_EPOCHS) -> DataFrame:
+def epoch_schedule(df: DataFrame, budget_tokens: int) -> DataFrame:
     """Data-constrained repetition plan: how many epochs each source
     repeats to fill its share of a token budget — the schedule a
     data-constrained training run derives when unique data is scarcer
     than compute (repeat clean sources a few epochs, never past the
-    point of diminishing returns; cap at ``max_epochs``).
+    point of diminishing returns; cap at ``MAX_EPOCHS``).
 
     Per source (exact integer arithmetic end to end):
       quota   = budget * n_tokens / total_tokens   (proportional share,
                 truncating div — identical in both engines on
                 nonnegative operands)
-      epochs  = ceil(quota / n_tokens), clamped to [1, max_epochs]
-      used    = min(quota, n_tokens * max_epochs)
+      epochs  = ceil(quota / n_tokens), clamped to [1, MAX_EPOCHS]
+      used    = min(quota, n_tokens * MAX_EPOCHS)
       deficit = quota - used  (> 0 iff even max_epochs repeats cannot
                 fill the share — the budget the mixture must
                 reallocate)
@@ -1584,10 +1550,10 @@ def epoch_schedule(df: DataFrame, budget_tokens: int,
     every subsequent expression runs on the bounded summary. Products
     as DECIMAL(38,0) — budget * n_tokens overflows int64 at ~1e9 docs.
     """
-    toks = F.filter(F.split(F.lower(F.coalesce(F.col(text_col),
+    toks = F.filter(F.split(F.lower(F.coalesce(F.col("text"),
                                                F.lit(""))), WS_RE),
                     lambda x: x != "")
-    per = (df.groupBy(source_col)
+    per = (df.groupBy("source")
            .agg(F.sum(F.size(toks).cast("bigint")).alias("n_tokens"),
                 F.count(F.lit(1)).alias("n_docs")))
     tot = per.agg(F.sum("n_tokens").alias("total_tokens"))
@@ -1606,10 +1572,10 @@ def epoch_schedule(df: DataFrame, budget_tokens: int,
     epochs = F.least(
         F.greatest(F.expr("(quota + n_tokens - 1) div n_tokens"),
                    F.lit(1)),
-        F.lit(int(max_epochs)))
-    used = F.least(F.col("quota"), nt * F.lit(int(max_epochs)))
+        F.lit(int(MAX_EPOCHS)))
+    used = F.least(F.col("quota"), nt * F.lit(int(MAX_EPOCHS)))
     return (j.select(
-        F.col(source_col).alias("source"),
+        F.col("source"),
         F.col("n_docs").cast("bigint").alias("n_docs"),
         nt.cast("bigint").alias("n_tokens"),
         F.col("quota").cast("bigint").alias("quota_tokens"),
@@ -1667,10 +1633,7 @@ register(QuerySpec(
 STRAT_SAMPLE_N = 2000
 
 
-def stratified_sample(df: DataFrame, n_sample: int,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      source_col: str = "source",
-                      seed: str = "strat0") -> DataFrame:
+def stratified_sample(df: DataFrame, n_sample: int) -> DataFrame:
     """EXACT-size stratified sample: allocate ``n_sample`` docs across
     sources Neyman-style (more budget to strata with more docs AND more
     internal spread) and draw exactly the allocated count from each —
@@ -1700,10 +1663,10 @@ def stratified_sample(df: DataFrame, n_sample: int,
     from downscaledclimatedata_spark.functions.ranks import (
         binned_row_number, hash_bin)
 
-    toks = F.filter(F.split(F.lower(F.coalesce(F.col(text_col),
+    toks = F.filter(F.split(F.lower(F.coalesce(F.col("text"),
                                                F.lit(""))), WS_RE),
                     lambda x: x != "")
-    base = df.select(F.col(id_col), F.col(source_col).alias("source"),
+    base = df.select(F.col("doc_id"), F.col("source"),
                      F.size(toks).cast("bigint").alias("n_toks"))
     per = (base.groupBy("source")
            .agg(F.count(F.lit(1)).alias("n_docs"),
@@ -1739,14 +1702,14 @@ def stratified_sample(df: DataFrame, n_sample: int,
                                           F.col("n_docs").cast("bigint")))
              .select("source", "quota"))
     keyed = base.withColumn(
-        "h", md5_long(F.col(id_col).cast("string"), seed=f"{seed}:"))
+        "h", md5_long(F.col("doc_id").cast("string"), seed="strat0:"))
     ranked = binned_row_number(
         keyed.withColumn("_hb", hash_bin(F.col("h"))),
-        "_hb", (F.col("h"), F.col(id_col)),
+        "_hb", (F.col("h"), F.col("doc_id")),
         partition_cols=("source",), out="rk")
     return (ranked.join(F.broadcast(alloc), "source")
             .filter(F.col("rk") <= F.col("quota"))
-            .select(F.col(id_col), F.col("source"),
+            .select(F.col("doc_id"), F.col("source"),
                     F.col("rk").cast("bigint").alias("stratum_rank")))
 
 
@@ -1811,11 +1774,7 @@ register(QuerySpec(
 # --- epoch-expanded training order ---------------------------------------------------
 
 def epoch_expand(df: DataFrame, budget_tokens: int,
-                 n_shards: int = 16,
-                 text_col: str = "text", id_col: str = "doc_id",
-                 source_col: str = "source",
-                 max_epochs: int = MAX_EPOCHS,
-                 seed: str = "epoch-expand0") -> DataFrame:
+                 n_shards: int = 16) -> DataFrame:
     """Materialize :func:`epoch_schedule` into an actual training
     order: every document appears once per scheduled epoch of its
     source, and the (doc, epoch) copies are seeded-hash shuffled into
@@ -1832,25 +1791,22 @@ def epoch_expand(df: DataFrame, budget_tokens: int,
     unrelated permutation), realized with global_shuffle's shard/pos
     contract (per-shard windows, never a global sort).
     """
-    sched = (epoch_schedule(df, budget_tokens, text_col, id_col,
-                            source_col, max_epochs)
+    sched = (epoch_schedule(df, budget_tokens)
              .select("source", "epochs"))
-    src = F.col(source_col).alias("source") if source_col != "source" \
-        else F.col("source")
-    expanded = (df.select(F.col(id_col), src)
+    expanded = (df.select("doc_id", "source")
                 .join(F.broadcast(sched), "source")
-                .select(F.col(id_col),
+                .select(F.col("doc_id"),
                         F.explode(F.sequence(F.lit(1), F.col("epochs")))
                         .alias("epoch")))
-    key = md5_long(F.concat_ws("|", F.col(id_col).cast("string"),
+    key = md5_long(F.concat_ws("|", F.col("doc_id").cast("string"),
                                F.col("epoch").cast("string")),
-                   seed=f"{seed}:")
-    keyed = expanded.select(F.col(id_col), "epoch", key.alias("k"))
-    w = Window.partitionBy("shard").orderBy("k", id_col, "epoch")
+                   seed="epoch-expand0:")
+    keyed = expanded.select(F.col("doc_id"), "epoch", key.alias("k"))
+    w = Window.partitionBy("shard").orderBy("k", "doc_id", "epoch")
     return (keyed.withColumn("shard",
                              (F.col("k") % n_shards).cast("bigint"))
             .withColumn("pos", F.row_number().over(w).cast("bigint"))
-            .select(F.col(id_col), F.col("epoch").cast("bigint")
+            .select(F.col("doc_id"), F.col("epoch").cast("bigint")
                     .alias("epoch"), "shard", "pos"))
 
 
@@ -1902,9 +1858,7 @@ register(QuerySpec(
 
 # --- shard balance report --------------------------------------------------------------
 
-def shard_balance(df: DataFrame, n_shards: int = N_SHUFFLE_SHARDS,
-                  text_col: str = "text", id_col: str = "doc_id",
-                  seed: str = "epoch0") -> DataFrame:
+def shard_balance(df: DataFrame) -> DataFrame:
     """Token-mass balance of :func:`global_shuffle`'s shards — the
     pre-flight check before a training run trusts its data loader: a
     hash shuffle balances DOC COUNTS by construction, but token mass
@@ -1918,11 +1872,11 @@ def shard_balance(df: DataFrame, n_shards: int = N_SHUFFLE_SHARDS,
     per-shard SUMS), so the report costs one scan + a |shards|-row
     aggregate.
     """
-    toks = F.filter(F.split(F.lower(F.coalesce(F.col(text_col),
+    toks = F.filter(F.split(F.lower(F.coalesce(F.col("text"),
                                                F.lit(""))), WS_RE),
                     lambda x: x != "")
-    key = md5_long(F.col(id_col).cast("string"), seed=f"{seed}:")
-    per = (df.select((key % n_shards).alias("shard"),
+    key = md5_long(F.col("doc_id").cast("string"), seed="epoch0:")
+    per = (df.select((key % N_SHUFFLE_SHARDS).alias("shard"),
                      F.size(toks).cast("bigint").alias("n_toks"))
            .groupBy("shard").agg(F.sum("n_toks").alias("mass")))
     return (per.agg(F.count(F.lit(1)).alias("n_shards"),
@@ -1977,9 +1931,7 @@ register(QuerySpec(
 
 # --- per-source document-length profile ---------------------------------------------
 
-def length_profile(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id",
-                   source_col: str = "source") -> DataFrame:
+def length_profile(df: DataFrame) -> DataFrame:
     """Per-source document-length percentile table (p25/p50/p75/p95 of
     token counts + count) — the dataset-card table that exposes
     truncation risk (p95 vs the training context window) and
@@ -1991,16 +1943,16 @@ def length_profile(df: DataFrame, text_col: str = "text",
     from downscaledclimatedata_spark.functions.ranks import (
         grouped_quantile_cont)
 
-    toks = F.filter(F.split(F.lower(F.coalesce(F.col(text_col),
+    toks = F.filter(F.split(F.lower(F.coalesce(F.col("text"),
                                                F.lit(""))), WS_RE),
                     lambda x: x != "")
-    base = df.select(F.col(id_col),
-                     F.col(source_col).alias("source"),
+    base = df.select(F.col("doc_id"),
+                     F.col("source"),
                      F.size(toks).cast("double").alias("n_toks"))
     prof = grouped_quantile_cont(
         base, "n_toks",
         [(0.25, "p25"), (0.5, "p50"), (0.75, "p75"), (0.95, "p95")],
-        group_cols=("source",), id_cols=(id_col,), count_name="n_docs")
+        group_cols=("source",), id_cols=("doc_id",), count_name="n_docs")
     return prof.select("source",
                        F.col("n_docs").cast("bigint").alias("n_docs"),
                        "p25", "p50", "p75", "p95") \
@@ -2041,8 +1993,7 @@ register(QuerySpec(
 
 # --- deterministic source interleave ---------------------------------------------
 
-def source_interleave(df: DataFrame, key_col: str = "source",
-                      id_col: str = "doc_id") -> DataFrame:
+def source_interleave(df: DataFrame) -> DataFrame:
     """(id, key, pos) deterministic round-robin interleave of the
     corpus's sources: position ``pos = rnk * n_sources + sidx`` where
     ``rnk`` is the document's 0-based sequence number within its source
@@ -2067,23 +2018,23 @@ def source_interleave(df: DataFrame, key_col: str = "source",
     from downscaledclimatedata_spark.functions.ranks import (
         binned_row_number, value_bin)
 
-    st = df.agg(F.min(id_col), F.max(id_col)).first()
+    st = df.agg(F.min("doc_id"), F.max("doc_id")).first()
     if st[0] is None:
         return df.sparkSession.createDataFrame(
-            [], f"{id_col} long, {key_col} string, pos long")
+            [], "doc_id long, source string, pos long")
     lo, hi = float(st[0]), float(st[1])
-    binned = df.select(id_col, key_col).withColumn(
-        "_ibin", value_bin(F.col(id_col).cast("double"), lo, hi))
-    ranked = binned_row_number(binned, "_ibin", (id_col,),
-                               partition_cols=(key_col,), out="_irk")
-    wsrc = Window.orderBy(F.asc_nulls_first(key_col))
-    src = (df.select(key_col).distinct()
-           .select(key_col,
+    binned = df.select("doc_id", "source").withColumn(
+        "_ibin", value_bin(F.col("doc_id").cast("double"), lo, hi))
+    ranked = binned_row_number(binned, "_ibin", ("doc_id",),
+                               partition_cols=("source",), out="_irk")
+    wsrc = Window.orderBy(F.asc_nulls_first("source"))
+    src = (df.select("source").distinct()
+           .select("source",
                    (F.row_number().over(wsrc) - 1).alias("_sidx"),
                    F.count(F.lit(1)).over(
                        Window.partitionBy()).alias("_nsrc")))
-    return (ranked.join(F.broadcast(src), key_col)
-            .select(id_col, key_col,
+    return (ranked.join(F.broadcast(src), "source")
+            .select("doc_id", "source",
                     ((F.col("_irk") - 1) * F.col("_nsrc")
                      + F.col("_sidx")).cast("bigint").alias("pos")))
 
@@ -2119,9 +2070,7 @@ register(QuerySpec(
 
 # --- mixture temperature curve -----------------------------------------------------
 
-def mixture_temperature_curve(df: DataFrame, budget_tokens: int,
-                              source_col: str = "source",
-                              text_col: str = "text") -> DataFrame:
+def mixture_temperature_curve(df: DataFrame, budget_tokens: int) -> DataFrame:
     """The tuning table for :func:`domain_mixture_sample`'s α knob:
     per-source weight, mixture share and acceptance rate at the three
     temperatures whose arithmetic is EXACT cross-engine — α=1
@@ -2136,9 +2085,9 @@ def mixture_temperature_curve(df: DataFrame, budget_tokens: int,
     Shares and rates are single divisions of exact <2^53 integer
     products — bit-identical in both engines.
     """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), WS_RE),
+    toks = F.filter(F.split(F.lower(F.col("text")), WS_RE),
                     lambda x: x != "")
-    stats = (df.select(F.col(source_col).alias("source"),
+    stats = (df.select(F.col("source"),
                        F.coalesce(F.size(toks).cast("bigint"), F.lit(0))
                        .alias("n_tokens"))
              .groupBy("source")
@@ -2216,14 +2165,11 @@ DSIR_SCALE = 1_000_000    # per-bucket likelihood-ratio fixed point
 DSIR_KEEP_DIV = 10        # keep n_docs div 10 (rank-defined top decile)
 
 
-def dsir_resample(df: DataFrame, target_lang: str = "en",
-                  text_col: str = "text", id_col: str = "doc_id",
-                  buckets: int = DSIR_BUCKETS,
-                  keep_div: int = DSIR_KEEP_DIV) -> DataFrame:
+def dsir_resample(df: DataFrame, keep_div: int = DSIR_KEEP_DIV) -> DataFrame:
     """Data Selection via Importance Resampling (the DSIR recipe of
     Xie et al. 2023), made deterministic and exact-integer: score every
     raw document by how much its hashed-unigram profile looks like a
-    TARGET domain (here: the ``lang == target_lang`` subset standing in
+    TARGET domain (here: the ``lang == 'en'`` subset standing in
     for "high-quality target distribution"), then keep the top
     ``1/keep_div`` of the corpus by score.
 
@@ -2240,7 +2186,7 @@ def dsir_resample(df: DataFrame, target_lang: str = "en",
     output size data-dependent.
 
     Spark shape: one tokenize/explode pass feeds both bucket-count
-    relations; the per-bucket score table is ``buckets`` rows —
+    relations; the per-bucket score table is ``DSIR_BUCKETS`` rows —
     broadcast back onto the token relation; ranking runs on the
     two-phase binned rank (windows on score bins, never a global sort);
     the count scalars (corpus size for the quota, min/max sizing the
@@ -2253,14 +2199,14 @@ def dsir_resample(df: DataFrame, target_lang: str = "en",
     if keep_div < 2:
         raise ValueError(f"keep_div must be >= 2, got {keep_div}")
     toks = df.select(
-        F.col(id_col), F.col("lang"),
-        F.explode(F.filter(F.split(F.lower(F.col(text_col)), WS_RE),
+        F.col("doc_id"), F.col("lang"),
+        F.explode(F.filter(F.split(F.lower(F.col("text")), WS_RE),
                            lambda x: x != "")).alias("tok"))
     feat = toks.select(
-        F.col(id_col), F.col("lang"),
-        (md5_long(F.col("tok")) % buckets).alias("b")).localCheckpoint()
+        F.col("doc_id"), F.col("lang"),
+        (md5_long(F.col("tok")) % DSIR_BUCKETS).alias("b")).localCheckpoint()
     raw_cnt = feat.groupBy("b").agg(F.count("*").alias("ns"))
-    tgt_cnt = (feat.filter(F.col("lang") == target_lang)
+    tgt_cnt = (feat.filter(F.col("lang") == "en")
                .groupBy("b").agg(F.count("*").alias("nt")))
     score = (raw_cnt.join(tgt_cnt, "b", "left")
              .select("b", ((F.coalesce(F.col("nt"), F.lit(0)) + 1)
@@ -2269,12 +2215,12 @@ def dsir_resample(df: DataFrame, target_lang: str = "en",
                      (F.col("ns") + 1).cast("bigint").alias("den"))
              .select("b", F.expr("num div den").alias("sc")))
     docw = (feat.join(F.broadcast(score), "b")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sum("sc").alias("tot"), F.count("*").alias("ntok"))
-            .select(F.col(id_col),
+            .select(F.col("doc_id"),
                     F.expr("tot div ntok").alias("w")))
-    allw = (df.select(id_col).join(docw, id_col, "left")
-            .select(F.col(id_col),
+    allw = (df.select("doc_id").join(docw, "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.coalesce(F.col("w"), F.lit(0)).cast("bigint")
                     .alias("w")))
     n_docs = allw.count()
@@ -2283,9 +2229,9 @@ def dsir_resample(df: DataFrame, target_lang: str = "en",
     lo, hi = float(st[0] or 0), float(st[1] or 0)
     ranked = binned_row_number(
         allw.withColumn("_wbin", value_bin(F.col("w"), lo, hi)),
-        "_wbin", ("w", id_col), out="rn")
+        "_wbin", ("w", "doc_id"), out="rn")
     return (ranked.filter(F.col("rn") > n_docs - quota)
-            .select(F.col(id_col), F.col("w").alias("dsir_score")))
+            .select(F.col("doc_id"), F.col("w").alias("dsir_score")))
 
 
 def prep_dsir_query(spark: SparkSession, sf_dir: str) -> DataFrame:

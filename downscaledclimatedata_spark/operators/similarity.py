@@ -68,8 +68,8 @@ def _fixed_sample_sql(col: str, spacing: int, count: int) -> str:
 QCLAMP = 100_000_000
 
 
-def quantize(col: Column, scale: int = QUANT) -> Column:
-    """array<float> -> array<bigint>, component-wise round(x*scale)
+def quantize(col: Column) -> Column:
+    """array<float> -> array<bigint>, component-wise round(x*QUANT)
     clamped to ±QCLAMP.
 
     x*scale is never an exact .5 for binary-fraction floats with a
@@ -78,7 +78,7 @@ def quantize(col: Column, scale: int = QUANT) -> Column:
     return F.transform(
         col,
         lambda x: F.least(
-            F.greatest(F.round(x.cast("double") * scale),
+            F.greatest(F.round(x.cast("double") * QUANT),
                        F.lit(float(-QCLAMP))),
             F.lit(float(QCLAMP))).cast("long"))
 
@@ -109,8 +109,7 @@ def sq_norm(a: Column) -> Column:
     return int_dot(a, a)
 
 
-def _argmin_pick(cands: str, key: str, vec: str, norm: str,
-                 qv: str = "qv", n2: str = "n2") -> Column:
+def _argmin_pick(cands: str, key: str, vec: str, norm: str) -> Column:
     """Key of the squared-L2 argmin candidate, computed PER ROW over an
     array<struct> candidate column — the shuffle-free form of the
     ``crossJoin(broadcast(cands)) -> groupBy -> min(struct(dist, key))``
@@ -124,20 +123,19 @@ def _argmin_pick(cands: str, key: str, vec: str, norm: str,
     ``F.expr`` parse — nested Python lambda builders cost dozens of
     py4j round trips per level (the O6 plan-construction lesson).
     """
-    return _argmin_struct(cands, key, vec, norm, qv, n2)["k"]
+    return _argmin_struct(cands, key, vec, norm)["k"]
 
 
-def _argmin_struct(cands: str, key: str, vec: str, norm: str,
-                   qv: str = "qv", n2: str = "n2") -> Column:
+def _argmin_struct(cands: str, key: str, vec: str, norm: str) -> Column:
     """The (d, k) struct of the squared-L2 argmin candidate (see
     :func:`_argmin_pick`) — for callers that need the winning DISTANCE
     too (cell stats, OOD gate). Project the struct as its own column
     before reading both fields, so it stays single-evaluated."""
-    dot = (f"aggregate(zip_with({qv}, c.{vec}, (x, y) -> x * y), "
+    dot = (f"aggregate(zip_with(qv, c.{vec}, (x, y) -> x * y), "
            f"cast(0 as bigint), (acc, x) -> acc + x)")
     return F.expr(
         f"array_min(transform({cands}, c -> "
-        f"struct({n2} + c.{norm} - 2 * {dot} as d, c.{key} as k)))")
+        f"struct(n2 + c.{norm} - 2 * {dot} as d, c.{key} as k)))")
 
 
 def _cands_row(df: DataFrame, cols: list, alias: str) -> DataFrame:
@@ -197,8 +195,7 @@ def _argmin_assign(base: DataFrame, cents: DataFrame, id_col: str,
     return best.select(*cols)
 
 
-def _collect_codebook(cents: DataFrame, key: str = "cid",
-                      vec: str = "cv", norm: str = "cn2"):
+def _collect_codebook(cents: DataFrame):
     """Driver-side numpy snapshot of a bounded codebook relation, for
     the Arrow assignment kernel (guide §4.2): the same codebook bytes
     the relational form broadcasts as rows, collected once per build
@@ -219,7 +216,7 @@ def _collect_codebook(cents: DataFrame, key: str = "cid",
       ``gmin``: the min key overall (every centroid has NULL distance
       to an unclean row).
     """
-    rows = cents.select(key, vec, norm).collect()
+    rows = cents.select("cid", "cv", "cn2").collect()
     return _codebook_payload([(r[0], r[1], r[2]) for r in rows])
 
 
@@ -253,8 +250,6 @@ def _codebook_payload(rows):
 
 
 def _argmin_assign_arrow(base: DataFrame, cents: DataFrame, *,
-                         qv: str = "qv", n2: str = "n2",
-                         out: str = "cid",
                          dist_out: str | None = None) -> DataFrame:
     """Nearest-centroid assignment as ONE vectorized Arrow pass
     (guide §4.2): batches of quantized vectors are handed to a NumPy
@@ -280,16 +275,16 @@ def _argmin_assign_arrow(base: DataFrame, cents: DataFrame, *,
 
     payload = _collect_codebook(cents)
     if payload is None:
-        res = base.withColumn(out, F.lit(None).cast("long"))
+        res = base.withColumn("cid", F.lit(None).cast("long"))
         if dist_out is not None:
             res = res.withColumn(dist_out, F.lit(None).cast("long"))
         return res.filter(F.lit(False))
     bc = base.sparkSession.sparkContext.broadcast(payload)
-    fields = list(base.schema.fields) + [StructField(out, LongType())]
+    fields = list(base.schema.fields) + [StructField("cid", LongType())]
     if dist_out is not None:
         fields.append(StructField(dist_out, LongType()))
     schema = StructType(fields)
-    qv_name, n2_name, want_dist = qv, n2, dist_out is not None
+    qv_name, n2_name, want_dist = "qv", "n2", dist_out is not None
 
     def assign(batches):
         import numpy as np
@@ -339,114 +334,13 @@ def _argmin_assign_arrow(base: DataFrame, cents: DataFrame, *,
                 if want_dist:
                     dist_arr = pa.array(dists, type=pa.int64())
             cols = b.columns + [cid_out]
-            onames = names + [out]
+            onames = names + ["cid"]
             if want_dist:
                 cols.append(dist_arr)
                 onames.append(dist_out)
             yield pa.RecordBatch.from_arrays(cols, names=onames)
 
     return base.mapInArrow(assign, schema)
-
-
-def _pq_encode_arrow(subs: DataFrame, cents: DataFrame,
-                     id_col: str) -> DataFrame:
-    """Per-subspace nearest-sub-centroid encoding as one Arrow pass —
-    the PQ analogue of :func:`_argmin_assign_arrow` (guide §4.2).
-    ``subs``: one row per (vector, subspace) = (id, m, sv);
-    ``cents``: (cid, m, cv). Returns (id, m, code).
-
-    Σ(x−y)² is computed as Σx² + Σy² − 2Σxy in the same exact int64
-    (QCLAMP bounds it), identical values to the JVM fold; tie-break
-    and NULL semantics as in :func:`_collect_codebook`, per subspace —
-    a row whose ``m`` has no sub-codebook entry is dropped (the
-    ``try_element_at`` miss of the map form).
-    """
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    crows = cents.select("cid", "m", "cv").collect()
-    groups = {}
-    for r in crows:
-        cn2 = (sum(int(x) * int(x) for x in r[2])
-               if r[2] is not None and all(x is not None for x in r[2])
-               else None)
-        groups.setdefault(r[1], []).append((r[0], r[2], cn2))
-    payload = {m: _codebook_payload(rows) for m, rows in groups.items()}
-    base = subs.select(F.col(id_col), "m", "sv")
-    if not payload:
-        return (base.withColumn("code", F.lit(None).cast("long"))
-                .filter(F.lit(False)).select(id_col, "m", "code"))
-    bc = base.sparkSession.sparkContext.broadcast(payload)
-    schema = StructType([base.schema[id_col],
-                         StructField("m", base.schema["m"].dataType),
-                         StructField("code", LongType())])
-
-    def encode(batches):
-        import numpy as np
-        import pyarrow as pa
-
-        p = bc.value
-        for b in batches:
-            names = b.schema.names
-            ids = b.column(0)
-            marr = b.column(1)
-            scol = b.column(2)
-            n = b.num_rows
-            mnp = marr.to_numpy(zero_copy_only=False)
-            sl = scol.to_pylist()
-            keep, out_m, out_id, out_code = [], [], [], []
-            idl = ids.to_pylist()
-            # vectorize per subspace where the group is regular
-            codes = [None] * n
-            drop = [False] * n
-            for m in np.unique(mnp):
-                g = p.get(int(m))
-                idx = np.nonzero(mnp == m)[0]
-                if g is None:
-                    for i in idx:
-                        drop[int(i)] = True
-                    continue
-                fast = g["fast"]
-                vs = [sl[int(i)] for i in idx]
-                regular = (fast is not None and all(
-                    v is not None and len(v) == fast[3]
-                    and all(x is not None for x in v) for v in vs))
-                if regular and len(idx):
-                    cid_f, c_f, cn2_f, d_f = fast
-                    q = np.array(vs, dtype=np.int64).reshape(len(idx), d_f)
-                    sn2 = (q * q).sum(axis=1)
-                    dist = sn2[:, None] + cn2_f[None, :] - 2 * (q @ c_f.T)
-                    j = np.argmin(dist, axis=1)
-                    for pos, i in enumerate(idx):
-                        codes[int(i)] = int(cid_f[j[pos]])
-                    continue
-                for i in idx:  # edge rows: per-row null semantics
-                    v = sl[int(i)]
-                    ok = v is not None and all(x is not None for x in v)
-                    grp = g["by_dim"].get(len(v)) if ok else None
-                    if grp is None:
-                        codes[int(i)] = g["gmin"]
-                        continue
-                    nmin = g["null_min"][len(v)]
-                    if nmin is not None:
-                        codes[int(i)] = int(nmin)
-                        continue
-                    kd, cd, cnd = grp
-                    vv = np.asarray(v, dtype=np.int64)
-                    dd = int(vv @ vv) + cnd - 2 * (cd @ vv)
-                    j = int(np.argmin(dd))
-                    codes[int(i)] = int(kd[j])
-            for i in range(n):
-                if drop[i]:
-                    continue
-                out_id.append(idl[i]); out_m.append(int(mnp[i]))
-                out_code.append(codes[i])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_id, type=b.schema.field(0).type),
-                 pa.array(out_m, type=b.schema.field(1).type),
-                 pa.array(out_code, type=pa.int64())],
-                names=[names[0], "m", "code"])
-
-    return base.mapInArrow(encode, schema)
 
 
 def _cascade_assign_arrow(base: DataFrame, leaf: DataFrame, id_col: str,
@@ -660,26 +554,24 @@ def _payload_with_null_keys(rows):
     return p
 
 
-def cosine_topk_quantized(emb: DataFrame, id_col: str = "vec_id",
-                          vec_col: str = "embedding",
-                          k: int = TOP_K, query_mod: int = QUERY_MOD,
-                          n_queries: int = N_QUERIES) -> DataFrame:
+def cosine_topk_quantized(emb: DataFrame,
+                          vec_col: str = "embedding") -> DataFrame:
     """Exact brute-force cosine top-k of every corpus vector per query.
 
-    Query set = a FIXED ``n_queries`` ids (spaced ``query_mod`` apart), so
-    cost is N x n_queries — linear in the corpus with a constant,
+    Query set = a FIXED ``N_QUERIES`` ids (spaced ``QUERY_MOD`` apart), so
+    cost is N x N_QUERIES — linear in the corpus with a constant,
     broadcast-sized query relation. The corpus scan is a single narrow pass.
     """
     from pyspark.sql import Window
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("q"),
+    base = emb.select(F.col("vec_id"), quantize(F.col(vec_col)).alias("q"),
                       sq_norm(quantize(F.col(vec_col))).alias("n2"))
     # zero-norm vectors have no defined cosine (and ANSI mode raises on
     # the 0.0 division) -> excluded from both sides, mirrored in the oracle
     base = base.filter(F.col("n2") > 0)
-    queries = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-               .select(F.col(id_col).alias("query_id"), F.col("q").alias("qq"),
+    queries = (base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+               .select(F.col("vec_id").alias("query_id"), F.col("q").alias("qq"),
                        F.col("n2").alias("qn2")))
-    corpus = base.select(F.col(id_col).alias("match_id"), F.col("q").alias("cq"),
+    corpus = base.select(F.col("vec_id").alias("match_id"), F.col("q").alias("cq"),
                          F.col("n2").alias("cn2"))
     scored = (
         corpus.crossJoin(F.broadcast(queries))
@@ -692,26 +584,23 @@ def cosine_topk_quantized(emb: DataFrame, id_col: str = "vec_id",
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("match_id"))
     return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "cosine", "rnk"))
 
 
-def cosine_topk_float(emb: DataFrame, id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      k: int = TOP_K, query_mod: int = QUERY_MOD,
-                      n_queries: int = N_QUERIES) -> DataFrame:
+def cosine_topk_float(emb: DataFrame) -> DataFrame:
     """True-float brute-force cosine top-k (sequential fold, JVM-side)."""
     from pyspark.sql import Window
-    vec = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    vec = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     base = emb.select(
-        F.col(id_col), vec.alias("v"),
+        F.col("vec_id"), vec.alias("v"),
         F.sqrt(F.aggregate(F.transform(vec, lambda x: x * x),
                            F.lit(0.0), lambda a, x: a + x)).alias("norm"))
     base = base.filter(F.col("norm") > 0)  # zero-norm: no defined cosine
-    queries = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-               .select(F.col(id_col).alias("query_id"), F.col("v").alias("qv"),
+    queries = (base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+               .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
                        F.col("norm").alias("qnorm")))
-    corpus = base.select(F.col(id_col).alias("match_id"), F.col("v").alias("cv"),
+    corpus = base.select(F.col("vec_id").alias("match_id"), F.col("v").alias("cv"),
                          F.col("norm").alias("cnorm"))
     dot = F.aggregate(F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: x * y),
                       F.lit(0.0), lambda a, x: a + x)
@@ -721,17 +610,17 @@ def cosine_topk_float(emb: DataFrame, id_col: str = "vec_id",
                       (dot / (F.col("qnorm") * F.col("cnorm"))).alias("cosine")))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("match_id"))
     return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "cosine", "rnk"))
 
 
-def _hyperplanes(n_planes: int = N_PLANES, dim: int = DIM) -> list[list[int]]:
+def _hyperplanes() -> list[list[int]]:
     """Deterministic ±1 hyperplanes derived from md5 (no RNG, both engines
     can reproduce the exact same planes as SQL literals)."""
     planes = []
-    for p in range(n_planes):
+    for p in range(N_PLANES):
         row = []
-        for d in range(dim):
+        for d in range(DIM):
             h = int(hashlib.md5(f"plane{p}:{d}".encode()).hexdigest()[:15], 16)
             row.append(1 if h % 2 == 0 else -1)
         planes.append(row)
@@ -748,34 +637,31 @@ def lsh_bucket_id(qcol: Column, planes: list[list[int]]) -> Column:
     return bucket
 
 
-def lsh_buckets(emb: DataFrame, id_col: str = "vec_id",
-                vec_col: str = "embedding") -> DataFrame:
+def lsh_buckets(emb: DataFrame) -> DataFrame:
     """(vec_id, bucket_id) assignment — the ANN partitioning relation."""
     planes = _hyperplanes()
     return emb.select(
-        F.col(id_col),
-        lsh_bucket_id(quantize(F.col(vec_col)), planes).alias("bucket_id"))
+        F.col("vec_id"),
+        lsh_bucket_id(quantize(F.col("embedding")), planes).alias("bucket_id"))
 
 
-def lsh_topk(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-             k: int = TOP_K, query_mod: int = QUERY_MOD,
-             n_queries: int = N_QUERIES) -> DataFrame:
+def lsh_topk(emb: DataFrame) -> DataFrame:
     """ANN top-k restricted to same-bucket candidates (scale path).
 
     Equi-join on bucket_id replaces the cartesian scan; recall < 1.0 by
     construction, cost ∝ sum of squared bucket sizes.
     """
     from pyspark.sql import Window
-    q = lsh_buckets(emb, id_col, vec_col)
-    base = emb.join(q, id_col).select(
-        F.col(id_col), F.col("bucket_id"),
-        quantize(F.col(vec_col)).alias("qv"),
-        sq_norm(quantize(F.col(vec_col))).alias("n2"))
+    q = lsh_buckets(emb)
+    base = emb.join(q, "vec_id").select(
+        F.col("vec_id"), F.col("bucket_id"),
+        quantize(F.col("embedding")).alias("qv"),
+        sq_norm(quantize(F.col("embedding"))).alias("n2"))
     base = base.filter(F.col("n2") > 0)  # zero-norm: no defined cosine
-    queries = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-               .select(F.col(id_col).alias("query_id"), F.col("bucket_id"),
+    queries = (base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+               .select(F.col("vec_id").alias("query_id"), F.col("bucket_id"),
                        F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
-    corpus = base.select(F.col(id_col).alias("match_id"),
+    corpus = base.select(F.col("vec_id").alias("match_id"),
                          F.col("bucket_id"), F.col("qv").alias("cq"),
                          F.col("n2").alias("cn2"))
     scored = (
@@ -787,33 +673,31 @@ def lsh_topk(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
                  ).alias("cosine")))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("match_id"))
     return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "cosine", "rnk"))
 
 
-def embedding_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
-                            vec_col: str = "embedding",
-                            threshold: float = 0.40) -> DataFrame:
+def embedding_neardup_pairs(emb: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, LSH-restricted.
 
     Candidates are same-bucket pairs (i < j) — the equi-join scale path:
     shuffle is proportional to corpus size and pair work to the sum of
     squared bucket sizes, never O(n²) over the corpus. Exact quantized
-    cosine then filters candidates to `cosine > threshold`.
+    cosine then filters candidates to `cosine > 0.40`.
 
     The production threshold for near-dup removal is ~0.95+; the default
     here is tuned to the synthetic table (which has no planted dups) so
     the operator's output is non-trivial at test scale.
     """
-    q = lsh_buckets(emb, id_col, vec_col)
-    base = emb.join(q, id_col).select(
-        F.col(id_col), F.col("bucket_id"),
-        quantize(F.col(vec_col)).alias("qv"),
-        sq_norm(quantize(F.col(vec_col))).alias("n2"))
+    q = lsh_buckets(emb)
+    base = emb.join(q, "vec_id").select(
+        F.col("vec_id"), F.col("bucket_id"),
+        quantize(F.col("embedding")).alias("qv"),
+        sq_norm(quantize(F.col("embedding"))).alias("n2"))
     base = base.filter(F.col("n2") > 0)  # zero-norm: no defined cosine
-    a = base.select(F.col(id_col).alias("vec_a"), F.col("bucket_id"),
+    a = base.select(F.col("vec_id").alias("vec_a"), F.col("bucket_id"),
                     F.col("qv").alias("qa"), F.col("n2").alias("na"))
-    b = base.select(F.col(id_col).alias("vec_b"), F.col("bucket_id"),
+    b = base.select(F.col("vec_id").alias("vec_b"), F.col("bucket_id"),
                     F.col("qv").alias("qb"), F.col("n2").alias("nb"))
     return (a.join(b, "bucket_id")
             .filter(F.col("vec_a") < F.col("vec_b"))
@@ -821,11 +705,10 @@ def embedding_neardup_pairs(emb: DataFrame, id_col: str = "vec_id",
                     (int_dot(F.col("qa"), F.col("qb")).cast("double")
                      / (F.sqrt(F.col("na").cast("double"))
                         * F.sqrt(F.col("nb").cast("double")))).alias("cosine"))
-            .filter(F.col("cosine") > threshold))
+            .filter(F.col("cosine") > 0.40))
 
 
-def ivf_assign(emb: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding",
+def ivf_assign(emb: DataFrame,
                centroid_mod: int = CENTROID_MOD,
                n_centroids: int = N_CENTROIDS) -> DataFrame:
     """IVF coarse quantizer: assign every vector to its nearest centroid.
@@ -846,12 +729,11 @@ def ivf_assign(emb: DataFrame, id_col: str = "vec_id",
     instead of per-(row, centroid) JVM expression evaluation (measured
     12× at 200k × 352).
     """
-    return _ivf_assign_cols(emb, id_col, vec_col, centroid_mod,
-                            n_centroids).select(F.col(id_col), "cid")
+    return _ivf_assign_cols(emb, centroid_mod, n_centroids).select(
+        F.col("vec_id"), "cid")
 
 
-def _ivf_assign_cols(emb: DataFrame, id_col: str = "vec_id",
-                     vec_col: str = "embedding",
+def _ivf_assign_cols(emb: DataFrame,
                      centroid_mod: int = CENTROID_MOD,
                      n_centroids: int = N_CENTROIDS,
                      extra: tuple = ()) -> DataFrame:
@@ -861,19 +743,18 @@ def _ivf_assign_cols(emb: DataFrame, id_col: str = "vec_id",
     of re-joining the assignment back to the corpus by id (one fewer
     corpus-wide shuffle join). ``extra``: additional ``emb`` columns
     carried through the projection (e.g. a label column)."""
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                      sq_norm(quantize(F.col(vec_col))).alias("n2"),
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"),
+                      sq_norm(quantize(F.col("embedding"))).alias("n2"),
                       *[F.col(e) for e in extra])
-    cents = (base.filter(_fixed_sample(id_col, centroid_mod, n_centroids))
-             .select(F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
+    cents = (base.filter(_fixed_sample("vec_id", centroid_mod, n_centroids))
+             .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"),
                      F.col("n2").alias("cn2")))
-    return (_argmin_assign(base, cents, id_col, n_centroids)
-            .select(F.col(id_col), "qv", "n2", "cid",
+    return (_argmin_assign(base, cents, "vec_id", n_centroids)
+            .select(F.col("vec_id"), "qv", "n2", "cid",
                     *[F.col(e) for e in extra]))
 
 
-def ivf_topk(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-             k: int = TOP_K, query_mod: int = QUERY_MOD,
+def ivf_topk(emb: DataFrame, query_mod: int = QUERY_MOD,
              n_queries: int = N_QUERIES,
              centroid_mod: int = CENTROID_MOD,
              n_centroids: int = N_CENTROIDS) -> DataFrame:
@@ -885,14 +766,13 @@ def ivf_topk(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
     from pyspark.sql import Window
     # assignment carries (qv, n2) on the same projected row — no
     # corpus-wide id join to re-attach vectors (r13)
-    base = (_ivf_assign_cols(emb, id_col, vec_col, centroid_mod,
-                             n_centroids)
-            .select(F.col(id_col), F.col("cid"), "qv", "n2")
+    base = (_ivf_assign_cols(emb, centroid_mod, n_centroids)
+            .select(F.col("vec_id"), F.col("cid"), "qv", "n2")
             .filter(F.col("n2") > 0))  # zero-norm: no defined cosine
-    queries = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-               .select(F.col(id_col).alias("query_id"), F.col("cid"),
+    queries = (base.filter(_fixed_sample("vec_id", query_mod, n_queries))
+               .select(F.col("vec_id").alias("query_id"), F.col("cid"),
                        F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
-    corpus = base.select(F.col(id_col).alias("match_id"), F.col("cid"),
+    corpus = base.select(F.col("vec_id").alias("match_id"), F.col("cid"),
                          F.col("qv").alias("cq"), F.col("n2").alias("cn2"))
     scored = (corpus.join(F.broadcast(queries), "cid")
               .filter(F.col("match_id") != F.col("query_id"))
@@ -902,20 +782,14 @@ def ivf_topk(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
                           * F.sqrt(F.col("cn2").cast("double")))).alias("cosine")))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("match_id"))
     return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "cosine", "rnk"))
 
 
 NPROBE = 2
 
 
-def ivf_topk_multiprobe(emb: DataFrame, id_col: str = "vec_id",
-                        vec_col: str = "embedding", k: int = TOP_K,
-                        query_mod: int = QUERY_MOD,
-                        n_queries: int = N_QUERIES,
-                        centroid_mod: int = CENTROID_MOD,
-                        n_centroids: int = N_CENTROIDS,
-                        nprobe: int = NPROBE) -> DataFrame:
+def ivf_topk_multiprobe(emb: DataFrame, nprobe: int = NPROBE) -> DataFrame:
     """IVF search probing each query's ``nprobe`` nearest inverted lists.
 
     The recall knob of IVF: per-query cost grows with the number of lists
@@ -926,29 +800,28 @@ def ivf_topk_multiprobe(emb: DataFrame, id_col: str = "vec_id",
     runs only over the fixed-size query subset.
     """
     from pyspark.sql import Window
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                      sq_norm(quantize(F.col(vec_col))).alias("n2"))
-    cents = (base.filter(_fixed_sample(id_col, centroid_mod, n_centroids))
-             .select(F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"),
+                      sq_norm(quantize(F.col("embedding"))).alias("n2"))
+    cents = (base.filter(_fixed_sample("vec_id", CENTROID_MOD, N_CENTROIDS))
+             .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"),
                      F.col("n2").alias("cn2")))
-    qranked = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
+    qranked = (base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
                .crossJoin(F.broadcast(cents))
-               .select(F.col(id_col), F.col("cid"),
+               .select(F.col("vec_id"), F.col("cid"),
                        (F.col("n2") + F.col("cn2")
                         - 2 * int_dot(F.col("qv"), F.col("cv"))).alias("dist")))
-    w = Window.partitionBy(id_col).orderBy("dist", "cid")
+    w = Window.partitionBy("vec_id").orderBy("dist", "cid")
     probes = (qranked.withColumn("rn", F.row_number().over(w))
               .filter(F.col("rn") <= nprobe)
-              .select(F.col(id_col).alias("query_id"), "cid"))
+              .select(F.col("vec_id").alias("query_id"), "cid"))
     nz = base.filter(F.col("n2") > 0)  # zero-norm: no defined cosine
     # assignment carries (qv, n2) — no corpus id join (r13)
-    corpus = (_ivf_assign_cols(emb, id_col, vec_col, centroid_mod,
-                               n_centroids)
+    corpus = (_ivf_assign_cols(emb)
               .filter(F.col("n2") > 0)
-              .select(F.col(id_col).alias("match_id"), "cid",
+              .select(F.col("vec_id").alias("match_id"), "cid",
                       F.col("qv").alias("cq"), F.col("n2").alias("mn2")))
-    queries = (nz.filter(_fixed_sample(id_col, query_mod, n_queries))
-               .select(F.col(id_col).alias("query_id"),
+    queries = (nz.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+               .select(F.col("vec_id").alias("query_id"),
                        F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
     qprobe = probes.join(queries, "query_id")
     scored = (corpus.join(F.broadcast(qprobe), "cid")
@@ -960,7 +833,7 @@ def ivf_topk_multiprobe(emb: DataFrame, id_col: str = "vec_id",
     w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
                                                 F.col("match_id"))
     return (scored.withColumn("rnk", F.row_number().over(w2))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "cosine", "rnk"))
 
 
@@ -1181,8 +1054,7 @@ _IVF_SQL = _coarse_sql_prefix(carry_n2=True, assigned="search") + f""", scored A
 
 # --- k-means codebook refinement (Lloyd's iterations, DataFrame-native) ---------
 
-def kmeans_refine(emb: DataFrame, id_col: str = "vec_id",
-                  vec_col: str = "embedding", n_iter: int = 2,
+def kmeans_refine(emb: DataFrame, n_iter: int = 2,
                   centroid_mod: int = CENTROID_MOD,
                   n_centroids: int = N_CENTROIDS) -> DataFrame:
     """Lloyd's k-means over the embedding column, returning refined
@@ -1204,12 +1076,12 @@ def kmeans_refine(emb: DataFrame, id_col: str = "vec_id",
     fold order, ties broken by cid) is reproducible.
     """
     from pyspark.sql import Window
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"))
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"))
     base = base.withColumn(
         "dv", F.transform("qv", lambda x: x.cast("double"))).localCheckpoint()
     # init: the fixed-sample codebook, as doubles
-    cents = (base.filter(_fixed_sample(id_col, centroid_mod, n_centroids))
-             .select(F.col(id_col).alias("cid"), F.col("dv").alias("cv")))
+    cents = (base.filter(_fixed_sample("vec_id", centroid_mod, n_centroids))
+             .select(F.col("vec_id").alias("cid"), F.col("dv").alias("cv")))
     for _ in range(n_iter):
         cn2 = F.aggregate(F.zip_with(F.col("cv"), F.col("cv"),
                                      lambda x, y: x * y),
@@ -1229,11 +1101,11 @@ def kmeans_refine(emb: DataFrame, id_col: str = "vec_id",
                                      lambda x, y: x * y),
                           F.lit(0.0), lambda a, x: a + x)
         scored = (base.crossJoin(F.broadcast(c))
-                  .select(F.col(id_col), "cid", "qv",
+                  .select(F.col("vec_id"), "cid", "qv",
                           (vn2 + F.col("cn2") - 2 * dot).alias("dist")))
-        assigned = (scored.groupBy(id_col)
+        assigned = (scored.groupBy("vec_id")
                     .agg(F.min(F.struct("dist", "cid", "qv")).alias("best"))
-                    .select(id_col, F.col("best.cid").alias("cid"),
+                    .select("vec_id", F.col("best.cid").alias("cid"),
                             F.col("best.qv").alias("qv")))
         comp = assigned.select("cid", F.posexplode("qv").alias("pos", "comp"))
         means = (comp.groupBy("cid", "pos")
@@ -1289,9 +1161,7 @@ register(QuerySpec("similarity_kmeans_refine", similarity_kmeans_query,
 KMEANS_SEARCH_ITERS = 2
 
 
-def ivf_topk_refined(emb: DataFrame, id_col: str = "vec_id",
-                     vec_col: str = "embedding", k: int = TOP_K,
-                     query_mod: int = QUERY_MOD, n_queries: int = N_QUERIES,
+def ivf_topk_refined(emb: DataFrame,
                      centroid_mod: int = CENTROID_MOD,
                      n_centroids: int = N_CENTROIDS,
                      n_iter: int = KMEANS_SEARCH_ITERS,
@@ -1314,13 +1184,13 @@ def ivf_topk_refined(emb: DataFrame, id_col: str = "vec_id",
     cosine is exact integer arithmetic.
     """
     from pyspark.sql import Window
-    cents = (kmeans_refine(emb, id_col, vec_col, n_iter,
+    cents = (kmeans_refine(emb, n_iter,
                            centroid_mod, n_centroids)
              .select("cid", F.col("centroid").alias("cv")))
     cn2 = F.aggregate(F.zip_with(F.col("cv"), F.col("cv"), lambda x, y: x * y),
                       F.lit(0.0), lambda a, x: a + x)
     c = cents.select("cid", "cv", cn2.alias("cn2"))
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"))
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"))
     base = base.withColumn("dv", F.transform("qv", lambda x: x.cast("double")))
     # corpus assignment: relational argmin (r13 measured — interpreted
     # HOF lambdas lose to the codegen'd crossJoin + groupBy; NumPy is
@@ -1332,16 +1202,16 @@ def ivf_topk_refined(emb: DataFrame, id_col: str = "vec_id",
     dot = F.aggregate(F.zip_with(F.col("dv"), F.col("cv"), lambda x, y: x * y),
                       F.lit(0.0), lambda a, x: a + x)
     assigned = (base.crossJoin(F.broadcast(c))
-                .select(F.col(id_col), "cid", "qv",
+                .select(F.col("vec_id"), "cid", "qv",
                         (vn2 + F.col("cn2") - 2 * dot).alias("dist"))
-                .groupBy(id_col)
+                .groupBy("vec_id")
                 .agg(F.min(F.struct("dist", "cid", "qv")).alias("best"))
-                .select(id_col, F.col("best.cid").alias("cid"),
+                .select("vec_id", F.col("best.cid").alias("cid"),
                         F.col("best.qv").alias("qv")))
     withn = (assigned.withColumn("n2", sq_norm(F.col("qv")))
              .filter(F.col("n2") > 0))  # zero-norm: no defined cosine
-    qbase = (withn.filter(_fixed_sample(id_col, query_mod, n_queries))
-             .select(F.col(id_col).alias("query_id"),
+    qbase = (withn.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+             .select(F.col("vec_id").alias("query_id"),
                      F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
     # query's nprobe nearest refined lists: per-row sorted top-nprobe
     # over the broadcast codebook ARRAY (the former rank-window over
@@ -1353,17 +1223,17 @@ def ivf_topk_refined(emb: DataFrame, id_col: str = "vec_id",
             "cast(0.0 as double), (acc, x) -> acc + x)")
     vn2d = ("aggregate(zip_with(dv, dv, (x, y) -> x * y), "
             "cast(0.0 as double), (acc, x) -> acc + x)")
-    probes = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
+    probes = (base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
               .crossJoin(F.broadcast(crow))
               .withColumn("t", F.expr(
                   f"slice(array_sort(transform(kmc, c -> "
                   f"struct({vn2d} + c.cn2 - 2 * {dotd} as d, "
                   f"c.cid as k))), 1, {int(nprobe)})"))
-              .select(F.col(id_col).alias("query_id"),
+              .select(F.col("vec_id").alias("query_id"),
                       F.explode("t").alias("p"))
               .select("query_id", F.col("p.k").alias("cid")))
     queries = probes.join(qbase, "query_id")
-    corpus = withn.select(F.col(id_col).alias("match_id"), "cid",
+    corpus = withn.select(F.col("vec_id").alias("match_id"), "cid",
                           F.col("qv").alias("cq"), F.col("n2").alias("mn2"))
     searched = (corpus.join(F.broadcast(queries), "cid")
                 .filter(F.col("match_id") != F.col("query_id"))
@@ -1374,7 +1244,7 @@ def ivf_topk_refined(emb: DataFrame, id_col: str = "vec_id",
     w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
                                                 F.col("match_id"))
     return (searched.withColumn("rnk", F.row_number().over(w2))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "cosine", "rnk"))
 
 
@@ -1616,8 +1486,7 @@ register(QuerySpec("similarity_ivf_multiprobe", similarity_ivf_multiprobe_query,
                    description=f"IVF ANN multiprobe search (nprobe={NPROBE} recall knob)"))
 
 
-def ann_recall(emb: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding", k: int = TOP_K) -> DataFrame:
+def ann_recall(emb: DataFrame) -> DataFrame:
     """Measured recall@k of the IVF searchers against the EXACT
     brute-force ground truth, in-engine — the number an ANN deployment
     tunes nprobe/codebook size against (the "measure, don't guess"
@@ -1635,12 +1504,12 @@ def ann_recall(emb: DataFrame, id_col: str = "vec_id",
     <= k rows. Nothing here adds a corpus-scale shuffle beyond what the
     three searchers already do.
     """
-    truth = (cosine_topk_quantized(emb, id_col, vec_col, k=k)
+    truth = (cosine_topk_quantized(emb)
              .select("query_id", "match_id").localCheckpoint())
     methods = (
-        ("ivf_nprobe1", ivf_topk(emb, id_col, vec_col, k=k)),
+        ("ivf_nprobe1", ivf_topk(emb)),
         (f"ivf_nprobe{NPROBE}",
-         ivf_topk_multiprobe(emb, id_col, vec_col, k=k)),
+         ivf_topk_multiprobe(emb)),
     )
     out = None
     for name, approx in methods:
@@ -1721,63 +1590,55 @@ def _sq_l2(a: Column, b: Column) -> Column:
         F.lit(0).cast("long"), lambda acc, x: acc + x)
 
 
-def pq_encode(emb: DataFrame, id_col: str = "vec_id",
-              vec_col: str = "embedding",
-              centroid_mod: int = CENTROID_MOD,
-              ks: int = PQ_KS, m_sub: int = M_SUB) -> DataFrame:
+def pq_encode(emb: DataFrame,
+              centroid_mod: int = CENTROID_MOD, m_sub: int = M_SUB) -> DataFrame:
     """Product-quantization encoder: each vector -> M_SUB small codes.
 
     Sub-codebooks are the PQ analogue of ivf_assign's coarse codebook: a
-    FIXED deterministic sample of ``ks`` corpus vectors, sliced into
+    FIXED deterministic sample of ``PQ_KS`` corpus vectors, sliced into
     M_SUB subvectors (k-means-free so both engines reproduce the exact
     codebook; a production build would Lloyd's-refine each subspace with
     kmeans_refine, same join shape). Returns one row per (vector,
     subspace): (id, m, code) where code is the id of the nearest
     sub-centroid by exact integer squared-L2.
 
-    Scale: the codebook is M_SUB x ks rows (KB-sized) and broadcast;
-    encode cost is N x M_SUB x ks with map-side argmin only — the
+    Scale: the codebook is M_SUB x PQ_KS rows (KB-sized) and broadcast;
+    encode cost is N x M_SUB x PQ_KS with map-side argmin only — the
     standard PQ build pass. The encoded corpus is M_SUB bigints per
     vector (vs DIM floats), the memory win that makes billion-scale
     ANN fit.
     """
     base = emb.select(
-        F.col(id_col),
-        _subvectors(quantize(F.col(vec_col)),
+        F.col("vec_id"),
+        _subvectors(quantize(F.col("embedding")),
                     m_sub, DIM // m_sub).alias("subs"))
     subs = base.select(
-        id_col, F.posexplode("subs").alias("m", "sv"))
-    cents = (base.filter(_fixed_sample(id_col, centroid_mod, ks))
-             .select(F.col(id_col).alias("cid"),
+        "vec_id", F.posexplode("subs").alias("m", "sv"))
+    cents = (base.filter(_fixed_sample("vec_id", centroid_mod, PQ_KS))
+             .select(F.col("vec_id").alias("cid"),
                      F.posexplode("subs").alias("m", "cv")))
-    # tiered per-subspace argmin (r13; identical exact-int distances,
-    # lexicographic (d, cid) tie-break either way; `subs` already has
-    # exactly one row per (vector, subspace)): Arrow matmul kernel for
-    # scheduled sub-codebooks, codegen'd relational argmin below the
-    # ARROW_ASSIGN_MIN_K crossover (ks is PQ_KS=16 static at spec scale)
-    if ks >= ARROW_ASSIGN_MIN_K:
-        return _pq_encode_arrow(subs, cents, id_col)
+    # per-subspace argmin: the codegen'd relational form (PQ_KS = 16
+    # sub-centroids sits below the ARROW_ASSIGN_MIN_K crossover)
     scored = (subs.join(F.broadcast(cents), "m")
-              .select(id_col, "m", "cid",
+              .select("vec_id", "m", "cid",
                       _sq_l2(F.col("sv"), F.col("cv")).alias("d")))
     # argmin via min(struct(d, cid)): lexicographic struct-min == ORDER
     # BY d, cid — same deterministic tie-break as a rank-1 window, but
     # it partial-aggregates map-side (the shuffle carries one row per
     # (vector, subspace), not one per candidate centroid)
-    return (scored.groupBy(id_col, "m")
+    return (scored.groupBy("vec_id", "m")
             .agg(F.min(F.struct("d", "cid")).alias("best"))
-            .select(id_col, "m", F.col("best.cid").alias("code")))
+            .select("vec_id", "m", F.col("best.cid").alias("code")))
 
 
-def pq_topk(emb: DataFrame, id_col: str = "vec_id",
-            vec_col: str = "embedding", k: int = TOP_K,
+def pq_topk(emb: DataFrame, k: int = TOP_K,
             query_mod: int = QUERY_MOD, n_queries: int = N_QUERIES,
-            centroid_mod: int = CENTROID_MOD, ks: int = PQ_KS,
+            centroid_mod: int = CENTROID_MOD,
             m_sub: int = M_SUB) -> DataFrame:
     """Asymmetric-distance (ADC) PQ search: approximate L2 top-k.
 
     Each query precomputes exact subspace distances to every sub-centroid
-    (an M_SUB x ks table, broadcast); a corpus vector's approximate
+    (an M_SUB x PQ_KS table, broadcast); a corpus vector's approximate
     distance is the sum of table entries selected by its codes — an
     equi-join on (m, code) + a sum, never touching corpus floats. All
     arithmetic is exact integers, so results hash-match across engines.
@@ -1786,25 +1647,25 @@ def pq_topk(emb: DataFrame, id_col: str = "vec_id",
     scored, PQ compresses HOW each is scored; IVF-PQ composes both.
     """
     from pyspark.sql import Window
-    codes = pq_encode(emb, id_col, vec_col, centroid_mod, ks, m_sub)
+    codes = pq_encode(emb, centroid_mod, m_sub)
     base = emb.select(
-        F.col(id_col),
-        _subvectors(quantize(F.col(vec_col)),
+        F.col("vec_id"),
+        _subvectors(quantize(F.col("embedding")),
                     m_sub, DIM // m_sub).alias("subs"))
-    cents = (base.filter(_fixed_sample(id_col, centroid_mod, ks))
-             .select(F.col(id_col).alias("code"),
+    cents = (base.filter(_fixed_sample("vec_id", centroid_mod, PQ_KS))
+             .select(F.col("vec_id").alias("code"),
                      F.posexplode("subs").alias("m", "cv")))
-    qtab = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-            .select(F.col(id_col).alias("query_id"),
+    qtab = (base.filter(_fixed_sample("vec_id", query_mod, n_queries))
+            .select(F.col("vec_id").alias("query_id"),
                     F.posexplode("subs").alias("m", "sv"))
             .join(F.broadcast(cents), "m")
             .select("query_id", "m", "code",
                     _sq_l2(F.col("sv"), F.col("cv")).alias("qd")))
     scored = (codes.join(F.broadcast(qtab), ["m", "code"])
-              .filter(F.col(id_col) != F.col("query_id"))
-              .groupBy("query_id", id_col)
+              .filter(F.col("vec_id") != F.col("query_id"))
+              .groupBy("query_id", "vec_id")
               .agg(F.sum("qd").alias("adc_dist"))
-              .withColumnRenamed(id_col, "match_id"))
+              .withColumnRenamed("vec_id", "match_id"))
     w = Window.partitionBy("query_id").orderBy("adc_dist", "match_id")
     return (scored.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
@@ -1874,31 +1735,28 @@ RERANK_M_SUB = 16   # finer product grid for the shortlist pass
 RERANK_POOL = 50    # ADC shortlist size per query (the recall knob)
 
 
-def pq_rerank(emb: DataFrame, id_col: str = "vec_id",
-              vec_col: str = "embedding", k: int = TOP_K,
+def pq_rerank(emb: DataFrame, k: int = TOP_K,
               query_mod: int = QUERY_MOD, n_queries: int = N_QUERIES,
-              centroid_mod: int = CENTROID_MOD, ks: int = PQ_KS,
-              m_sub: int = RERANK_M_SUB,
-              pool: int = RERANK_POOL) -> DataFrame:
+              centroid_mod: int = CENTROID_MOD) -> DataFrame:
     """Two-stage PQ search: ADC shortlist, then exact rerank.
 
     The production ANN shape: stage 1 scans only compressed codes to cut
-    the corpus to ``pool`` candidates per query (linear, code-only);
-    stage 2 computes exact integer squared-L2 for just n_queries x pool
-    rows. Recall is the shortlist's candidate coverage — the ``pool`` /
-    ``m_sub`` knobs trade stage-1 cost for it (measured in
+    the corpus to ``RERANK_POOL`` candidates per query (linear, code-only);
+    stage 2 computes exact integer squared-L2 for just n_queries x RERANK_POOL
+    rows. Recall is the shortlist's candidate coverage — the ``RERANK_POOL`` /
+    ``RERANK_M_SUB`` knobs trade stage-1 cost for it (measured in
     tests/test_similarity_pq.py). Stage 2's join probes the corpus by
     match_id with a broadcast shortlist — no corpus shuffle.
     """
     from pyspark.sql import Window
-    shortlist = pq_topk(emb, id_col, vec_col, pool, query_mod, n_queries,
-                        centroid_mod, ks, m_sub) \
+    shortlist = pq_topk(emb, RERANK_POOL, query_mod, n_queries,
+                        centroid_mod, RERANK_M_SUB) \
         .select("query_id", "match_id")
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"))
-    qvecs = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-             .select(F.col(id_col).alias("query_id"), F.col("qv").alias("qq")))
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"))
+    qvecs = (base.filter(_fixed_sample("vec_id", query_mod, n_queries))
+             .select(F.col("vec_id").alias("query_id"), F.col("qv").alias("qq")))
     cand = shortlist.join(F.broadcast(qvecs), "query_id")
-    rer = (base.withColumnRenamed(id_col, "match_id")
+    rer = (base.withColumnRenamed("vec_id", "match_id")
            .join(F.broadcast(cand), "match_id")
            .select("query_id", "match_id",
                    _sq_l2(F.col("qq"), F.col("qv")).alias("l2_dist")))
@@ -1948,19 +1806,15 @@ register(QuerySpec("similarity_pq_rerank", similarity_pq_rerank_query,
 PQ_TRAIN_ITERS = 2
 
 
-def pq_train_codebooks(emb: DataFrame, id_col: str = "vec_id",
-                       vec_col: str = "embedding",
-                       centroid_mod: int = CENTROID_MOD, ks: int = PQ_KS,
-                       m_sub: int = RERANK_M_SUB,
-                       n_iter: int = PQ_TRAIN_ITERS) -> DataFrame:
+def pq_train_codebooks(emb: DataFrame) -> DataFrame:
     """Per-subspace Lloyd's k-means: the production PQ codebook builder.
 
     ``pq_encode`` quantizes against raw sampled slices; this trains each
-    subspace's ``ks`` sub-centroids with ``n_iter`` Lloyd's rounds —
+    subspace's ``PQ_KS`` sub-centroids with ``PQ_TRAIN_ITERS`` Lloyd's rounds —
     exactly how production PQ (FAISS-style) builds its codebooks. All
-    ``m_sub`` subspaces train in ONE relational pass per round: the
+    ``RERANK_M_SUB`` subspaces train in ONE relational pass per round: the
     assignment is an equi-join on the subspace index ``m`` against the
-    broadcast (m_sub x ks)-row codebook with a struct-min argmin
+    broadcast (RERANK_M_SUB x PQ_KS)-row codebook with a struct-min argmin
     (map-side partial aggregation, one shuffled row per (vector,
     subspace)), and the update is a (m, cid, pos) aggregation of exact
     integer component sums with a single division — the same two
@@ -1972,28 +1826,28 @@ def pq_train_codebooks(emb: DataFrame, id_col: str = "vec_id",
     distances are fixed-order double folds with ties broken by cid.
     Returns (m, cid, cv: array<double>).
     """
-    sub_dim = DIM // m_sub
+    sub_dim = DIM // RERANK_M_SUB
     base = emb.select(
-        F.col(id_col),
-        _subvectors(quantize(F.col(vec_col)), m_sub, sub_dim).alias("subs"))
-    subs = (base.select(id_col, F.posexplode("subs").alias("m", "sv"))
+        F.col("vec_id"),
+        _subvectors(quantize(F.col("embedding")), RERANK_M_SUB, sub_dim).alias("subs"))
+    subs = (base.select("vec_id", F.posexplode("subs").alias("m", "sv"))
             .withColumn("dv", F.transform("sv", lambda x: x.cast("double")))
             .localCheckpoint())
-    cents = (subs.filter(_fixed_sample(id_col, centroid_mod, ks))
-             .select("m", F.col(id_col).alias("cid"), F.col("dv").alias("cv")))
+    cents = (subs.filter(_fixed_sample("vec_id", CENTROID_MOD, PQ_KS))
+             .select("m", F.col("vec_id").alias("cid"), F.col("dv").alias("cv")))
     vn2 = F.aggregate(F.zip_with(F.col("dv"), F.col("dv"), lambda x, y: x * y),
                       F.lit(0.0), lambda a, x: a + x)
     dot = F.aggregate(F.zip_with(F.col("dv"), F.col("cv"), lambda x, y: x * y),
                       F.lit(0.0), lambda a, x: a + x)
-    for _ in range(n_iter):
+    for _ in range(PQ_TRAIN_ITERS):
         cn2 = F.aggregate(F.zip_with(F.col("cv"), F.col("cv"),
                                      lambda x, y: x * y),
                           F.lit(0.0), lambda a, x: a + x)
         c = cents.select("m", "cid", "cv", cn2.alias("cn2"))
         scored = (subs.join(F.broadcast(c), "m")
-                  .select(F.col(id_col), F.col("m"), F.col("cid"), F.col("sv"),
+                  .select(F.col("vec_id"), F.col("m"), F.col("cid"), F.col("sv"),
                           (vn2 + F.col("cn2") - 2 * dot).alias("dist")))
-        assigned = (scored.groupBy(id_col, "m")
+        assigned = (scored.groupBy("vec_id", "m")
                     .agg(F.min(F.struct("dist", "cid", "sv")).alias("best"))
                     .select("m", F.col("best.cid").alias("cid"),
                             F.col("best.sv").alias("sv")))
@@ -2011,12 +1865,7 @@ def pq_train_codebooks(emb: DataFrame, id_col: str = "vec_id",
     return cents
 
 
-def pq_rerank_trained(emb: DataFrame, id_col: str = "vec_id",
-                      vec_col: str = "embedding", k: int = TOP_K,
-                      query_mod: int = QUERY_MOD, n_queries: int = N_QUERIES,
-                      centroid_mod: int = CENTROID_MOD, ks: int = PQ_KS,
-                      m_sub: int = RERANK_M_SUB, pool: int = RERANK_POOL,
-                      n_iter: int = PQ_TRAIN_ITERS) -> DataFrame:
+def pq_rerank_trained(emb: DataFrame) -> DataFrame:
     """Two-stage PQ search against TRAINED sub-codebooks.
 
     Same shape as ``pq_rerank`` (ADC shortlist -> exact-int rerank) but
@@ -2034,52 +1883,51 @@ def pq_rerank_trained(emb: DataFrame, id_col: str = "vec_id",
     level, and the final ranking is the exact-int rerank anyway.
     """
     from pyspark.sql import Window
-    sub_dim = DIM // m_sub
-    cents = pq_train_codebooks(emb, id_col, vec_col, centroid_mod, ks,
-                               m_sub, n_iter)
+    sub_dim = DIM // RERANK_M_SUB
+    cents = pq_train_codebooks(emb)
     cn2 = F.aggregate(F.zip_with(F.col("cv"), F.col("cv"), lambda x, y: x * y),
                       F.lit(0.0), lambda a, x: a + x)
     c = cents.select("m", "cid", "cv", cn2.alias("cn2"))
     base = emb.select(
-        F.col(id_col),
-        _subvectors(quantize(F.col(vec_col)), m_sub, sub_dim).alias("subs"))
-    subs = (base.select(id_col, F.posexplode("subs").alias("m", "sv"))
+        F.col("vec_id"),
+        _subvectors(quantize(F.col("embedding")), RERANK_M_SUB, sub_dim).alias("subs"))
+    subs = (base.select("vec_id", F.posexplode("subs").alias("m", "sv"))
             .withColumn("dv", F.transform("sv", lambda x: x.cast("double"))))
     vn2 = F.aggregate(F.zip_with(F.col("dv"), F.col("dv"), lambda x, y: x * y),
                       F.lit(0.0), lambda a, x: a + x)
     dot = F.aggregate(F.zip_with(F.col("dv"), F.col("cv"), lambda x, y: x * y),
                       F.lit(0.0), lambda a, x: a + x)
     scored = (subs.join(F.broadcast(c), "m")
-              .select(F.col(id_col), F.col("m"), F.col("cid"),
+              .select(F.col("vec_id"), F.col("m"), F.col("cid"),
                       (vn2 + F.col("cn2") - 2 * dot).alias("dist")))
-    codes = (scored.groupBy(id_col, "m")
+    codes = (scored.groupBy("vec_id", "m")
              .agg(F.min(F.struct("dist", "cid")).alias("best"))
-             .select(id_col, "m", F.col("best.cid").alias("code")))
-    qtab = (scored.filter(_fixed_sample(id_col, query_mod, n_queries))
-            .select(F.col(id_col).alias("query_id"), "m",
+             .select("vec_id", "m", F.col("best.cid").alias("code")))
+    qtab = (scored.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+            .select(F.col("vec_id").alias("query_id"), "m",
                     F.col("cid").alias("code"),
                     F.floor(F.col("dist")).cast("long").alias("qd")))
     adc = (codes.join(F.broadcast(qtab), ["m", "code"])
-           .filter(F.col(id_col) != F.col("query_id"))
-           .groupBy("query_id", id_col)
+           .filter(F.col("vec_id") != F.col("query_id"))
+           .groupBy("query_id", "vec_id")
            .agg(F.sum("qd").alias("adc_dist"))
-           .withColumnRenamed(id_col, "match_id"))
+           .withColumnRenamed("vec_id", "match_id"))
     w = Window.partitionBy("query_id").orderBy("adc_dist", "match_id")
     shortlist = (adc.withColumn("rn", F.row_number().over(w))
-                 .filter(F.col("rn") <= pool)
+                 .filter(F.col("rn") <= RERANK_POOL)
                  .select("query_id", "match_id"))
-    qvecs = (emb.filter(_fixed_sample(id_col, query_mod, n_queries))
-             .select(F.col(id_col).alias("query_id"),
-                     quantize(F.col(vec_col)).alias("qq")))
+    qvecs = (emb.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+             .select(F.col("vec_id").alias("query_id"),
+                     quantize(F.col("embedding")).alias("qq")))
     cand = shortlist.join(F.broadcast(qvecs), "query_id")
-    rer = (emb.select(F.col(id_col).alias("match_id"),
-                      quantize(F.col(vec_col)).alias("qv"))
+    rer = (emb.select(F.col("vec_id").alias("match_id"),
+                      quantize(F.col("embedding")).alias("qv"))
            .join(F.broadcast(cand), "match_id")
            .select("query_id", "match_id",
                    _sq_l2(F.col("qq"), F.col("qv")).alias("l2_dist")))
     w2 = Window.partitionBy("query_id").orderBy("l2_dist", "match_id")
     return (rer.withColumn("rnk", F.row_number().over(w2))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "l2_dist", "rnk"))
 
 
@@ -2220,15 +2068,13 @@ register(QuerySpec("similarity_pq_refined", similarity_pq_refined_query,
 
 # --- IVF-PQ: coarse-list pruning + compressed-domain scoring --------------------
 
-def ivfpq_topk(emb: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding", k: int = TOP_K,
+def ivfpq_topk(emb: DataFrame, k: int = TOP_K,
                query_mod: int = QUERY_MOD, n_queries: int = N_QUERIES,
                centroid_mod: int = CENTROID_MOD,
-               n_centroids: int = N_CENTROIDS, nprobe: int = NPROBE,
-               ks: int = PQ_KS, m_sub: int = RERANK_M_SUB) -> DataFrame:
+               n_centroids: int = N_CENTROIDS) -> DataFrame:
     """IVF-PQ search: the billion-scale ANN composition.
 
-    IVF prunes WHICH vectors are scored (each query probes its ``nprobe``
+    IVF prunes WHICH vectors are scored (each query probes its ``NPROBE``
     nearest coarse lists — candidates are a 1/n_centroids-ish fraction of
     the corpus per probe); PQ compresses HOW each candidate is scored
     (ADC table lookups on codes, no corpus floats). Both codebooks are
@@ -2249,58 +2095,52 @@ def ivfpq_topk(emb: DataFrame, id_col: str = "vec_id",
     # both scales. The trade at 100 TB: one quantized-corpus
     # materialization in the block store vs four full scans+quantize —
     # the same space-time trade the builder's quality checkpoint makes.
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                      sq_norm(quantize(F.col(vec_col))).alias("n2")) \
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"),
+                      sq_norm(quantize(F.col("embedding"))).alias("n2")) \
         .localCheckpoint()
-    cents = (base.filter(_fixed_sample(id_col, centroid_mod, n_centroids))
-             .select(F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
+    cents = (base.filter(_fixed_sample("vec_id", centroid_mod, n_centroids))
+             .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"),
                      F.col("n2").alias("cn2")))
     # coarse stage: corpus assignment via the tiered argmin kernel on
     # the SHARED base; the nprobe ranking is only needed for the
     # n_queries query rows, so it runs on that tiny filtered subset
-    assign = _argmin_assign(base, cents, id_col, n_centroids) \
-        .select(F.col(id_col), "cid")
-    qranked = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
+    assign = _argmin_assign(base, cents, "vec_id", n_centroids) \
+        .select(F.col("vec_id"), "cid")
+    qranked = (base.filter(_fixed_sample("vec_id", query_mod, n_queries))
                .crossJoin(F.broadcast(cents))
-               .select(F.col(id_col), F.col("cid"),
+               .select(F.col("vec_id"), F.col("cid"),
                        (F.col("n2") + F.col("cn2")
                         - 2 * int_dot(F.col("qv"), F.col("cv"))).alias("dist")))
-    w = Window.partitionBy(id_col).orderBy("dist", "cid")
+    w = Window.partitionBy("vec_id").orderBy("dist", "cid")
     probes = (qranked.withColumn("rn", F.row_number().over(w))
-              .filter(F.col("rn") <= nprobe)
-              .select(F.col(id_col).alias("query_id"), "cid"))
+              .filter(F.col("rn") <= NPROBE)
+              .select(F.col("vec_id").alias("query_id"), "cid"))
     cand = (assign.join(F.broadcast(probes), "cid")
-            .filter(F.col(id_col) != F.col("query_id"))
-            .select("query_id", F.col(id_col).alias("match_id")))
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .select("query_id", F.col("vec_id").alias("match_id")))
 
     # fine stage: ADC over PQ codes, restricted to the candidate pairs.
     # pq_encode's body inlined over the shared qv (identical exact-int
-    # distances and (d, cid) struct-min tie-break; ks = PQ_KS = 16 is
-    # below the Arrow-kernel crossover, so the relational argmin is the
-    # measured-correct tier here, as in pq_encode itself).
+    # distances and (d, cid) struct-min tie-break).
     pbase = base.select(
-        F.col(id_col),
-        _subvectors(F.col("qv"), m_sub, DIM // m_sub).alias("subs"))
-    psubs = pbase.select(id_col, F.posexplode("subs").alias("m", "sv"))
-    pcents_enc = (pbase.filter(_fixed_sample(id_col, centroid_mod, ks))
-                  .select(F.col(id_col).alias("cid"),
+        F.col("vec_id"),
+        _subvectors(F.col("qv"), RERANK_M_SUB, DIM // RERANK_M_SUB).alias("subs"))
+    psubs = pbase.select("vec_id", F.posexplode("subs").alias("m", "sv"))
+    pcents_enc = (pbase.filter(_fixed_sample("vec_id", centroid_mod, PQ_KS))
+                  .select(F.col("vec_id").alias("cid"),
                           F.posexplode("subs").alias("m", "cv")))
-    if ks >= ARROW_ASSIGN_MIN_K:
-        codes = _pq_encode_arrow(psubs, pcents_enc, id_col) \
-            .withColumnRenamed(id_col, "match_id")
-    else:
-        pscored = (psubs.join(F.broadcast(pcents_enc), "m")
-                   .select(id_col, "m", "cid",
-                           _sq_l2(F.col("sv"), F.col("cv")).alias("d")))
-        codes = (pscored.groupBy(id_col, "m")
-                 .agg(F.min(F.struct("d", "cid")).alias("best"))
-                 .select(id_col, "m", F.col("best.cid").alias("code"))
-                 .withColumnRenamed(id_col, "match_id"))
-    pcents = (pbase.filter(_fixed_sample(id_col, centroid_mod, ks))
-              .select(F.col(id_col).alias("code"),
+    pscored = (psubs.join(F.broadcast(pcents_enc), "m")
+               .select("vec_id", "m", "cid",
+                       _sq_l2(F.col("sv"), F.col("cv")).alias("d")))
+    codes = (pscored.groupBy("vec_id", "m")
+             .agg(F.min(F.struct("d", "cid")).alias("best"))
+             .select("vec_id", "m", F.col("best.cid").alias("code"))
+             .withColumnRenamed("vec_id", "match_id"))
+    pcents = (pbase.filter(_fixed_sample("vec_id", centroid_mod, PQ_KS))
+              .select(F.col("vec_id").alias("code"),
                       F.posexplode("subs").alias("m", "cv")))
-    qtab = (pbase.filter(_fixed_sample(id_col, query_mod, n_queries))
-            .select(F.col(id_col).alias("query_id"),
+    qtab = (pbase.filter(_fixed_sample("vec_id", query_mod, n_queries))
+            .select(F.col("vec_id").alias("query_id"),
                     F.posexplode("subs").alias("m", "sv"))
             .join(F.broadcast(pcents), "m")
             .select("query_id", "m", "code",
@@ -2375,28 +2215,25 @@ register(QuerySpec("similarity_ivfpq_topk", similarity_ivfpq_query,
                                "pruning + compressed-domain ADC scoring"))
 
 
-def l2_topk_exact(emb: DataFrame, id_col: str = "vec_id",
-                  vec_col: str = "embedding", k: int = TOP_K,
-                  query_mod: int = QUERY_MOD,
-                  n_queries: int = N_QUERIES) -> DataFrame:
+def l2_topk_exact(emb: DataFrame) -> DataFrame:
     """Exact brute-force squared-L2 top-k — the ground truth the
     L2-metric searchers (PQ / rerank / IVF-PQ) are measured against,
     exactly as :func:`cosine_topk_quantized` is the cosine truth.
-    Exact integer distances on the quantized grid; N x n_queries with
+    Exact integer distances on the quantized grid; N x N_QUERIES with
     a broadcast query relation."""
     from pyspark.sql import Window
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"))
-    queries = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-               .select(F.col(id_col).alias("query_id"),
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"))
+    queries = (base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+               .select(F.col("vec_id").alias("query_id"),
                        F.col("qv").alias("qq")))
-    scored = (base.withColumnRenamed(id_col, "match_id")
+    scored = (base.withColumnRenamed("vec_id", "match_id")
               .crossJoin(F.broadcast(queries))
               .filter(F.col("match_id") != F.col("query_id"))
               .select("query_id", "match_id",
                       _sq_l2(F.col("qq"), F.col("qv")).alias("l2_dist")))
     w = Window.partitionBy("query_id").orderBy("l2_dist", "match_id")
     return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "l2_dist", "rnk"))
 
 
@@ -2430,8 +2267,7 @@ register(QuerySpec(
                 "the ground truth for the PQ searcher family"))
 
 
-def pq_recall(emb: DataFrame, id_col: str = "vec_id",
-              vec_col: str = "embedding", k: int = TOP_K) -> DataFrame:
+def pq_recall(emb: DataFrame) -> DataFrame:
     """Measured recall@k of the L2-metric searchers — plain PQ-ADC,
     ADC-shortlist + exact rerank, and IVF-PQ — against ONE shared
     exact squared-L2 truth; the companion of :func:`ann_recall` for
@@ -2439,12 +2275,12 @@ def pq_recall(emb: DataFrame, id_col: str = "vec_id",
     cost, how much does the rerank pool buy back, what does coarse
     pruning add on top). Same shape: per-(method, query) exact-integer
     hit counts; alignments are (n_queries x k)-row broadcasts."""
-    truth = (l2_topk_exact(emb, id_col, vec_col, k=k)
+    truth = (l2_topk_exact(emb)
              .select("query_id", "match_id").localCheckpoint())
     methods = (
-        ("pq_adc", pq_topk(emb, id_col, vec_col, k=k)),
-        ("pq_rerank", pq_rerank(emb, id_col, vec_col, k=k)),
-        (f"ivfpq_nprobe{NPROBE}", ivfpq_topk(emb, id_col, vec_col, k=k)),
+        ("pq_adc", pq_topk(emb)),
+        ("pq_rerank", pq_rerank(emb)),
+        (f"ivfpq_nprobe{NPROBE}", ivfpq_topk(emb)),
     )
     out = None
     for name, approx in methods:
@@ -2628,7 +2464,7 @@ def scaled_codebook_three_level(
             max(1, n_rows // k))
 
 
-def _assigned_corpus(emb: DataFrame, id_col: str, vec_col: str,
+def _assigned_corpus(emb: DataFrame,
                      centroid_mod: int = CENTROID_MOD,
                      n_centroids: int = N_CENTROIDS,
                      n_super: int | None = None,
@@ -2659,22 +2495,20 @@ def _assigned_corpus(emb: DataFrame, id_col: str, vec_col: str,
     if (n_super is not None and n_super2 is not None
             and n_super2 < n_super < n_centroids):
         cols = _ivf_assign_three_level_cols(
-            emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
+            emb, centroid_mod, n_centroids, n_super,
             n_super2, spread_every=spread_every)
     elif n_super is not None and n_super < n_centroids:
         cols = _ivf_assign_two_level_cols(
-            emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
+            emb, centroid_mod, n_centroids, n_super,
             spread_every=spread_every)
     else:
-        cols = _ivf_assign_cols(emb, id_col, vec_col, centroid_mod,
-                                n_centroids)
-    return (cols.select(F.col(id_col), F.col("cid"), "qv", "n2")
+        cols = _ivf_assign_cols(emb, centroid_mod, n_centroids)
+    return (cols.select(F.col("vec_id"), F.col("cid"), "qv", "n2")
             .filter(F.col("n2") > 0)
             .localCheckpoint())
 
 
-def knn_graph(emb: DataFrame, id_col: str = "vec_id",
-              vec_col: str = "embedding", k: int = KNN_K,
+def knn_graph(emb: DataFrame, k: int = KNN_K,
               centroid_mod: int = CENTROID_MOD,
               n_centroids: int = N_CENTROIDS,
               nprobe: int = 1,
@@ -2723,22 +2557,22 @@ def knn_graph(emb: DataFrame, id_col: str = "vec_id",
         # the *_cols variant carries (qv, n2) on the assignment row, so
         # no corpus-wide id join is needed to re-attach vectors (r13)
         enriched = (_ivf_assign_three_level_cols(
-            emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
+            emb, centroid_mod, n_centroids, n_super,
             n_super2, spread_every=spread_every, nprobe=2)
-            .select(F.col(id_col), F.col("cid"), F.col("cid2"),
+            .select(F.col("vec_id"), F.col("cid"), F.col("cid2"),
                     "qv", "n2")
             .filter(F.col("n2") > 0)
             .localCheckpoint())
-        base = enriched.select(F.col(id_col), "cid", "qv", "n2")
+        base = enriched.select(F.col("vec_id"), "cid", "qv", "n2")
         # the probe-2 copy extends the QUERY side only, as on the flat
         # path — the candidate side must keep one cell per vector
         qbase = base.unionByName(
             enriched.filter(F.col("cid2").isNotNull())
-            .select(F.col(id_col), F.col("cid2").alias("cid"),
+            .select(F.col("vec_id"), F.col("cid2").alias("cid"),
                     "qv", "n2"))
-        a = qbase.select(F.col(id_col).alias("src_id"), "cid",
+        a = qbase.select(F.col("vec_id").alias("src_id"), "cid",
                          F.col("qv").alias("aq"), F.col("n2").alias("an2"))
-        b = base.select(F.col(id_col).alias("neighbor_id"), "cid",
+        b = base.select(F.col("vec_id").alias("neighbor_id"), "cid",
                         F.col("qv").alias("bq"), F.col("n2").alias("bn2"))
         scored = (a.join(b.hint("merge"), "cid")
                   .filter(F.col("src_id") != F.col("neighbor_id"))
@@ -2753,20 +2587,20 @@ def knn_graph(emb: DataFrame, id_col: str = "vec_id",
                 .filter(F.col("rnk") <= k)
                 .select(F.col("src_id").alias("vec_id"), "neighbor_id",
                         "cosine", "rnk"))
-    base = _assigned_corpus(emb, id_col, vec_col, centroid_mod,
+    base = _assigned_corpus(emb, centroid_mod,
                             n_centroids, n_super, n_super2, spread_every)
     if nprobe == 2:
         # the probe's centroid relation must be sampled EXACTLY like the
         # assignment's, or the second-best cell id won't name any
         # candidate cell (spread-assigned cells vs window-probed ids)
-        cents_pred = (_spread_sample(id_col, spread_every)
+        cents_pred = (_spread_sample("vec_id", spread_every)
                       if spread_every is not None
-                      else _fixed_sample(id_col, centroid_mod, n_centroids))
-        cents = (emb.select(F.col(id_col),
-                            quantize(F.col(vec_col)).alias("qv"),
-                            sq_norm(quantize(F.col(vec_col))).alias("n2"))
+                      else _fixed_sample("vec_id", centroid_mod, n_centroids))
+        cents = (emb.select(F.col("vec_id"),
+                            quantize(F.col("embedding")).alias("qv"),
+                            sq_norm(quantize(F.col("embedding"))).alias("n2"))
                  .filter(cents_pred)
-                 .select(F.col(id_col).alias("cid2"),
+                 .select(F.col("vec_id").alias("cid2"),
                          F.col("qv").alias("cv"), F.col("n2").alias("cn2")))
         # per-row argmin over the broadcast codebook minus the vector's
         # own cell — the shuffle-free form of the former crossJoin +
@@ -2778,16 +2612,16 @@ def knn_graph(emb: DataFrame, id_col: str = "vec_id",
                       "filter(pcands, c -> c.cid2 != cid)",
                       "cid2", "cv", "cn2"))
                   .filter(F.col("cid2").isNotNull())
-                  .select(F.col(id_col), F.col("cid2").alias("cid"),
+                  .select(F.col("vec_id"), F.col("cid2").alias("cid"),
                           "qv", "n2"))
         # the probe-2 copy extends the QUERY side only — the candidate
         # side must keep one cell per vector or candidates duplicate
         qbase = base.unionByName(second)
     else:
         qbase = base
-    a = qbase.select(F.col(id_col).alias("src_id"), "cid",
+    a = qbase.select(F.col("vec_id").alias("src_id"), "cid",
                      F.col("qv").alias("aq"), F.col("n2").alias("an2"))
-    b = base.select(F.col(id_col).alias("neighbor_id"), "cid",
+    b = base.select(F.col("vec_id").alias("neighbor_id"), "cid",
                     F.col("qv").alias("bq"), F.col("n2").alias("bn2"))
     scored = (a.join(b.hint("merge"), "cid")
               .filter(F.col("src_id") != F.col("neighbor_id"))
@@ -2853,8 +2687,7 @@ KNN_RECALL_EVERY = 10  # spacing of the fixed recall query sample
 KNN_RECALL_N = 50      # fixed query-set size: ids 0, 10, ..., 490
 
 
-def knn_graph_recall(emb: DataFrame, id_col: str = "vec_id",
-                     vec_col: str = "embedding", k: int = KNN_K,
+def knn_graph_recall(emb: DataFrame,
                      centroid_mod: int = CENTROID_MOD,
                      n_centroids: int = N_CENTROIDS,
                      nprobe: int = 1,
@@ -2894,18 +2727,18 @@ def knn_graph_recall(emb: DataFrame, id_col: str = "vec_id",
     construction (the broadcast-side bound the plan audit requires).
     """
     from pyspark.sql import Window
-    base = (emb.select(F.col(id_col),
-                       quantize(F.col(vec_col)).alias("qv"),
-                       sq_norm(quantize(F.col(vec_col))).alias("n2"))
+    base = (emb.select(F.col("vec_id"),
+                       quantize(F.col("embedding")).alias("qv"),
+                       sq_norm(quantize(F.col("embedding"))).alias("n2"))
             .filter(F.col("n2") > 0))
-    pred = (_spread_sample(id_col, query_every) if query_hash
-            else _fixed_sample(id_col, query_every, KNN_RECALL_N))
+    pred = (_spread_sample("vec_id", query_every) if query_hash
+            else _fixed_sample("vec_id", query_every, KNN_RECALL_N))
     queries = (base.filter(pred)
-               .select(F.col(id_col).alias("query_id"),
+               .select(F.col("vec_id").alias("query_id"),
                        F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
     scored = (base.crossJoin(F.broadcast(queries))
-              .filter(F.col(id_col) != F.col("query_id"))
-              .select("query_id", F.col(id_col).alias("neighbor_id"),
+              .filter(F.col("vec_id") != F.col("query_id"))
+              .select("query_id", F.col("vec_id").alias("neighbor_id"),
                       (int_dot(F.col("qq"), F.col("qv")).cast("double")
                        / (F.sqrt(F.col("qn2").cast("double"))
                           * F.sqrt(F.col("n2").cast("double"))))
@@ -2913,9 +2746,9 @@ def knn_graph_recall(emb: DataFrame, id_col: str = "vec_id",
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
                                                F.col("neighbor_id"))
     truth = (scored.withColumn("rnk", F.row_number().over(w))
-             .filter(F.col("rnk") <= k)
+             .filter(F.col("rnk") <= KNN_K)
              .select("query_id", "neighbor_id"))
-    graph = knn_graph(emb, id_col, vec_col, k, centroid_mod, n_centroids,
+    graph = knn_graph(emb, KNN_K, centroid_mod, n_centroids,
                       nprobe, n_super, n_super2, spread_every)
     got = (graph.select(F.col("vec_id").alias("query_id"), "neighbor_id")
            .withColumn("hit", F.lit(1)))
@@ -2982,14 +2815,14 @@ register(QuerySpec(
 SEM_TAU = 0.35  # cosine threshold; synthetic corpus max pair cosine ≈ 0.51
 
 
-def semantic_pairs_from_assigned(base: DataFrame, id_col: str = "vec_id",
+def semantic_pairs_from_assigned(base: DataFrame,
                                  tau: float = SEM_TAU) -> DataFrame:
     """(cid, id_a, id_b, cosine) cluster-scoped near-dup pairs over an
     `_assigned_corpus` relation — shared by :func:`semantic_dedup` and
     the all-signal cluster composition in operators/dedup.py."""
-    a = base.select(F.col(id_col).alias("id_a"), "cid",
+    a = base.select(F.col("vec_id").alias("id_a"), "cid",
                     F.col("qv").alias("aq"), F.col("n2").alias("an2"))
-    b = base.select(F.col(id_col).alias("id_b"), "cid",
+    b = base.select(F.col("vec_id").alias("id_b"), "cid",
                     F.col("qv").alias("bq"), F.col("n2").alias("bn2"))
     return (a.join(b.hint("merge"), "cid")
             .filter(F.col("id_a") < F.col("id_b"))
@@ -3001,20 +2834,18 @@ def semantic_pairs_from_assigned(base: DataFrame, id_col: str = "vec_id",
             .select("cid", "id_a", "id_b", "cosine"))
 
 
-def semantic_pairs(emb: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding", tau: float = SEM_TAU,
+def semantic_pairs(emb: DataFrame, tau: float = SEM_TAU,
                    centroid_mod: int = CENTROID_MOD,
                    n_centroids: int = N_CENTROIDS,
                    n_super: int | None = None) -> DataFrame:
     """(id_a, id_b, cosine) embedding near-dup pairs, cluster-scoped."""
-    base = _assigned_corpus(emb, id_col, vec_col, centroid_mod,
+    base = _assigned_corpus(emb, centroid_mod,
                             n_centroids, n_super)
-    return semantic_pairs_from_assigned(base, id_col, tau) \
+    return semantic_pairs_from_assigned(base, tau) \
         .select("id_a", "id_b", "cosine")
 
 
-def semantic_dedup(emb: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding", tau: float = SEM_TAU,
+def semantic_dedup(emb: DataFrame, tau: float = SEM_TAU,
                    centroid_mod: int = CENTROID_MOD,
                    n_centroids: int = N_CENTROIDS,
                    n_super: int | None = None,
@@ -3034,9 +2865,9 @@ def semantic_dedup(emb: DataFrame, id_col: str = "vec_id",
     a √N̄ codebook; the removed-set aggregation is a distinct on
     (cid, id), shuffle-keyed by the uniform id.
     """
-    base = _assigned_corpus(emb, id_col, vec_col, centroid_mod,
+    base = _assigned_corpus(emb, centroid_mod,
                             n_centroids, n_super, n_super2, spread_every)
-    pairs = semantic_pairs_from_assigned(base, id_col, tau)
+    pairs = semantic_pairs_from_assigned(base, tau)
     removed = (pairs.select("cid", F.col("id_b").alias("rid")).distinct()
                .groupBy("cid").agg(F.count("*").alias("n_removed")))
     sizes = base.groupBy("cid").agg(F.count("*").alias("n_vectors"))
@@ -3085,8 +2916,7 @@ register(QuerySpec(
 N_SUPER = 4  # super-cell count at the oracle scale (= sqrt(N_CENTROIDS))
 
 
-def ivf_assign_two_level(emb: DataFrame, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
+def ivf_assign_two_level(emb: DataFrame,
                          centroid_mod: int = CENTROID_MOD,
                          n_centroids: int = N_CENTROIDS,
                          n_super: int = N_SUPER,
@@ -3127,13 +2957,12 @@ def ivf_assign_two_level(emb: DataFrame, id_col: str = "vec_id",
     for trivially small per-row work).
     """
     return (_ivf_assign_two_level_cols(
-        emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
+        emb, centroid_mod, n_centroids, n_super,
         spread_every)
-        .select(F.col(id_col), "super_cid", "cid"))
+        .select(F.col("vec_id"), "super_cid", "cid"))
 
 
-def _ivf_assign_two_level_cols(emb: DataFrame, id_col: str = "vec_id",
-                               vec_col: str = "embedding",
+def _ivf_assign_two_level_cols(emb: DataFrame,
                                centroid_mod: int = CENTROID_MOD,
                                n_centroids: int = N_CENTROIDS,
                                n_super: int = N_SUPER,
@@ -3143,22 +2972,22 @@ def _ivf_assign_two_level_cols(emb: DataFrame, id_col: str = "vec_id",
     columns: (id, qv, n2, super_cid, cid) as one shuffle-free
     projection (see the public docstring)."""
     stride = max(1, n_centroids // n_super)
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                      sq_norm(quantize(F.col(vec_col))).alias("n2"))
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"),
+                      sq_norm(quantize(F.col("embedding"))).alias("n2"))
     if spread_every is not None:
-        cents_pred = _spread_sample(id_col, spread_every)
+        cents_pred = _spread_sample("vec_id", spread_every)
         supers_pred = _spread_sample("cid", spread_every * stride)
     else:
-        cents_pred = _fixed_sample(id_col, centroid_mod, n_centroids)
+        cents_pred = _fixed_sample("vec_id", centroid_mod, n_centroids)
         supers_pred = _fixed_sample("cid", centroid_mod * stride, n_super)
     cents = (base.filter(cents_pred)
-             .select(F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
+             .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"),
                      F.col("n2").alias("cn2")))
     leaf = cents.select(F.col("cid").alias("kid"), "cv", "cn2",
                         F.when(supers_pred, F.lit(0)).otherwise(F.lit(1))
                         .alias("lvl"))
-    return (_cascade_assign_arrow(base, leaf, id_col, ["sid", "cid"])
-            .select(F.col(id_col), "qv", "n2",
+    return (_cascade_assign_arrow(base, leaf, "vec_id", ["sid", "cid"])
+            .select(F.col("vec_id"), "qv", "n2",
                     F.col("sid").alias("super_cid"), "cid"))
 
 
@@ -3240,8 +3069,7 @@ def _spread_sample(id_col: str, every: int) -> Column:
     return F.pmod(F.xxhash64(F.col(id_col)), F.lit(every)) == 0
 
 
-def ivf_assign_three_level(emb: DataFrame, id_col: str = "vec_id",
-                           vec_col: str = "embedding",
+def ivf_assign_three_level(emb: DataFrame,
                            centroid_mod: int = CENTROID_MOD,
                            n_centroids: int = N_CENTROIDS,
                            n_super: int = N_SUPER,
@@ -3296,14 +3124,13 @@ def ivf_assign_three_level(emb: DataFrame, id_col: str = "vec_id",
     broadcast stage waves of the per-row expression form.
     """
     cols = _ivf_assign_three_level_cols(
-        emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
+        emb, centroid_mod, n_centroids, n_super,
         n_super2, spread_every=spread_every, nprobe=nprobe)
-    out = [F.col(id_col), "super2_cid", "super_cid", "cid"]
+    out = [F.col("vec_id"), "super2_cid", "super_cid", "cid"]
     return cols.select(*out, "cid2") if nprobe == 2 else cols.select(*out)
 
 
-def _ivf_assign_three_level_cols(emb: DataFrame, id_col: str = "vec_id",
-                                 vec_col: str = "embedding",
+def _ivf_assign_three_level_cols(emb: DataFrame,
                                  centroid_mod: int = CENTROID_MOD,
                                  n_centroids: int = N_CENTROIDS,
                                  n_super: int = N_SUPER,
@@ -3315,12 +3142,12 @@ def _ivf_assign_three_level_cols(emb: DataFrame, id_col: str = "vec_id",
     shuffle-free projection (see the public docstring)."""
     if nprobe not in (1, 2):
         raise ValueError(f"nprobe must be 1 or 2, got {nprobe}")
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                      sq_norm(quantize(F.col(vec_col))).alias("n2"))
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"),
+                      sq_norm(quantize(F.col("embedding"))).alias("n2"))
     if spread_every is not None:
         e1 = max(1, n_centroids // n_super)
         e2 = max(1, n_super // n_super2)
-        cents_pred = _spread_sample(id_col, spread_every)
+        cents_pred = _spread_sample("vec_id", spread_every)
         sup1_pred = _spread_sample("cid", spread_every * e1)
         # on the cents relation directly: the nested moduli make each
         # level's predicate imply the one below (every·e1·e2 divisible
@@ -3329,14 +3156,14 @@ def _ivf_assign_three_level_cols(emb: DataFrame, id_col: str = "vec_id",
     else:
         stride1 = max(1, n_centroids // n_super)
         stride2 = max(1, n_super // n_super2)
-        cents_pred = _fixed_sample(id_col, centroid_mod, n_centroids)
+        cents_pred = _fixed_sample("vec_id", centroid_mod, n_centroids)
         sup1_pred = _fixed_sample("cid", centroid_mod * stride1, n_super)
         # same implication for the stride construction: the level-2
         # window (mod·s1·s2, n_super2) sits inside the level-1 window
         sup2_on_cid = _fixed_sample("cid", centroid_mod * stride1 * stride2,
                                     n_super2)
     cents = base.filter(cents_pred).select(
-        F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
+        F.col("vec_id").alias("cid"), F.col("qv").alias("cv"),
         F.col("n2").alias("cn2"))
     # one Arrow pass routes corpus AND codebook internals — the
     # codebook collects ONCE with per-row hierarchy depth (the nested
@@ -3354,10 +3181,10 @@ def _ivf_assign_three_level_cols(emb: DataFrame, id_col: str = "vec_id",
         F.col("cid").alias("kid"), "cv", "cn2",
         F.when(sup2_on_cid & sup1_pred, F.lit(0))
         .when(sup1_pred, F.lit(1)).otherwise(F.lit(2)).alias("lvl"))
-    routed = _cascade_assign_arrow(base, leaf, id_col,
+    routed = _cascade_assign_arrow(base, leaf, "vec_id",
                                    ["sid2", "sid1", "cid"],
                                    probe2=(nprobe == 2))
-    out = [F.col(id_col), "qv", "n2", F.col("sid2").alias("super2_cid"),
+    out = [F.col("vec_id"), "qv", "n2", F.col("sid2").alias("super2_cid"),
            F.col("sid1").alias("super_cid"), "cid"]
     if nprobe == 2:
         out.append(F.col("cid2"))
@@ -3579,8 +3406,7 @@ PR_DNUM, PR_DDEN = 85, 100
 PR_TOPN = 20
 
 
-def graph_pagerank(edges: DataFrame, rounds: int = PR_ROUNDS,
-                   src: str = "src", dst: str = "dst") -> DataFrame:
+def graph_pagerank(edges: DataFrame, rounds: int = PR_ROUNDS) -> DataFrame:
     """Damped PageRank over a directed edge relation, in EXACT scaled-
     integer arithmetic: rank' = 150000 + (85 · Σ floor(rank/outdeg)) / 100
     (integer division throughout, all operands positive) — float PageRank
@@ -3594,8 +3420,8 @@ def graph_pagerank(edges: DataFrame, rounds: int = PR_ROUNDS,
     so lineage stays flat. Returns (id, rank, out_degree) for every
     node of the graph.
     """
-    edges = edges.select(F.col(src).alias("src"),
-                         F.col(dst).alias("dst")).localCheckpoint()
+    edges = edges.select(F.col("src"),
+                         F.col("dst")).localCheckpoint()
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     nodes = (edges.select(F.col("src").alias("id"))
              .union(edges.select(F.col("dst").alias("id"))).distinct())
@@ -3677,11 +3503,8 @@ register(QuerySpec(
 RANGE_TAU = 0.25
 
 
-def range_search(emb: DataFrame, id_col: str = "vec_id",
-                 vec_col: str = "embedding", tau: float = RANGE_TAU,
-                 query_mod: int = QUERY_MOD,
-                 n_queries: int = N_QUERIES) -> DataFrame:
-    """All corpus vectors within cosine ≥ tau of each query — the
+def range_search(emb: DataFrame) -> DataFrame:
+    """All corpus vectors within cosine ≥ RANGE_TAU of each query — the
     threshold complement of top-k (radius queries: "everything similar
     enough", the shape dedup-by-query and policy-filter lookups use;
     result size is data-dependent, so downstream must not assume k).
@@ -3692,21 +3515,21 @@ def range_search(emb: DataFrame, id_col: str = "vec_id",
     callers can detect degenerate radii without a second pass.
     """
     from pyspark.sql import Window
-    base = (emb.select(F.col(id_col),
-                       quantize(F.col(vec_col)).alias("qv"),
-                       sq_norm(quantize(F.col(vec_col))).alias("n2"))
+    base = (emb.select(F.col("vec_id"),
+                       quantize(F.col("embedding")).alias("qv"),
+                       sq_norm(quantize(F.col("embedding"))).alias("n2"))
             .filter(F.col("n2") > 0))
-    queries = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-               .select(F.col(id_col).alias("query_id"),
+    queries = (base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+               .select(F.col("vec_id").alias("query_id"),
                        F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
     scored = (base.crossJoin(F.broadcast(queries))
-              .filter(F.col(id_col) != F.col("query_id"))
-              .select(F.col("query_id"), F.col(id_col).alias("match_id"),
+              .filter(F.col("vec_id") != F.col("query_id"))
+              .select(F.col("query_id"), F.col("vec_id").alias("match_id"),
                       (int_dot(F.col("qv"), F.col("qq")).cast("double")
                        / (F.sqrt(F.col("n2").cast("double"))
                           * F.sqrt(F.col("qn2").cast("double"))))
                       .alias("cosine"))
-              .filter(F.col("cosine") >= tau))
+              .filter(F.col("cosine") >= RANGE_TAU))
     w = Window.partitionBy("query_id")
     return scored.select(
         "query_id", "match_id", "cosine",
@@ -3749,10 +3572,7 @@ register(QuerySpec(
 
 # --- coreset selection: per-cell representatives --------------------------------
 
-def cell_representatives(emb: DataFrame, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
-                         centroid_mod: int = CENTROID_MOD,
-                         n_centroids: int = N_CENTROIDS) -> DataFrame:
+def cell_representatives(emb: DataFrame) -> DataFrame:
     """Diversity/coreset sampling: the vector nearest its cell's
     centroid, per IVF cell — the "pick one representative per semantic
     region" selection step (the dual of SemDeDup's redundancy removal:
@@ -3762,23 +3582,22 @@ def cell_representatives(emb: DataFrame, id_col: str = "vec_id",
     (map-side partial agg; shuffles one row per cell). Exact integer
     distances; ties break on id.
     """
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                      sq_norm(quantize(F.col(vec_col))).alias("n2"))
-    cents = (base.filter(_fixed_sample(id_col, centroid_mod, n_centroids))
-             .select(F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"),
+                      sq_norm(quantize(F.col("embedding"))).alias("n2"))
+    cents = (base.filter(_fixed_sample("vec_id", CENTROID_MOD, N_CENTROIDS))
+             .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"),
                      F.col("n2").alias("cn2")))
     # assignment carries (qv, n2) — no corpus id join (r13)
-    dists = (_ivf_assign_cols(emb, id_col, vec_col, centroid_mod,
-                              n_centroids)
+    dists = (_ivf_assign_cols(emb)
              .join(F.broadcast(cents), "cid")
-             .select("cid", F.col(id_col),
+             .select("cid", F.col("vec_id"),
                      (F.col("n2") + F.col("cn2")
                       - 2 * int_dot(F.col("qv"), F.col("cv")))
                      .alias("dist")))
     return (dists.groupBy("cid")
-            .agg(F.min(F.struct("dist", F.col(id_col))).alias("best"),
+            .agg(F.min(F.struct("dist", F.col("vec_id"))).alias("best"),
                  F.count("*").alias("cell_size"))
-            .select("cid", F.col(f"best.{id_col}").alias("rep_id"),
+            .select("cid", F.col("best.vec_id").alias("rep_id"),
                     F.col("best.dist").cast("bigint").alias("rep_dist"),
                     F.col("cell_size").cast("bigint").alias("cell_size")))
 
@@ -3821,8 +3640,7 @@ MMR_POOL = 64
 MMR_LAMBDA = 0.7
 
 
-def mmr_select(emb: DataFrame, id_col: str = "vec_id",
-               vec_col: str = "embedding", k: int = MMR_K,
+def mmr_select(emb: DataFrame, k: int = MMR_K,
                pool: int = MMR_POOL, lam: float = MMR_LAMBDA) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell & Goldstein
     1998): pick ``k`` vectors that are RELEVANT to the query but
@@ -3847,31 +3665,31 @@ def mmr_select(emb: DataFrame, id_col: str = "vec_id",
     """
     import math
 
-    base = (emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"))
+    base = (emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"))
             .withColumn("n2", sq_norm(F.col("qv")))
             .filter(F.col("n2") > 0))
-    out_schema = (f"rank int, {id_col} long, rel double, "
+    out_schema = ("rank int, vec_id long, rel double, "
                   "max_sim_to_selected double")
-    head = base.orderBy(id_col).limit(1).collect()
+    head = base.orderBy("vec_id").limit(1).collect()
     if not head:  # empty / all-zero-norm input: empty result, not IndexError
         return empty_relation(emb.sparkSession, out_schema)
     qrow = head[0]
-    qv, qn2, qid = qrow["qv"], qrow["n2"], qrow[id_col]
+    qv, qn2, qid = qrow["qv"], qrow["n2"], qrow["vec_id"]
     qlit = lit_long_array(qv)
-    cand = (base.filter(F.col(id_col) != qid)
+    cand = (base.filter(F.col("vec_id") != qid)
             .withColumn("rel",
                         int_dot(F.col("qv"), qlit).cast("double")
                         / (F.sqrt(F.col("n2").cast("double"))
                            * F.lit(math.sqrt(float(qn2)))))
-            .orderBy(F.col("rel").desc(), id_col)
+            .orderBy(F.col("rel").desc(), "vec_id")
             .limit(pool)
             .collect())  # bounded: <= pool rows (the rerank working set)
 
     def dot(a, b):
         return sum(x * y for x, y in zip(a, b))
 
-    vecs = {r[id_col]: (list(r["qv"]), int(r["n2"])) for r in cand}
-    rels = {r[id_col]: float(r["rel"]) for r in cand}
+    vecs = {r["vec_id"]: (list(r["qv"]), int(r["n2"])) for r in cand}
+    rels = {r["vec_id"]: float(r["rel"]) for r in cand}
     selected: list = []
     out = []
     remaining = sorted(vecs)
@@ -3970,12 +3788,9 @@ register(QuerySpec(
 TOPIC_TOP_TERMS = 3
 
 
-def cluster_topics(emb: DataFrame, docs: DataFrame,
-                   id_col: str = "vec_id", doc_id_col: str = "doc_id",
-                   text_col: str = "text",
-                   top_n: int = TOPIC_TOP_TERMS) -> DataFrame:
+def cluster_topics(emb: DataFrame, docs: DataFrame) -> DataFrame:
     """Human-readable topic card per embedding cluster: each IVF coarse
-    cell labeled with its ``top_n`` most DISTINCTIVE member terms — the
+    cell labeled with its ``TOPIC_TOP_TERMS`` most DISTINCTIVE member terms — the
     text⇄embedding bridge that turns an opaque cid into something a
     curator can read (treating embeddings row i as the embedding of
     document i, the all-signal convention).
@@ -3983,7 +3798,7 @@ def cluster_topics(emb: DataFrame, docs: DataFrame,
     Distinctiveness is the exact-integer rarity weight of
     ``tfidf_doc_pairs``: in-cell term count × (N_docs − global df) — so
     corpus-wide boilerplate scores ~0 and cell-specific vocabulary
-    rises. Top-``top_n`` per cell via a cell-partitioned window with
+    rises. Top-``TOPIC_TOP_TERMS`` per cell via a cell-partitioned window with
     (weight desc, token) total order.
 
     Scale: assignment is the standard IVF build (broadcast codebook);
@@ -3992,15 +3807,15 @@ def cluster_topics(emb: DataFrame, docs: DataFrame,
     """
     from downscaledclimatedata_spark.operators.textops import _tokens
 
-    assign = ivf_assign(emb, id_col).select(
-        F.col(id_col).alias(doc_id_col), "cid")
+    assign = ivf_assign(emb).select(
+        F.col("vec_id").alias("doc_id"), "cid")
     toks = docs.select(
-        F.col(doc_id_col),
-        F.explode(_tokens(F.col(text_col))).alias("token"))
+        F.col("doc_id"),
+        F.explode(_tokens(F.col("text"))).alias("token"))
     dfreq = (toks.distinct().groupBy("token")
              .agg(F.count("*").alias("df")))
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
-    cell_counts = (toks.join(assign.hint("merge"), doc_id_col)
+    cell_counts = (toks.join(assign.hint("merge"), "doc_id")
                    .groupBy("cid", "token").agg(F.count("*").alias("cnt")))
     weighted = (cell_counts
                 .join(dfreq.hint("merge"), "token")
@@ -4010,7 +3825,7 @@ def cluster_topics(emb: DataFrame, docs: DataFrame,
                         .cast("bigint").alias("weight")))
     w = Window.partitionBy("cid").orderBy(F.col("weight").desc(), "token")
     return (weighted.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= top_n)
+            .filter(F.col("rnk") <= TOPIC_TOP_TERMS)
             .select("cid", F.col("rnk").cast("int").alias("rnk"),
                     "token", "weight")
             .orderBy("cid", "rnk"))
@@ -4064,10 +3879,7 @@ register(QuerySpec(
 DRIFT_TV_SCALE = 1_000_000_000  # fixed-point scale for exact TV distance
 
 
-def embedding_drift(ref: DataFrame, new: DataFrame, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    centroid_mod: int = CENTROID_MOD,
-                    n_centroids: int = N_CENTROIDS) -> DataFrame:
+def embedding_drift(ref: DataFrame, new: DataFrame) -> DataFrame:
     """Distribution drift between two embedding snapshots: assign both
     to the SAME coarse codebook (built from the reference — the
     monitored model's fixed quantizer) and compare per-cell occupancy
@@ -4084,22 +3896,22 @@ def embedding_drift(ref: DataFrame, new: DataFrame, id_col: str = "vec_id",
     Scale: two N·k broadcast-codebook assignment passes, two |cells|
     aggregates, one |cells|-row join. Nothing corpus-sized shuffles.
     """
-    base_ref = ref.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                          sq_norm(quantize(F.col(vec_col))).alias("n2"))
-    cents = (base_ref.filter(_fixed_sample(id_col, centroid_mod, n_centroids))
-             .select(F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
+    base_ref = ref.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"),
+                          sq_norm(quantize(F.col("embedding"))).alias("n2"))
+    cents = (base_ref.filter(_fixed_sample("vec_id", CENTROID_MOD, N_CENTROIDS))
+             .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"),
                      F.col("n2").alias("cn2")).localCheckpoint())
 
     def assign_counts(df: DataFrame) -> DataFrame:
-        base = df.select(F.col(id_col),
-                         quantize(F.col(vec_col)).alias("qv"),
-                         sq_norm(quantize(F.col(vec_col))).alias("n2"))
+        base = df.select(F.col("vec_id"),
+                         quantize(F.col("embedding")).alias("qv"),
+                         sq_norm(quantize(F.col("embedding"))).alias("n2"))
         scored = (base.crossJoin(F.broadcast(cents))
-                  .select(F.col(id_col), "cid",
+                  .select(F.col("vec_id"), "cid",
                           (F.col("n2") + F.col("cn2")
                            - 2 * int_dot(F.col("qv"), F.col("cv")))
                           .alias("dist")))
-        best = (scored.groupBy(id_col)
+        best = (scored.groupBy("vec_id")
                 .agg(F.min(F.struct("dist", "cid")).alias("m"))
                 .select(F.col("m.cid").alias("cid")))
         return best.groupBy("cid").agg(F.count("*").alias("n"))
@@ -4200,10 +4012,7 @@ register(QuerySpec(
 
 # --- IVF cell health statistics -------------------------------------------------
 
-def ivf_cell_stats(emb: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   centroid_mod: int = CENTROID_MOD,
-                   n_centroids: int = N_CENTROIDS) -> DataFrame:
+def ivf_cell_stats(emb: DataFrame) -> DataFrame:
     """Per-cell index diagnostics: member count, exact mean squared
     distance to the centroid (scaled-integer, no float sums), and
     radius (max squared distance) — the report that tells an index
@@ -4216,13 +4025,13 @@ def ivf_cell_stats(emb: DataFrame, id_col: str = "vec_id",
     assignment + one |cells| aggregate; empty cells surface via a left
     join from the centroid relation with zero counts.
     """
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                      sq_norm(quantize(F.col(vec_col))).alias("n2"))
-    cents = (base.filter(_fixed_sample(id_col, centroid_mod, n_centroids))
-             .select(F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"),
+                      sq_norm(quantize(F.col("embedding"))).alias("n2"))
+    cents = (base.filter(_fixed_sample("vec_id", CENTROID_MOD, N_CENTROIDS))
+             .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"),
                      F.col("n2").alias("cn2")))
     # tiered argmin keeping the winning distance (r13)
-    best = (_argmin_assign(base, cents, id_col, n_centroids,
+    best = (_argmin_assign(base, cents, "vec_id", N_CENTROIDS,
                            dist_out="dist")
             .select("cid", "dist"))
     per_cell = best.groupBy("cid").agg(
@@ -4295,15 +4104,7 @@ register(QuerySpec(
 RES_CB_OFFSET = 7  # shift the codebook sample off the coarse-centroid ids
 
 
-def ivfpq_residual_topk(emb: DataFrame, id_col: str = "vec_id",
-                        vec_col: str = "embedding", k: int = TOP_K,
-                        query_mod: int = QUERY_MOD,
-                        n_queries: int = N_QUERIES,
-                        centroid_mod: int = CENTROID_MOD,
-                        n_centroids: int = N_CENTROIDS,
-                        nprobe: int = NPROBE, ks: int = PQ_KS,
-                        m_sub: int = RERANK_M_SUB,
-                        n_iter: int = PQ_TRAIN_ITERS) -> DataFrame:
+def ivfpq_residual_topk(emb: DataFrame) -> DataFrame:
     """Residual-encoding IVF-PQ — the actual IVFADC of Jegou et al.
     (TPAMI 2011), which `ivfpq_topk` approximates by PQ-coding RAW
     vectors. Production IVF-PQ codes the RESIDUAL r = v - centroid(v):
@@ -4334,7 +4135,7 @@ def ivfpq_residual_topk(emb: DataFrame, id_col: str = "vec_id",
       kmeans-refined coarse lists (`ivf_topk_refined`).
 
     The per-(query, probed-cell) ADC table — the query's residual
-    differs per probed centroid — is n_queries x nprobe x m_sub x ks
+    differs per probed centroid — is N_QUERIES x NPROBE x RERANK_M_SUB x PQ_KS
     rows, broadcast; candidates are restricted to probed cells BY the
     (cid, m, code) join itself.
 
@@ -4347,47 +4148,46 @@ def ivfpq_residual_topk(emb: DataFrame, id_col: str = "vec_id",
     """
     from pyspark.sql import Window
 
-    sub_dim = DIM // m_sub
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                      sq_norm(quantize(F.col(vec_col))).alias("n2"))
-    cents = (base.filter(_fixed_sample(id_col, centroid_mod, n_centroids))
-             .select(F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
+    sub_dim = DIM // RERANK_M_SUB
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"),
+                      sq_norm(quantize(F.col("embedding"))).alias("n2"))
+    cents = (base.filter(_fixed_sample("vec_id", CENTROID_MOD, N_CENTROIDS))
+             .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"),
                      F.col("n2").alias("cn2")))
     # residual vectors: v - centroid(cell(v)), exact integers; the
     # assignment carries qv on the same row — no corpus id join (r13)
-    avec = (_ivf_assign_cols(emb, id_col, vec_col, centroid_mod,
-                             n_centroids)
+    avec = (_ivf_assign_cols(emb)
             .join(F.broadcast(cents.select("cid", "cv")), "cid")
-            .select(id_col, F.col("cid").alias("cell"),
+            .select("vec_id", F.col("cid").alias("cell"),
                     F.zip_with("qv", "cv", lambda x, y: x - y).alias("rv")))
     rsubs = (avec.select(
-        id_col, "cell",
-        F.posexplode(_subvectors(F.col("rv"), m_sub, sub_dim))
+        "vec_id", "cell",
+        F.posexplode(_subvectors(F.col("rv"), RERANK_M_SUB, sub_dim))
         .alias("m", "sv"))
         .withColumn("dv", F.transform("sv", lambda x: x.cast("double")))
         .localCheckpoint())
 
     # per-subspace Lloyd's over residuals, seeded off the shifted sample
-    rcb = (rsubs.filter((F.col(id_col) % centroid_mod == RES_CB_OFFSET)
-                        & (F.col(id_col) < centroid_mod * ks))
-           .select("m", F.col(id_col).alias("cid"), F.col("dv").alias("cv")))
+    rcb = (rsubs.filter((F.col("vec_id") % CENTROID_MOD == RES_CB_OFFSET)
+                        & (F.col("vec_id") < CENTROID_MOD * PQ_KS))
+           .select("m", F.col("vec_id").alias("cid"), F.col("dv").alias("cv")))
     vn2 = F.aggregate(F.zip_with(F.col("dv"), F.col("dv"), lambda x, y: x * y),
                       F.lit(0.0), lambda a, x: a + x)
     dot = F.aggregate(F.zip_with(F.col("dv"), F.col("cv"), lambda x, y: x * y),
                       F.lit(0.0), lambda a, x: a + x)
     cn2 = F.aggregate(F.zip_with(F.col("cv"), F.col("cv"), lambda x, y: x * y),
                       F.lit(0.0), lambda a, x: a + x)
-    for _ in range(n_iter):
+    for _ in range(PQ_TRAIN_ITERS):
         c = rcb.select("m", "cid", "cv", cn2.alias("cn2"))
         # relational per-subspace argmin (r13 measured: interpreted HOF
         # lambdas lose to this codegen'd broadcast join + groupBy;
         # NumPy ruled out — DOUBLE distances must keep the JVM fold
         # order). cid unique per m, so the carried sv never decides.
         scored = (rsubs.join(F.broadcast(c), "m")
-                  .select(F.col(id_col), F.col("m"), F.col("cid"),
+                  .select(F.col("vec_id"), F.col("m"), F.col("cid"),
                           F.col("sv"), (vn2 + F.col("cn2") - 2 * dot)
                           .alias("dist")))
-        assigned = (scored.groupBy(id_col, "m")
+        assigned = (scored.groupBy("vec_id", "m")
                     .agg(F.min(F.struct("dist", "cid", "sv")).alias("best"))
                     .select("m", F.col("best.cid").alias("cid"),
                             F.col("best.sv").alias("sv")))
@@ -4407,32 +4207,32 @@ def ivfpq_residual_topk(emb: DataFrame, id_col: str = "vec_id",
     # encode every corpus residual against the trained codebook —
     # relational argmin (same r13 measurement as the Lloyd's loop)
     sc = (rsubs.join(F.broadcast(cwf), "m")
-          .select(F.col(id_col), F.col("cid").alias("code_cid"),
+          .select(F.col("vec_id"), F.col("cid").alias("code_cid"),
                   F.col("m"), F.col("cell"),
                   (vn2 + F.col("cn2") - 2 * dot).alias("dist")))
-    enc = (sc.groupBy(id_col, "cell", "m")
+    enc = (sc.groupBy("vec_id", "cell", "m")
            .agg(F.min(F.struct("dist", "code_cid")).alias("best"))
-           .select(F.col(id_col).alias("match_id"),
+           .select(F.col("vec_id").alias("match_id"),
                    F.col("cell").alias("cid"), "m",
                    F.col("best.code_cid").alias("code")))
 
     # query probes: nprobe nearest coarse cells; residual PER probed cell
-    qbase = base.filter(_fixed_sample(id_col, query_mod, n_queries))
+    qbase = base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
     qranked = (qbase.crossJoin(F.broadcast(cents))
-               .select(F.col(id_col), F.col("cid"), F.col("qv"),
+               .select(F.col("vec_id"), F.col("cid"), F.col("qv"),
                        F.col("cv"),
                        (F.col("n2") + F.col("cn2")
                         - 2 * int_dot(F.col("qv"), F.col("cv")))
                        .alias("dist")))
-    w = Window.partitionBy(id_col).orderBy("dist", "cid")
+    w = Window.partitionBy("vec_id").orderBy("dist", "cid")
     probes = (qranked.withColumn("rn", F.row_number().over(w))
-              .filter(F.col("rn") <= nprobe)
-              .select(F.col(id_col).alias("query_id"), "cid",
+              .filter(F.col("rn") <= NPROBE)
+              .select(F.col("vec_id").alias("query_id"), "cid",
                       F.zip_with("qv", "cv", lambda x, y: x - y)
                       .alias("rv")))
     qsubs = (probes.select(
         "query_id", F.col("cid").alias("cell"),
-        F.posexplode(_subvectors(F.col("rv"), m_sub, sub_dim))
+        F.posexplode(_subvectors(F.col("rv"), RERANK_M_SUB, sub_dim))
         .alias("m", "sv"))
         .withColumn("dv", F.transform("sv", lambda x: x.cast("double"))))
     qtab = (qsubs.join(F.broadcast(cwf), "m")
@@ -4447,7 +4247,7 @@ def ivfpq_residual_topk(emb: DataFrame, id_col: str = "vec_id",
            .agg(F.sum("qd").alias("adc_dist")))
     w2 = Window.partitionBy("query_id").orderBy("adc_dist", "match_id")
     return (adc.withColumn("rnk", F.row_number().over(w2))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "adc_dist", "rnk"))
 
 
@@ -4548,10 +4348,7 @@ register(QuerySpec("similarity_ivfpq_residual",
 
 # --- leave-one-out kNN classification eval (embedding quality metric) ----------
 
-def knn_classify_confusion(emb: DataFrame, id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           label_col: str = "label",
-                           k: int = KNN_K,
+def knn_classify_confusion(emb: DataFrame,
                            centroid_mod: int = CENTROID_MOD,
                            n_centroids: int = N_CENTROIDS,
                            n_super: int | None = None,
@@ -4572,11 +4369,11 @@ def knn_classify_confusion(emb: DataFrame, id_col: str = "vec_id",
     matrix — the oracle's inner joins mirror exactly that. Output is
     |labels|²-bounded.
     """
-    g = knn_graph(emb, id_col, vec_col, k, centroid_mod, n_centroids,
+    g = knn_graph(emb, KNN_K, centroid_mod, n_centroids,
                   nprobe=1, n_super=n_super, n_super2=n_super2,
                   spread_every=spread_every)
-    nb_labels = emb.select(F.col(id_col).alias("neighbor_id"),
-                           F.col(label_col).cast("int").alias("nb_label"))
+    nb_labels = emb.select(F.col("vec_id").alias("neighbor_id"),
+                           F.col("label").cast("int").alias("nb_label"))
     votes = (g.join(nb_labels, "neighbor_id")
              .groupBy("vec_id", "nb_label")
              .agg(F.count(F.lit(1)).alias("c")))
@@ -4584,8 +4381,8 @@ def knn_classify_confusion(emb: DataFrame, id_col: str = "vec_id",
             .agg(F.min(F.struct((-F.col("c")).alias("nc"), "nb_label"))
                  .alias("best"))
             .select("vec_id", F.col("best.nb_label").alias("pred_label")))
-    truth = emb.select(F.col(id_col).alias("vec_id"),
-                       F.col(label_col).cast("int").alias("true_label"))
+    truth = emb.select(F.col("vec_id"),
+                       F.col("label").cast("int").alias("true_label"))
     return (truth.join(pred, "vec_id")
             .groupBy("true_label", "pred_label")
             .agg(F.count(F.lit(1)).alias("n"))
@@ -4640,18 +4437,15 @@ RP_POOL = 100  # coarse-pass candidate pool per query (then exact rerank)
 RP_CLAMP = QCLAMP  # projected components share the quantizer's contract
 
 
-def _rp_planes(n_proj: int = RP_DIM, dim: int = DIM) -> list[list[int]]:
+def _rp_planes() -> list[list[int]]:
     """Deterministic ±1 projection matrix (Achlioptas 2003 sign variant)
     derived from md5 — no RNG, both engines reproduce it as literals."""
     return [[1 if int(hashlib.md5(f"rp{j}:{d}".encode()).hexdigest()[:15],
                       16) % 2 == 0 else -1
-             for d in range(dim)] for j in range(n_proj)]
+             for d in range(DIM)] for j in range(RP_DIM)]
 
 
-def rp_topk(emb: DataFrame, id_col: str = "vec_id",
-            vec_col: str = "embedding", k: int = TOP_K,
-            query_mod: int = QUERY_MOD, n_queries: int = N_QUERIES,
-            n_proj: int = RP_DIM, pool: int = RP_POOL) -> DataFrame:
+def rp_topk(emb: DataFrame) -> DataFrame:
     """ANN top-k via signed random projection: score candidates in a
     JL-projected RP_DIM-space (4x narrower than DIM), keep a per-query
     pool, exact-rerank ONLY the pool in full dimensionality.
@@ -4664,7 +4458,7 @@ def rp_topk(emb: DataFrame, id_col: str = "vec_id",
 
     Scale design (100 TB): the coarse pass scans a (id, pv, pn2)
     relation that is DIM/RP_DIM x narrower than the corpus vectors —
-    the full embeddings are touched only for the n_queries*pool rerank
+    the full embeddings are touched only for the N_QUERIES*RP_POOL rerank
     rows, fetched by a BROADCAST pool semi-join (no corpus shuffle).
     Projection is a shuffle-free codegen projection (16 exact-int dot
     products against literal sign rows). Projected components clamp to
@@ -4675,7 +4469,7 @@ def rp_topk(emb: DataFrame, id_col: str = "vec_id",
     pass on both engines — a recall loss, not a crash.
     """
     from pyspark.sql import Window
-    planes = _rp_planes(n_proj)
+    planes = _rp_planes()
 
     # The whole 32-plane projection as ONE parsed expression: transform
     # over a literal sign matrix, each plane an exact-int dot against qv
@@ -4690,16 +4484,16 @@ def rp_topk(emb: DataFrame, id_col: str = "vec_id",
         "aggregate(zip_with(qv, p, (x, y) -> x * y), 0L, (a, x) -> a + x),"
         f" {-RP_CLAMP}L), {RP_CLAMP}L) as bigint))")
 
-    base = (emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"))
+    base = (emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"))
             .withColumn("n2", sq_norm(F.col("qv")))
             .filter(F.col("n2") > 0)
             .withColumn("pv", pv_expr)
             .withColumn("pn2", sq_norm(F.col("pv"))))
     coarse = (base.filter(F.col("pn2") > 0)
-              .select(F.col(id_col).alias("match_id"), "pv", "pn2"))
-    pq = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
+              .select(F.col("vec_id").alias("match_id"), "pv", "pn2"))
+    pq = (base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
           .filter(F.col("pn2") > 0)
-          .select(F.col(id_col).alias("query_id"),
+          .select(F.col("vec_id").alias("query_id"),
                   F.col("pv").alias("qpv"), F.col("pn2").alias("qpn2")))
     pcos = (int_dot(F.col("qpv"), F.col("pv")).cast("double")
             / (F.sqrt(F.col("qpn2").cast("double"))
@@ -4710,12 +4504,12 @@ def rp_topk(emb: DataFrame, id_col: str = "vec_id",
                 .filter(F.col("match_id") != F.col("query_id"))
                 .select("query_id", "match_id", pcos.alias("pcos"))
                 .withColumn("prnk", F.row_number().over(wp))
-                .filter(F.col("prnk") <= pool)
+                .filter(F.col("prnk") <= RP_POOL)
                 .select("query_id", "match_id"))
-    full = base.select(F.col(id_col).alias("match_id"),
+    full = base.select(F.col("vec_id").alias("match_id"),
                        F.col("qv").alias("cq"), F.col("n2").alias("cn2"))
-    qfull = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-             .select(F.col(id_col).alias("query_id"),
+    qfull = (base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+             .select(F.col("vec_id").alias("query_id"),
                      F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
     rer = (full.join(F.broadcast(pool_rel), "match_id")
            .join(F.broadcast(qfull), "query_id")
@@ -4726,7 +4520,7 @@ def rp_topk(emb: DataFrame, id_col: str = "vec_id",
     w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
                                                 F.col("match_id"))
     return (rer.withColumn("rnk", F.row_number().over(w2))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "cosine", "rnk"))
 
 
@@ -4805,10 +4599,7 @@ SQ_LEVELS = 255  # 8-bit codes 0..255: the FAISS ScalarQuantizer QT_8bit family
 SQ_POOL = 50     # coarse-ADC candidate pool per query (then exact rerank)
 
 
-def sq8_topk(emb: DataFrame, id_col: str = "vec_id",
-             vec_col: str = "embedding", k: int = TOP_K,
-             query_mod: int = QUERY_MOD, n_queries: int = N_QUERIES,
-             pool: int = SQ_POOL) -> DataFrame:
+def sq8_topk(emb: DataFrame) -> DataFrame:
     """ANN top-k via trained 8-bit scalar quantization (SQ8): per-dim
     [min, max] learned from the corpus, each component stored as a
     0..255 code, coarse ASYMMETRIC scoring (full-precision query vs
@@ -4830,12 +4621,12 @@ def sq8_topk(emb: DataFrame, id_col: str = "vec_id",
     aggregation over a narrow projection (128 partial-agg expressions,
     no shuffle of vectors), broadcast back as a 1-row relation. The
     coarse pass is a shuffle-free projection + broadcast-query
-    crossJoin (N x n_queries, linear); full vectors are touched only
-    for the n_queries x pool rerank rows via broadcast semi-joins —
+    crossJoin (N x N_QUERIES, linear); full vectors are touched only
+    for the N_QUERIES x SQ_POOL rerank rows via broadcast semi-joins —
     the corpus itself never shuffles.
     """
     from pyspark.sql import Window
-    base = (emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"))
+    base = (emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"))
             .withColumn("n2", sq_norm(F.col("qv")))
             .filter(F.col("n2") > 0))
     mm = base.agg(
@@ -4852,9 +4643,9 @@ def sq8_topk(emb: DataFrame, id_col: str = "vec_id",
             .withColumn("rv", recon)
             .withColumn("rn2", sq_norm(F.col("rv")))
             .filter(F.col("rn2") > 0)
-            .select(F.col(id_col).alias("match_id"), "rv", "rn2"))
-    q = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-         .select(F.col(id_col).alias("query_id"),
+            .select(F.col("vec_id").alias("match_id"), "rv", "rn2"))
+    q = (base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+         .select(F.col("vec_id").alias("query_id"),
                  F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
     adc = (int_dot(F.col("qq"), F.col("rv")).cast("double")
            / (F.sqrt(F.col("qn2").cast("double"))
@@ -4865,9 +4656,9 @@ def sq8_topk(emb: DataFrame, id_col: str = "vec_id",
                 .filter(F.col("match_id") != F.col("query_id"))
                 .select("query_id", "match_id", adc.alias("adc"))
                 .withColumn("prnk", F.row_number().over(wp))
-                .filter(F.col("prnk") <= pool)
+                .filter(F.col("prnk") <= SQ_POOL)
                 .select("query_id", "match_id"))
-    full = base.select(F.col(id_col).alias("match_id"),
+    full = base.select(F.col("vec_id").alias("match_id"),
                        F.col("qv").alias("cq"), F.col("n2").alias("cn2"))
     rer = (full.join(F.broadcast(pool_rel), "match_id")
            .join(F.broadcast(q), "query_id")
@@ -4878,7 +4669,7 @@ def sq8_topk(emb: DataFrame, id_col: str = "vec_id",
     w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
                                                 F.col("match_id"))
     return (rer.withColumn("rnk", F.row_number().over(w2))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id", "cosine", "rnk"))
 
 
@@ -4960,13 +4751,9 @@ EVD_COUNT = 30   # fixed eval-set size (benchmarks are MBs, corpus is TBs)
 EVD_TAU = 0.45   # cosine threshold; organic corpus pairs top out ~0.51
 
 
-def semantic_decontaminate(emb: DataFrame, id_col: str = "vec_id",
-                           vec_col: str = "embedding",
-                           eval_mod: int = EVD_MOD,
-                           eval_count: int = EVD_COUNT,
-                           tau: float = EVD_TAU) -> DataFrame:
+def semantic_decontaminate(emb: DataFrame) -> DataFrame:
     """Embedding-channel benchmark decontamination: flag every corpus
-    vector whose cosine to ANY eval-set vector reaches tau, reporting
+    vector whose cosine to ANY eval-set vector reaches EVD_TAU, reporting
     the best-matching eval id. The semantic complement of the n-gram
     `dedup_decontaminate` pass — n-grams catch verbatim and lightly
     edited copies, embeddings catch paraphrases (the GSM8k-rephrase
@@ -4986,26 +4773,26 @@ def semantic_decontaminate(emb: DataFrame, id_col: str = "vec_id",
     neighbours above tau.
     """
     from pyspark.sql import Window
-    base = (emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"))
+    base = (emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"))
             .withColumn("n2", sq_norm(F.col("qv")))
             .filter(F.col("n2") > 0))
-    ev = (base.filter(_fixed_sample(id_col, eval_mod, eval_count))
-          .select(F.col(id_col).alias("eval_id"),
+    ev = (base.filter(_fixed_sample("vec_id", EVD_MOD, EVD_COUNT))
+          .select(F.col("vec_id").alias("eval_id"),
                   F.col("qv").alias("ev"), F.col("n2").alias("en2")))
     cos = (int_dot(F.col("qv"), F.col("ev")).cast("double")
            / (F.sqrt(F.col("n2").cast("double"))
               * F.sqrt(F.col("en2").cast("double"))))
-    w = Window.partitionBy(id_col).orderBy(F.col("cosine").desc(),
+    w = Window.partitionBy("vec_id").orderBy(F.col("cosine").desc(),
                                            F.col("eval_id"))
     return (base.crossJoin(F.broadcast(ev))
-            .select(F.col(id_col), F.col("eval_id"), cos.alias("cosine"))
-            .filter(F.col("cosine") >= tau)
+            .select(F.col("vec_id"), F.col("eval_id"), cos.alias("cosine"))
+            .filter(F.col("cosine") >= EVD_TAU)
             .withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") == 1)
-            .select(F.col(id_col),
+            .select(F.col("vec_id"),
                     F.col("eval_id").alias("best_eval_id"),
                     F.col("cosine").alias("best_cosine"),
-                    (F.col(id_col) == F.col("eval_id"))
+                    (F.col("vec_id") == F.col("eval_id"))
                     .alias("is_verbatim_self")))
 
 
@@ -5051,9 +4838,7 @@ register(QuerySpec(
 
 # --- IVF cell label purity (clustering-quality eval) ------------------------------
 
-def ivf_cell_purity(emb: DataFrame, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    label_col: str = "label",
+def ivf_cell_purity(emb: DataFrame,
                     centroid_mod: int = CENTROID_MOD,
                     n_centroids: int = N_CENTROIDS) -> DataFrame:
     """Per-cell label purity of the IVF assignment: member count,
@@ -5072,9 +4857,9 @@ def ivf_cell_purity(emb: DataFrame, id_col: str = "vec_id",
     """
     # the assignment projection carries the label column straight
     # through (extra=), so no corpus self-join by id is needed (r13)
-    cl = (_ivf_assign_cols(emb, id_col, vec_col, centroid_mod,
-                           n_centroids, extra=(label_col,))
-          .select("cid", F.col(label_col).alias("_lab"))
+    cl = (_ivf_assign_cols(emb, centroid_mod,
+                           n_centroids, extra=("label",))
+          .select("cid", F.col("label").alias("_lab"))
           .groupBy("cid", "_lab").agg(F.count(F.lit(1)).alias("c")))
     per_cell = (cl.groupBy("cid")
                 .agg(F.sum("c").alias("n_members"),
@@ -5082,9 +4867,9 @@ def ivf_cell_purity(emb: DataFrame, id_col: str = "vec_id",
                      F.min(F.struct((-F.col("c")).alias("nc"),
                                     F.col("_lab").alias("lab")))
                      .alias("m")))
-    cents = (emb.select(F.col(id_col))
-             .filter(_fixed_sample(id_col, centroid_mod, n_centroids))
-             .select(F.col(id_col).alias("cid")))
+    cents = (emb.select(F.col("vec_id"))
+             .filter(_fixed_sample("vec_id", centroid_mod, n_centroids))
+             .select(F.col("vec_id").alias("cid")))
     return (cents.join(per_cell, "cid", "left")
             .select(
                 "cid",
@@ -5154,9 +4939,7 @@ register(QuerySpec(
 
 # --- label-margin embedding eval (same-class vs cross-class separation) ----------
 
-def label_margin_eval(emb: DataFrame, id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      label_col: str = "label",
+def label_margin_eval(emb: DataFrame,
                       query_mod: int = QUERY_MOD,
                       n_queries: int = N_QUERIES) -> DataFrame:
     """Embedding-quality eval against labels: for each query in the
@@ -5172,16 +4955,16 @@ def label_margin_eval(emb: DataFrame, id_col: str = "vec_id",
     whose class has no other member surface NULL best_same (margin
     NULL), not a silent drop.
     """
-    base = (emb.select(F.col(id_col), F.col(label_col).alias("_lab"),
-                       quantize(F.col(vec_col)).alias("qv"),
-                       sq_norm(quantize(F.col(vec_col))).alias("n2"))
+    base = (emb.select(F.col("vec_id"), F.col("label").alias("_lab"),
+                       quantize(F.col("embedding")).alias("qv"),
+                       sq_norm(quantize(F.col("embedding"))).alias("n2"))
             .filter(F.col("n2") > 0))
-    queries = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-               .select(F.col(id_col).alias("query_id"),
+    queries = (base.filter(_fixed_sample("vec_id", query_mod, n_queries))
+               .select(F.col("vec_id").alias("query_id"),
                        F.col("_lab").alias("qlab"),
                        F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
     scored = (base.crossJoin(F.broadcast(queries))
-              .filter(F.col(id_col) != F.col("query_id"))
+              .filter(F.col("vec_id") != F.col("query_id"))
               .select("query_id", "qlab",
                       (F.col("_lab") == F.col("qlab")).alias("same"),
                       (int_dot(F.col("qq"), F.col("qv")).cast("double")
@@ -5256,20 +5039,18 @@ OOD_FACTOR = 4  # flag vectors whose nearest-centroid distance exceeds
                 # survives re-embedding and corpus growth unchanged
 
 
-def ood_vectors(emb: DataFrame, id_col: str = "vec_id",
-                vec_col: str = "embedding",
+def ood_vectors(emb: DataFrame,
                 centroid_mod: int = CENTROID_MOD,
-                n_centroids: int = N_CENTROIDS,
-                factor: int = OOD_FACTOR) -> DataFrame:
+                n_centroids: int = N_CENTROIDS) -> DataFrame:
     """Embedding-hygiene gate: vectors whose nearest-centroid squared
-    distance exceeds ``factor`` x the corpus mean — encoder glitches,
+    distance exceeds ``OOD_FACTOR`` x the corpus mean — encoder glitches,
     wrong-modality rows, and truncation artifacts sit far from every
     cell of a codebook fit to the real distribution, and admitting
     them poisons both ANN recall and k-means refinement.
 
     Determinism: distances are the exact-integer IVF assignment
     distances; the verdict multiplies through the mean's denominator
-    (dist * N > factor * sum_dist) so NOTHING divides — pure BIGINT /
+    (dist * N > OOD_FACTOR * sum_dist) so NOTHING divides — pure BIGINT /
     HUGEINT comparison (sum_dist can exceed int64: N x 4·QCLAMP²
     overflows at ~14 corpus rows, hence DECIMAL(38,0)). The reported
     ratio divides once for the human reading the report.
@@ -5277,22 +5058,22 @@ def ood_vectors(emb: DataFrame, id_col: str = "vec_id",
     Scale: one N x k broadcast assignment, a single-row global sum
     broadcast back, a shuffle-free verdict filter.
     """
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                      sq_norm(quantize(F.col(vec_col))).alias("n2"))
-    cents = (base.filter(_fixed_sample(id_col, centroid_mod, n_centroids))
-             .select(F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"),
+                      sq_norm(quantize(F.col("embedding"))).alias("n2"))
+    cents = (base.filter(_fixed_sample("vec_id", centroid_mod, n_centroids))
+             .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"),
                      F.col("n2").alias("cn2")))
     # tiered argmin keeping the winning distance (r13)
-    best = (_argmin_assign(base, cents, id_col, n_centroids,
+    best = (_argmin_assign(base, cents, "vec_id", n_centroids,
                            dist_out="dist")
-            .select(F.col(id_col), "cid", "dist"))
+            .select(F.col("vec_id"), "cid", "dist"))
     d38 = lambda c: c.cast("decimal(38,0)")
     tot = best.agg(F.sum(d38(F.col("dist"))).alias("sum_dist"),
                    F.count(F.lit(1)).alias("n"))
     return (best.crossJoin(F.broadcast(tot))
             .filter(d38(F.col("dist")) * F.col("n")
-                    > F.lit(factor) * F.col("sum_dist"))
-            .select(F.col(id_col), "cid",
+                    > F.lit(OOD_FACTOR) * F.col("sum_dist"))
+            .select(F.col("vec_id"), "cid",
                     F.col("dist").cast("bigint").alias("dist"),
                     (F.col("dist").cast("double") * F.col("n").cast("double")
                      / F.col("sum_dist").cast("double"))
@@ -5349,8 +5130,7 @@ register(QuerySpec(
 MRL_PREFIXES = (8, 16, 32)
 
 
-def prefix_dim_recall(emb: DataFrame, id_col: str = "vec_id",
-                      vec_col: str = "embedding", k: int = TOP_K,
+def prefix_dim_recall(emb: DataFrame,
                       prefixes: tuple = MRL_PREFIXES) -> DataFrame:
     """Recall@k of EXACT search over truncated (prefix) dimensions vs
     the full-dimension exact truth — the evaluation behind
@@ -5364,14 +5144,14 @@ def prefix_dim_recall(emb: DataFrame, id_col: str = "vec_id",
     integer counts, one ratio. Each prefix search is the same N x Q
     broadcast scan as the exact baseline, just over narrower vectors.
     """
-    truth = (cosine_topk_quantized(emb, id_col, vec_col, k=k)
+    truth = (cosine_topk_quantized(emb)
              .select("query_id", "match_id").localCheckpoint())
     out = None
     for p in prefixes:
         sliced = emb.select(
-            F.col(id_col),
-            F.slice(F.col(vec_col), 1, p).alias("_pv"))
-        approx = (cosine_topk_quantized(sliced, id_col, "_pv", k=k)
+            F.col("vec_id"),
+            F.slice(F.col("embedding"), 1, p).alias("_pv"))
+        approx = (cosine_topk_quantized(sliced, "_pv")
                   .select("query_id", "match_id")
                   .withColumn("hit", F.lit(1)))
         scored = (truth.join(F.broadcast(approx),
@@ -5454,8 +5234,7 @@ register(QuerySpec(
 
 # --- kNN-graph hubness diagnostic ------------------------------------------------
 
-def knn_hubness(emb: DataFrame, id_col: str = "vec_id",
-                vec_col: str = "embedding", **graph_kwargs) -> DataFrame:
+def knn_hubness(emb: DataFrame, **graph_kwargs) -> DataFrame:
     """k-occurrence distribution of the kNN graph — the hubness
     diagnostic (Radovanović et al. 2010): in high dimensions a few
     "hub" vectors appear in a disproportionate share of neighbor
@@ -5471,11 +5250,11 @@ def knn_hubness(emb: DataFrame, id_col: str = "vec_id",
     roll-up; the eligible-population row is a single-row aggregate
     broadcast.
     """
-    g = knn_graph(emb, id_col, vec_col, **graph_kwargs)
+    g = knn_graph(emb, **graph_kwargs)
     occ = (g.groupBy(F.col("neighbor_id"))
            .agg(F.count(F.lit(1)).alias("c")))
     hist = occ.groupBy("c").agg(F.count(F.lit(1)).alias("n_vectors"))
-    base = emb.select(quantize(F.col(vec_col)).alias("qv"))
+    base = emb.select(quantize(F.col("embedding")).alias("qv"))
     eligible = base.filter(sq_norm(F.col("qv")) > 0) \
         .agg(F.count(F.lit(1)).alias("n_eligible"))
     n_hubs = occ.agg(F.count(F.lit(1)).alias("n_with_occ"))
@@ -5558,8 +5337,7 @@ register(QuerySpec(
 TRI_BROADCAST_MAX_EDGES = 2_000_000
 
 
-def knn_triangles(emb: DataFrame, id_col: str = "vec_id",
-                  vec_col: str = "embedding", **graph_kwargs) -> DataFrame:
+def knn_triangles(emb: DataFrame, **graph_kwargs) -> DataFrame:
     """Exact triangle count and global clustering coefficient of the
     UNDIRECTED kNN graph — the cohesion diagnostic that separates a
     corpus whose neighborhoods are mutually consistent (high
@@ -5590,11 +5368,11 @@ def knn_triangles(emb: DataFrame, id_col: str = "vec_id",
     """
     from pyspark.sql import Observation
 
-    g = knn_graph(emb, id_col, vec_col, **graph_kwargs)
+    g = knn_graph(emb, **graph_kwargs)
     obs_e = Observation()
-    e = (g.filter(F.col(id_col) != F.col("neighbor_id"))
-         .select(F.least(F.col(id_col), F.col("neighbor_id")).alias("a"),
-                 F.greatest(F.col(id_col), F.col("neighbor_id"))
+    e = (g.filter(F.col("vec_id") != F.col("neighbor_id"))
+         .select(F.least(F.col("vec_id"), F.col("neighbor_id")).alias("a"),
+                 F.greatest(F.col("vec_id"), F.col("neighbor_id"))
                  .alias("b"))
          .distinct()
          .observe(obs_e, F.count(F.lit(1)).alias("n"))
@@ -5689,8 +5467,7 @@ register(QuerySpec(
 MRR_LCM = 60  # lcm(1..TOP_K=5): 1/rnk as exact integer units
 
 
-def ann_mrr(emb: DataFrame, id_col: str = "vec_id",
-            vec_col: str = "embedding", k: int = TOP_K) -> DataFrame:
+def ann_mrr(emb: DataFrame) -> DataFrame:
     """Mean reciprocal rank of the IVF searchers: at what position does
     each searcher place the TRUE nearest neighbor? Complements
     recall@k (ann_recall): recall says whether truth appears anywhere
@@ -5707,13 +5484,13 @@ def ann_mrr(emb: DataFrame, id_col: str = "vec_id",
     Scale: rides the registered searchers; the alignment joins two
     (n_queries x k)-row broadcast relations.
     """
-    truth1 = (cosine_topk_quantized(emb, id_col, vec_col, k=k)
+    truth1 = (cosine_topk_quantized(emb)
               .filter(F.col("rnk") == 1)
               .select("query_id", "match_id").localCheckpoint())
     methods = (
-        ("ivf_nprobe1", ivf_topk(emb, id_col, vec_col, k=k)),
+        ("ivf_nprobe1", ivf_topk(emb)),
         (f"ivf_nprobe{NPROBE}",
-         ivf_topk_multiprobe(emb, id_col, vec_col, k=k)),
+         ivf_topk_multiprobe(emb)),
     )
     out = None
     for name, approx in methods:
@@ -5787,10 +5564,7 @@ register(QuerySpec(
 NORM_HIST_BINS = 32
 
 
-def norm_histogram(emb: DataFrame, id_col: str = "vec_id",
-                   vec_col: str = "embedding",
-                   label_col: str = "label",
-                   n_bins: int = NORM_HIST_BINS) -> DataFrame:
+def norm_histogram(emb: DataFrame) -> DataFrame:
     """Per-label distribution of embedding norms — the first diagnostic
     when cosine and dot-product retrieval disagree (norm stratification
     by label means dot-product search encodes label priors; a spike at
@@ -5802,8 +5576,8 @@ def norm_histogram(emb: DataFrame, id_col: str = "vec_id",
     One projection + one (label, bucket) aggregate with map-side
     partials; output <= |labels| x bins rows.
     """
-    base = emb.select(F.col(label_col).alias("label"),
-                      sq_norm(quantize(F.col(vec_col))).alias("sq"))
+    base = emb.select(F.col("label"),
+                      sq_norm(quantize(F.col("embedding"))).alias("sq"))
     st = base.agg(F.min("sq"), F.max("sq")).first()
     lo, hi = int(st[0] or 0), int(st[1] or 0)
     span = hi - lo
@@ -5814,9 +5588,9 @@ def norm_histogram(emb: DataFrame, id_col: str = "vec_id",
         # int64-safe because sq <= 64 * QCLAMP^2 fits decimal(38,0)
         d = lambda c: c.cast("decimal(38,0)")
         bucket = F.least(
-            F.floor(d(F.col("sq") - F.lit(lo)) * F.lit(int(n_bins))
+            F.floor(d(F.col("sq") - F.lit(lo)) * F.lit(int(NORM_HIST_BINS))
                     / d(F.lit(span))),
-            F.lit(int(n_bins) - 1)).cast("bigint")
+            F.lit(int(NORM_HIST_BINS) - 1)).cast("bigint")
     return (base.groupBy("label", bucket.alias("norm_bucket"))
             .agg(F.count(F.lit(1)).alias("n_vectors"))
             .select(F.col("label").cast("int").alias("label"),
@@ -5867,10 +5641,7 @@ register(QuerySpec(
 NPROBE_CURVE = (1, 2, 4, 8)
 
 
-def nprobe_recall_curve(emb: DataFrame, id_col: str = "vec_id",
-                        vec_col: str = "embedding",
-                        k: int = TOP_K,
-                        nprobes: tuple = NPROBE_CURVE) -> DataFrame:
+def nprobe_recall_curve(emb: DataFrame) -> DataFrame:
     """The recall-vs-nprobe TUNING CURVE: aggregate recall@k of the
     IVF searcher at each probe depth against ONE exact truth — the
     table an ANN deployment actually reads when picking nprobe (the
@@ -5887,11 +5658,11 @@ def nprobe_recall_curve(emb: DataFrame, id_col: str = "vec_id",
     linear scan); each curve point probes inverted lists only, and the
     alignments join (n_queries x k)-row broadcastable relations.
     """
-    truth = (cosine_topk_quantized(emb, id_col, vec_col, k=k)
+    truth = (cosine_topk_quantized(emb)
              .select("query_id", "match_id").localCheckpoint())
     out = None
-    for np_ in nprobes:
-        got = (ivf_topk_multiprobe(emb, id_col, vec_col, k=k, nprobe=np_)
+    for np_ in NPROBE_CURVE:
+        got = (ivf_topk_multiprobe(emb, nprobe=np_)
                .select("query_id", "match_id")
                .withColumn("hit", F.lit(1)))
         scored = (truth.join(F.broadcast(got), ["query_id", "match_id"],
@@ -5971,17 +5742,13 @@ register(QuerySpec(
 MIPS_SEED = 32  # seed-pass size: top-MIPS_SEED corpus vectors by norm
 
 
-def mips_topk_pruned(emb: DataFrame, id_col: str = "vec_id",
-                     vec_col: str = "embedding", k: int = TOP_K,
-                     query_mod: int = QUERY_MOD,
-                     n_queries: int = N_QUERIES,
-                     seed_size: int = MIPS_SEED) -> DataFrame:
+def mips_topk_pruned(emb: DataFrame) -> DataFrame:
     """Exact max-INNER-PRODUCT top-k per query — the recommendation /
     reward-model retrieval objective, where norm matters and cosine's
     normalization is wrong — with a two-pass NORM-BOUND PRUNE instead
     of cosine's brute force:
 
-    1. seed pass: the ``seed_size`` highest-norm corpus vectors (a
+    1. seed pass: the ``MIPS_SEED`` highest-norm corpus vectors (a
        TakeOrdered relation, broadcast) are scored exactly against
        every query; the per-query k-th seed score is a LOWER bound on
        the true k-th inner product.
@@ -6003,17 +5770,17 @@ def mips_topk_pruned(emb: DataFrame, id_col: str = "vec_id",
     """
     from pyspark.sql import Window
 
-    base = emb.select(F.col(id_col),
-                      quantize(F.col(vec_col)).alias("q"))
+    base = emb.select(F.col("vec_id"),
+                      quantize(F.col("embedding")).alias("q"))
     base = base.withColumn("n2", sq_norm(F.col("q")))
-    queries = (base.filter(_fixed_sample(id_col, query_mod, n_queries))
-               .select(F.col(id_col).alias("query_id"),
+    queries = (base.filter(_fixed_sample("vec_id", QUERY_MOD, N_QUERIES))
+               .select(F.col("vec_id").alias("query_id"),
                        F.col("q").alias("qq"), F.col("n2").alias("qn2")))
-    corpus = base.select(F.col(id_col).alias("match_id"),
+    corpus = base.select(F.col("vec_id").alias("match_id"),
                          F.col("q").alias("cq"), F.col("n2").alias("cn2"))
     # 1. seed: bounded TakeOrdered relation, exact per-query kth score
     seed = (corpus.orderBy(F.col("cn2").desc(), "match_id")
-            .limit(seed_size))
+            .limit(MIPS_SEED))
     wq = Window.partitionBy("query_id").orderBy(
         F.col("ip").desc(), "match_id")
     kth = (F.broadcast(seed).crossJoin(F.broadcast(queries))
@@ -6021,7 +5788,7 @@ def mips_topk_pruned(emb: DataFrame, id_col: str = "vec_id",
            .select("query_id", "match_id",
                    int_dot(F.col("qq"), F.col("cq")).alias("ip"))
            .withColumn("_r", F.row_number().over(wq))
-           .filter(F.col("_r") == k)
+           .filter(F.col("_r") == TOP_K)
            .select("query_id", F.col("ip").alias("kth")))
     qb = queries.join(kth, "query_id", "left")
     # 2. pruned scan: the bound test (two multiplies) runs before the
@@ -6038,7 +5805,7 @@ def mips_topk_pruned(emb: DataFrame, id_col: str = "vec_id",
     w = Window.partitionBy("query_id").orderBy(
         F.col("ip").desc(), "match_id")
     return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", "match_id",
                     F.col("ip").cast("bigint").alias("ip"),
                     F.col("rnk").cast("int").alias("rnk")))
@@ -6106,11 +5873,8 @@ RRF_SHORTLIST = 50
 RRF_OUT = 20
 
 
-def hybrid_rrf(docs: DataFrame, emb: DataFrame, term: str = RRF_TERM,
-               query_id: int = RRF_QUERY_ID, k: int = RRF_K,
-               shortlist: int = RRF_SHORTLIST,
-               out_n: int = RRF_OUT) -> DataFrame:
-    """(id, rank_dense, rank_lex, rrf_score) — top ``out_n`` fused.
+def hybrid_rrf(docs: DataFrame, emb: DataFrame) -> DataFrame:
+    """(id, rank_dense, rank_lex, rrf_score) — top ``RRF_OUT`` fused.
 
     Missing-from-one-list ids contribute only the other list's term
     (the standard RRF convention); ranks surface as -1 sentinels so the
@@ -6123,10 +5887,10 @@ def hybrid_rrf(docs: DataFrame, emb: DataFrame, term: str = RRF_TERM,
                        quantize(F.col("embedding")).alias("qv"),
                        sq_norm(quantize(F.col("embedding"))).alias("n2"))
             .filter(F.col("n2") > 0))
-    qvec = (base.filter(F.col("vec_id") == query_id)
+    qvec = (base.filter(F.col("vec_id") == RRF_QUERY_ID)
             .select(F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
     dense_scored = (base.crossJoin(F.broadcast(qvec))
-                    .filter(F.col("vec_id") != query_id)
+                    .filter(F.col("vec_id") != RRF_QUERY_ID)
                     .select(F.col("vec_id").alias("id"),
                             (int_dot(F.col("qv"), F.col("qq"))
                              .cast("double")
@@ -6134,23 +5898,23 @@ def hybrid_rrf(docs: DataFrame, emb: DataFrame, term: str = RRF_TERM,
                                 * F.sqrt(F.col("qn2").cast("double"))))
                             .alias("cosine")))
     dense_top = dense_scored.orderBy(F.col("cosine").desc(),
-                                     F.col("id")).limit(shortlist)
+                                     F.col("id")).limit(RRF_SHORTLIST)
     w_d = Window.orderBy(F.col("cosine").desc(), F.col("id"))
     dense = dense_top.select("id", F.row_number().over(w_d)
                              .alias("rank_dense"))
     tf = (docs.select(F.col("doc_id").alias("id"),
                       F.size(F.filter(tokens(F.col("text")),
-                                      lambda t: t == F.lit(term)))
+                                      lambda t: t == F.lit(RRF_TERM)))
                       .alias("tf"))
-          .filter((F.col("tf") > 0) & (F.col("id") != query_id)))
-    lex_top = tf.orderBy(F.col("tf").desc(), F.col("id")).limit(shortlist)
+          .filter((F.col("tf") > 0) & (F.col("id") != RRF_QUERY_ID)))
+    lex_top = tf.orderBy(F.col("tf").desc(), F.col("id")).limit(RRF_SHORTLIST)
     w_l = Window.orderBy(F.col("tf").desc(), F.col("id"))
     lex = lex_top.select("id", F.row_number().over(w_l).alias("rank_lex"))
     rd = (F.when(F.col("rank_dense").isNotNull(),
-                 F.expr(f"{RRF_SCALE} div ({k} + rank_dense)"))
+                 F.expr(f"{RRF_SCALE} div ({RRF_K} + rank_dense)"))
           .otherwise(F.lit(0)).cast("long"))
     rl = (F.when(F.col("rank_lex").isNotNull(),
-                 F.expr(f"{RRF_SCALE} div ({k} + rank_lex)"))
+                 F.expr(f"{RRF_SCALE} div ({RRF_K} + rank_lex)"))
           .otherwise(F.lit(0)).cast("long"))
     fused = (dense.join(lex, "id", "full_outer")
              .select("id",
@@ -6158,7 +5922,7 @@ def hybrid_rrf(docs: DataFrame, emb: DataFrame, term: str = RRF_TERM,
                      F.coalesce("rank_lex", F.lit(-1)).alias("rank_lex"),
                      (rd + rl).alias("rrf_score")))
     return (fused.orderBy(F.col("rrf_score").desc(), F.col("id"))
-            .limit(out_n))
+            .limit(RRF_OUT))
 
 
 def similarity_hybrid_rrf_query(spark: SparkSession,
@@ -6233,28 +5997,22 @@ register(QuerySpec(
 # without wide shuffles, rank windows and the full-outer fusion only on
 # the two ≤RRF_SHORTLIST-row relations.
 
-def hybrid_rrf_bm25(docs: DataFrame, emb: DataFrame,
-                    terms: tuple = None,
-                    query_id: int = RRF_QUERY_ID, k: int = RRF_K,
-                    shortlist: int = RRF_SHORTLIST,
-                    out_n: int = RRF_OUT) -> DataFrame:
-    """(id, rank_dense, rank_lex, rrf_score) — top ``out_n`` fused,
-    lexical ranks from the engine's BM25 scorer over ``terms``."""
+def hybrid_rrf_bm25(docs: DataFrame, emb: DataFrame) -> DataFrame:
+    """(id, rank_dense, rank_lex, rrf_score) — top ``RRF_OUT`` fused,
+    lexical ranks from the engine's BM25 scorer over ``BM25_TERMS``."""
     from pyspark.sql import Window
 
     from downscaledclimatedata_spark.operators.textops import (
         BM25_TERMS, bm25_topk)
-    if terms is None:
-        terms = BM25_TERMS
 
     base = (emb.select(F.col("vec_id"),
                        quantize(F.col("embedding")).alias("qv"),
                        sq_norm(quantize(F.col("embedding"))).alias("n2"))
             .filter(F.col("n2") > 0))
-    qvec = (base.filter(F.col("vec_id") == query_id)
+    qvec = (base.filter(F.col("vec_id") == RRF_QUERY_ID)
             .select(F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
     dense_scored = (base.crossJoin(F.broadcast(qvec))
-                    .filter(F.col("vec_id") != query_id)
+                    .filter(F.col("vec_id") != RRF_QUERY_ID)
                     .select(F.col("vec_id").alias("id"),
                             (int_dot(F.col("qv"), F.col("qq"))
                              .cast("double")
@@ -6262,20 +6020,20 @@ def hybrid_rrf_bm25(docs: DataFrame, emb: DataFrame,
                                 * F.sqrt(F.col("qn2").cast("double"))))
                             .alias("cosine")))
     dense_top = dense_scored.orderBy(F.col("cosine").desc(),
-                                     F.col("id")).limit(shortlist)
+                                     F.col("id")).limit(RRF_SHORTLIST)
     w_d = Window.orderBy(F.col("cosine").desc(), F.col("id"))
     dense = dense_top.select("id", F.row_number().over(w_d)
                              .alias("rank_dense"))
-    lex_top = (bm25_topk(docs.filter(F.col("doc_id") != query_id),
-                         "text", "doc_id", terms=terms, topn=shortlist)
+    lex_top = (bm25_topk(docs.filter(F.col("doc_id") != RRF_QUERY_ID),
+                         "text", "doc_id", terms=BM25_TERMS, topn=RRF_SHORTLIST)
                .select(F.col("doc_id").alias("id"), "bm25"))
     w_l = Window.orderBy(F.col("bm25").desc(), F.col("id"))
     lex = lex_top.select("id", F.row_number().over(w_l).alias("rank_lex"))
     rd = (F.when(F.col("rank_dense").isNotNull(),
-                 F.expr(f"{RRF_SCALE} div ({k} + rank_dense)"))
+                 F.expr(f"{RRF_SCALE} div ({RRF_K} + rank_dense)"))
           .otherwise(F.lit(0)).cast("long"))
     rl = (F.when(F.col("rank_lex").isNotNull(),
-                 F.expr(f"{RRF_SCALE} div ({k} + rank_lex)"))
+                 F.expr(f"{RRF_SCALE} div ({RRF_K} + rank_lex)"))
           .otherwise(F.lit(0)).cast("long"))
     fused = (dense.join(lex, "id", "full_outer")
              .select("id",
@@ -6283,7 +6041,7 @@ def hybrid_rrf_bm25(docs: DataFrame, emb: DataFrame,
                      F.coalesce("rank_lex", F.lit(-1)).alias("rank_lex"),
                      (rd + rl).alias("rrf_score")))
     return (fused.orderBy(F.col("rrf_score").desc(), F.col("id"))
-            .limit(out_n))
+            .limit(RRF_OUT))
 
 
 def similarity_hybrid_rrf_bm25_query(spark: SparkSession,
@@ -6389,8 +6147,7 @@ register(QuerySpec(
 # Missed pairs at the prune threshold = duplicates that survive
 # dedup, so this recall IS the operator's false-negative rate.
 
-def semantic_pair_recall(emb: DataFrame, id_col: str = "vec_id",
-                         vec_col: str = "embedding",
+def semantic_pair_recall(emb: DataFrame,
                          tau: float = SEM_TAU,
                          centroid_mod: int = CENTROID_MOD,
                          n_centroids: int = N_CENTROIDS,
@@ -6410,25 +6167,25 @@ def semantic_pair_recall(emb: DataFrame, id_col: str = "vec_id",
     `semantic_pairs_from_assigned`), so the measurement certifies the
     operator as deployed, not a reimplementation.
     """
-    base = (emb.select(F.col(id_col),
-                       quantize(F.col(vec_col)).alias("qv"),
-                       sq_norm(quantize(F.col(vec_col))).alias("n2"))
+    base = (emb.select(F.col("vec_id"),
+                       quantize(F.col("embedding")).alias("qv"),
+                       sq_norm(quantize(F.col("embedding"))).alias("n2"))
             .filter(F.col("n2") > 0))
-    pred = (_spread_sample(id_col, query_every) if query_hash
-            else _fixed_sample(id_col, query_every, KNN_RECALL_N))
+    pred = (_spread_sample("vec_id", query_every) if query_hash
+            else _fixed_sample("vec_id", query_every, KNN_RECALL_N))
     queries = (base.filter(pred)
-               .select(F.col(id_col).alias("query_id"),
+               .select(F.col("vec_id").alias("query_id"),
                        F.col("qv").alias("qq"), F.col("n2").alias("qn2")))
     truth = (base.crossJoin(F.broadcast(queries))
-             .filter(F.col(id_col) != F.col("query_id"))
+             .filter(F.col("vec_id") != F.col("query_id"))
              .filter((int_dot(F.col("qq"), F.col("qv")).cast("double")
                       / (F.sqrt(F.col("qn2").cast("double"))
                          * F.sqrt(F.col("n2").cast("double")))) >= tau)
-             .select("query_id", F.col(id_col).alias("partner_id")))
-    assigned = _assigned_corpus(emb, id_col, vec_col, centroid_mod,
+             .select("query_id", F.col("vec_id").alias("partner_id")))
+    assigned = _assigned_corpus(emb, centroid_mod,
                                 n_centroids, n_super, n_super2,
                                 spread_every)
-    pairs = semantic_pairs_from_assigned(assigned, id_col, tau)
+    pairs = semantic_pairs_from_assigned(assigned, tau)
     got = (pairs.select(F.col("id_a").alias("query_id"),
                         F.col("id_b").alias("partner_id"))
            .unionByName(pairs.select(
@@ -6517,8 +6274,7 @@ register(QuerySpec(
 # each other. Cost: pass 1 dominates; pass 2 is the same operator on a
 # corpus two orders smaller.
 
-def semantic_survivors(emb: DataFrame, id_col: str = "vec_id",
-                       vec_col: str = "embedding", tau: float = SEM_TAU,
+def semantic_survivors(emb: DataFrame, tau: float = SEM_TAU,
                        centroid_mod: int = CENTROID_MOD,
                        n_centroids: int = N_CENTROIDS,
                        n_super: int | None = None,
@@ -6527,15 +6283,14 @@ def semantic_survivors(emb: DataFrame, id_col: str = "vec_id",
     """Ids KEPT by one SemDeDup pass (keep-min within >= tau cell
     pairs) — zero-norm vectors pass through untouched (they have no
     defined cosine, so no pair can remove them)."""
-    base = _assigned_corpus(emb, id_col, vec_col, centroid_mod,
+    base = _assigned_corpus(emb, centroid_mod,
                             n_centroids, n_super, n_super2, spread_every)
-    removed = (semantic_pairs_from_assigned(base, id_col, tau)
-               .select(F.col("id_b").alias(id_col)).distinct())
-    return emb.select(F.col(id_col)).join(removed, id_col, "left_anti")
+    removed = (semantic_pairs_from_assigned(base, tau)
+               .select(F.col("id_b").alias("vec_id")).distinct())
+    return emb.select(F.col("vec_id")).join(removed, "vec_id", "left_anti")
 
 
-def semantic_dedup_iterated(emb: DataFrame, id_col: str = "vec_id",
-                            vec_col: str = "embedding",
+def semantic_dedup_iterated(emb: DataFrame,
                             tau: float = SEM_TAU,
                             schedule=None) -> DataFrame:
     """Two-pass SemDeDup summary: (n_input, n_removed_p1, n_removed_p2,
@@ -6547,12 +6302,12 @@ def semantic_dedup_iterated(emb: DataFrame, id_col: str = "vec_id",
     sched = schedule or scaled_codebook_three_level
     n0 = emb.count()
     mod, k, s1, s2, ev = sched(n0)
-    surv1 = semantic_survivors(emb, id_col, vec_col, tau, mod, k,
+    surv1 = semantic_survivors(emb, tau, mod, k,
                                s1, s2, ev).localCheckpoint()
     n1 = surv1.count()
-    emb2 = emb.join(surv1, id_col).localCheckpoint()
+    emb2 = emb.join(surv1, "vec_id").localCheckpoint()
     mod2, k2, s12, s22, ev2 = sched(n1)
-    surv2 = semantic_survivors(emb2, id_col, vec_col, tau, mod2, k2,
+    surv2 = semantic_survivors(emb2, tau, mod2, k2,
                                s12, s22, ev2)
     n2 = surv2.count()
     return emb.sparkSession.createDataFrame(
@@ -6651,8 +6406,7 @@ register(QuerySpec(
 SEM_CONV_MAX_PASSES = 3
 
 
-def semantic_dedup_converged(emb: DataFrame, id_col: str = "vec_id",
-                             vec_col: str = "embedding",
+def semantic_dedup_converged(emb: DataFrame,
                              tau: float = SEM_TAU,
                              schedule=None,
                              max_passes: int = SEM_CONV_MAX_PASSES,
@@ -6669,13 +6423,13 @@ def semantic_dedup_converged(emb: DataFrame, id_col: str = "vec_id",
     removed: list = []
     for _ in range(max_passes):
         mod, k, s1, s2, ev = sched(n_cur)
-        surv = semantic_survivors(cur, id_col, vec_col, tau, mod, k,
+        surv = semantic_survivors(cur, tau, mod, k,
                                   s1, s2, ev).localCheckpoint()
         n_new = surv.count()
         removed.append(n_cur - n_new)
         if n_new == n_cur:
             break
-        cur = cur.join(surv, id_col).localCheckpoint()
+        cur = cur.join(surv, "vec_id").localCheckpoint()
         n_cur = n_new
     while len(removed) < max_passes:
         removed.append(0)
@@ -6779,8 +6533,7 @@ register(QuerySpec(
 # exactly the lists it needs — and `meta/` — the codebook parameters,
 # so the searcher never re-derives or guesses the build configuration.
 
-def ann_index_build(emb: DataFrame, path: str, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
+def ann_index_build(emb: DataFrame, path: str,
                     centroid_mod: int = CENTROID_MOD,
                     n_centroids: int = N_CENTROIDS,
                     n_super: int = None, n_super2: int = None,
@@ -6807,13 +6560,12 @@ def ann_index_build(emb: DataFrame, path: str, id_col: str = "vec_id",
     # projected row — no corpus-wide id join before the list write (r13)
     if n_super is not None:
         cols = _ivf_assign_three_level_cols(
-            emb, id_col, vec_col, centroid_mod, n_centroids, n_super,
+            emb, centroid_mod, n_centroids, n_super,
             n_super2 if n_super2 is not None else n_super,
             spread_every)
     else:
-        cols = _ivf_assign_cols(emb, id_col, vec_col, centroid_mod,
-                                n_centroids)
-    lists = (cols.select(F.col("cid"), F.col(id_col).alias("id"),
+        cols = _ivf_assign_cols(emb, centroid_mod, n_centroids)
+    lists = (cols.select(F.col("cid"), F.col("vec_id").alias("id"),
                          "qv", "n2")
              .filter(F.col("n2") > 0))
     # repartition on the partition column first: each task owns whole
@@ -6821,13 +6573,13 @@ def ann_index_build(emb: DataFrame, path: str, id_col: str = "vec_id",
     # of one shard per shuffle partition (guide: output file sizing)
     lists.repartition("cid").write.partitionBy("cid") \
         .mode("overwrite").parquet(f"{path}/lists")
-    base = emb.select(F.col(id_col), quantize(F.col(vec_col)).alias("qv"),
-                      sq_norm(quantize(F.col(vec_col))).alias("n2"))
-    cents_pred = (_spread_sample(id_col, spread_every)
+    base = emb.select(F.col("vec_id"), quantize(F.col("embedding")).alias("qv"),
+                      sq_norm(quantize(F.col("embedding"))).alias("n2"))
+    cents_pred = (_spread_sample("vec_id", spread_every)
                   if spread_every is not None
-                  else _fixed_sample(id_col, centroid_mod, n_centroids))
+                  else _fixed_sample("vec_id", centroid_mod, n_centroids))
     cents = (base.filter(cents_pred)
-             .select(F.col(id_col).alias("cid"), F.col("qv").alias("cv"),
+             .select(F.col("vec_id").alias("cid"), F.col("qv").alias("cv"),
                      F.col("n2").alias("cn2")))
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
     # literal_rows: a Python-backed 1-row relation costs a Python
@@ -6837,9 +6589,7 @@ def ann_index_build(emb: DataFrame, path: str, id_col: str = "vec_id",
         .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
 
-def ann_index_append(emb_delta: DataFrame, path: str,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> None:
+def ann_index_append(emb_delta: DataFrame, path: str) -> None:
     """Ingest a delta batch into a persisted index: assign the new
     vectors against the PERSISTED codebook (never re-derived — the
     whole point of persisting it) and append their rows into the same
@@ -6852,9 +6602,9 @@ def ann_index_append(emb_delta: DataFrame, path: str,
     spark = emb_delta.sparkSession
     ann_index_meta(spark, path)  # refuse to append into a broken index
     cents = spark.read.parquet(f"{path}/centroids")
-    base = (emb_delta.select(F.col(id_col).alias("id"),
-                             quantize(F.col(vec_col)).alias("qv"),
-                             sq_norm(quantize(F.col(vec_col))).alias("n2"))
+    base = (emb_delta.select(F.col("vec_id").alias("id"),
+                             quantize(F.col("embedding")).alias("qv"),
+                             sq_norm(quantize(F.col("embedding"))).alias("n2"))
             .filter(F.col("n2") > 0))
     # tiered argmin against the persisted codebook (r13): the cheap
     # count on the KB-scale codebook relation picks the measured tier
@@ -6893,12 +6643,6 @@ def ann_index_compact(spark: SparkSession, path: str) -> dict:
             "rows": n_rows}
 
 
-# Query batches at or below this row count are broadcast to the probed
-# lists; above it the serve join falls back to a cid-keyed shuffle so a
-# large serving batch never hits the broadcast ceiling.
-ANN_SERVE_BROADCAST_MAX = 100_000
-
-
 def ann_index_meta(spark: SparkSession, path: str) -> tuple:
     """Read the index's build configuration from ``meta/``. Raises if
     the relation is missing or malformed — a persisted index without
@@ -6927,9 +6671,9 @@ def ann_index_search(spark: SparkSession, path: str, k: int = TOP_K,
     The searcher reads ``meta/`` at serve time and refuses to serve if
     it is missing, malformed, or (when ``expect_*`` is given) does not
     match the configuration the caller built with — the build
-    parameters are validated, not write-only. Query batches above
-    ``ANN_SERVE_BROADCAST_MAX`` rows join the lists by a cid-keyed
-    shuffle instead of a broadcast.
+    parameters are validated, not write-only. The query batch
+    (``n_queries * nprobe`` rows: every caller serves a fixed sample)
+    is broadcast to the probed lists.
 
     ``nprobe``: the serve-side recall knob (the r13 serve ladder's
     measured single-probe decay on clustered corpora is the reason it
@@ -6967,11 +6711,9 @@ def ann_index_search(spark: SparkSession, path: str, k: int = TOP_K,
                    .select("query_id", "cid", "qq", "qn2"))
     else:
         queries = qbase
-    qside = (F.broadcast(queries) if n_queries * nprobe <= ANN_SERVE_BROADCAST_MAX
-             else queries)
     corpus = lists.select(F.col("id").alias("match_id"), F.col("cid"),
                           F.col("qv").alias("cq"), F.col("n2").alias("cn2"))
-    scored = (corpus.join(qside, "cid")
+    scored = (corpus.join(F.broadcast(queries), "cid")
               .filter(F.col("match_id") != F.col("query_id"))
               .select("query_id", "match_id",
                       (int_dot(F.col("qq"), F.col("cq")).cast("double")
@@ -7162,19 +6904,18 @@ GS_HOPS = 3   # fixed expansion depth — unrolled, no iteration state
 
 
 def graph_search(emb: DataFrame, edges: DataFrame | None = None,
-                 id_col: str = "vec_id", vec_col: str = "embedding",
-                 k: int = TOP_K, beam: int = GS_BEAM, hops: int = GS_HOPS,
+                 k: int = TOP_K, hops: int = GS_HOPS,
                  query_mod: int = QUERY_MOD, n_queries: int = N_QUERIES,
                  centroid_mod: int = CENTROID_MOD,
                  n_centroids: int = N_CENTROIDS) -> DataFrame:
     """Top-k cosine search: IVF probe-1 seeds, expanded ``hops`` times
-    over the kNN graph with a beam of ``beam``.
+    over the kNN graph with a beam of ``GS_BEAM``.
 
     ``edges``: a prebuilt (vec_id, neighbor_id) graph — pass the
     scheduled-codebook build at scale; the default builds the flat
     ``knn_graph(nprobe=2)`` (query-side second-cell copies are the
     cross-cell edges the expansion exists to follow). Each hop keeps
-    the ``beam`` best visited nodes per query, expands their
+    the ``GS_BEAM`` best visited nodes per query, expands their
     out-edges, scores the new candidates exactly (quantized int dot),
     and unions them into the visited set — revisits dedupe exactly
     because a (query, node) pair always scores to the identical
@@ -7182,21 +6923,21 @@ def graph_search(emb: DataFrame, edges: DataFrame | None = None,
     """
     from pyspark.sql import Window
     if edges is None:
-        edges = knn_graph(emb, id_col=id_col, vec_col=vec_col,
+        edges = knn_graph(emb,
                           centroid_mod=centroid_mod,
                           n_centroids=n_centroids, nprobe=2)
     edges = (edges.select(F.col("vec_id").alias("src_id"), "neighbor_id")
              .localCheckpoint())
-    corpus = (emb.select(F.col(id_col),
-                         quantize(F.col(vec_col)).alias("qv"),
-                         sq_norm(quantize(F.col(vec_col))).alias("n2"))
+    corpus = (emb.select(F.col("vec_id"),
+                         quantize(F.col("embedding")).alias("qv"),
+                         sq_norm(quantize(F.col("embedding"))).alias("n2"))
               .filter(F.col("n2") > 0))
-    queries = (corpus.filter(_fixed_sample(id_col, query_mod, n_queries))
-               .select(F.col(id_col).alias("query_id"),
+    queries = (corpus.filter(_fixed_sample("vec_id", query_mod, n_queries))
+               .select(F.col("vec_id").alias("query_id"),
                        F.col("qv").alias("qq"),
                        F.col("n2").alias("qn2"))
                .localCheckpoint())
-    visited = (ivf_topk(emb, id_col=id_col, vec_col=vec_col, k=beam,
+    visited = (ivf_topk(emb,
                         query_mod=query_mod, n_queries=n_queries,
                         centroid_mod=centroid_mod,
                         n_centroids=n_centroids)
@@ -7207,7 +6948,7 @@ def graph_search(emb: DataFrame, edges: DataFrame | None = None,
                                                F.col("node"))
     for _ in range(hops):
         frontier = (visited.withColumn("rnk", F.row_number().over(w))
-                    .filter(F.col("rnk") <= beam)
+                    .filter(F.col("rnk") <= GS_BEAM)
                     .select("query_id", "node"))
         cand = (edges.join(F.broadcast(frontier),
                            edges["src_id"] == frontier["node"])
@@ -7216,7 +6957,7 @@ def graph_search(emb: DataFrame, edges: DataFrame | None = None,
                 .filter(F.col("node") != F.col("query_id"))
                 .join(F.broadcast(queries), "query_id"))
         scored = (corpus.join(F.broadcast(cand),
-                              corpus[id_col] == cand["node"])
+                              corpus["vec_id"] == cand["node"])
                   .select("query_id", "node",
                           (int_dot(F.col("qq"), F.col("qv")).cast("double")
                            / (F.sqrt(F.col("qn2").cast("double"))
@@ -7330,34 +7071,24 @@ register(QuerySpec(
 GRAPH_BUCKETS = 64
 
 
-def knn_graph_persist(emb: DataFrame, path: str, id_col: str = "vec_id",
-                      vec_col: str = "embedding", k: int = KNN_K,
-                      centroid_mod: int = CENTROID_MOD,
-                      n_centroids: int = N_CENTROIDS, nprobe: int = 2,
-                      n_buckets: int = GRAPH_BUCKETS,
-                      n_super: int = None, n_super2: int = None,
-                      spread_every: int = None) -> None:
+def knn_graph_persist(emb: DataFrame, path: str, nprobe: int = 2) -> None:
     """Materialize the kNN graph for serving: adjacency + inline
     neighbor vectors, bucket-partitioned on the source id. ``meta/``
     records the build configuration (k, nprobe, n_buckets) — the
     searcher validates it at serve time, same discipline as the IVF
-    index. Pass the three-level routing args above the flat wall,
-    exactly as for :func:`knn_graph`."""
-    edges = knn_graph(emb, id_col=id_col, vec_col=vec_col, k=k,
-                      centroid_mod=centroid_mod, n_centroids=n_centroids,
-                      nprobe=nprobe, n_super=n_super, n_super2=n_super2,
-                      spread_every=spread_every)
-    nbr = (emb.select(F.col(id_col).alias("neighbor_id"),
-                      quantize(F.col(vec_col)).alias("nq"),
-                      sq_norm(quantize(F.col(vec_col))).alias("nn2"))
+    index."""
+    edges = knn_graph(emb, nprobe=nprobe)
+    nbr = (emb.select(F.col("vec_id").alias("neighbor_id"),
+                      quantize(F.col("embedding")).alias("nq"),
+                      sq_norm(quantize(F.col("embedding"))).alias("nn2"))
            .filter(F.col("nn2") > 0))
     rows = (edges.select(F.col("vec_id").alias("src_id"), "neighbor_id")
             .join(nbr, "neighbor_id")
             .withColumn("bkt", F.pmod(F.col("src_id"),
-                                      F.lit(n_buckets))))
+                                      F.lit(GRAPH_BUCKETS))))
     rows.repartition("bkt").write.partitionBy("bkt") \
         .mode("overwrite").parquet(f"{path}/graph")
-    literal_rows(emb.sparkSession, [(k, nprobe, n_buckets)],
+    literal_rows(emb.sparkSession, [(KNN_K, nprobe, GRAPH_BUCKETS)],
                  "k int, nprobe int, n_buckets int") \
         .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
 
@@ -7376,10 +7107,7 @@ def knn_graph_meta(spark: SparkSession, path: str) -> tuple:
 
 
 def graph_search_persisted(spark: SparkSession, index_path: str,
-                           graph_path: str, k: int = TOP_K,
-                           beam: int = GS_BEAM, hops: int = GS_HOPS,
-                           query_mod: int = QUERY_MOD,
-                           n_queries: int = N_QUERIES,
+                           graph_path: str,
                            expect_nprobe: int = None) -> DataFrame:
     """Serve graph-expansion search from PERSISTED artifacts: seeds
     from the IVF index (``ann_index_search``, the partition-pruned
@@ -7396,28 +7124,27 @@ def graph_search_persisted(spark: SparkSession, index_path: str,
             f"caller expected {expect_nprobe}")
     g = spark.read.parquet(f"{graph_path}/graph")
     lists = spark.read.parquet(f"{index_path}/lists")
-    queries = (lists.filter(_fixed_sample("id", query_mod, n_queries))
+    queries = (lists.filter(_fixed_sample("id", QUERY_MOD, N_QUERIES))
                .select(F.col("id").alias("query_id"),
                        F.col("qv").alias("qq"),
                        F.col("n2").alias("qn2"))
                .localCheckpoint())
-    visited = (ann_index_search(spark, index_path, k=beam,
-                                query_mod=query_mod, n_queries=n_queries)
+    visited = (ann_index_search(spark, index_path)
                .select("query_id", F.col("match_id").alias("node"),
                        "cosine")
                .localCheckpoint())
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
                                                F.col("node"))
-    for _ in range(hops):
+    for _ in range(GS_HOPS):
         frontier = (visited.withColumn("rnk", F.row_number().over(w))
-                    .filter(F.col("rnk") <= beam)
+                    .filter(F.col("rnk") <= GS_BEAM)
                     .select("query_id", "node",
                             F.pmod(F.col("node"),
                                    F.lit(n_buckets)).alias("bkt")))
         scored = _graph_hop(g, frontier, queries)
         visited = visited.unionByName(scored).distinct().localCheckpoint()
     return (visited.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select("query_id", F.col("node").alias("match_id"),
                     "cosine", "rnk"))
 

@@ -287,8 +287,7 @@ SELECT doc_id, term, tf, df, rnk FROM ranked WHERE rnk <= 5
 
 # --- PMI collocations ---------------------------------------------------------
 
-def collocations(df: DataFrame, text_col: str, id_col: str,
-                 min_count: int = 5, k: int = 20) -> DataFrame:
+def collocations(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Top-k bigram collocations by a PMI-monotone integer score.
 
     PMI = log(p(xy) / (p(x)p(y))) ranks identically to the exact integer
@@ -297,7 +296,7 @@ def collocations(df: DataFrame, text_col: str, id_col: str,
     log-based score would be 1-ulp-fragile cross-engine. Plan shape:
     explode bigrams -> count (shuffle ∝ distinct bigrams), explode
     unigrams -> count, two joins of bigram counts to unigram counts
-    (shuffle on term), global top-k (TakeOrdered). min_count prunes the
+    (shuffle on term), global top-k (TakeOrdered). The count-5 floor prunes the
     long tail BEFORE the joins — at 100 TB that's the difference between
     joining billions vs millions of bigram rows.
 
@@ -313,7 +312,7 @@ def collocations(df: DataFrame, text_col: str, id_col: str,
     n_uni = uni.agg(F.count("*").alias("n_total"))
     uc = uni.groupBy("term").agg(F.count("*").alias("n_term"))
     bc = (bigrams.groupBy("bigram").agg(F.count("*").alias("n_xy"))
-          .filter(F.col("n_xy") >= min_count)
+          .filter(F.col("n_xy") >= 5)
           .withColumn("x", F.substring_index("bigram", " ", 1))
           .withColumn("y", F.substring_index("bigram", " ", -1)))
     scored = (bc.join(uc.select(F.col("term").alias("x"),
@@ -325,7 +324,7 @@ def collocations(df: DataFrame, text_col: str, id_col: str,
                       F.expr("n_xy * n_total * 1000000 div (n_x * n_y)")
                       .alias("pmi_score")))
     return (scored.orderBy(F.col("pmi_score").desc(), F.col("bigram"))
-            .limit(k))
+            .limit(20))
 
 
 def text_collocations_query(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -363,10 +362,7 @@ register(QuerySpec("text_collocations", text_collocations_query, _TEXT_COLLOC_SQ
 
 # --- Gopher-style repetition / quality flags ---------------------------------
 
-def repetition_flags(df: DataFrame, text_col: str, id_col: str,
-                     min_tokens: int = 20,
-                     top_token_max_frac: tuple[int, int] = (1, 5),
-                     dup_bigram_max_frac: tuple[int, int] = (3, 10)) -> DataFrame:
+def repetition_flags(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Repetition-based quality gates in the spirit of the Gopher rules
     (Rae et al. 2021, §A1.1): most-frequent-token fraction, duplicate
     2-gram fraction, and a minimum length, each as an exact flag.
@@ -398,15 +394,15 @@ def repetition_flags(df: DataFrame, text_col: str, id_col: str,
     staged = staged.select(
         id_col, "_toks", "_bi", top_cnt.alias("_top_cnt"),
         (F.size("_bi") - F.size(F.array_distinct("_bi"))).alias("_dup_bi"))
-    tt_num, tt_den = top_token_max_frac
-    db_num, db_den = dup_bigram_max_frac
+    tt_num, tt_den = (1, 5)
+    db_num, db_den = (3, 10)
     return staged.select(
         F.col(id_col),
         n.alias("n_tokens"),
         F.col("_top_cnt").alias("top_token_count"),
         F.col("_dup_bi").alias("dup_bigram_count"),
         _safe_ratio(F.col("_top_cnt"), n).alias("top_token_frac"),
-        (n < min_tokens).alias("flag_too_short"),
+        (n < 20).alias("flag_too_short"),
         (F.col("_top_cnt") * tt_den > n * tt_num).alias("flag_repetitive_token"),
         (F.col("_dup_bi") * db_den > F.size("_bi") * db_num).alias("flag_repetitive_bigram"),
     )
@@ -470,8 +466,7 @@ CHUNK_W = 64   # window size in tokens
 CHUNK_S = 48   # stride (W - S = 16-token overlap)
 
 
-def chunk_windows(df: DataFrame, text_col: str, id_col: str,
-                  window: int = CHUNK_W, stride: int = CHUNK_S) -> DataFrame:
+def chunk_windows(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Explode each document into overlapping fixed-size token windows —
     the context-window chunking step of a training pipeline (long doc ->
     N model-sized sequences with overlap so no boundary context is lost).
@@ -489,17 +484,17 @@ def chunk_windows(df: DataFrame, text_col: str, id_col: str,
     # last start = stride * ceil((n - window)/stride) when n > window
     # (the first start covering the doc tail), else 0
     last = F.when(
-        n > window,
-        ((n - window + (stride - 1)) / stride).cast("int") * stride
+        n > CHUNK_W,
+        ((n - CHUNK_W + (CHUNK_S - 1)) / CHUNK_S).cast("int") * CHUNK_S
     ).otherwise(F.lit(0))
-    starts = F.when(n > 0, F.sequence(F.lit(0), last, F.lit(stride))) \
+    starts = F.when(n > 0, F.sequence(F.lit(0), last, F.lit(CHUNK_S))) \
         .otherwise(F.array().cast("array<int>"))
     chunks = toked.select(
         F.col(id_col), n.alias("n_tokens"),
         F.posexplode(starts).alias("chunk_idx", "chunk_start"))
     return chunks.select(
         F.col(id_col), "chunk_idx", "chunk_start",
-        F.least(F.lit(window), F.col("n_tokens") - F.col("chunk_start"))
+        F.least(F.lit(CHUNK_W), F.col("n_tokens") - F.col("chunk_start"))
         .alias("chunk_len"))
 
 
@@ -545,9 +540,8 @@ register(QuerySpec("text_chunk_windows", text_chunk_query, _TEXT_CHUNK_SQL,
 VOCAB_N = 512
 
 
-def build_vocab(df: DataFrame, text_col: str, id_col: str,
-                vocab_size: int = VOCAB_N) -> DataFrame:
-    """Top-``vocab_size`` tokens by corpus frequency with dense integer
+def build_vocab(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """Top-``VOCAB_N`` tokens by corpus frequency with dense integer
     ids — the vocabulary-construction half of tokenization. One hash
     aggregation over exploded tokens (map-side partial counts), then a
     TakeOrderedAndProject for the top-N and a row_number over the tiny
@@ -556,7 +550,7 @@ def build_vocab(df: DataFrame, text_col: str, id_col: str,
     from pyspark.sql import Window
     counts = (df.select(F.explode(_tokens(F.col(text_col))).alias("token"))
               .groupBy("token").agg(F.count("*").alias("freq")))
-    top = counts.orderBy(F.col("freq").desc(), F.col("token")).limit(vocab_size)
+    top = counts.orderBy(F.col("freq").desc(), F.col("token")).limit(VOCAB_N)
     w = Window.orderBy(F.col("freq").desc(), F.col("token"))
     return top.select("token", "freq",
                       (F.row_number().over(w) - 1).alias("token_id"))
@@ -741,8 +735,7 @@ register(QuerySpec(
 DRIFT_TOPK = 10
 
 
-def corpus_drift(ref_df: DataFrame, new_df: DataFrame,
-                 text_col: str = "text", topk: int = DRIFT_TOPK) -> DataFrame:
+def corpus_drift(ref_df: DataFrame, new_df: DataFrame) -> DataFrame:
     """Top drifting tokens between two corpora + the total-variation
     distance — the monitoring op a pipeline runs between crawl
     snapshots (did the token distribution move?).
@@ -756,12 +749,12 @@ def corpus_drift(ref_df: DataFrame, new_df: DataFrame,
 
     Scale: one explode+count per corpus (shuffle keyed on token), a
     full-outer equi-join on token, one single-row total broadcast; top-k
-    is TakeOrderedAndProject. Returns the ``topk`` largest-drift tokens
+    is TakeOrderedAndProject. Returns the ``DRIFT_TOPK`` largest-drift tokens
     with (c_ref, c_new, drift_num) and the corpus-level tv_distance
     repeated on every row (one relation, no second job).
     """
     def counts(df, side):
-        toks = _tokens(F.col(text_col))
+        toks = _tokens(F.col("text"))
         return (df.select(F.explode(toks).alias("token"))
                 .groupBy("token").agg(F.count("*").alias(f"c_{side}")))
 
@@ -781,7 +774,7 @@ def corpus_drift(ref_df: DataFrame, new_df: DataFrame,
         F.first("n_ref").alias("n_ref"), F.first("n_new").alias("n_new"))
     ranked = (scored.select("token", "c_ref", "c_new", "drift_num")
               .orderBy(F.col("drift_num").desc(), F.col("token"))
-              .limit(topk))
+              .limit(DRIFT_TOPK))
     # one side empty (comparing against an empty corpus): TV is 1.0 by
     # convention — the guard also keeps ANSI mode from dividing by zero
     tv_expr = F.when(
@@ -850,9 +843,7 @@ register(QuerySpec(
 GROWTH_BUCKETS = 8
 
 
-def vocab_growth(df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id",
-                 n_buckets: int = GROWTH_BUCKETS) -> DataFrame:
+def vocab_growth(df: DataFrame, n_buckets: int = GROWTH_BUCKETS) -> DataFrame:
     """Vocabulary growth curve (Heaps' law diagnostic): cumulative
     distinct-type count vs cumulative token count over ``n_buckets``
     equal doc-id slices of the corpus — the sizing curve a tokenizer /
@@ -878,23 +869,23 @@ def vocab_growth(df: DataFrame, text_col: str = "text",
     aggregation partial-combines the stopword head on the map side).
     """
     bounds = F.broadcast(df.agg(
-        F.min(F.col(id_col)).alias("min_id"),
-        F.max(F.col(id_col)).alias("max_id")))
-    toks = df.select(F.col(id_col),
-                     F.explode(_tokens(F.col(text_col))).alias("token"))
+        F.min(F.col("doc_id")).alias("min_id"),
+        F.max(F.col("doc_id")).alias("max_id")))
+    toks = df.select(F.col("doc_id"),
+                     F.explode(_tokens(F.col("text"))).alias("token"))
     first = (toks.groupBy("token")
-             .agg(F.min(F.col(id_col)).alias("first_seen")))
+             .agg(F.min(F.col("doc_id")).alias("first_seen")))
     bucket_of = lambda c: F.expr(  # noqa: E731 — shared exact bucketing
         f"({c} - min_id) div ((max_id - min_id) div {n_buckets} + 1)")
     new_types = (first.crossJoin(F.broadcast(bounds))
                  .groupBy(bucket_of("first_seen").alias("bucket"))
                  .agg(F.count("*").alias("n_new_types")))
     doc_toks = df.select(
-        F.col(id_col),
-        F.coalesce(F.size(_tokens(F.col(text_col))).cast("bigint"),
+        F.col("doc_id"),
+        F.coalesce(F.size(_tokens(F.col("text"))).cast("bigint"),
                    F.lit(0)).alias("n_toks"))
     bucket_toks = (doc_toks.crossJoin(F.broadcast(bounds))
-                   .groupBy(bucket_of(id_col).alias("bucket"))
+                   .groupBy(bucket_of("doc_id").alias("bucket"))
                    .agg(F.sum("n_toks").alias("bucket_tokens"),
                         F.count("*").alias("bucket_docs")))
     from pyspark.sql import Window
@@ -973,12 +964,11 @@ CMS_TERMS = ("table", "merge", "vector", "the", "window",
 
 
 def cms_estimate(df: DataFrame, text_col: str, id_col: str,
-                 terms: tuple[str, ...] = CMS_TERMS,
-                 depth: int = CMS_DEPTH, width: int = CMS_WIDTH) -> DataFrame:
+                 terms: tuple[str, ...] = CMS_TERMS) -> DataFrame:
     """Count-Min Sketch frequency estimates vs exact counts.
 
     The CMS is the streaming/mergeable counter structure heavy-hitter
-    pipelines use when the vocabulary doesn't fit memory: depth×width
+    pipelines use when the vocabulary doesn't fit memory: CMS_DEPTH×CMS_WIDTH
     cells, est(t) = min_d cell[d][h_d(t)], overestimate-only. Built
     here with the portable md5 hash family, the sketch is fully
     DETERMINISTIC — unlike engine-native sketches (HLL), every cell and
@@ -996,9 +986,9 @@ def cms_estimate(df: DataFrame, text_col: str, id_col: str,
     toks = df.select(F.explode(_tokens(F.col(text_col))).alias("token"))
     toks = toks.localCheckpoint()  # one tokenize: cells + exact counts
     rows = [toks.select(F.lit(d).alias("d"),
-                        (md5_long(F.col("token"), seed=f"cms{d}:") % width)
+                        (md5_long(F.col("token"), seed=f"cms{d}:") % CMS_WIDTH)
                         .alias("cell"))
-            for d in range(depth)]
+            for d in range(CMS_DEPTH)]
     union = rows[0]
     for r in rows[1:]:
         union = union.unionByName(r)
@@ -1008,13 +998,13 @@ def cms_estimate(df: DataFrame, text_col: str, id_col: str,
 
     def h(d: int, t: str) -> int:
         return int(hashlib.md5(f"cms{d}:{t}".encode()).hexdigest()[:15],
-                   16) % width
+                   16) % CMS_WIDTH
     spark = df.sparkSession
     # literal_rows: a Python local relation in a JVM join costs a
     # Python-worker round trip per task (functions/rows.py)
     probes = literal_rows(
         spark,
-        [(t, d, h(d, t)) for t in terms for d in range(depth)],
+        [(t, d, h(d, t)) for t in terms for d in range(CMS_DEPTH)],
         "term string, d int, cell bigint")
     est = (probes.join(cells, ["d", "cell"], "left")
            .groupBy("term")
@@ -1092,10 +1082,8 @@ BLOOM_PROBES = ("table", "merge", "vector", "the", "window",
                 "quasar", "zyzzyva")  # last two absent from the corpus
 
 
-def bloom_membership(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     probes: tuple[str, ...] = BLOOM_PROBES,
-                     k: int = BLOOM_K, m: int = BLOOM_M) -> DataFrame:
+def bloom_membership(df: DataFrame,
+                     probes: tuple[str, ...] = BLOOM_PROBES) -> DataFrame:
     """Bloom-filter membership probes vs exact membership, in-engine.
 
     The Bloom filter is the have-we-seen-it structure of ingest dedup
@@ -1111,14 +1099,14 @@ def bloom_membership(df: DataFrame, text_col: str = "text",
     filtered before the aggregate as in CMS), false_positive.
 
     Scale: the filter relation is the DISTINCT set-bit list — at most
-    ``m`` rows regardless of corpus size (the reduction to ≤m rows is a
+    ``BLOOM_M`` rows regardless of corpus size (the reduction to ≤BLOOM_M rows is a
     map-side-combining distinct keyed on the uniform bit index); probes
     are a ≤|probes|·k literal relation, broadcast. Bitwise-OR merge of
     per-shard filters = union of bit sets — pinned by the merge unit.
     """
-    toks = df.select(F.explode(_tokens(F.col(text_col))).alias("token"))
-    bit_exprs = [(md5_long(F.col("token"), seed=f"bloom{i}:") % m)
-                 for i in range(k)]
+    toks = df.select(F.explode(_tokens(F.col("text"))).alias("token"))
+    bit_exprs = [(md5_long(F.col("token"), seed=f"bloom{i}:") % BLOOM_M)
+                 for i in range(BLOOM_K)]
     bits = (toks.select(F.explode(F.array(*bit_exprs)).alias("bit"))
             .distinct())
     spark = df.sparkSession
@@ -1126,10 +1114,10 @@ def bloom_membership(df: DataFrame, text_col: str = "text",
 
     def h(i: int, t: str) -> int:
         return int(hashlib.md5(f"bloom{i}:{t}".encode()).hexdigest()[:15],
-                   16) % m
+                   16) % BLOOM_M
     probe_bits = literal_rows(
         spark,
-        [(t, h(i, t)) for t in probes for i in range(k)],
+        [(t, h(i, t)) for t in probes for i in range(BLOOM_K)],
         "term string, bit bigint")
     # probe_bits (|probes|*k rows) is the genuinely tiny side, but Spark
     # can only broadcast the BUILD (right) side of a semi join — a
@@ -1153,7 +1141,7 @@ def bloom_membership(df: DataFrame, text_col: str = "text",
                 "term",
                 F.coalesce(F.col("n_bits_hit"), F.lit(0)).cast("int")
                 .alias("n_bits_hit"),
-                (F.coalesce(F.col("n_bits_hit"), F.lit(0)) == k)
+                (F.coalesce(F.col("n_bits_hit"), F.lit(0)) == BLOOM_K)
                 .alias("in_filter"),
                 F.coalesce(F.col("truly_present"), F.lit(False))
                 .alias("truly_present"))
@@ -1223,10 +1211,8 @@ TFIDF_MAX_DF = 64      # candidate generation: only terms this rare pair docs
 TFIDF_COS_T = 0.30
 
 
-def tfidf_doc_pairs(df: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id",
-                    threshold: float = TFIDF_COS_T,
-                    max_df: int = TFIDF_MAX_DF) -> DataFrame:
+def tfidf_doc_pairs(df: DataFrame,
+                    threshold: float = TFIDF_COS_T) -> DataFrame:
     """(id_a, id_b, cosine) document pairs by TF-IDF-weighted cosine —
     the rarity-weighted lexical similarity that sits between raw
     Jaccard (no term weighting) and embedding cosine (no lexical
@@ -1243,7 +1229,7 @@ def tfidf_doc_pairs(df: DataFrame, text_col: str = "text",
     that, weight terms with (N - df) / scale.
 
     Candidates come from the same prefix-filter as containment: only
-    terms with 2 ≤ df ≤ ``max_df`` generate pairs (a term in k docs
+    terms with 2 ≤ df ≤ ``TFIDF_MAX_DF`` generate pairs (a term in k docs
     contributes k² join rows; frequent terms carry ~zero idf weight
     anyway). The full dot product then uses ALL shared terms of each
     candidate pair, candidate-first — so the cap trades recall only,
@@ -1253,29 +1239,29 @@ def tfidf_doc_pairs(df: DataFrame, text_col: str = "text",
     max_df² per rare term; dot/norm joins keyed on candidate ids.
     Never O(n²) in the corpus.
     """
-    toks = df.select(F.col(id_col),
-                     F.explode(_tokens(F.col(text_col))).alias("token"))
-    tf = toks.groupBy(id_col, "token").agg(F.count("*").alias("tf"))
+    toks = df.select(F.col("doc_id"),
+                     F.explode(_tokens(F.col("text"))).alias("token"))
+    tf = toks.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
     n_docs = df.select(F.count(F.lit(1)).alias("n_docs"))
     w = (tf.join(dfreq, "token")
          .crossJoin(F.broadcast(n_docs))
-         .select(F.col(id_col), "token",
+         .select(F.col("doc_id"), "token",
                  (F.col("tf") * (F.col("n_docs") - F.col("df")))
                  .cast("bigint").alias("w"),
                  "df")
          .localCheckpoint())
-    norms = w.groupBy(id_col).agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
-    rare = w.filter((F.col("df") >= 2) & (F.col("df") <= max_df)) \
-        .select(id_col, "token")
-    a = rare.select(F.col(id_col).alias("id_a"), F.col("token").alias("tk"))
-    b = rare.select(F.col(id_col).alias("id_b"), F.col("token").alias("tk"))
+    norms = w.groupBy("doc_id").agg(F.sum(F.col("w") * F.col("w")).alias("n2"))
+    rare = w.filter((F.col("df") >= 2) & (F.col("df") <= TFIDF_MAX_DF)) \
+        .select("doc_id", "token")
+    a = rare.select(F.col("doc_id").alias("id_a"), F.col("token").alias("tk"))
+    b = rare.select(F.col("doc_id").alias("id_b"), F.col("token").alias("tk"))
     cand = (a.join(b.hint("merge"),
                    (a.tk == b.tk) & (F.col("id_a") < F.col("id_b")))
             .select("id_a", "id_b").distinct())
-    wa = w.select(F.col(id_col).alias("id_a"), "token",
+    wa = w.select(F.col("doc_id").alias("id_a"), "token",
                   F.col("w").alias("wa"))
-    wb = w.select(F.col(id_col).alias("id_b"), "token",
+    wb = w.select(F.col("doc_id").alias("id_b"), "token",
                   F.col("w").alias("wb"))
     dots = (cand
             .join(wa.hint("merge"), "id_a")
@@ -1283,9 +1269,9 @@ def tfidf_doc_pairs(df: DataFrame, text_col: str = "text",
             .groupBy("id_a", "id_b")
             .agg(F.sum(F.col("wa") * F.col("wb")).alias("dot")))
     return (dots
-            .join(norms.select(F.col(id_col).alias("id_a"),
+            .join(norms.select(F.col("doc_id").alias("id_a"),
                                F.col("n2").alias("na2")).hint("merge"), "id_a")
-            .join(norms.select(F.col(id_col).alias("id_b"),
+            .join(norms.select(F.col("doc_id").alias("id_b"),
                                F.col("n2").alias("nb2")).hint("merge"), "id_b")
             .withColumn("cosine",
                         F.col("dot").cast("double")
@@ -1349,9 +1335,7 @@ register(QuerySpec(
 PHRASE_QUERY = ("table", "hash")  # present in the synthetic corpus
 
 
-def phrase_search(df: DataFrame, phrase: tuple[str, ...],
-                  text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
+def phrase_search(df: DataFrame, phrase: tuple[str, ...]) -> DataFrame:
     """Exact phrase occurrences via positional postings — the inverted-
     index primitive (term -> (doc, position) list) and its classic
     consumer, k-term adjacency intersection, as one declarative plan.
@@ -1370,22 +1354,22 @@ def phrase_search(df: DataFrame, phrase: tuple[str, ...],
     if len(phrase) < 1:
         raise ValueError("phrase must have at least one term")
     toks = df.select(
-        F.col(id_col),
-        F.posexplode(_tokens(F.col(text_col))).alias("pos", "token"))
+        F.col("doc_id"),
+        F.posexplode(_tokens(F.col("text"))).alias("pos", "token"))
     post = toks.filter(F.col("token").isin(*phrase))
     cur = (post.filter(F.col("token") == phrase[0])
-           .select(id_col, F.col("pos").alias("p0")))
+           .select("doc_id", F.col("pos").alias("p0")))
     for i, term in enumerate(phrase[1:], start=1):
         nxt = (post.filter(F.col("token") == term)
-               .select(F.col(id_col), (F.col("pos") - i).alias("p0")))
+               .select(F.col("doc_id"), (F.col("pos") - i).alias("p0")))
         # merge hint: a posting list is term-frequency-scaled — for a
         # stopword term it is corpus-scaled, far beyond broadcast
         # budgets; the shuffled strategy keyed (doc, pos) co-partitions
         # the whole chain after one exchange per side
-        cur = cur.join(nxt.hint("merge"), [id_col, "p0"])
+        cur = cur.join(nxt.hint("merge"), ["doc_id", "p0"])
     # match relation is corpus-scaled for common phrases: no
     # trailing global sort (r8 audit sweep)
-    return (cur.groupBy(id_col)
+    return (cur.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("n_matches"),
                  F.min("p0").cast("bigint").alias("first_pos")))
 
@@ -1431,11 +1415,10 @@ register(QuerySpec(
 LM_SCALE = 1_000_000  # fixed-point scale for exact conditional probabilities
 
 
-def _lm_doc_scores(df: DataFrame, text_col: str, id_col: str,
-                   scale: int = LM_SCALE) -> DataFrame:
+def _lm_doc_scores(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """(id, n_bigrams, fp_sum): the exact fixed-point per-document LM
     evidence behind :func:`lm_familiarity` — fp_sum is an
-    order-independent BIGINT sum of ``(c(w1 w2) * scale) div c(w1·)``
+    order-independent BIGINT sum of ``(c(w1 w2) * LM_SCALE) div c(w1·)``
     terms, so downstream consumers (the familiarity double, the
     perplexity-bucket ranking) derive from ONE audited relation.
     Docs with fewer than 2 tokens have no bigrams and NO row."""
@@ -1455,16 +1438,14 @@ def _lm_doc_scores(df: DataFrame, text_col: str, id_col: str,
     # checkpoint-size-estimate lesson from ngram_jaccard_pairs)
     model = bgc.join(pref.hint("merge"), "w1").select(
         "w1", "w2",
-        F.expr(f"(cbg * CAST({scale} AS BIGINT)) div cw1").alias("fp"))
+        F.expr(f"(cbg * CAST({LM_SCALE} AS BIGINT)) div cw1").alias("fp"))
     return (bg.join(model.hint("merge"), ["w1", "w2"])
             .groupBy(id_col)
             .agg(F.count(F.lit(1)).alias("n_bigrams"),
                  F.sum("fp").alias("fp_sum")))
 
 
-def lm_familiarity(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id",
-                   scale: int = LM_SCALE) -> DataFrame:
+def lm_familiarity(df: DataFrame) -> DataFrame:
     """Per-document bigram language-model familiarity — the in-engine
     analogue of the LM-perplexity filter pretraining pipelines run
     (CCNet-style): documents whose word transitions are typical of the
@@ -1475,7 +1456,7 @@ def lm_familiarity(df: DataFrame, text_col: str = "text",
     p(w2|w1) = c(w1 w2) / c(w1·), where c(w1·) is derived from the
     bigram relation itself (prefix-marginal), so model and scorer can
     never disagree on tokenization. Scoring is EXACT fixed-point:
-    each bigram contributes ``(c(w1 w2) * scale) div c(w1·)`` — integer
+    each bigram contributes ``(c(w1 w2) * LM_SCALE) div c(w1·)`` — integer
     division, order-independent BIGINT sums — and only the final
     familiarity = sum / (n_bigrams * scale) divides as a double.
     (log-perplexity itself would need ln(), which is not correctly
@@ -1486,11 +1467,11 @@ def lm_familiarity(df: DataFrame, text_col: str = "text",
     marginal, one join back keyed on the bigram, one per-doc aggregate.
     The model relation is vocabulary²-bounded, not corpus-bounded.
     """
-    return (_lm_doc_scores(df, text_col, id_col, scale)
-            .select(id_col,
+    return (_lm_doc_scores(df, "text", "doc_id")
+            .select("doc_id",
                     F.col("n_bigrams").cast("bigint").alias("n_bigrams"),
                     (F.col("fp_sum").cast("double")
-                     / (F.col("n_bigrams") * F.lit(scale)).cast("double"))
+                     / (F.col("n_bigrams") * F.lit(LM_SCALE)).cast("double"))
                     .alias("familiarity")))
     # no trailing orderBy: one row per doc — a corpus-sized output whose
     # global sort would be a pure full-range-shuffle tax at scale
@@ -1538,8 +1519,7 @@ BPE_MERGES = 12
 EOW = "</w>"
 
 
-def bpe_train(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-              n_merges: int = BPE_MERGES) -> DataFrame:
+def bpe_train(df: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     """Byte-Pair-Encoding tokenizer training (Sennrich et al. 2016) —
     the vocabulary-learning step of a training-data pipeline, run
     in-engine over word TYPES weighted by corpus frequency.
@@ -1565,7 +1545,7 @@ def bpe_train(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     + one broadcast single-row argmax + one shuffle-free rewrite
     projection.
     """
-    merges, _ = _bpe_fit(df, text_col, n_merges)
+    merges, _ = _bpe_fit(df, "text", n_merges)
     return df.sparkSession.createDataFrame(
         merges, "rank int, left string, right string, merged string, "
                 "pair_count bigint")
@@ -1624,9 +1604,9 @@ def text_bpe_train_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_train(docs)
 
 
-def _bpe_chain_sql(n_merges: int = BPE_MERGES) -> str:
+def _bpe_chain_sql() -> str:
     """Shared oracle prefix: the fixed-round BPE fit loop unrolled into
-    chained CTEs ending at ``words_{n_merges}`` (the fully-merged
+    chained CTEs ending at ``words_{BPE_MERGES}`` (the fully-merged
     word-type relation). :func:`_bpe_sql` appends the merge-table
     select; :func:`_bpe_encode_sql` appends the per-doc segmentation
     join instead — ONE unroll serves both specs.
@@ -1661,7 +1641,7 @@ def _bpe_chain_sql(n_merges: int = BPE_MERGES) -> str:
     # read words_r) — MATERIALIZED stops DuckDB's default inlining, which
     # would otherwise double the expression tree per round (2^n_merges
     # blowup, observed as a hang even at sf0.001)
-    for r in range(n_merges):
+    for r in range(BPE_MERGES):
         parts.append(f""", pairs_{r} AS MATERIALIZED (
   SELECT t.sl[i] AS l, t.sl[i+1] AS r2, SUM(wd.freq) AS n
   FROM words_{r} wd,
@@ -1682,14 +1662,14 @@ def _bpe_chain_sql(n_merges: int = BPE_MERGES) -> str:
     return "".join(parts)
 
 
-def _bpe_sql(n_merges: int = BPE_MERGES) -> str:
+def _bpe_sql() -> str:
     """DuckDB oracle for :func:`bpe_train`: the unrolled chain plus the
     merge-table select (one row per non-empty ``best_r``)."""
     merge_rows = "\nUNION ALL\n".join(
         f'SELECT CAST({r} AS INTEGER) AS rank, l AS "left", r2 AS "right", '
         f"l||r2 AS merged, CAST(n AS BIGINT) AS pair_count FROM best_{r}"
-        for r in range(n_merges))
-    return _bpe_chain_sql(n_merges) + f"\nSELECT * FROM (\n{merge_rows}\n)"
+        for r in range(BPE_MERGES))
+    return _bpe_chain_sql() + f"\nSELECT * FROM (\n{merge_rows}\n)"
 
 
 register(QuerySpec(
@@ -1705,9 +1685,7 @@ register(QuerySpec(
 BPE_SEG_MOD = 1_000_000_007  # segmentation-hash modulus (sums stay < 2^63)
 
 
-def bpe_encode(df: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id",
-               n_merges: int = BPE_MERGES) -> DataFrame:
+def bpe_encode(df: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     """Tokenizer APPLICATION — the other half of :func:`bpe_train`:
     segment every document with the learned merges and report per-doc
     subword statistics, certifying the exact segmentation via a
@@ -1731,17 +1709,17 @@ def bpe_encode(df: DataFrame, text_col: str = "text",
     and at web scale ~10⁷-10⁸ types exceed the broadcast budget; AQE
     skew-split handles the head words). One final per-doc aggregate.
     """
-    _, words = _bpe_fit(df, text_col, n_merges)
+    _, words = _bpe_fit(df, "text", n_merges)
     seg = words.select(
         "w",
         F.size("syms").cast("bigint").alias("n_sub"),
         (md5_long(F.array_join("syms", " ")) % BPE_SEG_MOD)
         .alias("seg_hash"))
-    doc_words = (df.select(F.col(id_col),
-                           F.explode(_tokens(F.col(text_col))).alias("w"))
-                 .groupBy(id_col, "w").agg(F.count("*").alias("cnt")))
+    doc_words = (df.select(F.col("doc_id"),
+                           F.explode(_tokens(F.col("text"))).alias("w"))
+                 .groupBy("doc_id", "w").agg(F.count("*").alias("cnt")))
     return (doc_words.join(seg.hint("merge"), "w")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sum("cnt").alias("n_words"),
                  F.sum(F.col("cnt") * F.col("n_sub")).alias("n_subwords"),
                  F.max("n_sub").alias("max_word_subwords"),
@@ -1754,17 +1732,17 @@ def text_bpe_encode_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bpe_encode(docs)
 
 
-def _bpe_encode_sql(n_merges: int = BPE_MERGES) -> str:
+def _bpe_encode_sql() -> str:
     """DuckDB oracle for :func:`bpe_encode`: the same unrolled chain,
     then the per-word segmentation stats decoded from the delimited
     string and joined back to the (doc, word) count relation."""
     inner = "syms[2:length(syms)-1]"
     sub_list = f"string_split({inner}, chr(30)||chr(31))"
     joined = f"array_to_string({sub_list}, ' ')"
-    return _bpe_chain_sql(n_merges) + f""", seg AS MATERIALIZED (
+    return _bpe_chain_sql() + f""", seg AS MATERIALIZED (
   SELECT w, CAST(len({sub_list}) AS BIGINT) AS n_sub,
     ({md5_long_sql(joined)}) % {BPE_SEG_MOD} AS seg_hash
-  FROM words_{n_merges}
+  FROM words_{BPE_MERGES}
 ), dw AS (
   SELECT doc_id, w, COUNT(*) AS cnt
   FROM (SELECT doc_id, unnest({_TOKS_SQL}) AS w FROM documents)
@@ -2088,8 +2066,7 @@ DUP3_MAX_FRAC = 0.20
 MIN_WINDOWS = 5
 
 
-def intradoc_repetition(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id") -> DataFrame:
+def intradoc_repetition(df: DataFrame) -> DataFrame:
     """Per-document within-doc repetition report: for word 2-grams and
     3-grams, the window count, distinct-window count, the most common
     window's count, the duplicate-window fraction
@@ -2110,19 +2087,19 @@ def intradoc_repetition(df: DataFrame, text_col: str = "text",
     from downscaledclimatedata_spark.operators.dedup import shingled_rows
 
     def stats(n: int, pre: str) -> DataFrame:
-        return (shingled_rows(df, text_col, id_col, n=n)
-                .select(F.col(id_col), md5_long(F.col("shingle")).alias("h"))
-                .groupBy(id_col, "h").agg(F.count(F.lit(1)).alias("c"))
-                .groupBy(id_col)
+        return (shingled_rows(df, "text", "doc_id", n=n)
+                .select(F.col("doc_id"), md5_long(F.col("shingle")).alias("h"))
+                .groupBy("doc_id", "h").agg(F.count(F.lit(1)).alias("c"))
+                .groupBy("doc_id")
                 .agg(F.sum("c").cast("bigint").alias(f"{pre}_windows"),
                      F.count(F.lit(1)).cast("bigint").alias(f"{pre}_distinct"),
                      F.max("c").cast("bigint").alias(f"{pre}_top")))
 
     # corpus-scaled per-doc relations: pin sort-merge (house rule for
     # joins where neither side is provably bounded)
-    out = (df.select(F.col(id_col))
-           .join(stats(2, "n2").hint("merge"), id_col, "left")
-           .join(stats(3, "n3").hint("merge"), id_col, "left"))
+    out = (df.select(F.col("doc_id"))
+           .join(stats(2, "n2").hint("merge"), "doc_id", "left")
+           .join(stats(3, "n3").hint("merge"), "doc_id", "left"))
 
     def frac(num: Column, den: Column) -> Column:
         return F.when(den > 0, num.cast("double") / den.cast("double"))
@@ -2139,7 +2116,7 @@ def intradoc_repetition(df: DataFrame, text_col: str = "text",
            | ((n3w >= MIN_WINDOWS)
               & F.coalesce(dup3 > DUP3_MAX_FRAC, F.lit(False))))
     return out.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n2w.alias("n2_windows"), F.coalesce("n2_top", z).alias("n2_top"),
         n3w.alias("n3_windows"), F.coalesce("n3_top", z).alias("n3_top"),
         dup2.alias("dup2_frac"), top2.alias("top2_frac"),
@@ -2214,12 +2191,7 @@ register(QuerySpec(
 
 # --- CCNet-style perplexity bucketing (head / middle / tail) ---------------------
 
-CCNET_BUCKETS = ("head", "middle", "tail")
-
-
-def perplexity_buckets(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       scale: int = LM_SCALE) -> DataFrame:
+def perplexity_buckets(df: DataFrame) -> DataFrame:
     """CCNet's corpus partitioning (Wenzek et al. 2020): rank every
     document by language-model quality and split the corpus into
     head / middle / tail thirds — the head trains, the tail is dropped
@@ -2228,7 +2200,7 @@ def perplexity_buckets(df: DataFrame, text_col: str = "text",
     and this one is exactly reproducible cross-engine).
 
     Determinism: the ranking key is the EXACT fixed-point mean
-    ``fp_key = fp_sum div n_bigrams`` (BIGINT in [0, scale]) with
+    ``fp_key = fp_sum div n_bigrams`` (BIGINT in [0, LM_SCALE]) with
     doc_id tie-break — no doubles anywhere in the ordering. Bucket
     boundaries are pure rank arithmetic (rank*3 vs n), so the thirds
     are exact by construction.
@@ -2245,12 +2217,12 @@ def perplexity_buckets(df: DataFrame, text_col: str = "text",
     from downscaledclimatedata_spark.functions.ranks import (
         binned_row_number, value_bin)
 
-    scores = (_lm_doc_scores(df, text_col, id_col, scale)
+    scores = (_lm_doc_scores(df, "text", "doc_id")
               .withColumn("fp_key", F.expr("fp_sum div n_bigrams"))
               .withColumn("_neg", -F.col("fp_key"))
-              .withColumn("_lmbin", value_bin(F.col("_neg"), -scale, 0)))
+              .withColumn("_lmbin", value_bin(F.col("_neg"), -LM_SCALE, 0)))
     ranked = binned_row_number(
-        scores, "_lmbin", order_cols=(F.col("_neg"), F.col(id_col)),
+        scores, "_lmbin", order_cols=(F.col("_neg"), F.col("doc_id")),
         out="lm_rank", count_col="n_scored").drop("_neg", "_lmbin",
                                                   "fp_sum")
     bucket = (F.when(F.col("lm_rank").isNull(), F.lit("tail"))
@@ -2259,9 +2231,9 @@ def perplexity_buckets(df: DataFrame, text_col: str = "text",
                     "middle")
               .otherwise("tail"))
     # corpus-scaled score relation back onto the corpus: pin sort-merge
-    return (df.select(F.col(id_col))
-            .join(ranked.hint("merge"), id_col, "left")
-            .select(F.col(id_col),
+    return (df.select(F.col("doc_id"))
+            .join(ranked.hint("merge"), "doc_id", "left")
+            .select(F.col("doc_id"),
                     F.col("n_bigrams").cast("bigint").alias("n_bigrams"),
                     F.col("fp_key").cast("bigint").alias("fp_key"),
                     F.col("lm_rank").cast("bigint").alias("lm_rank"),
@@ -2321,9 +2293,7 @@ register(QuerySpec(
 
 # --- language-ID evaluation (confusion vs the labeled lang column) ---------------
 
-def langid_confusion(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id",
-                     label_col: str = "lang") -> DataFrame:
+def langid_confusion(df: DataFrame) -> DataFrame:
     """Confusion matrix of the language-ID heuristic against the
     corpus's labeled ``lang`` column: per (true, predicted) pair the
     doc count and its share of the true class — the eval every
@@ -2333,11 +2303,11 @@ def langid_confusion(df: DataFrame, text_col: str = "text",
     """
     from pyspark.sql import Window
 
-    pred = language_id(df, text_col, id_col).select(
-        F.col(id_col), "predicted_lang")
-    truth = df.select(F.col(id_col), F.col(label_col).alias("true_lang"))
+    pred = language_id(df, "text", "doc_id").select(
+        F.col("doc_id"), "predicted_lang")
+    truth = df.select(F.col("doc_id"), F.col("lang").alias("true_lang"))
     # corpus-scaled join keyed on the id — sort-merge pinned
-    cm = (truth.join(pred.hint("merge"), id_col)
+    cm = (truth.join(pred.hint("merge"), "doc_id")
           .groupBy("true_lang", "predicted_lang")
           .agg(F.count(F.lit(1)).alias("n_docs")))
     # per-true-class share: window over the BOUNDED |langs|² confusion
@@ -2410,8 +2380,7 @@ CODE_STOPWORD_MAX = 0.05  # prose carries stopwords; code barely does
 CODE_MIN_CHARS = 40
 
 
-def code_signals(df: DataFrame, text_col: str = "text",
-                 id_col: str = "doc_id") -> DataFrame:
+def code_signals(df: DataFrame) -> DataFrame:
     """Per-document code-likeness: counts of code-signal characters
     (braces/brackets/semicolons/operators), their density per char,
     stopword density per token, and the routing verdict
@@ -2421,7 +2390,7 @@ def code_signals(df: DataFrame, text_col: str = "text",
     documented thresholds (each ratio is ONE division of exact ints,
     so the comparison is engine-stable).
     """
-    safe = F.coalesce(F.col(text_col), F.lit(""))
+    safe = F.coalesce(F.col("text"), F.lit(""))
     n_chars = F.length(safe)
     n_sym = F.regexp_count(safe, F.lit(r"[{}\[\]();=<>+*/&|^%#]"))
     toks = _tokens(safe)
@@ -2437,7 +2406,7 @@ def code_signals(df: DataFrame, text_col: str = "text",
                & F.coalesce(stop_density < CODE_STOPWORD_MAX,
                             F.lit(False)))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.cast("bigint").alias("n_chars"),
         n_sym.cast("bigint").alias("n_code_symbols"),
         n_stop.cast("bigint").alias("n_stopwords"),
@@ -2502,10 +2471,8 @@ WINNOW_K = 3   # k-gram size (tokens)
 WINNOW_W = 4   # window: every w consecutive k-grams contribute >= 1 print
 
 
-def winnow_fingerprints(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", k: int = WINNOW_K,
-                        w: int = WINNOW_W) -> DataFrame:
-    """Winnowing document fingerprints: in every window of ``w``
+def winnow_fingerprints(df: DataFrame) -> DataFrame:
+    """Winnowing document fingerprints: in every window of ``WINNOW_W``
     consecutive k-gram hashes select the minimum, breaking ties toward
     the RIGHTMOST position (the paper's rule — it maximizes window
     overlap so consecutive windows usually reselect the same print).
@@ -2523,62 +2490,62 @@ def winnow_fingerprints(df: DataFrame, text_col: str = "text",
     # positions must be the in-document k-gram index, so k-grams are
     # built with posexplode here rather than via shingled_rows (which
     # drops positions)
-    toked = df.select(F.col(id_col), _tokens(F.col(text_col)).alias("t"))
+    toked = df.select(F.col("doc_id"), _tokens(F.col("text")).alias("t"))
     # sequence(1, stop) DESCENDS when stop < 1 (the shingles_of_tokens
     # gotcha) — short docs must produce an EMPTY index array
-    idx = F.when(F.size("t") >= k,
-                 F.sequence(F.lit(1), F.size("t") - (k - 1))
+    idx = F.when(F.size("t") >= WINNOW_K,
+                 F.sequence(F.lit(1), F.size("t") - (WINNOW_K - 1))
                  ).otherwise(F.array().cast("array<int>"))
     grams = toked.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(F.transform(
             idx,
             lambda i: F.concat_ws(
-                " ", *[F.element_at("t", i + j) for j in range(k)])))
+                " ", *[F.element_at("t", i + j) for j in range(WINNOW_K)])))
         .alias("pos", "gram")).select(
-        F.col(id_col), "pos", md5_long(F.col("gram")).alias("h"))
+        F.col("doc_id"), "pos", md5_long(F.col("gram")).alias("h"))
     # windows: gram at pos joins every window starting in
     # [pos - w + 1, pos]; clip to valid starts later via the group key
-    offs = F.explode(F.array(*[F.lit(o) for o in range(w)])).alias("off")
-    win = (grams.select(F.col(id_col), "pos", "h", offs)
-           .select(F.col(id_col), (F.col("pos") - F.col("off"))
+    offs = F.explode(F.array(*[F.lit(o) for o in range(WINNOW_W)])).alias("off")
+    win = (grams.select(F.col("doc_id"), "pos", "h", offs)
+           .select(F.col("doc_id"), (F.col("pos") - F.col("off"))
                    .alias("wstart"), "pos", "h")
            .filter(F.col("wstart") >= 0))
-    n_grams = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
+    n_grams = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     # merge-pinned (NOT broadcast): n_grams is one row per DOCUMENT —
     # corpus-scale — and Spark resolves BROADCAST over MERGE when both
     # hints are present, which would broadcast a corpus-sized relation
     full = (win.join(
-                n_grams.select(F.col(id_col), (F.col("n_grams") - w)
+                n_grams.select(F.col("doc_id"), (F.col("n_grams") - WINNOW_W)
                                .alias("max_start")).hint("merge"),
-                id_col)
+                "doc_id")
             .filter(F.col("wstart") <= F.col("max_start")))
-    sel = (full.groupBy(id_col, "wstart")
+    sel = (full.groupBy("doc_id", "wstart")
            .agg(F.min(F.struct(F.col("h"),
                                (-F.col("pos")).alias("np"))).alias("m"))
-           .select(F.col(id_col), F.col("m.h").alias("h"),
+           .select(F.col("doc_id"), F.col("m.h").alias("h"),
                    (-F.col("m.np")).alias("pos"))
            .distinct())
     # XOR fingerprint of the selected set: order-independent and
     # overflow-free (a SUM of 60-bit hashes wraps int64 within ~8 rows)
-    prints = (sel.select(id_col, (F.col("h") + F.col("pos")).alias("hp"))
-              .groupBy(id_col)
+    prints = (sel.select("doc_id", (F.col("h") + F.col("pos")).alias("hp"))
+              .groupBy("doc_id")
               .agg(F.count(F.lit(1)).alias("n_prints"),
                    F.expr("bit_xor(hp)").alias("checksum")))
-    return (df.select(F.col(id_col))
-            .join(n_grams.hint("merge"), id_col, "left")
-            .join(prints.hint("merge"), id_col, "left")
+    return (df.select(F.col("doc_id"))
+            .join(n_grams.hint("merge"), "doc_id", "left")
+            .join(prints.hint("merge"), "doc_id", "left")
             .select(
-                F.col(id_col),
+                F.col("doc_id"),
                 F.coalesce("n_grams", F.lit(0)).cast("bigint")
                 .alias("n_grams"),
                 F.coalesce("n_prints", F.lit(0)).cast("bigint")
                 .alias("n_prints"),
                 F.coalesce("checksum", F.lit(0)).cast("bigint")
                 .alias("checksum"),
-                F.when(F.coalesce("n_grams", F.lit(0)) >= w,
+                F.when(F.coalesce("n_grams", F.lit(0)) >= WINNOW_W,
                        F.coalesce("n_prints", F.lit(0)).cast("double")
-                       / (F.col("n_grams") - w + 1).cast("double"))
+                       / (F.col("n_grams") - WINNOW_W + 1).cast("double"))
                 .alias("density")))
     # no trailing orderBy: per-doc report is corpus-sized; sorting it
     # globally is a full-range-shuffle tax with no consumer
@@ -2649,8 +2616,7 @@ MOJIBAKE_RE = ("(Ã©|Ã¨|Ã¡|Ã³|Ãº|Ã±|Ã¤|Ã¶|Ã¼|Ã§|"
                "â€™|â€œ|â€˜|â€“|â€”|Â )")
 
 
-def mojibake_signals(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
+def mojibake_signals(df: DataFrame) -> DataFrame:
     """Encoding-damage report: count of classic UTF-8-as-Latin-1
     artifact sequences per document, their density per character, and
     the damaged verdict (any artifact — one mojibake sequence means
@@ -2658,11 +2624,11 @@ def mojibake_signals(df: DataFrame, text_col: str = "text",
     every non-ASCII char in it is suspect; the ftfy repair class).
     One shuffle-free codegen projection.
     """
-    safe = F.coalesce(F.col(text_col), F.lit(""))
+    safe = F.coalesce(F.col("text"), F.lit(""))
     n = F.regexp_count(safe, F.lit(MOJIBAKE_RE))
     n_chars = F.length(safe)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_chars.cast("bigint").alias("n_chars"),
         n.cast("bigint").alias("n_mojibake"),
         F.when(n_chars > 0, n.cast("double") / n_chars.cast("double"))
@@ -2702,8 +2668,7 @@ register(QuerySpec(
 
 # --- vocabulary coverage / OOV rate on a held-out split ---------------------------
 
-def oov_rate(df: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
+def oov_rate(df: DataFrame) -> DataFrame:
     """Out-of-vocabulary rate of a frozen vocabulary on held-out text:
     the vocabulary is every distinct token of the TRAIN half (even doc
     ids — the engine's deterministic split idiom), measured per
@@ -2719,13 +2684,13 @@ def oov_rate(df: DataFrame, text_col: str = "text",
     the shuffle, so the join carries |test types| rows, and the final
     report is a |langs|-row aggregate. No windows, no sorts.
     """
-    toks = df.select(F.col(id_col), F.col("lang"),
-                     F.explode(_tokens(F.coalesce(F.col(text_col),
+    toks = df.select(F.col("doc_id"), F.col("lang"),
+                     F.explode(_tokens(F.coalesce(F.col("text"),
                                                   F.lit("")))).alias("t"))
-    vocab = (toks.filter(F.col(id_col) % 2 == 0)
+    vocab = (toks.filter(F.col("doc_id") % 2 == 0)
              .select("t").distinct()
              .withColumn("in_vocab", F.lit(1)))
-    test = (toks.filter(F.col(id_col) % 2 == 1)
+    test = (toks.filter(F.col("doc_id") % 2 == 1)
             .groupBy("lang", "t").agg(F.count(F.lit(1)).alias("n")))
     j = test.join(vocab.hint("merge"), "t", "left")
     oov = F.col("in_vocab").isNull()
@@ -2789,9 +2754,7 @@ register(QuerySpec(
 
 # --- hapax / type-token lexical profile --------------------------------------------
 
-def hapax_profile(df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  source_col: str = "source") -> DataFrame:
+def hapax_profile(df: DataFrame) -> DataFrame:
     """Per-source lexical-richness profile: token mass, distinct types,
     hapax legomena (types occurring exactly once IN THAT SOURCE),
     type/token ratio and hapax share — the Zipf-tail health check that
@@ -2803,8 +2766,8 @@ def hapax_profile(df: DataFrame, text_col: str = "text",
     rows — then a |sources|-row roll-up. Exact integers; two divisions
     at the end.
     """
-    toks = df.select(F.col(source_col).alias("source"),
-                     F.explode(_tokens(F.coalesce(F.col(text_col),
+    toks = df.select(F.col("source"),
+                     F.explode(_tokens(F.coalesce(F.col("text"),
                                                   F.lit("")))).alias("t"))
     per = toks.groupBy("source", "t").agg(F.count(F.lit(1)).alias("n"))
     return (per.groupBy("source")
@@ -2868,8 +2831,7 @@ register(QuerySpec(
 SENT_RE = "[.!?]+"
 
 
-def sentence_stats(df: DataFrame, text_col: str = "text",
-                   id_col: str = "doc_id") -> DataFrame:
+def sentence_stats(df: DataFrame) -> DataFrame:
     """Per-doc sentence segmentation profile: sentence count, token
     mass, mean and max sentence length — the upstream signal for
     chunkers (split on sentence boundaries, pack to a token budget)
@@ -2882,7 +2844,7 @@ def sentence_stats(df: DataFrame, text_col: str = "text",
     row count never multiplies. The splitter is the same literal class
     in both engines (Java regex == DuckDB RE2 on this pattern).
     """
-    low = F.coalesce(F.col(text_col), F.lit(""))
+    low = F.coalesce(F.col("text"), F.lit(""))
     sents = F.filter(
         F.transform(F.split(low, SENT_RE), lambda s: F.trim(s)),
         lambda s: s != "")
@@ -2894,7 +2856,7 @@ def sentence_stats(df: DataFrame, text_col: str = "text",
     n_tok = F.aggregate(tok_counts, F.lit(0).cast("bigint"),
                         lambda acc, x: acc + x)
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         n_sent.alias("n_sentences"),
         n_tok.alias("n_tokens"),
         F.when(n_sent > 0, n_tok.cast("double") / n_sent.cast("double"))
@@ -2940,8 +2902,7 @@ register(QuerySpec(
 
 # --- character-class (charset) profile ----------------------------------------------
 
-def charset_profile(df: DataFrame, text_col: str = "text",
-                    lang_col: str = "lang") -> DataFrame:
+def charset_profile(df: DataFrame) -> DataFrame:
     """Per-language character-class census: lowercase / uppercase /
     digit / whitespace / other counts and the ascii-letter fraction —
     the cheap signal behind language-ID features, OCR-noise detection
@@ -2951,11 +2912,11 @@ def charset_profile(df: DataFrame, text_col: str = "text",
     in both regex engines), then one |langs|-row aggregate with
     map-side partials. Exact integers; one division.
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     cls = {"n_lower": "[a-z]", "n_upper": "[A-Z]", "n_digit": "[0-9]",
            "n_space": r"[ \t\n\r\f\x0B]"}
     proj = df.select(
-        F.col(lang_col).alias("lang"),
+        F.col("lang"),
         F.length(t).cast("bigint").alias("n_chars"),
         *[F.regexp_count(t, F.lit(p)).cast("bigint").alias(k)
           for k, p in cls.items()])
@@ -3032,10 +2993,7 @@ RAKE_MIN_FREQ = 3
 RAKE_MAX_PHRASE = 4
 
 
-def rake_keywords(df: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id",
-                  min_freq: int = RAKE_MIN_FREQ,
-                  max_phrase: int = RAKE_MAX_PHRASE) -> DataFrame:
+def rake_keywords(df: DataFrame) -> DataFrame:
     """RAKE-style corpus keywords (Rose et al. 2010): candidate phrases
     are maximal stopword-free token runs; each is scored by its words'
     corpus-wide degree (co-occurrence mass) against their frequency.
@@ -3051,32 +3009,32 @@ def rake_keywords(df: DataFrame, text_col: str = "text",
 
     Plan: posexplode to (doc, pos, token); phrase ids are a running
     stopword count per doc (doc-keyed window, uniform); phrases over
-    ``max_phrase`` words are discarded (RAKE's own practice); word
+    ``RAKE_MAX_PHRASE`` words are discarded (RAKE's own practice); word
     stats aggregate over phrase-word rows (map-side combine); phrase
     relation joins word stats on the word. Output is every phrase with
-    corpus frequency >= ``min_freq`` (a deterministic threshold, not a
+    corpus frequency >= ``RAKE_MIN_FREQ`` (a deterministic threshold, not a
     ratio-ordered top-k whose cutoff could ulp-flip between engines).
     """
     from pyspark.sql import Window
 
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     toks = df.select(
-        F.col(id_col),
-        F.posexplode(_tokens(F.coalesce(F.col(text_col), F.lit(""))))
+        F.col("doc_id"),
+        F.posexplode(_tokens(F.coalesce(F.col("text"), F.lit(""))))
         .alias("pos", "token"))
-    w = Window.partitionBy(id_col).orderBy("pos")
+    w = Window.partitionBy("doc_id").orderBy("pos")
     marked = toks.withColumn(
         "grp", F.sum(F.array_contains(stop_arr, F.col("token"))
                      .cast("int")).over(w))
     words = marked.filter(~F.array_contains(stop_arr, F.col("token")))
-    phrases = (words.groupBy(id_col, "grp")
+    phrases = (words.groupBy("doc_id", "grp")
                .agg(F.array_join(
                    F.transform(
                        F.array_sort(F.collect_list(
                            F.struct("pos", "token"))),
                        lambda x: x["token"]), " ").alias("phrase"),
                    F.count(F.lit(1)).alias("n_words"))
-               .filter(F.col("n_words") <= max_phrase))
+               .filter(F.col("n_words") <= RAKE_MAX_PHRASE))
     pw = phrases.select("phrase", "n_words",
                         F.explode(F.split("phrase", " ")).alias("wd"))
     wstats = (pw.groupBy("wd")
@@ -3091,7 +3049,7 @@ def rake_keywords(df: DataFrame, text_col: str = "text",
     # sums above count each occurrence once per word; normalize the
     # occurrence count by the phrase's word count (exact integer div —
     # the pw relation has n_words rows per occurrence)
-    return (scored.filter(F.col("n_occur") >= min_freq)
+    return (scored.filter(F.col("n_occur") >= RAKE_MIN_FREQ)
             .select("phrase",
                     F.col("n_occur").cast("bigint").alias("n_occur"),
                     F.col("sum_deg").cast("bigint").alias("sum_deg"),
@@ -3163,8 +3121,7 @@ register(QuerySpec(
 
 # --- byte fertility (bytes per token) per language -------------------------------------
 
-def byte_fertility(df: DataFrame, text_col: str = "text",
-                   lang_col: str = "lang") -> DataFrame:
+def byte_fertility(df: DataFrame) -> DataFrame:
     """Bytes-per-token by language — the tokenizer-budget planning
     number (byte-level models pay this directly; BPE vocab sizing
     follows it): exact UTF-8 byte mass over exact whitespace-token
@@ -3173,9 +3130,9 @@ def byte_fertility(df: DataFrame, text_col: str = "text",
     Shuffle-free projections (octet_length / token size), one bounded
     aggregate with map-side partials.
     """
-    t = F.coalesce(F.col(text_col), F.lit(""))
+    t = F.coalesce(F.col("text"), F.lit(""))
     toks = F.filter(F.split(F.lower(t), WS_RE), lambda x: x != "")
-    proj = df.select(F.col(lang_col).alias("lang"),
+    proj = df.select(F.col("lang"),
                      F.octet_length(t).cast("bigint").alias("n_bytes"),
                      F.size(toks).cast("bigint").alias("n_toks"))
     return (proj.groupBy("lang")

@@ -38,8 +38,8 @@ from pyspark.sql import functions as F
 from downscaledclimatedata_spark.functions.hashing import md5_long
 from downscaledclimatedata_spark.functions.rows import literal_rows
 from downscaledclimatedata_spark.operators.dedup import (
-    DECON_NGRAM, contaminated_doc_ids, lsh_candidate_pairs,
-    minhash_signatures, prune_corpus, prune_corpus_quality)
+    contaminated_doc_ids, lsh_candidate_pairs, minhash_signatures,
+    prune_corpus, prune_corpus_quality)
 from downscaledclimatedata_spark.operators.prep import (
     MIX_ACCEPT_MOD, clean_documents, global_shuffle,
     observed, observed_get, quality_filter, write_training_shards)
@@ -63,12 +63,9 @@ def build_training_corpus(docs: DataFrame, out_dir: str, *,
                           budget_tokens: int, n_shards: int = 16,
                           seed: str = "epoch0",
                           eval_docs: DataFrame | None = None,
-                          decon_n: int = DECON_NGRAM,
                           normalize_unicode: bool = False,
                           keep: str = "min_id",
                           audits: list | None = None,
-                          text_col: str = "text", id_col: str = "doc_id",
-                          source_col: str = "source",
                           stage_times: dict | None = None
                           ) -> CorpusBuildResult:
     """Raw documents -> written training shards; returns stage counts.
@@ -159,10 +156,10 @@ def build_training_corpus(docs: DataFrame, out_dir: str, *,
             return _pd.DataFrame({"t": nfc, "changed": changed})
 
         obs_u = Observation("pipeline_unicode")
-        docs = (docs.withColumn("_u", _nfc(F.col(text_col)))
+        docs = (docs.withColumn("_u", _nfc(F.col("text")))
                 .observe(obs_u, F.sum(F.col("_u.changed").cast("bigint"))
                          .alias("n_changed"))
-                .withColumn(text_col, F.col("_u.t")).drop("_u"))
+                .withColumn("text", F.col("_u.t")).drop("_u"))
 
     # Stage 1 (+1b fused, r14): quality — ONE scan, ONE rule-chain
     # evaluation, no join — and, when eval_docs is given, benchmark
@@ -178,17 +175,16 @@ def build_training_corpus(docs: DataFrame, out_dir: str, *,
     # materializes survivors and fires BOTH counters, where the split
     # form paid two full-row corpus checkpoints back to back.
     obs_q = Observation("pipeline_quality")
-    flagged = quality_filter(docs, text_col, id_col, keep_input=True) \
+    flagged = quality_filter(docs, keep_input=True) \
         .observe(obs_q,
                  F.count(F.lit(1)).alias("n_input"),
                  F.sum(F.col("passes").cast("bigint")).alias("n_pass"))
     stage = flagged.filter("passes").select(*docs.columns)
     obs_c = None
     if eval_docs is not None:
-        bad = contaminated_doc_ids(docs.select(id_col, text_col), eval_docs,
-                                   text_col, id_col, n=decon_n)
+        bad = contaminated_doc_ids(docs.select("doc_id", "text"), eval_docs)
         obs_c = Observation("pipeline_decon")
-        stage = stage.join(bad, id_col, "left_anti") \
+        stage = stage.join(bad, "doc_id", "left_anti") \
             .observe(obs_c, F.count(F.lit(1)).alias("n_rows"))
     quality_docs = stage.localCheckpoint()
     qm = obs_q.get
@@ -213,11 +209,11 @@ def build_training_corpus(docs: DataFrame, out_dir: str, *,
     if keep not in ("min_id", "quality"):
         raise ValueError(f"keep must be 'min_id' or 'quality': {keep!r}")
     prune = prune_corpus if keep == "min_id" else prune_corpus_quality
-    sigs = minhash_signatures(quality_docs, text_col, id_col)
+    sigs = minhash_signatures(quality_docs, "text", "doc_id")
     obs_d = Observation("pipeline_dedup")
     info: dict = {}
-    deduped = prune(quality_docs, lsh_candidate_pairs(sigs, id_col),
-                    text_col, id_col, _info=info) \
+    deduped = prune(quality_docs, lsh_candidate_pairs(sigs, "doc_id"),
+                    _info=info) \
         .observe(obs_d, F.count(F.lit(1)).alias("n_rows"))
     if not info.get("folded"):
         deduped = deduped.localCheckpoint()
@@ -239,9 +235,9 @@ def build_training_corpus(docs: DataFrame, out_dir: str, *,
     import math
 
     from downscaledclimatedata_spark.functions.text import WS_RE
-    toks = F.filter(F.split(F.lower(F.col(text_col)), WS_RE),
+    toks = F.filter(F.split(F.lower(F.col("text")), WS_RE),
                     lambda x: x != "")
-    stats = (deduped.groupBy(F.col(source_col).alias("source"))
+    stats = (deduped.groupBy("source")
              .agg(F.sum(F.coalesce(F.size(toks).cast("bigint"), F.lit(0)))
                   .alias("tok_s"))
              .collect())
@@ -258,26 +254,31 @@ def build_training_corpus(docs: DataFrame, out_dir: str, *,
     total_w = sum(ws.values())
     rate_of = {}
     for r in stats:
+        w_tok, b_w = total_w * r["tok_s"], budget_tokens * ws[r["source"]]
+        if max(w_tok, b_w) >= 2**63:
+            raise ValueError(
+                f"mixture products leave int64 (total_w * tok_s = {w_tok}, "
+                f"budget_tokens * w = {b_w}); domain_mixture_sample "
+                "computes them as bigint")
         if r["source"] is None:
             continue
-        denom = float(total_w * r["tok_s"])
-        num = float(budget_tokens * ws[r["source"]])
+        denom = float(w_tok)
+        num = float(b_w)
         # denom 0 (an all-empty-token source): the operator's 0.0/0.0
         # is NaN and least(1.0, NaN) = 1.0 under Spark's NaN-is-largest
         rate_of[r["source"]] = 1.0 if denom == 0.0 else min(1.0, num / denom)
-    accept = (md5_long(F.col(id_col).cast("string"), seed=f"{seed}-mix:")
+    accept = (md5_long(F.col("doc_id").cast("string"), seed=f"{seed}-mix:")
               % MIX_ACCEPT_MOD)
     if rate_of:
         rate_col = F.create_map(
             *[x for s, r in sorted(rate_of.items())
-              for x in (F.lit(s), F.lit(r))])[F.col(source_col)]
+              for x in (F.lit(s), F.lit(r))])[F.col("source")]
     else:
         rate_col = F.lit(None).cast("double")
     sampled = deduped.filter(
         accept.cast("double") < rate_col * MIX_ACCEPT_MOD)
 
-    cleaned = clean_documents(sampled, text_col, id_col,
-                              keep_cols=(source_col,))
+    cleaned = clean_documents(sampled, keep_cols=("source",))
     obs_df, obs = observed(cleaned, "pipeline")
     # Single consumer since carry_rows (r13): the cleaned sample flows
     # straight through the ONE ranking window into the shard write — no
@@ -286,18 +287,17 @@ def build_training_corpus(docs: DataFrame, out_dir: str, *,
     # mixture/clean Observation fires during the write itself. The
     # former `mixture_clean` stage mark collapses into the write
     # boundary (ladder rows carry `mixture_clean_write` from r13 on).
-    final = global_shuffle(obs_df, n_shards, id_col=id_col,
-                           seed=f"{seed}-order", carry_rows=True)
+    final = global_shuffle(obs_df, n_shards, seed=f"{seed}-order",
+                           carry_rows=True)
     publish_report = None
     if audits is not None:
         from downscaledclimatedata_spark.operators.maintenance import (
             publish_audited)
         publish_report = publish_audited(
             docs.sparkSession, out_dir, audits,
-            lambda staging: write_training_shards(final, staging,
-                                                  clustered=True))
+            lambda staging: write_training_shards(final, staging))
     else:
-        write_training_shards(final, out_dir, clustered=True)
+        write_training_shards(final, out_dir)
     # observed_get, not obs.get: a corpus whose mixture stage samples
     # ZERO docs lets AQE's empty-relation propagation eliminate the
     # metrics node below the write — the zero-row defaults are exactly

@@ -34,8 +34,6 @@ from pyspark.sql import types as T
 
 from downscaledclimatedata_spark.functions import publish
 from downscaledclimatedata_spark.operators.dedup import (
-    LSH_BAND_SIZE,
-    MINHASH_PERMS,
     SIMHASH_BITS,
     SIMHASH_BLOCKS,
     SIMHASH_HAM_MAX,
@@ -71,7 +69,7 @@ def batch_neardup_candidates(batch: DataFrame, index: DataFrame | None,
     least one LSH band bucket with an already-indexed doc.
     """
     sigs = minhash_signatures(batch, text_col, id_col)
-    bands = _banded(sigs, id_col, MINHASH_PERMS, LSH_BAND_SIZE)
+    bands = _banded(sigs, id_col)
     if index is None:
         spark = batch.sparkSession
         candidates = spark.createDataFrame(
@@ -105,7 +103,7 @@ def batch_multi_signal_entries(batch: DataFrame, text_col: str = "text",
     SAME minhash banding and Manku block construction as the batch
     operators, one code path."""
     sigs = minhash_signatures(batch, text_col, id_col)
-    bands = _banded(sigs, id_col, MINHASH_PERMS, LSH_BAND_SIZE).select(
+    bands = _banded(sigs, id_col).select(
         F.lit("minhash").alias("signal"),
         F.col("band_id").cast("int").alias("k1"),
         F.col("band_hash").cast("long").alias("k2"),

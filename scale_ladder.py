@@ -569,6 +569,47 @@ def time_knn_ab(spark, sf_dir: str) -> dict:
     return out
 
 
+PRUNE_N_DOCS = 2_000_000
+PRUNE_REMOVED_IDS = (200, 10_000, 20_000, 100_000, 500_000)
+
+
+def time_prune_tiers(spark) -> dict:
+    """Both arms of ``prune_corpus``'s driver tier on a
+    ``PRUNE_N_DOCS``-row corpus, per count in ``PRUNE_REMOVED_IDS``:
+    the inlined ``NOT IN`` filter (``PRUNE_ISIN_MAX_IDS`` above the
+    count) against the labels relation + anti-join (cap -1). The pair
+    graph holds one edge per removed id, so the union-find and edge
+    checkpoint both arms share cost the same in each. Best of 2 warm
+    runs, arms interleaved."""
+    from pyspark.sql import functions as F
+
+    from downscaledclimatedata_spark.operators import dedup as D
+
+    docs = (spark.range(PRUNE_N_DOCS)
+            .select(F.col("id").alias("doc_id"), F.lit("x").alias("text"))
+            .localCheckpoint())
+    orig = D.PRUNE_ISIN_MAX_IDS
+    out = {}
+    try:
+        for n_rm in PRUNE_REMOVED_IDS:
+            step = PRUNE_N_DOCS // n_rm
+            pairs = spark.range(n_rm).select(
+                (F.col("id") * step).alias("id_a"),
+                (F.col("id") * step + 1).alias("id_b"))
+            walls = {"not_in": [], "anti_join": []}
+            for _ in range(2):
+                for arm, cap in (("not_in", 10**9), ("anti_join", -1)):
+                    D.PRUNE_ISIN_MAX_IDS = cap
+                    t0 = time.perf_counter()
+                    kept = D.prune_corpus(docs, pairs).count()
+                    walls[arm].append(time.perf_counter() - t0)
+                    assert kept == PRUNE_N_DOCS - n_rm, (arm, kept)
+            out[n_rm] = {arm: round(min(w), 2) for arm, w in walls.items()}
+    finally:
+        D.PRUNE_ISIN_MAX_IDS = orig
+    return {"n_docs": PRUNE_N_DOCS, "sec": out}
+
+
 def time_headlines(spark, sf_dir: str,
                    names: tuple[str, ...] | None = None) -> dict[str, float]:
     from downscaledclimatedata_spark.plans import all_specs
@@ -654,6 +695,13 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     from bench import host_anchor  # pinned JVM micro-anchor (bench.py)
     anchor = host_anchor(spark)
+    if rung == "prune":
+        # the prune tier's crossover: where the inlined NOT IN filter
+        # stops beating the anti-join (sets PRUNE_ISIN_MAX_IDS)
+        print(json.dumps({"metric": "prune_tier_crossover",
+                          "host_anchor_sec": anchor,
+                          **time_prune_tiers(spark)}))
+        return
     if rung == "builders100":
         # THIRD decade (sf10 -> sf100, 5M docs) for both corpus-builder
         # shapes with the per-stage split (r11 verdict #4): the second

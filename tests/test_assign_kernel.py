@@ -108,19 +108,6 @@ def test_empty_codebook_drops_all_rows(spark):
         S.ARROW_ASSIGN_MIN_K = orig
 
 
-def test_pq_encode_tiers_identical(spark):
-    emb = _emb(spark, 300, dim=S.DIM)
-    orig = S.ARROW_ASSIGN_MIN_K
-    try:
-        S.ARROW_ASSIGN_MIN_K = 10**9
-        rel = S.pq_encode(emb).orderBy("vec_id", "m").collect()
-        S.ARROW_ASSIGN_MIN_K = 0
-        arrow = S.pq_encode(emb).orderBy("vec_id", "m").collect()
-    finally:
-        S.ARROW_ASSIGN_MIN_K = orig
-    assert rel == arrow and len(rel) == 300 * S.M_SUB
-
-
 def test_dist_out_matches_between_tiers(spark):
     emb = _emb(spark, 250)
     orig = S.ARROW_ASSIGN_MIN_K

@@ -31,36 +31,15 @@ def union_find_components(edges):
 @pytest.fixture(params=["driver", "star"])
 def star_cc(request, monkeypatch):
     """``connected_components_star`` pinned to one size tier: the driver
-    union-find (default cap) or the iterative alternating stars (cap 0,
-    so every non-empty graph iterates)."""
+    union-find (default cap) or the iterative alternating stars (cap -1,
+    so every graph iterates, the empty one too)."""
     if request.param == "star":
-        monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", 0)
+        monkeypatch.setattr(D, "CC_DRIVER_MAX_EDGES", -1)
 
     def run(spark, edges):
         pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
         return D.connected_components_star(pairs).collect()
     return run
-
-
-def test_chain_and_separate_pair(spark, star_cc):
-    # chain 1-2-3 (diameter 2) + disjoint pair 10-11
-    comps = {r.id: r.comp
-             for r in star_cc(spark, [(1, 2), (2, 3), (10, 11)])}
-    assert comps == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-
-
-def test_long_chain_converges(spark, star_cc):
-    # 0-1-2-...-9: diameter 9, the worst case for label propagation
-    comps = {r.id: r.comp
-             for r in star_cc(spark, [(i, i + 1) for i in range(9)])}
-    assert comps == {i: 0 for i in range(10)}
-
-
-def test_triangle_with_extra_edge(spark, star_cc):
-    # redundant edges must not duplicate rows
-    rows = star_cc(spark, [(5, 6), (6, 7), (5, 7)])
-    assert len(rows) == 3
-    assert {r.comp for r in rows} == {5}
 
 
 def test_random_graphs_match_union_find(spark, star_cc):
@@ -78,26 +57,38 @@ def test_random_graphs_match_union_find(spark, star_cc):
         assert got == want, f"trial {trial}: {got} != {want}"
 
 
-def test_star_matches_union_find_on_chains_and_cliques(spark, star_cc):
-    """Chains, cliques and pseudo-random graphs against the reference."""
-    cases = [
-        [(i, i + 1) for i in range(12)],             # long chain
-        [(1, 2), (2, 3), (10, 11)],                  # chain + pair
-        [(5, 6), (6, 7), (5, 7)],                    # triangle
-        [(a, b) for a in range(20, 26)
-         for b in range(a + 1, 26)],                 # 6-clique
-    ]
+def _random_cases():
     rng = random.Random(13)
     for trial in range(2):
         n_nodes = 25 + 15 * trial
-        cases.append(sorted({tuple(sorted((rng.randrange(n_nodes),
-                                           rng.randrange(n_nodes))))
-                             for _ in range(n_nodes)}))
-    for edges in cases:
-        edges = [e for e in edges if e[0] != e[1]]
-        got = {r.id: r.comp for r in star_cc(spark, edges)}
-        assert got == union_find_components(edges), \
-            f"mismatch on {edges[:5]}..."
+        yield pytest.param(sorted({tuple(sorted((rng.randrange(n_nodes),
+                                                 rng.randrange(n_nodes))))
+                                   for _ in range(n_nodes)}),
+                           id=f"random{trial}")
+
+
+GRAPH_CASES = [
+    pytest.param([], id="empty"),
+    pytest.param([(i, i + 1) for i in range(12)], id="long_chain"),
+    pytest.param([(1, 2), (2, 3), (10, 11)], id="chain_and_pair"),
+    pytest.param([(5, 6), (6, 7), (5, 7)], id="triangle"),
+    pytest.param([(30, 31), (31, 30), (30, 31), (30, 30)],
+                 id="repeats_self_loop"),
+    pytest.param([(a, b) for a in range(20, 26) for b in range(a + 1, 26)],
+                 id="clique6"),
+    *_random_cases(),
+]
+
+
+@pytest.mark.parametrize("edges", GRAPH_CASES)
+def test_star_matches_union_find_on_chains_and_cliques(spark, star_cc, edges):
+    """Chains, cliques, pseudo-random graphs and the empty graph against
+    the reference; redundant edges never duplicate a node's row and
+    self-loops are ignored."""
+    rows = star_cc(spark, edges)
+    got = {r.id: r.comp for r in rows}
+    assert len(rows) == len(got), f"duplicate rows: {rows}"
+    assert got == union_find_components([e for e in edges if e[0] != e[1]])
 
 
 def test_pair_graph_stats_on_known_graph(spark):
@@ -122,36 +113,6 @@ def test_pair_graph_stats_on_known_graph(spark):
     (r3,) = pair_graph_stats(empty).collect()
     assert (r3.n_nodes, r3.n_triangles) == (0, 0)
     assert r3.clustering_coefficient == 0.0
-
-
-def test_star_tiers_identical(spark):
-    """The r13 driver union-find tier and the distributed star
-    iteration produce identical labels — force each path by flipping
-    CC_DRIVER_MAX_EDGES across deterministic random graphs (chains,
-    cliques, isolated pairs), and pin that an empty pair relation
-    yields an empty label relation on both."""
-    rng = random.Random(23)
-    orig = D.CC_DRIVER_MAX_EDGES
-    try:
-        for trial in range(4):
-            n = rng.randint(2, 40)
-            edges = [(rng.randint(0, n), rng.randint(0, n))
-                     for _ in range(rng.randint(1, 60))]
-            edges += [(100 + i, 101 + i) for i in range(0, 10, 2)]
-            pairs = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
-            D.CC_DRIVER_MAX_EDGES = 10**9
-            drv = {(r.id, r.comp)
-                   for r in D.connected_components_star(pairs).collect()}
-            D.CC_DRIVER_MAX_EDGES = -1
-            dist = {(r.id, r.comp)
-                    for r in D.connected_components_star(pairs).collect()}
-            assert drv == dist, f"trial {trial}: {sorted(drv ^ dist)[:6]}"
-        empty = spark.createDataFrame([], "id_a bigint, id_b bigint")
-        for tier in (10**9, -1):
-            D.CC_DRIVER_MAX_EDGES = tier
-            assert D.connected_components_star(empty).count() == 0
-    finally:
-        D.CC_DRIVER_MAX_EDGES = orig
 
 
 def test_prune_tiers_identical(spark):

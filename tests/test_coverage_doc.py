@@ -45,3 +45,31 @@ def test_package_version_matches_pyproject():
     tomllib = pytest.importorskip("tomllib")  # Python 3.11+
     pyproject = tomllib.loads((ROOT / "pyproject.toml").read_text())
     assert downscaledclimatedata_spark.__version__ == pyproject["project"]["version"]
+
+
+# Defaulted parameters of the public functions in the corpus/similarity
+# modules. Each one left is set to a second value by a caller or needed
+# by a test; an option with one value in use is a constant, so this
+# count may only go down.
+OPERATOR_MODULES = tuple(
+    f"downscaledclimatedata_spark.operators.{m}"
+    for m in ("dedup", "similarity", "prep", "textops", "pandasops",
+              "maintenance")) + ("downscaledclimatedata_spark.pipeline",)
+MAX_DEFAULTED_PARAMS = 184
+
+
+def test_defaulted_parameter_count_does_not_grow():
+    import importlib
+    import inspect
+
+    n = 0
+    for name in OPERATOR_MODULES:
+        mod = importlib.import_module(name)
+        for attr, fn in vars(mod).items():
+            if (inspect.isfunction(fn) and fn.__module__ == name
+                    and not attr.startswith("_")):
+                n += sum(1 for p in inspect.signature(fn).parameters.values()
+                         if p.default is not p.empty)
+    assert n <= MAX_DEFAULTED_PARAMS, (
+        f"{n} defaulted parameters > {MAX_DEFAULTED_PARAMS}: a parameter "
+        "with one value in use belongs in a constant")

@@ -6,8 +6,11 @@ from __future__ import annotations
 
 import glob
 
+import pytest
+
 from downscaledclimatedata_spark.operators.prep import quality_filter
 from downscaledclimatedata_spark.pipeline import build_training_corpus
+from downscaledclimatedata_spark.session import _LOCAL_DEFAULTS
 from downscaledclimatedata_spark.sources.tables import load_table
 from tests.conftest import SF_SMOKE
 
@@ -227,7 +230,7 @@ def test_build_keep_quality_elects_clean_representative(spark, tmp_path):
     docs = base.unionByName(extra)
     # the planted pair must survive the quality gate or no pair forms
     gate = {r.doc_id for r in
-            quality_filter(extra, "text", "doc_id", keep_input=True)
+            quality_filter(extra, keep_input=True)
             .filter("passes").select("doc_id").collect()}
     assert gate == {910, 920}, f"planted docs fell to quality: {gate}"
 
@@ -276,3 +279,56 @@ def test_build_audited_publish_gates_and_preserves_prior(spark, tmp_path):
     assert os.path.exists(rep2["staging"])          # kept for inspection
     # the prior epoch's corpus is still what readers see
     assert spark.read.parquet(out).count() == res1.n_sampled
+
+
+def _write_plans(spark, out_dir: str) -> list[str]:
+    """Physical-plan descriptions of the file writes into ``out_dir``
+    that the session's SQL status store still holds."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [execs.apply(i).physicalPlanDescription()
+             for i in range(execs.size())]
+    return [p for p in plans
+            if "InsertIntoHadoopFsRelationCommand" in p and out_dir in p]
+
+
+def _final_shard_exchanges(plan: str) -> list[str]:
+    """The ``shard``-keyed Exchanges of an executed (AQE final) plan."""
+    import re
+
+    final = plan.split("== Initial Plan ==")[0]
+    ids = re.findall(r"Exchange \((\d+)\)", final)
+    args = [re.search(rf"\n\({i}\) Exchange\n(?:.*\n)*?Arguments: (.*)",
+                      plan).group(1) for i in ids]
+    return [a for a in args if a.startswith("hashpartitioning(shard#")]
+
+
+@pytest.mark.parametrize("session", ["repo", "plain"])
+def test_shard_write_shuffles_once(spark, tmp_path, session):
+    """write_training_shards always repartitions by shard, and the
+    build's write still runs ONE shard Exchange: global_shuffle's window
+    already hash-partitions on shard, so EnsureRequirements drops the
+    repartition. Checked on the repo session and on one with Spark's own
+    defaults (8 shuffle partitions)."""
+    s = spark
+    if session == "plain":
+        s = spark.newSession()
+        for key in _LOCAL_DEFAULTS:
+            if key.startswith("spark.sql."):
+                s.conf.unset(key)
+        s.conf.set("spark.sql.shuffle.partitions", "8")
+    out = str(tmp_path / "shards")
+    docs = load_table(s, SF_SMOKE, "documents")
+    build_training_corpus(docs, out, budget_tokens=5_000, n_shards=4)
+    (plan,) = _write_plans(s, out)
+    assert len(_final_shard_exchanges(plan)) == 1, plan
+
+
+def test_build_rejects_mixture_products_past_int64(spark, tmp_path):
+    """budget_tokens * w must stay a bigint, as domain_mixture_sample
+    computes it: past 2**63 the build raises before writing anything."""
+    docs = load_table(spark, SF_SMOKE, "documents")
+    out = tmp_path / "shards"
+    with pytest.raises(ValueError, match="int64"):
+        build_training_corpus(docs, str(out), budget_tokens=2**62,
+                              n_shards=2)
+    assert not out.exists()

@@ -53,7 +53,9 @@ def test_ann_index_append_equals_rebuild(spark, tmp_path):
 def test_ann_index_append_preserves_partition_pruning(spark, tmp_path):
     """The append/compact cycle must not break the serve path's
     dynamic partition pruning — the scan still reads only probed
-    lists."""
+    lists — and the query batch joins the lists as a broadcast."""
+    import re
+
     emb = load_table(spark, SF, "embeddings")
     is_delta = F.col("vec_id") % 5 == 3
     base = str(tmp_path / "idx")
@@ -63,6 +65,7 @@ def test_ann_index_append_preserves_partition_pruning(spark, tmp_path):
     served = ann_index_search(spark, base)
     plan = served._jdf.queryExecution().executedPlan().toString()
     assert "dynamicpruningexpression" in plan.lower(), plan[:800]
+    assert re.search(r"BroadcastHashJoin \[cid#", plan), plan
 
 
 def test_ann_index_meta_validated_at_serve_time(spark, tmp_path):
@@ -77,34 +80,6 @@ def test_ann_index_meta_validated_at_serve_time(spark, tmp_path):
     # a delta append into a path with no meta/ must refuse
     with pytest.raises(Exception):
         ann_index_append(emb, str(tmp_path / "nonexistent"))
-
-
-def test_ann_index_serve_shuffle_fallback_same_results(spark, tmp_path,
-                                                      monkeypatch):
-    """The large-serving-batch path (query batch above
-    ANN_SERVE_BROADCAST_MAX) must give byte-identical results through the
-    cid-keyed shuffle join. Catalyst would auto-broadcast this fixture's
-    small query side anyway, so auto-broadcast is off for that arm."""
-    import re
-
-    from downscaledclimatedata_spark.operators import similarity as S
-    emb = load_table(spark, SF, "embeddings")
-    base = str(tmp_path / "idx")
-    ann_index_build(emb, base)
-    bcast = _serve_map(ann_index_search(spark, base))
-    monkeypatch.setattr(S, "ANN_SERVE_BROADCAST_MAX", 0)
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    prior = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        shuf = ann_index_search(spark, base)
-        got = _serve_map(shuf)
-        plan = shuf._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set(key, prior)
-    assert got == bcast
-    assert re.search(r"(SortMergeJoin|ShuffledHashJoin) \[cid#", plan), plan
-    assert not re.search(r"BroadcastHashJoin \[cid#", plan), plan
 
 
 def _clustered_rows(n_clusters=3, per=40, seed=7):

@@ -381,13 +381,11 @@ def test_assigned_corpus_two_level_route_matches_flat_in_degenerate(spark):
     rows = [(i, [rnd.uniform(-1, 1) for _ in range(64)]) for i in range(120)]
     df = _emb(spark, rows)
     flat = {r["vec_id"]: r["cid"]
-            for r in _assigned_corpus(df, "vec_id", "embedding",
-                                      10, 8, None).collect()}
+            for r in _assigned_corpus(df, 10, 8, None).collect()}
     degen = {r["vec_id"]: r["cid"]
-             for r in _assigned_corpus(df, "vec_id", "embedding",
-                                       10, 8, 8).collect()}
+             for r in _assigned_corpus(df, 10, 8, 8).collect()}
     assert degen == flat
-    routed = _assigned_corpus(df, "vec_id", "embedding", 10, 8, 2).collect()
+    routed = _assigned_corpus(df, 10, 8, 2).collect()
     assert len(routed) == len(flat)  # every vector assigned exactly once
     cents = {i for i in range(120) if i % 10 == 0 and i < 80}
     assert {r["cid"] for r in routed} <= cents

@@ -264,7 +264,7 @@ def test_knn_classify_perfect_on_separable_clusters(spark):
         rows.append((i, base, label))
     emb = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int")
-    out = knn_classify_confusion(emb, k=3, centroid_mod=4, n_centroids=2)
+    out = knn_classify_confusion(emb, centroid_mod=4, n_centroids=2)
     cells = {(r.true_label, r.pred_label): r.n for r in out.collect()}
     assert all(t == p for (t, p) in cells), f"off-diagonal cells: {cells}"
     assert sum(cells.values()) > 0
