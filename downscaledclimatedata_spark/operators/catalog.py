@@ -18,7 +18,7 @@ loca2.py:220-224).
 
 from __future__ import annotations
 
-import glob
+import csv
 import json
 import os
 
@@ -32,6 +32,13 @@ from downscaledclimatedata_spark.sources.tables import load_table
 CATALOG_COLUMNS = ("variable", "model", "scheme", "experiment_id", "time_range", "path")
 
 _ZARR_MARKERS = ("monthly.cent.zarr", "cent.monthly.zarr")
+
+# write_catalog collects the catalog to the driver and writes it from
+# there. The reference's LOCA2 snapshot has 2,106 rows (27 models, 3
+# variables, 4 scenarios); 100k rows leaves ~50x room for more members,
+# time ranges and Zarr stores, and holds ~90 MB of Python rows at most.
+CATALOG_MAX_ROWS = 100_000
+_CSV_PART = "part-00000.csv"
 
 
 def zarr_base_path(key: Column) -> Column:
@@ -59,8 +66,7 @@ def strip_prefix(key: Column, prefix: str) -> Column:
     ).otherwise(key)
 
 
-def parse_key_columns(df: DataFrame, bucket: str = "bucket",
-                      path_col: str | None = None) -> DataFrame:
+def parse_key_columns(df: DataFrame, bucket: str) -> DataFrame:
     """Extract the 6 catalog columns from the relative S3 key ``rel_key``.
 
     Reference: parse_key at loca2.py:115-136 — split('/') dropping empty
@@ -69,9 +75,9 @@ def parse_key_columns(df: DataFrame, bucket: str = "bucket",
     time_range = f[4]. All native Catalyst expressions (element_at
     supports the reference's negative indexing).
 
-    ``path`` is built from ``path_col`` when given (the UN-stripped full
-    key — the reference parses the prefix-stripped key but builds the URI
-    from the full one, loca2.py:128,218-221), else from ``rel_key``.
+    ``path`` is built from ``full_key``, the key before the prefix strip
+    (the reference parses the prefix-stripped key but builds the URI from
+    the full one, loca2.py:128,218-221).
     """
     parts = F.filter(F.split(F.col("rel_key"), "/"), lambda x: x != "")
     fname = F.element_at(parts, -1)
@@ -82,8 +88,7 @@ def parse_key_columns(df: DataFrame, bucket: str = "bucket",
         F.element_at(parts, 2).alias("scheme"),
         F.element_at(fparts, 4).alias("experiment_id"),
         F.element_at(fparts, 5).alias("time_range"),
-        F.concat(F.lit(f"s3://{bucket}/"),
-                 F.col(path_col or "rel_key")).alias("path"),
+        F.concat(F.lit(f"s3://{bucket}/"), F.col("full_key")).alias("path"),
     )
 
 
@@ -116,7 +121,7 @@ def build_catalog(listing: DataFrame, bucket: str,
     good = keyed.filter(ok)
     quarantine = keyed.filter(~ok).select(
         F.col("full_key").alias("rejected_key"))
-    catalog = parse_key_columns(good, bucket, path_col="full_key")
+    catalog = parse_key_columns(good, bucket)
     return catalog, quarantine
 
 
@@ -140,30 +145,48 @@ def write_catalog(catalog: DataFrame, out_dir: str, catalog_id: str,
                   description: str, data_format: str) -> None:
     """CSV (header, deterministic order) + JSON spec sink.
 
-    The reference writes an unquoted hand-rolled CSV (loca2.py:213-222);
-    the engine uses Spark's CSV writer (quotes only when needed — the
-    reference silently corrupts comma-bearing fields, SURVEY §7.5.2) and
-    adds an explicit orderBy so output is deterministic (§7.5.4).
+    The catalog is collected to the driver (at most ``CATALOG_MAX_ROWS``
+    rows, else ``ValueError`` before anything is written), sorted by
+    ``CATALOG_COLUMNS`` and written as ``{catalog_id}.csv/part-00000.csv``
+    with stdlib ``csv``: UTF-8, LF line ends, fields quoted only when
+    needed, a ``"`` inside a field doubled (RFC 4180), so pandas and
+    DuckDB read every value back exactly. The reference writes an
+    unquoted hand-rolled CSV (loca2.py:213-222) that silently corrupts
+    comma-bearing fields (SURVEY §7.5.2), in no fixed order (§7.5.4).
 
-    Spark writes ``{catalog_id}.csv`` as a directory; ``coalesce(1)``
-    makes it hold one ``part-*.csv`` file, and the spec's
-    ``catalog_file`` names that file, so ``pd.read_csv`` (and intake-ESM)
-    can open it.
-
-    ``out_dir`` is local (``publish.local_dir``). The CSV directory is
-    published by ``publish.write_dir``, then the spec by
-    ``publish.replace_file``, so a failed write keeps the old catalog.
+    ``out_dir`` is local (``publish.local_dir``). The spec, whose
+    ``catalog_file`` names the CSV file by its fixed name, is replaced
+    first (``publish.replace_file``), then the CSV directory is swapped
+    in (``publish.write_dir``). That swap is the one commit point: a
+    write that fails at any step leaves the old spec naming the old
+    rows.
     """
     root = publish.local_dir(catalog.sparkSession, out_dir)
-    csv_dir = f"{root}/{catalog_id}.csv"
-    publish.write_dir(csv_dir, lambda staging: catalog
-                      .orderBy(*CATALOG_COLUMNS).coalesce(1)
-                      .write.option("header", True).csv(f"file://{staging}"))
-    [part] = glob.glob(f"{glob.escape(csv_dir)}/part-*.csv")
+    rows = catalog.select(*CATALOG_COLUMNS).limit(CATALOG_MAX_ROWS + 1).collect()
+    if len(rows) > CATALOG_MAX_ROWS:
+        raise ValueError(f"catalog {catalog_id!r} has more than "
+                         f"{CATALOG_MAX_ROWS} rows, the most write_catalog "
+                         f"writes from the driver")
+    # code-point order is UTF-8 byte order, Spark's string order; no
+    # catalog column is null (well_formed)
+    rows.sort()
+    os.makedirs(root, exist_ok=True)
     spec = esm_catalog_spec(catalog_id, description, data_format,
-                            f"{out_dir}/{catalog_id}.csv/{os.path.basename(part)}")
+                            f"{out_dir}/{catalog_id}.csv/{_CSV_PART}")
     publish.replace_file(f"{root}/{catalog_id}.json",
                          json.dumps(spec, indent=4))
+
+    def write(staging):
+        os.mkdir(staging)
+        with open(f"{staging}/{_CSV_PART}", "w", encoding="utf-8",
+                  newline="") as f:
+            out = csv.writer(f, lineterminator="\n")
+            out.writerow(CATALOG_COLUMNS)
+            out.writerows(rows)
+            f.flush()
+            os.fsync(f.fileno())
+
+    publish.write_dir(f"{root}/{catalog_id}.csv", write)
 
 
 # --- oracle-checked query entries -------------------------------------------

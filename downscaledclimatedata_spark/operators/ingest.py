@@ -159,9 +159,11 @@ def decode_netcdf_tidy(manifest: DataFrame,
     The Spark-idiomatic equivalent of the reference's NetCDF->Zarr
     conversion: instead of a blob-to-blob copy, each file decodes to
     `(model, scenario, memberid, variable, time, lat, lon, value)` rows,
-    written as partitioned Parquet (write_tidy_long) so time-range and
-    model/scenario scans prune partitions. One manifest row fans out to
-    millions of observation rows.
+    written as Parquet partitioned by model, scenario and variable
+    (write_tidy_long), so scans on those prune partitions; a time-range
+    scan does not prune (``time`` is INT96, which Spark's Parquet filter
+    pushdown skips, and each file is one row group). One manifest row
+    fans out to millions of observation rows.
 
     ``mapInArrow`` hands each decoded file to Spark as one Arrow record
     batch built from columns: the four key columns are ``pa.repeat`` of
@@ -240,7 +242,10 @@ def _tidy_file_writer(decode_file, staging: str):
 
 def write_tidy_long(df: DataFrame, path: str) -> list:
     """Analytics sink for decoded climate observations (SURVEY §1.5b):
-    hive-partitioned Parquet keyed so time-range scans prune partitions.
+    hive-partitioned Parquet keyed so model, scenario and variable scans
+    prune partitions. Time-range scans read every file of a partition:
+    ``time`` is INT96, which Spark's Parquet filter pushdown skips, and
+    each file is one row group.
 
     Contract:
     - ``df`` must be a ``decode_netcdf_tidy`` result (``TypeError``

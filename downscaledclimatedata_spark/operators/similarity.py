@@ -2996,12 +2996,14 @@ def similarity_ivf_two_level_query(spark: SparkSession, sf_dir: str) -> DataFram
     return ivf_assign_two_level(emb)
 
 
-def _two_level_sql(centroid_mod: int = CENTROID_MOD,
-                   n_centroids: int = N_CENTROIDS,
-                   n_super: int = N_SUPER) -> str:
-    stride = max(1, n_centroids // n_super)
-    dot = lambda a, b: (f"list_sum(list_transform(range(1, {DIM + 1}), "
-                        f"i -> {a}[i] * {b}[i]))")
+def _dot_sql(a: str, b: str) -> str:
+    """DuckDB integer dot product of two DIM-long list columns."""
+    return (f"list_sum(list_transform(range(1, {DIM + 1}), "
+            f"i -> {a}[i] * {b}[i]))")
+
+
+def _two_level_sql() -> str:
+    stride = max(1, N_CENTROIDS // N_SUPER)
     return f"""
 WITH q AS (SELECT vec_id, {_QVEC_SQL} AS qv FROM embeddings),
 base AS (
@@ -3010,29 +3012,29 @@ base AS (
   FROM q
 ), cents AS (
   SELECT vec_id AS cid, qv AS cv, in2 AS cn2 FROM base
-  WHERE {_fixed_sample_sql('vec_id', centroid_mod, n_centroids)}
+  WHERE {_fixed_sample_sql('vec_id', CENTROID_MOD, N_CENTROIDS)}
 ), supers AS (
   SELECT cid AS sid, cv AS sv, cn2 AS sn2 FROM cents
-  WHERE {_fixed_sample_sql('cid', centroid_mod * stride, n_super)}
+  WHERE {_fixed_sample_sql('cid', CENTROID_MOD * stride, N_SUPER)}
 ), c2s AS (
   SELECT cid, sid FROM (
     SELECT cents.cid, supers.sid,
       ROW_NUMBER() OVER (PARTITION BY cents.cid
-        ORDER BY cents.cn2 + supers.sn2 - 2 * {dot('cents.cv', 'supers.sv')},
+        ORDER BY cents.cn2 + supers.sn2 - 2 * {_dot_sql('cents.cv', 'supers.sv')},
                  supers.sid) AS rn
     FROM cents CROSS JOIN supers) WHERE rn = 1
 ), v2s AS (
   SELECT vec_id, sid FROM (
     SELECT base.vec_id, supers.sid,
       ROW_NUMBER() OVER (PARTITION BY base.vec_id
-        ORDER BY base.in2 + supers.sn2 - 2 * {dot('base.qv', 'supers.sv')},
+        ORDER BY base.in2 + supers.sn2 - 2 * {_dot_sql('base.qv', 'supers.sv')},
                  supers.sid) AS rn
     FROM base CROSS JOIN supers) WHERE rn = 1
 )
 SELECT vec_id, sid AS super_cid, cid FROM (
   SELECT b.vec_id, v.sid,  c.cid,
     ROW_NUMBER() OVER (PARTITION BY b.vec_id
-      ORDER BY b.in2 + c.cn2 - 2 * {dot('b.qv', 'c.cv')}, c.cid) AS rn
+      ORDER BY b.in2 + c.cn2 - 2 * {_dot_sql('b.qv', 'c.cv')}, c.cid) AS rn
   FROM base b
   JOIN v2s v ON v.vec_id = b.vec_id
   JOIN c2s x ON x.sid = v.sid
@@ -3197,14 +3199,11 @@ def similarity_ivf_three_level_query(spark: SparkSession,
     return ivf_assign_three_level(emb)
 
 
-def _three_level_sql(centroid_mod: int = CENTROID_MOD,
-                     n_centroids: int = N_CENTROIDS,
-                     n_super: int = N_SUPER,
-                     n_super2: int = N_SUPER2) -> str:
-    stride1 = max(1, n_centroids // n_super)
-    stride2 = max(1, n_super // n_super2)
-    dot = lambda a, b: (f"list_sum(list_transform(range(1, {DIM + 1}), "
-                        f"i -> {a}[i] * {b}[i]))")
+def _three_level_cascade_sql() -> str:
+    """The CTEs both three-level oracles share: the nested codebooks and
+    each vector's best super²-cell (``v2s2``)."""
+    stride1 = max(1, N_CENTROIDS // N_SUPER)
+    stride2 = max(1, N_SUPER // N_SUPER2)
     return f"""
 WITH q AS (SELECT vec_id, {_QVEC_SQL} AS qv FROM embeddings),
 base AS (
@@ -3213,33 +3212,33 @@ base AS (
   FROM q
 ), cents AS (
   SELECT vec_id AS cid, qv AS cv, in2 AS cn2 FROM base
-  WHERE {_fixed_sample_sql('vec_id', centroid_mod, n_centroids)}
+  WHERE {_fixed_sample_sql('vec_id', CENTROID_MOD, N_CENTROIDS)}
 ), sup1 AS (
   SELECT cid AS sid1, cv AS s1v, cn2 AS s1n2 FROM cents
-  WHERE {_fixed_sample_sql('cid', centroid_mod * stride1, n_super)}
+  WHERE {_fixed_sample_sql('cid', CENTROID_MOD * stride1, N_SUPER)}
 ), sup2 AS (
   SELECT sid1 AS sid2, s1v AS s2v, s1n2 AS s2n2 FROM sup1
-  WHERE {_fixed_sample_sql('sid1', centroid_mod * stride1 * stride2,
-                           n_super2)}
+  WHERE {_fixed_sample_sql('sid1', CENTROID_MOD * stride1 * stride2,
+                           N_SUPER2)}
 ), s1map AS (
   SELECT sid1, sid2 FROM (
     SELECT sup1.sid1, sup2.sid2,
       ROW_NUMBER() OVER (PARTITION BY sup1.sid1
-        ORDER BY sup1.s1n2 + sup2.s2n2 - 2 * {dot('sup1.s1v', 'sup2.s2v')},
+        ORDER BY sup1.s1n2 + sup2.s2n2 - 2 * {_dot_sql('sup1.s1v', 'sup2.s2v')},
                  sup2.sid2) AS rn
     FROM sup1 CROSS JOIN sup2) WHERE rn = 1
 ), c2s2 AS (
   SELECT cid, sid2 FROM (
     SELECT cents.cid, sup2.sid2,
       ROW_NUMBER() OVER (PARTITION BY cents.cid
-        ORDER BY cents.cn2 + sup2.s2n2 - 2 * {dot('cents.cv', 'sup2.s2v')},
+        ORDER BY cents.cn2 + sup2.s2n2 - 2 * {_dot_sql('cents.cv', 'sup2.s2v')},
                  sup2.sid2) AS rn
     FROM cents CROSS JOIN sup2) WHERE rn = 1
 ), c2s1 AS (
   SELECT cid, sid1 FROM (
     SELECT c.cid, m.sid1,
       ROW_NUMBER() OVER (PARTITION BY c.cid
-        ORDER BY c.cn2 + s.s1n2 - 2 * {dot('c.cv', 's.s1v')}, m.sid1) AS rn
+        ORDER BY c.cn2 + s.s1n2 - 2 * {_dot_sql('c.cv', 's.s1v')}, m.sid1) AS rn
     FROM cents c
     JOIN c2s2 x ON x.cid = c.cid
     JOIN s1map m ON m.sid2 = x.sid2
@@ -3248,14 +3247,18 @@ base AS (
   SELECT vec_id, sid2 FROM (
     SELECT base.vec_id, sup2.sid2,
       ROW_NUMBER() OVER (PARTITION BY base.vec_id
-        ORDER BY base.in2 + sup2.s2n2 - 2 * {dot('base.qv', 'sup2.s2v')},
+        ORDER BY base.in2 + sup2.s2n2 - 2 * {_dot_sql('base.qv', 'sup2.s2v')},
                  sup2.sid2) AS rn
     FROM base CROSS JOIN sup2) WHERE rn = 1
-), v2s1 AS (
+"""
+
+
+def _three_level_sql() -> str:
+    return _three_level_cascade_sql() + f"""), v2s1 AS (
   SELECT vec_id, sid2, sid1 FROM (
     SELECT b.vec_id, v.sid2, m.sid1,
       ROW_NUMBER() OVER (PARTITION BY b.vec_id
-        ORDER BY b.in2 + s.s1n2 - 2 * {dot('b.qv', 's.s1v')}, m.sid1) AS rn
+        ORDER BY b.in2 + s.s1n2 - 2 * {_dot_sql('b.qv', 's.s1v')}, m.sid1) AS rn
     FROM base b
     JOIN v2s2 v ON v.vec_id = b.vec_id
     JOIN s1map m ON m.sid2 = v.sid2
@@ -3264,7 +3267,7 @@ base AS (
 SELECT vec_id, sid2 AS super2_cid, sid1 AS super_cid, cid FROM (
   SELECT b.vec_id, v.sid2, v.sid1, c.cid,
     ROW_NUMBER() OVER (PARTITION BY b.vec_id
-      ORDER BY b.in2 + c.cn2 - 2 * {dot('b.qv', 'c.cv')}, c.cid) AS rn
+      ORDER BY b.in2 + c.cn2 - 2 * {_dot_sql('b.qv', 'c.cv')}, c.cid) AS rn
   FROM base b
   JOIN v2s1 v ON v.vec_id = b.vec_id
   JOIN c2s1 x ON x.sid1 = v.sid1
@@ -3293,69 +3296,16 @@ def similarity_three_level_probe2_query(spark: SparkSession,
             .withColumn("cid2", F.coalesce(F.col("cid2"), F.lit(-1))))
 
 
-def _three_level_probe2_sql(centroid_mod: int = CENTROID_MOD,
-                            n_centroids: int = N_CENTROIDS,
-                            n_super: int = N_SUPER,
-                            n_super2: int = N_SUPER2) -> str:
+def _three_level_probe2_sql() -> str:
     """Level-by-level pin of the nprobe=2 cascade at the static stride
-    configuration — identical prefix to :func:`_three_level_sql` through
-    ``v2s2``, then the sid1 ranking keeps rn <= 2 and the cid argmin
-    runs inside BOTH cells."""
-    stride1 = max(1, n_centroids // n_super)
-    stride2 = max(1, n_super // n_super2)
-    dot = lambda a, b: (f"list_sum(list_transform(range(1, {DIM + 1}), "
-                        f"i -> {a}[i] * {b}[i]))")
-    return f"""
-WITH q AS (SELECT vec_id, {_QVEC_SQL} AS qv FROM embeddings),
-base AS (
-  SELECT vec_id, qv,
-    list_sum(list_transform(range(1, {DIM + 1}), i -> qv[i] * qv[i])) AS in2
-  FROM q
-), cents AS (
-  SELECT vec_id AS cid, qv AS cv, in2 AS cn2 FROM base
-  WHERE {_fixed_sample_sql('vec_id', centroid_mod, n_centroids)}
-), sup1 AS (
-  SELECT cid AS sid1, cv AS s1v, cn2 AS s1n2 FROM cents
-  WHERE {_fixed_sample_sql('cid', centroid_mod * stride1, n_super)}
-), sup2 AS (
-  SELECT sid1 AS sid2, s1v AS s2v, s1n2 AS s2n2 FROM sup1
-  WHERE {_fixed_sample_sql('sid1', centroid_mod * stride1 * stride2,
-                           n_super2)}
-), s1map AS (
-  SELECT sid1, sid2 FROM (
-    SELECT sup1.sid1, sup2.sid2,
-      ROW_NUMBER() OVER (PARTITION BY sup1.sid1
-        ORDER BY sup1.s1n2 + sup2.s2n2 - 2 * {dot('sup1.s1v', 'sup2.s2v')},
-                 sup2.sid2) AS rn
-    FROM sup1 CROSS JOIN sup2) WHERE rn = 1
-), c2s2 AS (
-  SELECT cid, sid2 FROM (
-    SELECT cents.cid, sup2.sid2,
-      ROW_NUMBER() OVER (PARTITION BY cents.cid
-        ORDER BY cents.cn2 + sup2.s2n2 - 2 * {dot('cents.cv', 'sup2.s2v')},
-                 sup2.sid2) AS rn
-    FROM cents CROSS JOIN sup2) WHERE rn = 1
-), c2s1 AS (
-  SELECT cid, sid1 FROM (
-    SELECT c.cid, m.sid1,
-      ROW_NUMBER() OVER (PARTITION BY c.cid
-        ORDER BY c.cn2 + s.s1n2 - 2 * {dot('c.cv', 's.s1v')}, m.sid1) AS rn
-    FROM cents c
-    JOIN c2s2 x ON x.cid = c.cid
-    JOIN s1map m ON m.sid2 = x.sid2
-    JOIN sup1 s ON s.sid1 = m.sid1) WHERE rn = 1
-), v2s2 AS (
-  SELECT vec_id, sid2 FROM (
-    SELECT base.vec_id, sup2.sid2,
-      ROW_NUMBER() OVER (PARTITION BY base.vec_id
-        ORDER BY base.in2 + sup2.s2n2 - 2 * {dot('base.qv', 'sup2.s2v')},
-                 sup2.sid2) AS rn
-    FROM base CROSS JOIN sup2) WHERE rn = 1
-), v2s1r AS (
+    configuration — the :func:`_three_level_cascade_sql` prefix, then the
+    sid1 ranking keeps rn <= 2 and the cid argmin runs inside BOTH
+    cells."""
+    return _three_level_cascade_sql() + f"""), v2s1r AS (
   SELECT vec_id, sid2, sid1, rn FROM (
     SELECT b.vec_id, v.sid2, m.sid1,
       ROW_NUMBER() OVER (PARTITION BY b.vec_id
-        ORDER BY b.in2 + s.s1n2 - 2 * {dot('b.qv', 's.s1v')}, m.sid1) AS rn
+        ORDER BY b.in2 + s.s1n2 - 2 * {_dot_sql('b.qv', 's.s1v')}, m.sid1) AS rn
     FROM base b
     JOIN v2s2 v ON v.vec_id = b.vec_id
     JOIN s1map m ON m.sid2 = v.sid2
@@ -3366,7 +3316,7 @@ cid_best AS (
   SELECT vec_id, sid2, sid1, cid FROM (
     SELECT v.vec_id, v.sid2, v.sid1, c.cid,
       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-        ORDER BY b.in2 + c.cn2 - 2 * {dot('b.qv', 'c.cv')}, c.cid) AS rn
+        ORDER BY b.in2 + c.cn2 - 2 * {_dot_sql('b.qv', 'c.cv')}, c.cid) AS rn
     FROM best v
     JOIN base b ON b.vec_id = v.vec_id
     JOIN c2s1 x ON x.sid1 = v.sid1
@@ -3375,7 +3325,7 @@ cid_best AS (
   SELECT vec_id, cid AS cid2 FROM (
     SELECT v.vec_id, c.cid,
       ROW_NUMBER() OVER (PARTITION BY v.vec_id
-        ORDER BY b.in2 + c.cn2 - 2 * {dot('b.qv', 'c.cv')}, c.cid) AS rn
+        ORDER BY b.in2 + c.cn2 - 2 * {_dot_sql('b.qv', 'c.cv')}, c.cid) AS rn
     FROM second v
     JOIN base b ON b.vec_id = v.vec_id
     JOIN c2s1 x ON x.sid1 = v.sid1
@@ -3719,21 +3669,20 @@ def similarity_mmr_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mmr_select(emb)
 
 
-def _mmr_sql(k: int = MMR_K, pool: int = MMR_POOL,
-             lam: float = MMR_LAMBDA) -> str:
+def _mmr_sql() -> str:
     """DuckDB oracle for :func:`mmr_select` at the registered fixed
-    ``k`` — the greedy loop unrolled into chained CTEs (r7 advice #6).
+    ``MMR_K`` — the greedy loop unrolled into chained CTEs (r7 advice #6).
 
     Bit-exact with the driver-side greedy: the marginal score inlines
-    ``lam`` and ``repr(1.0 - lam)`` as literals so both engines evaluate
-    the identical IEEE expression (1.0 - 0.7 is NOT 0.3 in doubles);
-    cosines are exact-integer dots cast to double with the same
-    sqrt-product denominator; ties order by (score DESC, id) exactly
+    ``MMR_LAMBDA`` and ``repr(1.0 - MMR_LAMBDA)`` as literals so both
+    engines evaluate the identical IEEE expression (1.0 - 0.7 is NOT 0.3
+    in doubles); cosines are exact-integer dots cast to double with the
+    same sqrt-product denominator; ties order by (score DESC, id) exactly
     like the Python ``(-score, i)`` min-key. ``pick_r`` is empty once
-    the pool is exhausted, so a pool smaller than ``k`` short-stops
+    the pool is exhausted, so a pool smaller than ``MMR_K`` short-stops
     like ``range(min(k, len(remaining)))``.
     """
-    oml = repr(1.0 - lam)
+    oml = repr(1.0 - MMR_LAMBDA)
     dot = (f"CAST(list_sum(list_transform(range(1, {DIM + 1}), "
            "i -> {a}.qv[i] * {b}.qv[i])) AS DOUBLE)")
     cos = (dot + " / (sqrt(CAST({a}.n2 AS DOUBLE)) "
@@ -3749,15 +3698,15 @@ qv AS MATERIALIZED (SELECT * FROM nz ORDER BY vec_id LIMIT 1),
 pool AS MATERIALIZED (
   SELECT c.vec_id, c.qv, c.n2, {cos.format(a='c', b='q')} AS rel
   FROM nz c, qv q WHERE c.vec_id <> q.vec_id
-  ORDER BY rel DESC, c.vec_id LIMIT {pool}
+  ORDER BY rel DESC, c.vec_id LIMIT {MMR_POOL}
 ), sim AS MATERIALIZED (
   SELECT a.vec_id AS ia, b.vec_id AS ib, {cos.format(a='a', b='b')} AS cs
   FROM pool a, pool b WHERE a.vec_id <> b.vec_id
 ), pick_0 AS MATERIALIZED (
   SELECT 0 AS rank, vec_id, rel, 0.0 AS ms FROM pool
-  ORDER BY {lam!r} * rel - {oml} * 0.0 DESC, vec_id LIMIT 1
+  ORDER BY {MMR_LAMBDA!r} * rel - {oml} * 0.0 DESC, vec_id LIMIT 1
 ), sel_0 AS MATERIALIZED (SELECT * FROM pick_0)"""]
-    for r in range(1, k):
+    for r in range(1, MMR_K):
         parts.append(f""", pick_{r} AS MATERIALIZED (
   SELECT {r} AS rank, vec_id, rel, ms FROM (
     SELECT p.vec_id, p.rel,
@@ -3765,12 +3714,12 @@ pool AS MATERIALIZED (
        WHERE s.ia = p.vec_id) AS ms
     FROM pool p
     WHERE p.vec_id NOT IN (SELECT vec_id FROM sel_{r - 1})
-  ) ORDER BY {lam!r} * rel - {oml} * ms DESC, vec_id LIMIT 1
+  ) ORDER BY {MMR_LAMBDA!r} * rel - {oml} * ms DESC, vec_id LIMIT 1
 ), sel_{r} AS MATERIALIZED (SELECT * FROM sel_{r - 1} UNION ALL SELECT * FROM pick_{r})""")
     parts.append(f"""
 SELECT CAST(rank AS INTEGER) AS rank, CAST(vec_id AS BIGINT) AS vec_id,
   rel, ms AS max_sim_to_selected
-FROM sel_{k - 1}""")
+FROM sel_{MMR_K - 1}""")
     return "".join(parts)
 
 
@@ -6976,7 +6925,7 @@ def similarity_graph_search_query(spark: SparkSession,
     return graph_search(emb)
 
 
-def _graph_search_sql(beam: int = GS_BEAM, hops: int = GS_HOPS) -> str:
+def _graph_search_sql() -> str:
     """DuckDB oracle: the probe-2 kNN-graph CTEs (query side = the two
     best-ranked cells from assign_scored, candidate side = own cell
     only) + the IVF probe-1 seed shortlist + the hop chain unrolled —
@@ -7012,17 +6961,17 @@ def _graph_search_sql(beam: int = GS_BEAM, hops: int = GS_HOPS) -> str:
     SELECT query_id, node, cosine,
       ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, node) AS rnk
     FROM seed_scored
-  ) WHERE rnk <= {beam}
+  ) WHERE rnk <= {GS_BEAM}
 )"""
     dot_qc = (f"list_sum(list_transform(range(1, {DIM + 1}), "
               f"i -> q.qq[i] * c.qv[i]))")
-    for h in range(hops):
+    for h in range(GS_HOPS):
         sql += f""", b{h} AS (
   SELECT query_id, node FROM (
     SELECT query_id, node,
       ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cosine DESC, node) AS rnk
     FROM v{h}
-  ) WHERE rnk <= {beam}
+  ) WHERE rnk <= {GS_BEAM}
 ), x{h} AS (
   SELECT DISTINCT b.query_id, g.neighbor_id AS node
   FROM b{h} b JOIN gedges g ON g.src_id = b.node
@@ -7037,7 +6986,7 @@ def _graph_search_sql(beam: int = GS_BEAM, hops: int = GS_HOPS) -> str:
   SELECT * FROM v{h} UNION SELECT * FROM s{h}
 )"""
     sql += f""", scored AS (
-  SELECT query_id, node AS match_id, cosine FROM v{hops}
+  SELECT query_id, node AS match_id, cosine FROM v{GS_HOPS}
 )""" + _RANKED_TOPK_TAIL
     return sql
 

@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from downscaledclimatedata_spark.operators.catalog import (
-    build_catalog, parse_key_columns, well_formed, write_catalog, zarr_base_path,
+    CATALOG_COLUMNS, build_catalog, parse_key_columns, well_formed,
+    write_catalog, zarr_base_path,
 )
 
 
@@ -32,11 +33,13 @@ PARSE_CASES = [
 
 @pytest.mark.parametrize("rel_key,expected", PARSE_CASES)
 def test_parse_key_positions(spark, rel_key, expected):
-    df = spark.createDataFrame([(rel_key,)], "rel_key string")
+    full_key = f"netcdf/LOCA2/{rel_key}"
+    df = spark.createDataFrame([(rel_key, full_key)],
+                               "rel_key string, full_key string")
     row = parse_key_columns(df, bucket="bkt").collect()[0]
     for col, val in expected.items():
         assert row[col] == val, f"{col}: {row[col]} != {val}"
-    assert row["path"] == f"s3://bkt/{rel_key}"
+    assert row["path"] == f"s3://bkt/{full_key}"
 
 
 def test_zarr_chunk_collapse(spark):
@@ -154,3 +157,66 @@ def test_write_catalog_to_file_uri_refuses_object_stores(spark, tmp_path):
     spec = json.loads((tmp_path / "cat" / "c.json").read_text())
     assert list(pd.read_csv(spec["catalog_file"])["path"]) == [
         "s3://bkt/m/s/pr.m.s.r1i1p1f1.1950-2014.v1.nc"]
+
+
+def _spec(out, catalog_id="c"):
+    import json
+    with open(f"{out}/{catalog_id}.json") as f:
+        return json.load(f)
+
+
+def test_write_catalog_quoting_roundtrip(spark, tmp_path):
+    """Commas, double quotes, non-ASCII text and edge whitespace in the
+    keys come back exactly, through the spec's ``catalog_file`` with
+    pandas and through the directory with DuckDB; rows are in catalog
+    column order, and ``catalog_file`` is the same on every write."""
+    import duckdb
+    import pandas as pd
+    listing = spark.createDataFrame(
+        [("m,1/s/pr.m,1.s.r1i1p1f1.1950-2014.v1.nc",),
+         ('m"q/s/pr.m"q.s.r"1.1950-2014.v1.nc',),
+         ("Modèle/ssp245/tas.Modèle.ssp245.r1i1p1f1.2015-2044.v1.nc",),
+         (" m/s /tasmax.m.s .r1i1p1f1.2015-2044.v1.nc",)], "key string")
+    catalog, _ = build_catalog(listing, bucket="bkt")
+    want = sorted(tuple(r) for r in catalog.collect())
+    out = str(tmp_path / "cat")
+    write_catalog(catalog, out, "c", "d", "netcdf")
+    first = _spec(out)["catalog_file"]
+    write_catalog(catalog, out, "c", "d", "netcdf")
+    assert _spec(out)["catalog_file"] == first == f"{out}/c.csv/part-00000.csv"
+
+    got = pd.read_csv(first, dtype=str, keep_default_na=False)
+    assert tuple(got.columns) == CATALOG_COLUMNS
+    assert list(got.itertuples(index=False, name=None)) == want
+    got = duckdb.sql(f"SELECT * FROM read_csv('{out}/c.csv/*.csv', "
+                     f"header=true, all_varchar=true)").fetchall()
+    assert sorted(got) == want
+
+
+def test_write_catalog_over_cap_keeps_the_old_catalog(spark, tmp_path,
+                                                      monkeypatch):
+    """A catalog above ``CATALOG_MAX_ROWS`` raises before anything is
+    written: the old spec and CSV stay byte for byte."""
+    import os
+
+    from downscaledclimatedata_spark.operators import catalog as catalog_mod
+    keys = ["m/s/pr.m.s.r1i1p1f1.1950-2014.v1.nc",
+            "m2/s2/tasmax.m2.s2.r2i1p1f1.2015-2044.v1.nc"]
+    out = str(tmp_path / "cat")
+
+    def write(keys, description):
+        listing = spark.createDataFrame([(k,) for k in keys], "key string")
+        write_catalog(build_catalog(listing, bucket="bkt")[0], out, "c",
+                      description, "netcdf")
+
+    def snapshot():
+        return {n: open(f"{root}/{n}", "rb").read()
+                for root, _, names in os.walk(out) for n in names}
+
+    monkeypatch.setattr(catalog_mod, "CATALOG_MAX_ROWS", 1)
+    write(keys[:1], "old")
+    old = snapshot()
+    with pytest.raises(ValueError, match="more than 1 rows"):
+        write(keys, "new")
+    assert snapshot() == old
+    assert sorted(os.listdir(out)) == ["c.csv", "c.json"]

@@ -5,7 +5,9 @@ For each writer, one old version is built and then replaced while:
 
 1. the write fails: the old version stays readable and unchanged, and
    no staging directory (or temp file) is left behind;
-2. the rename of staging onto the target fails: the same;
+2. the rename of staging onto the target fails: the same; a writer that
+   publishes more than one file (the catalog's spec and CSV) takes this
+   fault at each of them;
 3. (directories) the process is killed between the two renames, which
    leaves the old target aside and no target: the next read, where the
    writer has a reader that recovers, or else the next publish, renames
@@ -15,9 +17,11 @@ For each writer, one old version is built and then replaced while:
 
 from __future__ import annotations
 
+import csv
 import json
 import os
 import re
+from types import SimpleNamespace
 from urllib.parse import urlparse
 
 import pytest
@@ -37,7 +41,7 @@ def _fail_spark_writes(monkeypatch):
         open(os.path.join(local, "part-00000.partial"), "w").close()
         raise OSError("injected write failure")
 
-    for name in ("parquet", "csv", "save"):
+    for name in ("parquet", "save"):
         monkeypatch.setattr(DataFrameWriter, name, failing)
 
 
@@ -51,6 +55,10 @@ class Case:
 
     def target(self, d):
         raise NotImplementedError
+
+    def renamed_targets(self, d):
+        """Every path the publish renames something onto."""
+        return [self.target(d)]
 
     def fail_write(self, spark, d, monkeypatch):
         _fail_spark_writes(monkeypatch)
@@ -112,8 +120,27 @@ class Catalog(Case):
     def target(self, d):
         return f"{d}/cat/c.csv"
 
+    def renamed_targets(self, d):
+        return [f"{d}/cat/c.json", self.target(d)]
+
     def setup(self, spark, d):
         self._write(spark, d, self.keys[:2])
+
+    def fail_write(self, spark, d, monkeypatch):
+        """The driver's CSV writer writes the header and one row into
+        staging, then raises."""
+        real = csv.writer
+
+        def partial(f, **kwargs):
+            out = real(f, **kwargs)
+
+            def writerows(rows):
+                out.writerow(rows[0])
+                raise OSError("injected write failure")
+            return SimpleNamespace(writerow=out.writerow, writerows=writerows)
+
+        monkeypatch.setattr(csv, "writer", partial)
+        self.publish(spark, d)
 
     def publish(self, spark, d):
         self._write(spark, d, self.keys)
@@ -298,26 +325,26 @@ def test_failed_or_killed_publish_keeps_the_old_version(spark, tmp_path,
     assert case.read(spark, d) == old
     assert _leftovers(target) == []
 
-    # 2. the rename that publishes fails
+    # 2. a rename that publishes fails
     real_rename, real_replace = os.rename, os.replace
+    for renamed in case.renamed_targets(d):
+        def failing_rename(src, dst):
+            if dst == renamed and src in publish.staging_paths(renamed):
+                raise OSError(18, "injected rename failure")
+            return real_rename(src, dst)
 
-    def failing_rename(src, dst):
-        if dst == target and src in publish.staging_paths(target):
-            raise OSError(18, "injected rename failure")
-        return real_rename(src, dst)
+        def failing_replace(src, dst):
+            if dst == renamed:
+                raise OSError(18, "injected rename failure")
+            return real_replace(src, dst)
 
-    def failing_replace(src, dst):
-        if dst == target:
-            raise OSError(18, "injected rename failure")
-        return real_replace(src, dst)
-
-    with monkeypatch.context() as m:
-        m.setattr(os, "rename", failing_rename)
-        m.setattr(os, "replace", failing_replace)
-        with pytest.raises(OSError, match="injected rename failure"):
-            case.publish(spark, d)
-    assert case.read(spark, d) == old
-    assert _leftovers(target) == []
+        with monkeypatch.context() as m:
+            m.setattr(os, "rename", failing_rename)
+            m.setattr(os, "replace", failing_replace)
+            with pytest.raises(OSError, match="injected rename failure"):
+                case.publish(spark, d)
+        assert case.read(spark, d) == old
+        assert _leftovers(renamed) == []
 
     case.publish(spark, d)
     new = case.read(spark, d)
